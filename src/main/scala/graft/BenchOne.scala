@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop single-query bench: same session shape and cache-release
   * protocol as [[Bench]] (local[SPARK_GRAFT_CPUS], warmup pass at
@@ -8,15 +7,8 @@ import org.apache.spark.sql.SparkSession
   * `tools/run_main.sh BenchOne <query> [query…]`. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     spark.range(1000000).selectExpr("sum(id)").collect()
     // fail fast on unknown names (r15 ADVICE: a typo was silently
     // swallowed by the warmup catch-all, then the timed loop died with a

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-law measurement: run the named gates at every harness scale
   * factor and print time-vs-rows, the empirical companion to the 100 TB
@@ -9,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   * Usage: `tools/run_main.sh BenchScale <query> [query…]`. */
 object BenchScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     spark.range(1000000).selectExpr("sum(id)").collect()
     val sfs = Seq("0.001", "0.01", "0.1")
     for (n <- args) {

@@ -26,17 +26,10 @@ object Main {
       "usage: graft.Main <sourceDir> <warehouseDir> [changeStreamDir]")
     val Array(sourceDir, warehouseDir) = args.take(2)
     val cfg = GraftConfig.fromEnv()
-    val spark = SparkSession.builder()
+    val spark = Sessions.start(Sessions.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-replicator")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
 
     cfg.replication.mode match {
       case "snapshot" =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for named queries so pushdown /
   * broadcast / whole-stage-codegen can be audited (`sbt "runMain
   * graft.PlanCheck <sfDir> [query...]"`). */
@@ -13,14 +11,7 @@ object PlanCheck {
         "q3_shipping_priority", "q5_local_supplier_volume",
         "w1_live_view", "w1_live_view_aggform", "topk_orders",
         "x_dedup_minhash_lsh", "x_ann_brute_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start(Sessions.builder("4"), logLevel = "ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

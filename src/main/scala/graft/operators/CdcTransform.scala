@@ -84,26 +84,4 @@ object CdcTransform {
       after.unionByName(tombstones)
     }
   }
-
-  /** Event-time variant: version = µs epoch of a source timestamp column.
-    * Strictly finer-grained than the reference's wall-clock batch stamp;
-    * used where the harness's `events` table plays the binlog. */
-  def stampEventTime(changes: DataFrame, opCol: String, seqCol: String,
-                     tsCol: String): DataFrame =
-    stamp(changes, opCol, seqCol, unix_micros(col(tsCol)))
-
-  /** Explicit three-branch form (filter → stamp → unionByName), shape-parity
-    * with the reference's three processors feeding one sink. Semantically
-    * equal to [[stampEventTime]]; kept as the §2.6 union operator. */
-  def threeWayUnion(changes: DataFrame, opCol: String, seqCol: String,
-                    tsCol: String): DataFrame = {
-    def branch(op: String, deleted: Int) =
-      changes.filter(col(opCol) === op)
-        .withColumn(VersionCol, unix_micros(col(tsCol)))
-        .withColumn(SeqCol, col(seqCol).cast("long"))
-        .withColumn(DeletedCol, lit(deleted))
-    branch(Insert, 0)
-      .unionByName(branch(Update, 0))
-      .unionByName(branch(Delete, 1))
-  }
 }

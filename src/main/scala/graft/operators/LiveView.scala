@@ -55,14 +55,6 @@ object LiveView {
       .filter(col(DeletedCol) === 0)
       .drop(VersionCol, DeletedCol, SeqCol)
 
-  /** Register `<table>_live` (K5 — `generate_cdc_view`,
-    * `src/schema_converter.py:124-138`; note the reference defines+tests but
-    * never calls this — SURVEY.md §3.3 gap; we implement the documented
-    * behavior). */
-  def createLiveView(
-      df: DataFrame, table: String, pks: Seq[String]): Unit =
-    live(df, pks).createOrReplaceTempView(s"${table}_live")
-
   /** Alternative physical form: `max_by(struct)` aggregation instead of a
     * ranking window — one shuffle with partial (map-side) aggregation,
     * often cheaper than window+sort at scale when payload is narrow.

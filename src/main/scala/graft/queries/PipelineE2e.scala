@@ -168,28 +168,21 @@ object PipelineE2e {
     }
     // §2.6 overlap (optimization r16): the LSH pair index (stage 4's
     // input) and the decontamination drop-set (stage 5's) depend only on
-    // the raw corpus, not on stages 0–3 — materialize their caches from
-    // background driver threads so those jobs back-fill idle cores while
-    // the early-stage ledger actions run (sequential actions leave the
-    // 32-way session mostly idle at these row counts; FIFO scheduling
-    // back-fills exactly as the guide describes). Failures are swallowed:
-    // the stage-4/5 measures below then compute the frames on the main
-    // thread and surface the real error. Each future is awaited before
-    // the measure that reads its frame, so no background job can outlive
-    // the gate and bleed into a later one's timing.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bgPairs = Future { try { pairs.count(); () } catch { case _: Throwable => () } }
-    val bgContam = Future { try { contaminated.count(); () } catch { case _: Throwable => () } }
-    val early = Seq(
-      (0, "raw", measure(s0, "_tok")), (1, "langid", measure(s1, "_tok")),
-      (2, "gopher", measure(s2, "_tok")),
-      (3, "exact_dedup", measure(s3, "_tok")))
-    Await.ready(bgPairs, Duration.Inf)
-    val m4 = (4, "lsh_neardup", measure(s4, "_tok"))
-    Await.ready(bgContam, Duration.Inf)
-    val ledger = early ++ Seq(m4,
+    // the raw corpus, not on stages 0–3 — materialize their caches next
+    // to the early-stage ledger actions so those jobs back-fill idle
+    // cores (sequential actions leave the 32-way session mostly idle at
+    // these row counts; FIFO scheduling back-fills exactly as the guide
+    // describes). `overlap` returns only once all three are done, so no
+    // background job can outlive the gate and bleed into a later one's
+    // timing, and a failing one surfaces its own error.
+    val Seq(early, _, _) = StreamGate.overlap(
+      () => Seq(
+        (0, "raw", measure(s0, "_tok")), (1, "langid", measure(s1, "_tok")),
+        (2, "gopher", measure(s2, "_tok")),
+        (3, "exact_dedup", measure(s3, "_tok"))),
+      () => { pairs.count(); Nil },
+      () => { contaminated.count(); Nil })
+    val ledger = early ++ Seq((4, "lsh_neardup", measure(s4, "_tok")),
       (5, "decontam", measure(s5, "_tok")),
       (6, "temperature", measure(s6, "_tok")),
       (7, "pack", measure(packed, "_ctok")))

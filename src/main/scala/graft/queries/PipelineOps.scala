@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
 import graft.operators.{LiveView, SnapshotReplicator}
-import graft.streaming.CdcPipeline
+import graft.streaming.{BoundedStream, CdcPipeline}
+import StreamGate.{dirs, pinned, replay, stage, withConfs}
 
 /** Queries that exercise the pipeline-level operators inside the
   * correctness gate: snapshot replication (O2-O5, A4) and the full
@@ -15,46 +16,6 @@ import graft.streaming.CdcPipeline
   * frames.
   */
 object PipelineOps {
-
-  /** Stage `df` as ONE parquet file named `name` under `srcDir` with a
-    * forced modification time — `maxFilesPerTrigger=1` replays staged
-    * files in mtime order, so ascending mtimes define the micro-batch
-    * order every staged-replay gate (t10/t13/t14/t16) and their specs
-    * depend on. Replay order IS those gates' premise: a filesystem that
-    * ignores mtime updates must fail loudly, not produce a confusing
-    * mismatch — hence the require. */
-  private[graft] def stageReplayFile(srcDir: String)(
-      df: DataFrame, name: String, mtime: Long): Unit = {
-    val tmp = graft.GateCache.tempDir("graft_stage_tmp").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = new java.io.File(srcDir, name)
-    java.nio.file.Files.copy(part.toPath, dst.toPath)
-    require(dst.setLastModified(mtime), s"failed to set mtime on $dst")
-    ()
-  }
-
-  /** [[stageReplayFile]] for a whole replay set at once, the waves'
-    * write jobs running CONCURRENTLY from a driver thread pool
-    * (optimization guide §2.6 — the waves are disjoint slices of one
-    * frame, each a small coalesce(1) job that leaves the session mostly
-    * idle; overlapping them back-fills the cores without changing a
-    * byte: same files, same names, same explicit mtimes, and the replay
-    * order is defined by the mtimes alone, not by write completion
-    * order). All waves are staged before this returns (failures
-    * propagate), so the stream that reads `srcDir` starts from exactly
-    * the same directory state as the sequential form. */
-  private[graft] def stageReplayFiles(srcDir: String)(
-      waves: (DataFrame, String, Long)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = waves.map { case (df, name, mtime) =>
-      Future(stageReplayFile(srcDir)(df, name, mtime))
-    }
-    fs.foreach(Await.result(_, Duration.Inf))
-  }
 
   /** The staged Debezium envelope t12 and t24 both render (signup → c,
     * error → d with the image in `before`, else u; binlog pos =
@@ -82,41 +43,6 @@ object PipelineOps {
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, " +
       "value DOUBLE, props STRING")
 
-  /** Run `body` with `kvs` set on the session conf, restoring previous
-    * values (unsetting ones that were absent) afterwards — the scoped
-    * conf plumbing the streaming gates previously re-pasted per gate
-    * (review find: one drifting copy silently leaks session state into
-    * later serial gates). NOT for plan-shape confs a concurrent gate
-    * could observe — those use `newSession()` isolation (b2/b3/bloom). */
-  private def withConfs[A](s: SparkSession, kvs: (String, String)*)
-      (body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** The spillable state-store provider the stateful gates pin
-    * (off-heap keys + disk spill — the 100 TB state-cardinality choice;
-    * read at the stream's FIRST checkpoint, so a conf scoped around
-    * stream start pins just that stream). */
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** (lo, mid1, mid2, hi) of `c` over `df` — the staged-replay gates'
-    * three wave boundaries, shared so the empty-frame guard exists ONCE
-    * (review find: four of five hand-rolled copies read getLong on a
-    * NULL min and threw an opaque NPE on an empty fixture). */
-  private def terciles(df: DataFrame, c: org.apache.spark.sql.Column,
-      what: String): (Long, Long, Long, Long) = {
-    val b = df.agg(min(c).as("lo"), max(c).as("hi")).head()
-    require(!b.isNullAt(0), s"$what is empty — nothing to stage")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    (lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi)
-  }
-
   /** O3/A4: replicate three tables into a fresh warehouse and report the
     * reference's result-dict shape (`src/replicator.py:74-85`). */
   def snapshotRoundtrip(s: SparkSession, dir: String): DataFrame = {
@@ -134,19 +60,17 @@ object PipelineOps {
     * constant version ⇒ survivor per user = max ingest seq (event_id). */
   def cdcStreamLive(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tgt = graft.GateCache.tempDir("graft_cdc_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_cdc_ckp").toString
+    val Seq(tgt, ckp, srcDir) = dirs("graft_cdc", "tgt", "ckp", "src")
     val pipe = new CdcPipeline(s, tgt, ckp)
 
     // schema as read with nanosAsLong (ts: LONG ns)
     val schema = EventsNanosDdl
     // the file stream source requires a directory: stage the single
     // events.parquet file behind a temp-dir symlink (no data copy)
-    val srcDir = graft.GateCache.tempDir("graft_cdc_src")
-    Files.createSymbolicLink(srcDir.resolve("events.parquet"),
+    Files.createSymbolicLink(java.nio.file.Paths.get(srcDir, "events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     val stream = s.readStream.schema(schema)
-      .parquet(srcDir.toString)
+      .parquet(srcDir)
       .withColumn("op",
         when(col("event_type") === "signup", "I")
           .when(col("event_type") === "error", "D")
@@ -174,9 +98,7 @@ object PipelineOps {
     * state, queried through `spark.sql` over the registered name. */
   def registeredLiveViewSql(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tgt = graft.GateCache.tempDir("graft_w2_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_w2_ckp").toString
-    val srcDir = graft.GateCache.tempDir("graft_w2_src").toString
+    val Seq(tgt, ckp, srcDir) = dirs("graft_w2", "tgt", "ckp", "src")
     val pipe = new CdcPipeline(s, tgt, ckp)
     val schema = EventsNanosDdl
     val ev = s.read.schema(schema).parquet(s"$dir/events.parquet")
@@ -222,9 +144,7 @@ object PipelineOps {
     * pos, so the oracle is the same derivation as t1's. */
   def debeziumCdcLive(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tgt = graft.GateCache.tempDir("graft_dbz_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_dbz_ckp").toString
-    val landing = graft.GateCache.tempDir("graft_dbz_src").toString
+    val Seq(tgt, ckp, landing) = dirs("graft_dbz", "tgt", "ckp", "src")
     val rowSchema = EventsNanosDdl
     // stage: events → Debezium envelopes (distributed JSON render, no
     // driver loop); the d-envelope carries its image in `before` only
@@ -395,9 +315,8 @@ object PipelineOps {
     * version ⇒ same oracle as t1/t29. */
   def binlogStreamCdcLive(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.BinlogSource
-    val landing = graft.GateCache.tempDir("graft_binlog_tail_src").toString
-    val tgt = graft.GateCache.tempDir("graft_binlog_tail_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_binlog_tail_ckp").toString
+    val Seq(landing, tgt, ckp) =
+      dirs("graft_binlog_tail", "src", "tgt", "ckp")
     val staged = stageBinlogFiles(s, dir)
     val pipe = new CdcPipeline(s, tgt, ckp)
     // streaming rotate-chain validation: every new file's ROTATE target
@@ -1119,8 +1038,7 @@ object PipelineOps {
     * every value recomputable from orders. */
   def referenceTopologyE2e(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{BinlogFixtureServer, BinlogSocketClient}
-    val tgt = graft.GateCache.tempDir("graft_reftopo_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_reftopo_ckp").toString
+    val Seq(tgt, ckp) = dirs("graft_reftopo", "tgt", "ckp")
     val topo = refTopology(s, dir)
     // a binlog only grows: encode the FULL log once; the T-only prefix
     // is byte-identical (positions are cumulative), so the truncated
@@ -1189,8 +1107,7 @@ object PipelineOps {
   def referenceLiveTailE2e(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{BinlogFixtureServer, BinlogSocketClient}
     import graft.sources.BinlogFixture.Change
-    val tgt = graft.GateCache.tempDir("graft_livetail_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_livetail_ckp").toString
+    val Seq(tgt, ckp) = dirs("graft_livetail", "tgt", "ckp")
     val topo = refTopology(s, dir)
     def balW2(k: Long): Double =
       refBalW1(k) + (if (k % 4 == 0) 1000.0 else 0.0)
@@ -1285,9 +1202,7 @@ object PipelineOps {
   def binlogDsv2StreamCdc(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{BinlogFixtureServer, MysqlBinlogSource}
     import graft.operators.CdcTransform
-    import org.apache.spark.sql.streaming.Trigger
-    val tgt = graft.GateCache.tempDir("graft_dsv2_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_dsv2_ckp").toString
+    val Seq(tgt, ckp) = dirs("graft_dsv2", "tgt", "ckp")
     val topo = refTopology(s, dir)
     val file = "primary-bin.000001"
     val tBytes = topo.encode(topo.txnsT)
@@ -1298,7 +1213,7 @@ object PipelineOps {
     srv.truncate(file, tBytes.length)
     try {
       val schema = StructType.fromDDL("id BIGINT, bal DOUBLE")
-      def drain(): Unit =
+      def drain(): Unit = BoundedStream.drain(
         s.readStream.format("mysql-binlog")
           .schema(MysqlBinlogSource.withMeta(schema))
           .option("host", "127.0.0.1").option("port", srv.port.toString)
@@ -1306,8 +1221,7 @@ object PipelineOps {
           .option("table", "accounts")
           .option("startFile", file).option("startPos", "4")
           .load()
-          .writeStream.option("checkpointLocation", ckp)
-          .trigger(Trigger.AvailableNow())
+          .writeStream
           .foreachBatch {
             (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
              _: Long) =>
@@ -1319,8 +1233,7 @@ object PipelineOps {
                 .write.mode(org.apache.spark.sql.SaveMode.Append)
                 .parquet(s"$tgt/accounts.parquet")
               ()
-          }
-          .start().awaitTermination()
+          }, ckp)
       drain() // run 1: the T history
       val afterT = s.read.parquet(s"$tgt/accounts.parquet").count()
       require(afterT == topo.keys.size,
@@ -1441,8 +1354,7 @@ object PipelineOps {
     import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeDouble, parse}
     import BinlogFixture.Change
     import graft.operators.CdcTransform
-    val landingA = graft.GateCache.tempDir("graft_gtid_a").toString
-    val landingB = graft.GateCache.tempDir("graft_gtid_b").toString
+    val Seq(landingA, landingB) = dirs("graft_gtid", "a", "b")
     val cols = IndexedSeq(ColumnDef(TypeLongLong, 0), ColumnDef(TypeDouble, 8))
     val keys = s.read.parquet(s"$dir/orders.parquet")
       .filter(col("o_orderkey") % 9 === 0).select("o_orderkey")
@@ -1510,11 +1422,8 @@ object PipelineOps {
     import graft.sources.{BinlogFixture, BinlogSource, GtidSet}
     import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeDouble}
     import BinlogFixture.Change
-    val landingA = graft.GateCache.tempDir("graft_gtidstr_a").toString
-    val landingB = graft.GateCache.tempDir("graft_gtidstr_b").toString
-    val tgt = graft.GateCache.tempDir("graft_gtidstr_tgt").toString
-    val ckpA = graft.GateCache.tempDir("graft_gtidstr_ckpa").toString
-    val ckpB = graft.GateCache.tempDir("graft_gtidstr_ckpb").toString
+    val Seq(landingA, landingB, tgt, ckpA, ckpB) =
+      dirs("graft_gtidstr", "a", "b", "tgt", "ckpa", "ckpb")
     val gtidFile = java.nio.file.Paths.get(ckpA, "gtid_executed")
     val cols = IndexedSeq(ColumnDef(TypeLongLong, 0), ColumnDef(TypeDouble, 8))
     val keys = s.read.parquet(s"$dir/orders.parquet")
@@ -1757,8 +1666,7 @@ object PipelineOps {
     import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeVarchar, TypeDouble}
     import BinlogFixture.{Absent, Change}
     import graft.operators.{CdcTransform, MinimalImage}
-    val minDir = graft.GateCache.tempDir("graft_minimg_min_src").toString
-    val fullDir = graft.GateCache.tempDir("graft_minimg_full_src").toString
+    val Seq(minDir, fullDir) = dirs("graft_minimg", "min_src", "full_src")
     val cols = IndexedSeq(
       ColumnDef(TypeLongLong, 0),  // id
       ColumnDef(TypeVarchar, 40),  // name
@@ -1839,10 +1747,7 @@ object PipelineOps {
     import graft.sources.{BinlogFixture, BinlogSource}
     import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeVarchar, TypeDouble}
     import graft.operators.MinimalImage
-    import org.apache.spark.sql.streaming.Trigger
-    val landing = graft.GateCache.tempDir("graft_minstr_src").toString
-    val tgt = graft.GateCache.tempDir("graft_minstr_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_minstr_ckp").toString
+    val Seq(landing, tgt, ckp) = dirs("graft_minstr", "src", "tgt", "ckp")
     val cols = IndexedSeq(
       ColumnDef(TypeLongLong, 0),  // id
       ColumnDef(TypeVarchar, 40),  // name
@@ -1860,12 +1765,10 @@ object PipelineOps {
       IndexedSeq(k0, "poison", BinlogFixture.Absent, BinlogFixture.Absent))
     val schema = StructType.fromDDL(
       "id BIGINT, name STRING, bal DOUBLE, cnt BIGINT")
-    def drain(): Unit =
+    def drain(): Unit = BoundedStream.drain(
       BinlogSource.changesStream(s, landing, "accts", schema,
           presentCol = true)
         .writeStream
-        .option("checkpointLocation", ckp)
-        .trigger(Trigger.AvailableNow())
         .foreachBatch {
           (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            _: Long) =>
@@ -1874,8 +1777,7 @@ object PipelineOps {
             MinimalImage.partial(b.toDF(), pks = Seq("id"))
               .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(tgt)
             ()
-        }
-        .start().awaitTermination()
+        }, ckp)
     // wave 1: the inserts land (every key touched once)
     Files.write(java.nio.file.Paths.get(landing, "accts-min.000001"),
       BinlogFixture.encode("graft", "accts", cols,
@@ -1953,9 +1855,7 @@ object PipelineOps {
   def binlogEvolvingCdcLive(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{BinlogFixture, BinlogFormat}
     import BinlogFixture.Change
-    val landing = graft.GateCache.tempDir("graft_bevo_gate_src").toString
-    val tgt = graft.GateCache.tempDir("graft_bevo_gate_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_bevo_gate_ckp").toString
+    val Seq(landing, tgt, ckp) = dirs("graft_bevo_gate", "src", "tgt", "ckp")
     val evs = s.read.parquet(s"$dir/events.parquet")
       .select("event_id", "user_id", "event_type", "value", "props")
       .orderBy("event_id").collect()
@@ -2027,10 +1927,8 @@ object PipelineOps {
   def bucketedStreamSink(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.BinlogSource
     import graft.operators.{Bucketing, CdcTransform}
-    import org.apache.spark.sql.streaming.Trigger
     val staged = stageMultiBinlogs(s, dir)
-    val landing = graft.GateCache.tempDir("graft_b9_src").toString
-    val ckp = graft.GateCache.tempDir("graft_b9_ckp").toString
+    val Seq(landing, ckp) = dirs("graft_b9", "src", "ckp")
     val hdrSchema = BinlogSource.inferSchema(s, staged.landing, "orders_hdr")
     val lnSchema = BinlogSource.inferSchema(s, staged.landing, "orders_ln")
     val files = Seq("orders-bin.000001", "orders-bin.000002")
@@ -2041,11 +1939,9 @@ object PipelineOps {
     }
     def drainOne(table: String, schema: StructType, sink: String,
                  keys: Seq[String]): Unit = {
-      val q = BinlogSource.changesStream(s, landing, table, schema)
+      BoundedStream.drain(BinlogSource.changesStream(s, landing, table, schema)
         .writeStream
         .queryName(s"b9_apply_$table")
-        .option("checkpointLocation", s"$ckp/$table")
-        .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           val stamped = CdcTransform.stampBatch(batch.toDF(),
             opCol = "op", seqCol = "_seq", batchVersionMicros = 1L)
@@ -2058,9 +1954,7 @@ object PipelineOps {
             Bucketing.writeBucketedMulti(stamped, sink, keys, 8)
           else Bucketing.appendBucketedMulti(stamped, sink, keys, 8)
           ()
-        }
-        .start()
-      q.awaitTermination()
+        }, s"$ckp/$table")
     }
     def drain(): Unit = {
       drainOne("orders_hdr", hdrSchema, "b9_hdr", Seq("o_orderkey"))
@@ -2133,9 +2027,7 @@ object PipelineOps {
     * relationally. */
   def evolvingCdcLive(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tgt = graft.GateCache.tempDir("graft_evo_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_evo_ckp").toString
-    val landing = graft.GateCache.tempDir("graft_evo_src").toString
+    val Seq(tgt, ckp, landing) = dirs("graft_evo", "tgt", "ckp", "src")
     val rowSchema = EventsNanosDdl
     val events = s.read.schema(rowSchema).parquet(s"$dir/events.parquet")
     // the DDL's binlog position: half the max event id (1-row collect)
@@ -2176,41 +2068,24 @@ object PipelineOps {
     * pins. Event times stay inside the 30-day horizon, so no state is
     * evicted mid-run and the stream dedups globally, like the batch op. */
   def streamDedupCounts(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_sdd_src").toString
-    val outDir = graft.GateCache.tempDir("graft_sdd_out").toString
-    val ckp = graft.GateCache.tempDir("graft_sdd_ckp").toString
+    val Seq(srcDir, outDir, ckp) = dirs("graft_sdd", "src", "out", "ckp")
     Tables.read(s, dir, "documents")
       .repartition(3).write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
     // +1 day: a stateful op's INITIAL watermark is epoch(0), and rows at
     // event time ≤ watermark are discarded as late — doc_id 0 at exactly
     // the epoch would silently vanish before dedup ever saw it
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val stream = replay(s, srcDir)
       .withColumn("_ts", timestamp_micros(col("doc_id") + lit(86400000000L)))
     val deduped = graft.streaming.StreamDedup.byFingerprint(
       stream, textCol = "text", keyCols = Seq("lang"),
       tsCol = "_ts", delay = "30 days")
-    // State partitioning is captured from spark.sql.shuffle.partitions at
-    // the stream's FIRST checkpoint and each micro-batch then commits one
-    // state-store delta + one sink file per partition. At the session
-    // default (32) this harness-scale run pays 3 batches × 32 commits of
-    // filesystem overhead for a few thousand rows; 4 keeps the same
-    // multi-batch dedup semantics at an order of magnitude less fixed
-    // cost. Production streams size this to their key cardinality —
-    // it's a per-checkpoint knob, not engine semantics.
-    // This gate runs on the RocksDB state store ([[RocksDbProvider]]).
-    // Dedup semantics are provider-independent — the same oracle pins
-    // the result, which is the point: swapping the state backend is a
-    // deployment knob, not a semantics change.
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
-      val q = deduped.drop("_ts").writeStream
-        .outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    // This gate runs on the RocksDB state store. Dedup semantics are
+    // provider-independent — the same oracle pins the result, which is
+    // the point: swapping the state backend is a deployment knob, not a
+    // semantics change.
+    pinned(s, rocksDb = true) {
+      BoundedStream.drain(deduped.drop("_ts").writeStream
+        .outputMode("append").format("parquet").option("path", outDir), ckp)
     }
     s.read.parquet(outDir)
       .groupBy(col("lang")).agg(count(lit(1)).as("n_unique"))
@@ -2228,30 +2103,21 @@ object PipelineOps {
     * (round(value*100), identical IEEE arithmetic in DuckDB) is what
     * makes those totals batching-invariant and hash-adjudicable. */
   def transformWithStateTotals(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_tws_src").toString
-    val outDir = graft.GateCache.tempDir("graft_tws_out").toString
-    val ckp = graft.GateCache.tempDir("graft_tws_ckp").toString
+    val Seq(srcDir, outDir, ckp) = dirs("graft_tws", "src", "out", "ckp")
     Tables.read(s, dir, "events")
       .select(col("user_id"),
         round(col("value") * 100).cast("long").as("cents"))
       .repartition(3).write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
+    pinned(s, rocksDb = true) {
       // file sinks are append-only — land the update-mode emissions via
       // foreachBatch (each batch's touched-key rows appended)
-      val q = graft.streaming.RunningTotals.totalsStream(stream)
+      BoundedStream.drain(graft.streaming.RunningTotals
+        .totalsStream(replay(s, srcDir))
         .toDF("user_id", "n_events", "total_cents")
         .writeStream.outputMode("update")
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           b.write.mode("append").parquet(outDir); ()
-        }
-        .option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckp)
     }
     s.read.parquet(outDir)
       .groupBy(col("user_id"))
@@ -2270,28 +2136,18 @@ object PipelineOps {
     * final batch that touched the user) must equal the batch aggregate
     * per the processor's order-independence contract. */
   def typedStateProfile(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_tsp_src").toString
-    val outDir = graft.GateCache.tempDir("graft_tsp_out").toString
-    val ckp = graft.GateCache.tempDir("graft_tsp_ckp").toString
+    val Seq(srcDir, outDir, ckp) = dirs("graft_tsp", "src", "out", "ckp")
     Tables.read(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
       .repartition(3).write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
-      val q = graft.streaming.TypedStateProfile.profileStream(stream)
-        .toDF()
+    pinned(s, rocksDb = true) {
+      BoundedStream.drain(graft.streaming.TypedStateProfile
+        .profileStream(replay(s, srcDir)).toDF()
         .writeStream.outputMode("update")
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           b.write.mode("append").parquet(outDir); ()
-        }
-        .option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckp)
     }
     val fields = Seq("n_click", "n_error", "n_purchase", "n_signup",
       "n_view", "n_total", "n_cents", "total_cents")
@@ -2315,17 +2171,13 @@ object PipelineOps {
     * `state-metadata` source pins which operator/store the bytes belong
     * to before trusting them. */
   def stateStoreReader(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_ssr_src").toString
-    val ckp = graft.GateCache.tempDir("graft_ssr_ckp").toString
+    val Seq(srcDir, ckp) = dirs("graft_ssr", "src", "ckp")
     Tables.read(s, dir, "events")
       .select(col("user_id"),
         round(col("value") * 100).cast("long").as("cents"))
       .repartition(3).write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = stream.groupBy(col("user_id"))
+    pinned(s) {
+      BoundedStream.drain(replay(s, srcDir).groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("total_cents"))
         .writeStream.outputMode("update")
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -2334,11 +2186,7 @@ object PipelineOps {
           // that foreachBatch processed all of them before committing
           // state (a bare () fails STATE_STORE_COMMIT_VALIDATION_FAILED)
           b.write.format("noop").mode("overwrite").save()
-        }
-        .option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckp)
     }
     // provenance first: one aggregation operator, store "default",
     // state present from batch 0 — only then read its bytes
@@ -2374,45 +2222,30 @@ object PipelineOps {
     * batching-invariant. Reads are partition-parallel over the
     * checkpoint files — no replay, no driver funnel. */
   def typedStateReader(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_tsr_src").toString
-    val ckpV = graft.GateCache.tempDir("graft_tsr_ckpv").toString
-    val ckpT = graft.GateCache.tempDir("graft_tsr_ckpt").toString
+    val Seq(srcDir, ckpV, ckpT) = dirs("graft_tsr", "src", "ckpv", "ckpt")
     Tables.read(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
       .repartition(3).write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
-    def stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
-      def drain(d: DataFrame, ckp: String): Unit = {
-        val q = d.writeStream.outputMode("update")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // emissions dropped — the state IS the product (t17 contract)
-            b.write.format("noop").mode("overwrite").save()
-          }
-          .option("checkpointLocation", ckp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // §2.6 (optimization r16): the two drains are INDEPENDENT streams —
-      // separate checkpoints, separate state, same read-only source — and
-      // each is a serial chain of small micro-batches that leaves the
-      // session mostly idle; running them concurrently overlaps their
-      // batch floors without touching either stream's batch count, state
-      // lifecycle, or what the reader below verifies. Both complete
-      // before the conf scope closes (Await inside the withConfs body).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val f1 = Future(drain(graft.streaming.RunningTotals.totalsStream(
-        stream.select(col("user_id"), col("cents"))).toDF(), ckpV))
-      val f2 = Future(drain(
-        graft.streaming.TypedStateProfile.profileStream(stream).toDF(), ckpT))
-      Await.result(f1, Duration.Inf)
-      Await.result(f2, Duration.Inf)
+    def drain(d: DataFrame, ckp: String): Unit =
+      BoundedStream.drain(d.writeStream.outputMode("update")
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          // emissions dropped — the state IS the product (t17 contract)
+          b.write.format("noop").mode("overwrite").save()
+        }, ckp)
+    // §2.6 (optimization r16): the two drains are INDEPENDENT streams —
+    // separate checkpoints, separate state, same read-only source — and
+    // each is a serial chain of small micro-batches that leaves the
+    // session mostly idle; running them concurrently overlaps their
+    // batch floors without touching either stream's batch count, state
+    // lifecycle, or what the reader below verifies. `overlap` returns
+    // only when both have stopped, so neither outlives the pin.
+    pinned(s, rocksDb = true) {
+      StreamGate.overlap(
+        () => drain(graft.streaming.RunningTotals.totalsStream(
+          replay(s, srcDir).select(col("user_id"), col("cents"))).toDF(), ckpV),
+        () => drain(graft.streaming.TypedStateProfile
+          .profileStream(replay(s, srcDir)).toDF(), ckpT))
     }
     // provenance: one transformWithState operator per checkpoint, state
     // from batch 0, and the DECLARED state variables — only then read.
@@ -2478,20 +2311,12 @@ object PipelineOps {
     val srcDir = graft.GateCache.tempDir("graft_tss_src").toString
     val d = Tables.events(s, dir)
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts_ev"))
-    val (lo, mid1, mid2, hi) =
-      terciles(d, unix_micros(col("ts_ev")), s"events table in $dir")
+    val (waves, hi) = StreamGate.tercileWaves(
+      d, unix_micros(col("ts_ev")), s"events table in $dir")
     def flush(atUs: Long): DataFrame = s.range(1).select(
       lit(-1L).as("user_id"), timestamp_micros(lit(atUs)).as("ts_ev"))
     val dayUs = 86400000000L
-    val base = 1600000000000L
-    stageReplayFiles(srcDir)(
-      (d.filter(unix_micros(col("ts_ev")) <= mid1), "b0.parquet", base),
-      (d.filter(unix_micros(col("ts_ev")) > mid1 &&
-        unix_micros(col("ts_ev")) <= mid2), "b1.parquet", base + 600000L),
-      (d.filter(unix_micros(col("ts_ev")) > mid2), "b2.parquet",
-        base + 1200000L),
-      (flush(hi + 10 * dayUs), "b3.parquet", base + 1800000L),
-      (flush(hi + 20 * dayUs), "b4.parquet", base + 2400000L))
+    stage(srcDir, waves :+ flush(hi + 10 * dayUs) :+ flush(hi + 20 * dayUs))
     runStreamSessionized(s, srcDir)
   }
 
@@ -2502,19 +2327,12 @@ object PipelineOps {
     * micro-batches is emitted ONCE, complete, by eviction. Returns the
     * landed sessions, sentinels filtered. */
   def runStreamSessionized(s: SparkSession, srcDir: String): DataFrame = {
-    val outDir = graft.GateCache.tempDir("graft_tss_out").toString
-    val ckp = graft.GateCache.tempDir("graft_tss_ckp").toString
-    val schema = s.read.parquet(srcDir).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val sess = graft.streaming.EventAnalytics.sessionCounts(stream,
+    val Seq(outDir, ckp) = dirs("graft_tss", "out", "ckp")
+    val sess = graft.streaming.EventAnalytics.sessionCounts(replay(s, srcDir),
       tsCol = "ts_ev", gap = "30 minutes", watermark = Some("0 seconds"))
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = sess.writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    pinned(s) {
+      BoundedStream.drain(sess.writeStream.outputMode("append")
+        .format("parquet").option("path", outDir), ckp)
     }
     s.read.parquet(outDir).filter(col("user_id") >= 0)
       .select(col("user_id"),
@@ -2531,29 +2349,18 @@ object PipelineOps {
     * replay, flagged ≡ "shares a band key with any smaller doc_id" — the
     * batch-relational definition the oracle re-derives. */
   def streamNearDupRaw(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_snd_src").toString
-    val outDir = graft.GateCache.tempDir("graft_snd_out").toString
-    val idxDir = graft.GateCache.tempDir("graft_snd_idx").toString + "/idx"
-    val ckp = graft.GateCache.tempDir("graft_snd_ckp").toString
+    val Seq(srcDir, outDir, idxRoot, ckp) =
+      dirs("graft_snd", "src", "out", "idx", "ckp")
     val d = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
-    val m = d.agg(max(col("doc_id"))).head().getLong(0)
-    val base = 1600000000000L // strictly increasing modtimes = replay order
-    stageReplayFiles(srcDir)(
-      (d.filter(col("doc_id") * 3 <= m), "b0.parquet", base),
-      (d.filter(col("doc_id") * 3 > m && col("doc_id") * 3 <= 2 * m),
-        "b1.parquet", base + 600000L),
-      (d.filter(col("doc_id") * 3 > 2 * m), "b2.parquet", base + 1200000L))
-    val stream = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      graft.streaming.StreamNearDup.run(stream,
+    stage(srcDir, StreamGate.idThirdWaves(d, "doc_id"))
+    pinned(s) {
+      graft.streaming.StreamNearDup.run(replay(s, srcDir),
         idCol = "doc_id", textCol = "text",
         keepCols = Seq("doc_id", "lang"),
-        indexDir = idxDir, outDir = outDir, checkpointDir = ckp,
+        indexDir = s"$idxRoot/idx", outDir = outDir, checkpointDir = ckp,
         shingleWidth = TrainingData.ShingleW, k = TrainingData.MinhashK,
-        bands = TrainingData.Bands, rowsPerBand = TrainingData.RowsPerBand,
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        bands = TrainingData.Bands, rowsPerBand = TrainingData.RowsPerBand)
     }
     graft.streaming.StreamNearDup.landed(s, outDir)
   }
@@ -2586,44 +2393,28 @@ object PipelineOps {
   /** The t22 run itself, returning the per-document flagged rows —
     * separated so the spec can pin individual verdicts on crafted docs. */
   def streamContaminationRaw(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_sct_src").toString
-    val outDir = graft.GateCache.tempDir("graft_sct_out").toString
-    val evalDir = graft.GateCache.tempDir("graft_sct_eval").toString + "/fps"
-    val ckp = graft.GateCache.tempDir("graft_sct_ckp").toString
-    // §2.6 (r16): the eval-fingerprint write (a winnow kernel scan) is
-    // independent of the replay staging — run it on a background thread
-    // and join before the stream (which reads both) starts
-    val evalF = {
-      import scala.concurrent.{ExecutionContext, Future}
-      Future {
-        TrainingData.winnowFps(s, dir)
-          .filter(col("doc_id") % TrainingData.EvalMod === 0)
-          .select(col("fp")).distinct()
-          .write.mode("overwrite").parquet(evalDir)
-      }(ExecutionContext.global)
-    }
+    val Seq(srcDir, outDir, evalRoot, ckp) =
+      dirs("graft_sct", "src", "out", "eval", "ckp")
+    val evalDir = s"$evalRoot/fps"
     val d = Tables.read(s, dir, "documents")
       .filter(col("doc_id") % TrainingData.EvalMod =!= 0)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-    val m = d.agg(max(col("doc_id"))).head().getLong(0)
-    val base = 1600000000000L // strictly increasing modtimes = replay order
-    stageReplayFiles(srcDir)(
-      (d.filter(col("doc_id") * 3 <= m), "b0.parquet", base),
-      (d.filter(col("doc_id") * 3 > m && col("doc_id") * 3 <= 2 * m),
-        "b1.parquet", base + 600000L),
-      (d.filter(col("doc_id") * 3 > 2 * m), "b2.parquet", base + 1200000L))
-    scala.concurrent.Await.result(evalF,
-      scala.concurrent.duration.Duration.Inf)
-    val stream = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      graft.streaming.StreamContamination.run(stream,
+    // §2.6 (r16): the eval-fingerprint write (a winnow kernel scan) is
+    // independent of the replay staging — overlap the two; the stream
+    // (which reads both) starts once both are on disk
+    StreamGate.overlap(
+      () => TrainingData.winnowFps(s, dir)
+        .filter(col("doc_id") % TrainingData.EvalMod === 0)
+        .select(col("fp")).distinct()
+        .write.mode("overwrite").parquet(evalDir),
+      () => stage(srcDir, StreamGate.idThirdWaves(d, "doc_id")))
+    pinned(s) {
+      graft.streaming.StreamContamination.run(replay(s, srcDir),
         idCol = "doc_id", textCol = "text",
         keepCols = Seq("doc_id", "lang", "n_chars"),
         evalFpDir = evalDir, outDir = outDir, checkpointDir = ckp,
         k = TrainingData.WinnowK, w = TrainingData.WinnowW,
-        ratio = TrainingData.DecontamRatio,
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        ratio = TrainingData.DecontamRatio)
     }
     graft.streaming.StreamContamination.landed(s, outDir)
   }
@@ -2642,28 +2433,18 @@ object PipelineOps {
     * byte-identical to the batch `x_ann_ivf_topk` — whose oracle this
     * gate reuses verbatim. */
   def streamAnnIndex(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_sai_src").toString
-    val idxDir = graft.GateCache.tempDir("graft_sai_idx").toString + "/idx"
-    val centDir = graft.GateCache.tempDir("graft_sai_cent").toString + "/cent"
-    val ckp = graft.GateCache.tempDir("graft_sai_ckp").toString
+    val Seq(srcDir, idxRoot, centRoot, ckp) =
+      dirs("graft_sai", "src", "idx", "cent", "ckp")
+    val (idxDir, centDir) = (s"$idxRoot/idx", s"$centRoot/cent")
     val e = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     graft.functions.SimilarityOps.ivfCentroids(e, "vec_id", "embedding",
       TrainingData.IvfCentroidMod).write.mode("overwrite").parquet(centDir)
-    val m = e.agg(max(col("vec_id"))).head().getLong(0)
-    val base = 1600000000000L // strictly increasing modtimes = replay order
-    stageReplayFiles(srcDir)(
-      (e.filter(col("vec_id") * 3 <= m), "b0.parquet", base),
-      (e.filter(col("vec_id") * 3 > m && col("vec_id") * 3 <= 2 * m),
-        "b1.parquet", base + 600000L),
-      (e.filter(col("vec_id") * 3 > 2 * m), "b2.parquet", base + 1200000L))
-    val stream = s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      graft.streaming.StreamAnnIndex.run(stream,
+    stage(srcDir, StreamGate.idThirdWaves(e, "vec_id"))
+    pinned(s) {
+      graft.streaming.StreamAnnIndex.run(replay(s, srcDir),
         idCol = "vec_id", vecCol = "embedding",
-        centDir = centDir, indexDir = idxDir, checkpointDir = ckp,
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        centDir = centDir, indexDir = idxDir, checkpointDir = ckp)
     }
     graft.streaming.StreamAnnIndex.probeTopK(s, idxDir,
       e.filter(col("vec_id") < TrainingData.AnnQueryIds),
@@ -2684,34 +2465,23 @@ object PipelineOps {
     * replays drop (window.end ≤ lagged wm) and emit (window.end ≤ final
     * wm) in SQL — exactly which rows vanish and which windows appear. */
   def lateDataWindows(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_late_src").toString
-    val outDir = graft.GateCache.tempDir("graft_late_out").toString
-    val ckp = graft.GateCache.tempDir("graft_late_ckp").toString
+    val Seq(srcDir, outDir, ckp) = dirs("graft_late", "src", "out", "ckp")
     val MidUs = 1705363200000000L // 2024-01-16T00:00:00Z
     val Mid2Us = 1705968000000000L // 2024-01-23T00:00:00Z
     val ev = Tables.events(s, dir).select(col("event_id"), col("ts_us"))
     val straggler = col("event_id") % 97 === 0
-    val base = 1600000000000L // fixed modtimes: strictly increasing
-    stageReplayFiles(srcDir)(
-      (ev.filter(col("ts_us") < MidUs && !straggler), "chunk0.parquet", base),
-      (ev.filter(col("ts_us") >= MidUs && col("ts_us") < Mid2Us),
-        "chunk1.parquet", base + 600000L),
-      (ev.filter(col("ts_us") >= Mid2Us ||
-          (col("ts_us") < MidUs && straggler)),
-        "chunk2.parquet", base + 1200000L))
-    val schema = StructType.fromDDL("event_id BIGINT, ts_us BIGINT")
-    val agg = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    stage(srcDir, Seq(ev.filter(col("ts_us") < MidUs && !straggler),
+      ev.filter(col("ts_us") >= MidUs && col("ts_us") < Mid2Us),
+      ev.filter(col("ts_us") >= Mid2Us ||
+        (col("ts_us") < MidUs && straggler))), prefix = "chunk")
+    val agg = replay(s, srcDir)
       .withColumn("ts_ev", timestamp_micros(col("ts_us")))
       .withWatermark("ts_ev", "30 minutes")
       .groupBy(window(col("ts_ev"), "1 hour"))
       .agg(count(lit(1)).as("n_events"))
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = agg.writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    pinned(s) {
+      BoundedStream.drain(agg.writeStream.outputMode("append")
+        .format("parquet").option("path", outDir), ckp)
     }
     s.read.parquet(outDir)
       .select(unix_micros(col("window.start")).as("ws_us"), col("n_events"))
@@ -2755,14 +2525,12 @@ object PipelineOps {
         rep.targetExists("nation")))
 
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tgt = graft.GateCache.tempDir("graft_lc_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_lc_ckp").toString
+    val Seq(tgt, ckp, srcDir) = dirs("graft_lc", "tgt", "ckp", "src")
     val pipe = new CdcPipeline(s, tgt, ckp)
     val schema = EventsNanosDdl
-    val srcDir = graft.GateCache.tempDir("graft_lc_src")
-    Files.createSymbolicLink(srcDir.resolve("events.parquet"),
+    Files.createSymbolicLink(java.nio.file.Paths.get(srcDir, "events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val stream = s.readStream.schema(schema).parquet(srcDir.toString)
+    val stream = s.readStream.schema(schema).parquet(srcDir)
       .withColumn("op", lit("I"))
       .withColumn("_tbl",
         when(col("user_id") % 2 === 0, "events_a").otherwise("events_b"))
@@ -2788,13 +2556,9 @@ object PipelineOps {
     * `w1_live_view` result, so both share one oracle
     * ([[ReferenceOps.LiveViewOracle]]): write-path ≡ read-path dedup. */
   def statefulLiveView(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_slv_src").toString
-    val outDir = graft.GateCache.tempDir("graft_slv_out").toString
-    val ckp = graft.GateCache.tempDir("graft_slv_ckp").toString
+    val Seq(srcDir, outDir, ckp) = dirs("graft_slv", "src", "out", "ckp")
     Tables.events(s, dir).repartition(3).write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val stream = replay(s, srcDir)
       .withColumn("op",
         when(col("event_type") === "signup", graft.operators.CdcTransform.Insert)
           .when(col("event_type") === "error", graft.operators.CdcTransform.Delete)
@@ -2806,18 +2570,13 @@ object PipelineOps {
     val live = graft.streaming.StatefulLiveView.materializedLive(
       stamped, pks = Seq("user_id"), versionCol = VersionCol,
       seqCol = SeqCol, deletedCol = DeletedCol, tombstoneRetention = None)
-    // state-store partitioning knob, same rationale as streamDedupCounts
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = live.writeStream.outputMode("update")
-        .option("checkpointLocation", ckp)
+    pinned(s) {
+      BoundedStream.drain(live.writeStream.outputMode("update")
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           b.withColumn("_batch", lit(id))
             .write.mode("append").parquet(outDir)
           ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckp)
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("_batch").desc)
@@ -2910,31 +2669,20 @@ object PipelineOps {
     * mode next to the append gates (t5/t10) and the update-like
     * foreachBatch sinks (t1/t9). */
   def completeModeAgg(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_cm_src").toString
+    val Seq(srcDir, ckp) = dirs("graft_cm", "src", "ckp")
     Tables.events(s, dir)
       .select(col("event_id"), col("event_type"))
       .repartition(3).write.mode("overwrite").parquet(srcDir)
-    val schema = StructType.fromDDL("event_id BIGINT, event_type STRING")
     val name = "graft_t11_complete"
-    // State partitioning pinned to 4 like every other stateful gate here
-    // (the streamDedupCounts note): captured from shuffle.partitions at
-    // the stream's first checkpoint, each batch then commits one state
-    // delta per partition. The aggregate has FIVE keys (event types) —
-    // at the session's 32 the three batches paid 96 near-empty state
-    // commits of pure filesystem overhead (the r15 driver measured this
-    // gate 2× slower on 32 cores than on 8). A per-checkpoint sizing
-    // knob, not engine semantics; the grouped result is
-    // partitioning-independent.
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    // the aggregate has FIVE keys (event types): the state pin matters
+    // most here (this gate measured 2× slower on 32 cores than on 8); the
+    // grouped result is partitioning-independent
+    pinned(s) {
+      BoundedStream.drain(replay(s, srcDir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .queryName(name), ckp)
     }
     // materialize off the memory sink so later callers don't race the
     // temp view
@@ -2997,16 +2745,12 @@ object PipelineOps {
     * batch-local co-presence. Returns the landed joined rows (batch
     * frame). */
   def runStreamStreamJoin(s: SparkSession, srcDir: String): DataFrame = {
-    val outDir = graft.GateCache.tempDir("graft_ssj_out").toString
-    val ckp = graft.GateCache.tempDir("graft_ssj_ckp").toString
-    val schema = s.read.parquet(srcDir).schema
-    def src() = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val views = src().filter(col("event_type") === "view")
+    val Seq(outDir, ckp) = dirs("graft_ssj", "out", "ckp")
+    val views = replay(s, srcDir).filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("v_event"),
         col("ts_ev").as("v_ts"))
       .withWatermark("v_ts", "3650 days")
-    val purchases = src().filter(col("event_type") === "purchase")
+    val purchases = replay(s, srcDir).filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("p_event"),
         col("ts_ev").as("p_ts"))
       .withWatermark("p_ts", "3650 days")
@@ -3014,13 +2758,9 @@ object PipelineOps {
       col("v_user") === col("p_user") &&
         col("p_ts") >= col("v_ts") &&
         col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"))
-    // state-store partitioning knob, same rationale as streamDedupCounts
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = joined.writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    pinned(s) {
+      BoundedStream.drain(joined.writeStream.outputMode("append")
+        .format("parquet").option("path", outDir), ckp)
     }
     s.read.parquet(outDir)
   }
@@ -3047,8 +2787,8 @@ object PipelineOps {
       .filter(col("event_type").isin("view", "purchase"))
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("ts_us")).as("ts_ev"))
-    val (lo, mid1, mid2, hi) =
-      terciles(d, unix_micros(col("ts_ev")), s"events table in $dir")
+    val (waves, hi) = StreamGate.tercileWaves(
+      d, unix_micros(col("ts_ev")), s"events table in $dir")
     def flush(atUs: Long): DataFrame = s.range(1).select(
       lit(-1L).as("user_id"), lit(-1L).as("event_id"),
       lit("view").as("event_type"), timestamp_micros(lit(atUs)).as("ts_ev"))
@@ -3057,15 +2797,7 @@ object PipelineOps {
         lit("purchase").as("event_type"),
         timestamp_micros(lit(atUs)).as("ts_ev")))
     val dayUs = 86400000000L
-    val base = 1600000000000L // strictly increasing modtimes = replay order
-    stageReplayFiles(srcDir)(
-      (d.filter(unix_micros(col("ts_ev")) <= mid1), "b0.parquet", base),
-      (d.filter(unix_micros(col("ts_ev")) > mid1 &&
-        unix_micros(col("ts_ev")) <= mid2), "b1.parquet", base + 600000L),
-      (d.filter(unix_micros(col("ts_ev")) > mid2), "b2.parquet",
-        base + 1200000L),
-      (flush(hi + 10 * dayUs), "b3.parquet", base + 1800000L),
-      (flush(hi + 20 * dayUs), "b4.parquet", base + 2400000L))
+    stage(srcDir, waves :+ flush(hi + 10 * dayUs) :+ flush(hi + 20 * dayUs))
     runStreamOuterJoin(s, srcDir).filter(col("v_user") >= 0)
   }
 
@@ -3077,16 +2809,12 @@ object PipelineOps {
     * not batch-local bookkeeping. Returns the landed joined rows,
     * sentinels included (callers filter negative user ids). */
   def runStreamOuterJoin(s: SparkSession, srcDir: String): DataFrame = {
-    val outDir = graft.GateCache.tempDir("graft_soj_out").toString
-    val ckp = graft.GateCache.tempDir("graft_soj_ckp").toString
-    val schema = s.read.parquet(srcDir).schema
-    def src() = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val views = src().filter(col("event_type") === "view")
+    val Seq(outDir, ckp) = dirs("graft_soj", "out", "ckp")
+    val views = replay(s, srcDir).filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("v_event"),
         col("ts_ev").as("v_ts"))
       .withWatermark("v_ts", "0 seconds")
-    val purchases = src().filter(col("event_type") === "purchase")
+    val purchases = replay(s, srcDir).filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("p_event"),
         col("ts_ev").as("p_ts"))
       .withWatermark("p_ts", "0 seconds")
@@ -3095,12 +2823,9 @@ object PipelineOps {
         col("p_ts") >= col("v_ts") &&
         col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"),
       "left_outer")
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = joined.writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    pinned(s) {
+      BoundedStream.drain(joined.writeStream.outputMode("append")
+        .format("parquet").option("path", outDir), ckp)
     }
     s.read.parquet(outDir)
   }
@@ -3442,25 +3167,18 @@ object PipelineOps {
     * micro-batches; the enriched rows land and aggregate per market
     * segment. */
   def streamStaticEnrich(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_sse_src").toString
-    val outDir = graft.GateCache.tempDir("graft_sse_out").toString
-    val ckp = graft.GateCache.tempDir("graft_sse_ckp").toString
+    val Seq(srcDir, outDir, ckp) = dirs("graft_sse", "src", "out", "ckp")
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("value"))
       .repartition(3).write.mode("overwrite").parquet(srcDir)
     val nCust = Tables.read(s, dir, "customer").count()
     val dim = Tables.read(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val schema = s.read.parquet(srcDir).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val stream = replay(s, srcDir)
       .withColumn("_fk", col("user_id") % nCust + 1)
       .join(broadcast(dim), col("_fk") === col("c_custkey"), "left")
-    val q = stream.writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.drain(stream.writeStream.outputMode("append")
+      .format("parquet").option("path", outDir), ckp)
     s.read.parquet(outDir)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),
@@ -3913,9 +3631,7 @@ object PipelineOps {
     * four-cut ledger, all counts derivable from the split predicate. */
   def multiTableCdc(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.MultiTableCdc
-    val srcDir = graft.GateCache.tempDir("graft_mtc_src").toString
-    val root = graft.GateCache.tempDir("graft_mtc_root").toString
-    val ckp = graft.GateCache.tempDir("graft_mtc_ckp").toString
+    val Seq(srcDir, root, ckp) = dirs("graft_mtc", "src", "root", "ckp")
     val o = s.read.parquet(s"$dir/orders.parquet")
       .select(lit("orders").as("tbl"), col("o_orderkey").as("k0"),
         lit(0L).as("k1"),
@@ -3925,14 +3641,9 @@ object PipelineOps {
         col("l_linenumber").cast("long").as("k1"),
         col("l_quantity").cast("long").as("v"))
     val env = o.unionByName(l)
-    val base = 1600000000000L
-    stageReplayFiles(srcDir)((0 to 2).map(b =>
-      (env.filter(col("k0") % 3 === b), s"b$b.parquet",
-        base + b * 600000L)): _*)
-    val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      MultiTableCdc.run(stream, Seq("orders", "lineitem"), root, ckp)
+    stage(srcDir, (0 to 2).map(b => env.filter(col("k0") % 3 === b)))
+    pinned(s) {
+      MultiTableCdc.run(replay(s, srcDir), Seq("orders", "lineitem"), root, ckp)
     }
     def cut(name: String, vO: Long, vL: Long): DataFrame = {
       val ord = MultiTableCdc.readAt(s, root, "orders", vO)
@@ -3947,14 +3658,9 @@ object PipelineOps {
     // §2.6 (r16): the four cut verifications are independent reads of the
     // landed store (each: two counts + one anti-join count) — run them
     // concurrently and assemble in the original order
-    val cutsF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      (0L to 2L).map(v => Future(cut(s"v$v", v, v))) :+
-        scala.concurrent.Future(cut("mixed_li2_o1", 1L, 2L))
-    }
-    val all = cutsF.map(scala.concurrent.Await
-        .result(_, scala.concurrent.duration.Duration.Inf))
+    val all = StreamGate.overlap(
+      (0L to 2L).map(v => () => cut(s"v$v", v, v)) :+
+        (() => cut("mixed_li2_o1", 1L, 2L)): _*)
       .reduce(_.unionByName(_))
     val rows = all.collect()
     require(rows.filter(_.getString(0).startsWith("v"))
@@ -4118,14 +3824,10 @@ object PipelineOps {
     val assign = Seq(
       ("db_ref", Seq("region", "nation")),
       ("db_core", Seq("supplier", "customer")))
-    import scala.collection.parallel.CollectionConverters._
-    val par = assign.par
-    par.tasksupport = new scala.collection.parallel.ExecutionContextTaskSupport(
-      scala.concurrent.ExecutionContext.global)
-    val results = par.map { case (db, tables) =>
-      val rep = new SnapshotReplicator(s, dir, s"$wh/$db")
-      rep.run(tables, parallelism = tables.length).map(r => (db, r))
-    }.toList.flatten
+    val results = StreamGate.overlap(assign.map { case (db, tables) =>
+      () => new SnapshotReplicator(s, dir, s"$wh/$db")
+        .run(tables, parallelism = tables.length).map(r => (db, r))
+    }: _*).flatten
     import s.implicits._
     results.map { case (db, r) =>
       (db, r.table, r.sourceCount, r.targetCount, r.success) }
@@ -4174,26 +3876,15 @@ object PipelineOps {
     * (batch Replacing ≡ Collapsing ≡ stateful ≡ streaming collapse ≡
     * failure-retried sink). */
   def sinkRetry(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_rty_src").toString
-    val storeDir = graft.GateCache.tempDir("graft_rty_store").toString
-    val ckp = graft.GateCache.tempDir("graft_rty_ckp").toString
+    val Seq(srcDir, storeDir, ckp) = dirs("graft_rty", "src", "store", "ckp")
     val rows = ReferenceOps.stamped(s, dir)
       .select(col("user_id"), col("event_type"), col("value"), col("props"),
         col(VersionCol), col(SeqCol), col(DeletedCol))
-    val (lo, mid1, mid2, hi) =
-      terciles(rows, col(VersionCol), s"stamped events in $dir")
-    val base = 1600000000000L
-    stageReplayFiles(srcDir)(
-      (rows.filter(col(VersionCol) <= mid1), "b0.parquet", base),
-      (rows.filter(col(VersionCol) > mid1 && col(VersionCol) <= mid2),
-        "b1.parquet", base + 600000L),
-      (rows.filter(col(VersionCol) > mid2), "b2.parquet",
-        base + 1200000L))
-    val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val attempts = withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
+    stage(srcDir, StreamGate.tercileWaves(
+      rows, col(VersionCol), s"stamped events in $dir")._1)
+    val attempts = pinned(s) {
       graft.streaming.SinkRetry.runWithTransientFailure(
-        stream, storeDir, ckp)
+        replay(s, srcDir), storeDir, ckp)
     }
     require(attempts == 2, s"fault must fire exactly once, took $attempts")
     LiveView.live(graft.streaming.SinkRetry.landed(s, storeDir),
@@ -4211,26 +3902,15 @@ object PipelineOps {
     * O(delta) when the history is 100 TB. Shares the x_scd2_history
     * oracle: stream ≡ batch, interval for interval. */
   def streamScd2(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_scd2_src").toString
-    val storeDir = graft.GateCache.tempDir("graft_scd2_store").toString
-    val ckp = graft.GateCache.tempDir("graft_scd2_ckp").toString
+    val Seq(srcDir, storeDir, ckp) = dirs("graft_scd2", "src", "store", "ckp")
     val rows = ReferenceOps.stamped(s, dir)
       .select(col("user_id"), col("event_type"), col("value"),
         col(DeletedCol).as("deleted"), col(VersionCol).as("valid_from"),
         col(SeqCol))
-    val (lo, mid1, mid2, hi) =
-      terciles(rows, col("valid_from"), s"stamped events in $dir")
-    val base = 1600000000000L
-    stageReplayFiles(srcDir)(
-      (rows.filter(col("valid_from") <= mid1), "b0.parquet", base),
-      (rows.filter(col("valid_from") > mid1
-        && col("valid_from") <= mid2), "b1.parquet", base + 600000L),
-      (rows.filter(col("valid_from") > mid2), "b2.parquet",
-        base + 1200000L))
-    val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      graft.streaming.StreamScd2.run(stream, storeDir, ckp)
+    stage(srcDir, StreamGate.tercileWaves(
+      rows, col("valid_from"), s"stamped events in $dir")._1)
+    pinned(s) {
+      graft.streaming.StreamScd2.run(replay(s, srcDir), storeDir, ckp)
     }
   }
 
@@ -4244,26 +3924,16 @@ object PipelineOps {
     * collapsed FINAL must reproduce the same live rows as w1 /
     * x_collapsing_final — a fourth query sharing the LiveViewOracle. */
   def streamCollapsingFinal(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_scl_src").toString
-    val storeDir = graft.GateCache.tempDir("graft_scl_store").toString
-    val ckp = graft.GateCache.tempDir("graft_scl_ckp").toString
+    val Seq(srcDir, storeDir, ckp) = dirs("graft_scl", "src", "store", "ckp")
     val payload = Seq("event_type", "value", "props")
     val cl = graft.operators.Collapsing.changelog(
       ReferenceOps.stamped(s, dir).select("user_id", "event_type", "value",
         "props", VersionCol, SeqCol, DeletedCol),
       pks = Seq("user_id"), payload = payload)
-    val (lo, mid1, mid2, hi) =
-      terciles(cl, col(VersionCol), s"collapsing rows in $dir")
-    val base = 1600000000000L
-    stageReplayFiles(srcDir)(
-      (cl.filter(col(VersionCol) <= mid1), "b0.parquet", base),
-      (cl.filter(col(VersionCol) > mid1 && col(VersionCol) <= mid2),
-        "b1.parquet", base + 600000L),
-      (cl.filter(col(VersionCol) > mid2), "b2.parquet", base + 1200000L))
-    val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      graft.streaming.StreamCollapse.run(stream, pks = Seq("user_id"),
+    stage(srcDir, StreamGate.tercileWaves(
+      cl, col(VersionCol), s"collapsing rows in $dir")._1)
+    pinned(s) {
+      graft.streaming.StreamCollapse.run(replay(s, srcDir), pks = Seq("user_id"),
         payload = payload, storeDir = storeDir, checkpointDir = ckp)
     }
   }
@@ -4276,31 +3946,20 @@ object PipelineOps {
     * Returns (landed base dir, final MV snapshot dir). */
   private[graft] def runLiveProjection(
       s: SparkSession, dir: String): (String, String) = {
-    val srcDir = graft.GateCache.tempDir("graft_lpj_src").toString
-    val baseDir = graft.GateCache.tempDir("graft_lpj_base").toString + "/t"
-    val mvDir = graft.GateCache.tempDir("graft_lpj_mv").toString
-    val ckp = graft.GateCache.tempDir("graft_lpj_ckp").toString
+    val Seq(srcDir, baseRoot, mvDir, ckp) =
+      dirs("graft_lpj", "src", "base", "mv", "ckp")
+    val baseDir = s"$baseRoot/t"
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
       col("event_type"),
       round(col("value") * 1000000d, 0).cast("bigint").as("value_micro"))
-    val m = ev.agg(max(col("event_id"))).head().getLong(0)
-    val base = 1600000000000L
-    stageReplayFiles(srcDir)(
-      (ev.filter(col("event_id") * 3 <= m), "b0.parquet", base),
-      (ev.filter(col("event_id") * 3 > m && col("event_id") * 3 <= 2 * m),
-        "b1.parquet", base + 600000L),
-      (ev.filter(col("event_id") * 3 > 2 * m), "b2.parquet", base + 1200000L))
+    stage(srcDir, StreamGate.idThirdWaves(ev, "event_id"))
     def partialOf(df: DataFrame): DataFrame = df.groupBy(col("event_type"))
       .agg(count(lit(1)).as("_cnt"),
         sum(col("value_micro")).as("_sum_value_micro"),
         min(col("value_micro")).as("_min_value_micro"),
         max(col("value_micro")).as("_max_value_micro"))
-    val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    pinned(s) {
+      BoundedStream.drain(replay(s, srcDir).writeStream.outputMode("append")
         .foreachBatch { (b: DataFrame, batchId: Long) =>
           b.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(baseDir)
           val p = partialOf(b)
@@ -4318,9 +3977,7 @@ object PipelineOps {
           folded.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$mvDir/v$batchId")
           ()
-        }
-        .start()
-      q.awaitTermination()
+        }, ckp)
     }
     val last = new java.io.File(mvDir).listFiles()
       .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong).max
@@ -4410,22 +4067,15 @@ object PipelineOps {
     * events cannot resurrect deletes. The oracle is the same global LWW
     * the live view pins — three write mechanisms, one semantics. */
   def streamMergeSink(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_ms_src").toString
-    val tgtRoot = graft.GateCache.tempDir("graft_ms_tgt").toString
-    val ckp = graft.GateCache.tempDir("graft_ms_ckp").toString
+    val Seq(srcDir, tgtRoot, ckp) = dirs("graft_ms", "src", "tgt", "ckp")
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
       .repartitionByRange(3, col("event_id"))
       .sortWithinPartitions(col("event_id"))
       .write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
     @volatile var current: Option[String] = None
-    val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckp)
+    BoundedStream.drain(replay(s, srcDir).writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          batchId: Long) =>
@@ -4448,8 +4098,7 @@ object PipelineOps {
             .write.mode("overwrite").parquet(out)
           current = Some(out)
           ()
-      }.start()
-    q.awaitTermination()
+      }, ckp)
     s.read.parquet(current.get)
       .filter(col(DeletedCol) === 0)
       .select(col("user_id"), col("last_event_id"), col("last_type"))
@@ -4524,8 +4173,7 @@ object PipelineOps {
     * the oracle, which re-derives them straight from `nation`. 100 TB
     * lakes carry nested data; the replicator must move it losslessly. */
   def nestedRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.GateCache.tempDir("graft_nested_src").toString
-    val wh = graft.GateCache.tempDir("graft_nested_wh").toString
+    val Seq(srcDir, wh) = dirs("graft_nested", "src", "wh")
     Tables.read(s, dir, "nation")
       .select(col("n_nationkey").cast("long").as("id"),
         struct(col("n_name").as("name"),
@@ -4558,13 +4206,12 @@ object PipelineOps {
     * (The dim goes through parquet deliberately — a LocalRelation dim is
     * constant-folded and DPP's selective-predicate check never fires.) */
   def dppJoin(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.GateCache.tempDir("graft_dpp_fact").toString
+    val Seq(out, dimDir) = dirs("graft_dpp", "fact", "dim")
     Tables.events(s, dir)
       .withColumn("event_date",
         to_date(timestamp_micros(col("ts_us"))).cast("string"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("event_date").parquet(out)
-    val dimDir = graft.GateCache.tempDir("graft_dpp_dim").toString
     import s.implicits._
     (1 to 31).map(d => (f"2024-01-$d%02d",
         if (d % 7 == 0) "peak" else "off"))

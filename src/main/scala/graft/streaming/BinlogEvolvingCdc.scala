@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.CdcTransform
 import graft.sources.{BinlogFormat, BinlogSource}
@@ -54,13 +53,11 @@ object BinlogEvolvingCdc {
     // driver-held running schema: foreachBatch runs batches sequentially
     // on the driver, like EvolvingCdc's `current`
     var current: Option[StructType] = None
-    val q = s.readStream.format("binaryFile")
+    BoundedStream.drain(s.readStream.format("binaryFile")
       .schema(BinlogSource.BinaryFileSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(landing)
       .writeStream
-      .option("checkpointLocation", ckp)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val files = batch.toDF().persist() // scanned twice: defs + decode
         try {
@@ -99,9 +96,7 @@ object BinlogEvolvingCdc {
           }
         } finally { files.unpersist(); () }
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, ckp)
     current.getOrElse(throw new IllegalStateException(
       s"no TABLE_MAP for `$table` arrived under $landing"))
   }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.operators.CdcTransform
 
@@ -152,7 +151,7 @@ object EvolvingCdc {
     // evolved columns whose every value so far was null: their STRING
     // registration is a placeholder, re-typed by the first non-null
     var provisional = Set.empty[String]
-    val q = s.readStream
+    BoundedStream.drain(s.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(landing)
       .writeStream
@@ -259,11 +258,7 @@ object EvolvingCdc {
           .filter(col("_tbl") === table).drop("op", "_tbl")
           .write.mode("append").parquet(tgt)
         ()
-      }
-      .option("checkpointLocation", ckp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, ckp)
     current
   }
 

@@ -66,14 +66,10 @@ object MultiTableCdc {
   /** Drain the multiplexed envelope stream. */
   def run(stream: DataFrame, tables: Seq[String], root: String,
       checkpointDir: String): Unit = {
-    val q = stream.writeStream
+    BoundedStream.drain(stream.writeStream
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, tables, root, batchId)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 }

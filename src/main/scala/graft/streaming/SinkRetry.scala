@@ -3,7 +3,6 @@ package graft.streaming
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 /** Transient-sink-failure recovery — the reference's documented gap
   * ("No retry on insert failure: failed ClickHouse inserts are not
@@ -45,11 +44,9 @@ object SinkRetry {
       failAtBatch: Long = 1L): Int = {
     val t = trace.computeIfAbsent(storeDir,
       _ => new ConcurrentLinkedQueue[(Int, Long)]())
-    def start(attempt: Int) = {
-      val q = stream.writeStream
+    def start(attempt: Int): Unit = {
+      BoundedStream.drain(stream.writeStream
         .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           t.add((attempt, batchId))
           if (batchId == failAtBatch && fired.add(storeDir)) {
@@ -61,9 +58,7 @@ object SinkRetry {
           // …is overwritten wholesale on replay: per-batch ownership
           batch.write.mode("overwrite").parquet(s"$storeDir/b$batchId")
           ()
-        }
-        .start()
-      q.awaitTermination()
+        }, checkpointDir)
     }
     try { start(1); 1 }
     catch {

@@ -43,11 +43,8 @@ object StreamAnnIndex {
     * centroid frame persisted at `centDir`
     * ([[SimilarityOps.ivfCentroids]] schema). */
   def run(stream: DataFrame, idCol: String, vecCol: String,
-          centDir: String, indexDir: String, checkpointDir: String,
-          trigger: org.apache.spark.sql.streaming.Trigger): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+          centDir: String, indexDir: String, checkpointDir: String): Unit = {
+    BoundedStream.drain(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val cent = batch.sparkSession.read.parquet(centDir)
         // cell-clustered delta: repartition by cell (each cell wholly in
@@ -58,9 +55,7 @@ object StreamAnnIndex {
           .sortWithinPartitions(col("_cell"))
           .write.mode("append").parquet(indexDir)
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Opens the accrued index for probing. */

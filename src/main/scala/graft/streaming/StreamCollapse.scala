@@ -3,7 +3,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.model.SchemaModel.{SeqCol, VersionCol}
 import graft.operators.Collapsing
 
@@ -60,18 +59,13 @@ object StreamCollapse {
       pks: Seq[String],
       payload: Seq[String],
       storeDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
+      checkpointDir: String): DataFrame = {
     val spark = stream.sparkSession
-    val q = stream.writeStream
+    BoundedStream.drain(stream.writeStream
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, pks, payload, storeDir, batchId)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
     finalRows(spark, storeDir, pks, payload)
   }
 

@@ -43,11 +43,8 @@ object StreamContamination {
     * with one `fp` long column. */
   def run(stream: DataFrame, idCol: String, textCol: String,
           keepCols: Seq[String], evalFpDir: String, outDir: String,
-          checkpointDir: String, k: Int, w: Int, ratio: Double,
-          trigger: org.apache.spark.sql.streaming.Trigger): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+          checkpointDir: String, k: Int, w: Int, ratio: Double): Unit = {
+    BoundedStream.drain(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val fps = batch.select(col(idCol),
@@ -72,9 +69,7 @@ object StreamContamination {
           .parquet(BatchDirs.dir(outDir, batchId))
         fps.unpersist()
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** All landed flagged rows (union of the per-batch directories). */

@@ -41,18 +41,14 @@ import graft.functions.DedupOps
   */
 object StreamNearDup {
 
-  /** Runs the stream to completion (AvailableNow semantics are the
-    * caller's choice via `trigger`), landing per-document flagged rows
-    * `keepCols :+ is_dup(0/1 long)` under `outDir` and the band index
-    * under `indexDir`. */
+  /** Drains the stream ([[BoundedStream.drain]]), landing per-document
+    * flagged rows `keepCols :+ is_dup(0/1 long)` under `outDir` and the
+    * band index under `indexDir`. */
   def run(stream: DataFrame, idCol: String, textCol: String,
           keepCols: Seq[String], indexDir: String, outDir: String,
           checkpointDir: String, shingleWidth: Int, k: Int,
-          bands: Int, rowsPerBand: Int,
-          trigger: org.apache.spark.sql.streaming.Trigger): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+          bands: Int, rowsPerBand: Int): Unit = {
+    BoundedStream.drain(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val bnd = DedupOps.lshBands(
@@ -87,9 +83,7 @@ object StreamNearDup {
           .parquet(BatchDirs.dir(indexDir, batchId))
         bnd.unpersist()
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** All landed flagged rows (union of the per-batch directories). */

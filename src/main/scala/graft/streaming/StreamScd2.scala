@@ -125,15 +125,11 @@ object StreamScd2 {
   def run(stream: DataFrame, storeDir: String,
       checkpointDir: String): DataFrame = {
     val s = stream.sparkSession
-    val q = stream.writeStream
+    BoundedStream.drain(stream.writeStream
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, storeDir, batchId)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
     history(s, storeDir)
   }
 }

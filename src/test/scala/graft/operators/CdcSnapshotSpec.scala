@@ -51,16 +51,6 @@ class CdcTransformSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(row == Seq((2L, 1, 250L, 250L)))
     assert(!fixed.columns.contains("before_key"))
   }
-
-  test("threeWayUnion ≡ single-pass stamp (§2.6 union operator)") {
-    val a = CdcTransform.threeWayUnion(
-      changes.withColumn("ts", timestamp_micros($"ts_us")), "op", "id", "ts")
-    val b = CdcTransform.stamp(
-      changes.withColumn("ts", timestamp_micros($"ts_us")), "op", "id",
-      unix_micros($"ts"))
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    assert(a.count() == 3)
-  }
 }
 
 /** Snapshot path over real harness data (SURVEY.md §7.5 minimum slice):

@@ -78,10 +78,4 @@ class LiveViewSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(live.filter($"product_id" === 10).select("payload")
       .head().getString(0) == "y")
   }
-
-  test("createLiveView registers <table>_live (K5, SURVEY.md §3.3 gap)") {
-    val df = mk(Seq((1, "a@x.com", "I", 1L, 1L)))
-    LiveView.createLiveView(df, "users", Seq("id"))
-    assert(spark.sql("SELECT * FROM users_live").count() == 1)
-  }
 }

@@ -23,9 +23,9 @@ class StateStoreReaderSpec extends AnyFunSuite with graft.GateCacheHygiene {
       val base = 1600000000000L
       val b0 = Seq((1L, 10L), (1L, 5L), (2L, 7L))
       val b1 = Seq((1L, 100L), (3L, 1L))
-      PipelineOps.stageReplayFile(src)(
+      StreamGate.stageReplayFile(src)(
         b0.toDF("user_id", "cents"), "b0.parquet", base)
-      PipelineOps.stageReplayFile(src)(
+      StreamGate.stageReplayFile(src)(
         b1.toDF("user_id", "cents"), "b1.parquet", base + 60000L)
       val schema = spark.read.parquet(src).schema
       val q = spark.readStream.schema(schema)
@@ -74,9 +74,9 @@ class StateStoreReaderSpec extends AnyFunSuite with graft.GateCacheHygiene {
       val base = 1600000000000L
       val b0 = Seq((1L, "click", 10L), (1L, "view", 5L), (2L, "click", 7L))
       val b1 = Seq((1L, "click", 100L), (3L, "signup", 1L))
-      PipelineOps.stageReplayFile(src)(
+      StreamGate.stageReplayFile(src)(
         b0.toDF("user_id", "event_type", "cents"), "b0.parquet", base)
-      PipelineOps.stageReplayFile(src)(
+      StreamGate.stageReplayFile(src)(
         b1.toDF("user_id", "event_type", "cents"), "b1.parquet", base + 60000L)
       val schema = spark.read.parquet(src).schema
       val q = graft.streaming.TypedStateProfile.profileStream(

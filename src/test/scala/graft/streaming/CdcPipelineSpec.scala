@@ -80,6 +80,40 @@ class CdcPipelineSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(liveAfterReplay == live)
   }
 
+  test("registerLiveView is late-bound: appends after registration show, " +
+      "tombstones drop, _ingest_seq breaks _version ties") {
+    val (src, tgt, ckp) = freshDirs()
+    val pipe = new CdcPipeline(spark, tgt, ckp)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id INT, email STRING, op STRING, seq BIGINT")
+    // every batch gets the SAME version: only the seq orders a key's rows
+    def drain(): Unit = pipe.start(
+      spark.readStream.schema(schema).parquet(s"$src/*"), "members",
+      opCol = "op", seqCol = "seq", versionOf = _ => 5L).awaitTermination()
+    writeSegment(src, "seg1", Seq((1, "a@x.com", "I", 1L),
+      (2, "b@x.com", "I", 2L), (1, "a2@x.com", "U", 3L)))
+    drain()
+    val name = pipe.registerLiveView("members", Seq("id"))
+    assert(name == "members_live")
+    def live() = spark.sql(s"SELECT * FROM $name").as[(Int, String)]
+      .collect().toSet
+    assert(spark.table(name).columns.toSeq == Seq("id", "email"))
+    assert(live() == Set((1, "a2@x.com"), (2, "b@x.com")))
+    // appended AFTER registration, no re-registration: key 2 tombstoned,
+    // key 3 new; key 1's late row carries a LOWER seq at the same
+    // version, so it must not displace the seq-3 survivor
+    writeSegment(src, "seg2", Seq((2, "b@x.com", "D", 4L),
+      (3, "c@x.com", "I", 5L), (1, "stale@x.com", "U", 0L)))
+    drain()
+    assert(live() == Set((1, "a2@x.com"), (3, "c@x.com")))
+    // names reach SQL text: anything but a plain identifier is rejected
+    Seq("bad name", "x; DROP VIEW members_live", "a`b").foreach { bad =>
+      intercept[IllegalArgumentException](pipe.registerLiveView(bad, Seq("id")))
+    }
+    intercept[IllegalArgumentException](
+      pipe.registerLiveView("members", Seq("id` OR 1=1 --")))
+  }
+
   test("progress listener observes micro-batch metrics (O6)") {
     val (src, tgt, ckp) = freshDirs()
     val logger = ProgressLogger.attach(spark)

@@ -30,7 +30,7 @@ class RunningTotalsSpec extends AnyFunSuite with graft.GateCacheHygiene {
 
   private def stageTo(src: String)(rows: Seq[(Long, Long)], name: String,
                                    mtime: Long): Unit =
-    graft.queries.PipelineOps.stageReplayFile(src)(
+    graft.queries.StreamGate.stageReplayFile(src)(
       rows.toDF("user_id", "cents"), name, mtime)
 
   test("state survives a query RESTART from the checkpoint: a new query instance continues the totals") {

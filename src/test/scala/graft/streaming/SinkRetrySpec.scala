@@ -19,7 +19,7 @@ class SinkRetrySpec extends AnyFunSuite with graft.GateCacheHygiene {
     val storeDir = Files.createTempDirectory("graft_rtys_store").toString
     val ckp = Files.createTempDirectory("graft_rtys_ckp").toString
     val all = (1L to 7L).map(i => (i, s"v$i")).toDF("id", "v")
-    val stage = graft.queries.PipelineOps.stageReplayFile(srcDir) _
+    val stage = graft.queries.StreamGate.stageReplayFile(srcDir) _
     val base = 1600000000000L
     stage(all.filter($"id" <= 2), "b0.parquet", base)
     stage(all.filter($"id" > 2 && $"id" <= 5), "b1.parquet", base + 600000L)

@@ -56,7 +56,7 @@ class StreamCollapseSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val srcDir = Files.createTempDirectory("graft_scls_src").toString
     val storeDir = Files.createTempDirectory("graft_scls_store").toString
     val ckp = Files.createTempDirectory("graft_scls_ckp").toString
-    val stage = graft.queries.PipelineOps.stageReplayFile(srcDir) _
+    val stage = graft.queries.StreamGate.stageReplayFile(srcDir) _
     val base = 1600000000000L
     // cancels carry the PREVIOUS state's version, so a version split puts
     // k=1's later updates and their cancels in b1 while its v1 state and

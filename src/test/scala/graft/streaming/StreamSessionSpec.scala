@@ -16,7 +16,7 @@ class StreamSessionSpec extends AnyFunSuite with graft.GateCacheHygiene {
   test("a session spanning two micro-batches is emitted once, complete, by watermark eviction") {
     val src = java.nio.file.Files.createTempDirectory("tss_src").toString
     def stage(rows: Seq[(Long, Long)], name: String, mtime: Long): Unit =
-      graft.queries.PipelineOps.stageReplayFile(src)(
+      graft.queries.StreamGate.stageReplayFile(src)(
         rows.toDF("user_id", "us")
           .select($"user_id", timestamp_micros($"us").as("ts_ev")),
         name, mtime)

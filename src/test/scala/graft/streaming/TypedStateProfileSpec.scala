@@ -25,7 +25,7 @@ class TypedStateProfileSpec extends AnyFunSuite with graft.GateCacheHygiene {
     try {
       val base = 1600000000000L
       def stage(rows: Seq[(Long, String, Long)], name: String, off: Long): Unit =
-        graft.queries.PipelineOps.stageReplayFile(src)(
+        graft.queries.StreamGate.stageReplayFile(src)(
           rows.toDF("user_id", "event_type", "cents"), name, base + off)
       stage(Seq((1L, "click", 10L), (1L, "click", 5L)), "b0.parquet", 0L)
       stage(Seq((1L, "view", 7L), (2L, "error", 100L)), "b1.parquet", 60000L)
@@ -79,7 +79,7 @@ class TypedStateProfileSpec extends AnyFunSuite with graft.GateCacheHygiene {
     spark.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      graft.queries.PipelineOps.stageReplayFile(src)(
+      graft.queries.StreamGate.stageReplayFile(src)(
         Seq((9L, "click", 10L), (9L, "refund", 25L), (9L, "refund", 5L))
           .toDF("user_id", "event_type", "cents"),
         "b0.parquet", 1600000000000L)
