@@ -27,18 +27,17 @@ import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
   */
 object LiveView {
 
-  /** Keep exactly one row per key: max `_version`, ties broken by the last
-    * value of `tieBreak` (descending). Keeps meta columns. */
-  def dedupLatest(
-      df: DataFrame,
-      pks: Seq[String],
-      versionCol: String = VersionCol,
-      tieBreak: Option[String] = None): DataFrame = {
+  /** The one survivor rule both physical forms share: max `_version`,
+    * then max `_ingest_seq` when the frame carries it. */
+  private def survivorOrder(df: DataFrame): Seq[Column] =
+    (VersionCol +: Seq(SeqCol).filter(df.columns.contains)).map(col)
+
+  /** Keep exactly one row per key by [[survivorOrder]]. Keeps meta
+    * columns. */
+  def dedupLatest(df: DataFrame, pks: Seq[String]): DataFrame = {
     require(pks.nonEmpty, "dedupLatest needs at least one key column")
-    val order: Seq[Column] = col(versionCol).desc +:
-      tieBreak.orElse(Option(SeqCol).filter(df.columns.contains))
-        .map(c => col(c).desc).toSeq
-    val w = Window.partitionBy(pks.map(col): _*).orderBy(order: _*)
+    val w = Window.partitionBy(pks.map(col): _*)
+      .orderBy(survivorOrder(df).map(_.desc): _*)
     df.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
@@ -47,34 +46,21 @@ object LiveView {
   /** The generated `<table>_live` view body: latest version per key, minus
     * tombstones, meta columns projected away (P2/P3 —
     * `src/schema_converter.py:131-137`). */
-  def live(
-      df: DataFrame,
-      pks: Seq[String],
-      tieBreak: Option[String] = None): DataFrame =
-    dedupLatest(df, pks, VersionCol, tieBreak)
+  def live(df: DataFrame, pks: Seq[String]): DataFrame =
+    dedupLatest(df, pks)
       .filter(col(DeletedCol) === 0)
       .drop(VersionCol, DeletedCol, SeqCol)
 
   /** Alternative physical form: `max_by(struct)` aggregation instead of a
     * ranking window — one shuffle with partial (map-side) aggregation,
     * often cheaper than window+sort at scale when payload is narrow.
-    * Semantics identical given the composite (version, tie) ordering. */
-  def dedupLatestAgg(
-      df: DataFrame,
-      pks: Seq[String],
-      versionCol: String = VersionCol,
-      tieBreak: Option[String] = None): DataFrame = {
+    * Semantics identical: the same [[survivorOrder]]. */
+  def dedupLatestAgg(df: DataFrame, pks: Seq[String]): DataFrame = {
     val payload = df.columns.filterNot(pks.contains)
-    // same automatic _ingest_seq fallback as dedupLatest, so the two
-    // physical forms stay semantically identical under duplicate versions
-    val ord = tieBreak
-      .orElse(Option(SeqCol).filter(df.columns.contains)) match {
-      case Some(t) => struct(col(versionCol), col(t))
-      case None    => struct(col(versionCol))
-    }
     val picked = df
       .groupBy(pks.map(col): _*)
-      .agg(max_by(struct(payload.toIndexedSeq.map(col): _*), ord).as("_row"))
+      .agg(max_by(struct(payload.toIndexedSeq.map(col): _*),
+        struct(survivorOrder(df): _*)).as("_row"))
     payload.foldLeft(picked)((d, c) => d.withColumn(c, col(s"_row.$c")))
       .drop("_row")
       .select(df.columns.toIndexedSeq.map(col): _*) // restore original column order

@@ -1,11 +1,14 @@
 package graft.queries
 
-import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
-import graft.operators.{LiveView, SnapshotReplicator}
+import graft.operators.{CdcTransform, LiveView, SnapshotReplicator}
+import graft.sources.{BinlogFixture, BinlogFixtureServer, BinlogSocketClient, BinlogSource}
+import graft.sources.BinlogFixture.{Change, TableDef}
+import graft.sources.BinlogFormat.ColumnDef
 import graft.streaming.{BoundedStream, CdcPipeline}
 import StreamGate.{dirs, pinned, replay, stage, withConfs}
 
@@ -43,6 +46,50 @@ object PipelineOps {
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, " +
       "value DOUBLE, props STRING")
 
+  /** The events payload every events-fed CDC gate reads back. */
+  private val EventsPayload = Seq("user_id", "event_type", "value", "props")
+
+  /** `cols` of `applied`'s live view: one survivor per `pks` by
+    * [[LiveView]]'s rule, meta columns projected away. */
+  private def liveOf(applied: DataFrame, pks: Seq[String],
+                     cols: Seq[String]): DataFrame =
+    LiveView.live(applied.select(
+      (cols ++ Seq(VersionCol, SeqCol, DeletedCol)).map(col): _*), pks)
+
+  /** The events payload's live state, one survivor per user. */
+  private def eventsLive(applied: DataFrame): DataFrame =
+    liveOf(applied, Seq("user_id"), EventsPayload)
+
+  /** Decoded binlog change rows (`op`, `_seq`) stamped as ONE batch at
+    * version 1: with a constant version the survivor is the last change
+    * in log order. */
+  private def stampOne(changes: DataFrame): DataFrame =
+    CdcTransform.stampBatch(changes, opCol = "op", seqCol = "_seq",
+      batchVersionMicros = 1L)
+
+  /** The events op mapping the file-staged gates replay (signup → I,
+    * error → D, else U). */
+  private def withEventsOp(events: DataFrame): DataFrame =
+    events.withColumn("op",
+      when(col("event_type") === "signup", "I")
+        .when(col("event_type") === "error", "D")
+        .otherwise("U"))
+
+  /** REQUIRE `a` and `b` hold the same rows, duplicates included. */
+  private def requireSameRows(a: DataFrame, b: DataFrame, what: String): Unit =
+    require(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0, what)
+
+  /** The o_orderkey % `mod` key sample, ascending; REQUIREd to hold at
+    * least `minSize` keys (`what` is the failure message). */
+  private def orderKeys(s: SparkSession, dir: String, mod: Int, minSize: Int,
+                        what: String): IndexedSeq[Long] = {
+    val keys = s.read.parquet(s"$dir/orders.parquet")
+      .filter(col("o_orderkey") % mod === 0).select("o_orderkey")
+      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
+    require(keys.size >= minSize, what)
+    keys
+  }
+
   /** O3/A4: replicate three tables into a fresh warehouse and report the
     * reference's result-dict shape (`src/replicator.py:74-85`). */
   def snapshotRoundtrip(s: SparkSession, dir: String): DataFrame = {
@@ -69,21 +116,12 @@ object PipelineOps {
     // events.parquet file behind a temp-dir symlink (no data copy)
     Files.createSymbolicLink(java.nio.file.Paths.get(srcDir, "events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val stream = s.readStream.schema(schema)
-      .parquet(srcDir)
-      .withColumn("op",
-        when(col("event_type") === "signup", "I")
-          .when(col("event_type") === "error", "D")
-          .otherwise("U"))
+    val stream = withEventsOp(s.readStream.schema(schema).parquet(srcDir))
     val q = pipe.start(stream, "events_cdc", opCol = "op",
       seqCol = "event_id", versionOf = _ => 1L)
     q.awaitTermination()
 
-    LiveView.live(
-      pipe.applied("events_cdc")
-        .select(col("user_id"), col("event_type"), col("value"), col("props"),
-          col(VersionCol), col(SeqCol), col(DeletedCol)),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
+    eventsLive(pipe.applied("events_cdc"))
   }
 
   /** W2/K5: the registered `<table>_live` SQL surface — closes the K5
@@ -105,11 +143,7 @@ object PipelineOps {
     val mid = ev.agg(expr("max(event_id) div 2")).head().getLong(0)
     def drainWave(pred: org.apache.spark.sql.Column): Unit = {
       ev.filter(pred).write.mode("append").parquet(srcDir)
-      val stream = s.readStream.schema(schema).parquet(srcDir)
-        .withColumn("op",
-          when(col("event_type") === "signup", "I")
-            .when(col("event_type") === "error", "D")
-            .otherwise("U"))
+      val stream = withEventsOp(s.readStream.schema(schema).parquet(srcDir))
       val q = pipe.start(stream, "events_reg", opCol = "op",
         seqCol = "event_id", versionOf = _ => 1L)
       q.awaitTermination()
@@ -154,7 +188,7 @@ object PipelineOps {
       .write.mode("overwrite").text(landing)
     // Kafka-ism the adapter must survive: a post-delete tombstone (no op,
     // no image) and a non-JSON line — both are dropped, not applied
-    Files.write(java.nio.file.Paths.get(landing, "part-junk.txt"),
+    Files.write(Paths.get(landing, "part-junk.txt"),
       java.util.Arrays.asList("""{"before":null,"after":null}""",
         "not json at all"))
     val pipe = new CdcPipeline(s, tgt, ckp)
@@ -163,11 +197,7 @@ object PipelineOps {
     val q = pipe.start(changes, "events_dbz", opCol = "op", seqCol = "_seq",
       tables = Seq("events"), tableCol = Some("_tbl"), versionOf = _ => 1L)
     q.awaitTermination()
-    LiveView.live(
-      pipe.applied("events_dbz")
-        .select(col("user_id"), col("event_type"), col("value"), col("props"),
-          col(VersionCol), col(SeqCol), col(DeletedCol)),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
+    eventsLive(pipe.applied("events_dbz"))
   }
 
   /** T29: the reference's actual wire — MySQL binlog v4 BYTES → change
@@ -192,56 +222,103 @@ object PipelineOps {
     * version ⇒ survivor per user = max (file ordinal, pos) = max
     * event_id, so the oracle is t1's derivation. */
   def binlogWireCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.BinlogSource
-    import graft.operators.CdcTransform
-    val landing = graft.GateCache.tempDir("graft_binlog_src").toString
-    val staged = stageBinlogFiles(s, dir)
-    staged.names.indices.foreach(i => staged.write(landing, i))
+    val staged = eventsBinlogs(s, dir)
+    val landing = land(graft.GateCache.tempDir("graft_binlog_src").toString,
+      staged.files)
     // the ROTATE chain must agree with the name order _seq relies on
+    val names = staged.files.map(_._1)
     val chain = BinlogSource.rotateChain(s, landing)
-    require(chain.map(_._1) == staged.names, s"unexpected files: $chain")
-    require(chain.map(_._2) ==
-      Seq(Some(staged.names(1)), Some(staged.names(2)), None),
+    require(chain.map(_._1) == names, s"unexpected files: $chain")
+    require(chain.map(_._2) == Seq(Some(names(1)), Some(names(2)), None),
       s"broken rotate chain: $chain")
-    val decoded = BinlogSource.changes(s, landing, "events", BinlogRowSchema)
-    val stamped = CdcTransform.stampBatch(decoded, opCol = "op",
-      seqCol = "_seq", batchVersionMicros = 1L)
-    LiveView.live(stamped, pks = Seq("user_id"), tieBreak = Some(SeqCol))
-      .select(col("user_id"), col("event_type"), col("value"), col("props"))
+    eventsLive(stampOne(
+      BinlogSource.changes(s, landing, "events", BinlogRowSchema)))
   }
 
   private val BinlogRowSchema = StructType.fromDDL(
     "user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
 
-  private case class StagedBinlogs(names: IndexedSeq[String],
-      bytes: IndexedSeq[Array[Byte]], nCommitted: Int) {
-    def write(landing: String, i: Int): Unit = {
-      Files.write(java.nio.file.Paths.get(landing, names(i)), bytes(i)); ()
+  /** A staged binlog chain: (file name, bytes) in log order, plus the
+    * committed count its gates REQUIRE. */
+  private case class StagedBinlogs(files: IndexedSeq[(String, Array[Byte])],
+      nCommitted: Int)
+
+  /** Write `files` under `landing`; returns `landing`. */
+  private def land(landing: String,
+                   files: Seq[(String, Array[Byte])]): String = {
+    files.foreach { case (name, bytes) =>
+      Files.write(Paths.get(landing, name), bytes) }
+    landing
+  }
+
+  /** Staged fixtures memoized per (fixture, sf dir) — the
+    * Procurement.partsupp pattern: computeIfAbsent keeps the encode-once
+    * atomic under concurrent gates. The bytes live on the heap (~events-
+    * table size), not in a temp dir: each gate lands its own copy, at its
+    * own time (t30's and b9's waves), and min-of-3 bench runs re-land,
+    * not re-encode. */
+  private val stagedBinlogs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), StagedBinlogs]()
+
+  private def memoized(fixture: String, dir: String)(
+      build: => StagedBinlogs): StagedBinlogs =
+    stagedBinlogs.computeIfAbsent((fixture, dir), _ => build)
+
+  /** One table's definition as [[BinlogFixture.encode]] writes it. */
+  private def wireTable(table: String, cols: IndexedSeq[ColumnDef],
+      colNames: IndexedSeq[String] = IndexedSeq.empty): TableDef =
+    TableDef("graft", table, 23L, cols, colNames)
+
+  /** One file's worth of `t` changes, `txnRows` rows per transaction —
+    * an [[encodeChain]] segment. */
+  private def segment(t: TableDef, changes: Seq[Change], txnRows: Int)
+      : (Seq[TableDef], Seq[Seq[(String, Change)]]) =
+    (Seq(t), changes.grouped(txnRows).map(_.map(t.table -> _)).toSeq)
+
+  /** `xs` cut into `parts` consecutive slices of ⌈n/parts⌉. */
+  private def split[A](xs: IndexedSeq[A], parts: Int): IndexedSeq[IndexedSeq[A]] = {
+    val k = (xs.size + parts - 1) / parts
+    IndexedSeq.tabulate(parts)(i => xs.slice(i * k, (i + 1) * k))
+  }
+
+  /** A GTID-mode binlog chain `<prefix>.000001…`, one file per segment
+    * (its table maps and transactions): each file opens with the
+    * PREVIOUS_GTIDS set of everything before it, GTIDs run on from 1
+    * straight across the files, every file but the last ends in a ROTATE
+    * to the next name (when `rotate`), and `tail` is left UNCOMMITTED at
+    * the end of the last file — a crashed server's torn transaction. */
+  private def encodeChain(prefix: String,
+      segments: IndexedSeq[(Seq[TableDef], Seq[Seq[(String, Change)]])],
+      tail: Seq[(String, Change)],
+      rotate: Boolean = true): IndexedSeq[(String, Array[Byte])] = {
+    val names = segments.indices.map(i => f"$prefix.${i + 1}%06d")
+    val gtidFrom = segments.scanLeft(1L)(_ + _._2.size)
+    segments.indices.map { i =>
+      names(i) -> BinlogFixture.encodeMulti(segments(i)._1, segments(i)._2,
+        rotateTo = names.lift(i + 1).filter(_ => rotate),
+        uncommittedTail = if (i == segments.size - 1) tail else Nil,
+        gtidFrom = Some(gtidFrom(i)))
     }
   }
 
-  /** Memoized [[stageBinlogFiles]] result per sf dir (t29 and t30 stage
-    * the identical fixture; Procurement.partsupp pattern — computeIfAbsent
-    * keeps the encode-once atomic under concurrent gates). The bytes live
-    * on the heap (~events-table size), not in a temp dir, because the two
-    * gates land them in DIFFERENT dirs at different times (t30's waves). */
-  private val stagedBinlogs =
-    new java.util.concurrent.ConcurrentHashMap[String, StagedBinlogs]()
-
-  /** Shared t29/t30 staging: the events table rendered as three rotated
-    * CRC32-checksummed binlog files (mapping documented on
-    * [[binlogWireCdcLive]]), the last ending in the uncommitted poison
-    * tail. Driver-side by necessity — the encoder plays the server. */
-  private def stageBinlogFiles(s: SparkSession, dir: String): StagedBinlogs =
-    stagedBinlogs.computeIfAbsent(dir, _ => buildBinlogFiles(s, dir))
-
   private val EventsBinlogCols = {
-    import graft.sources.BinlogFormat
+    import graft.sources.BinlogFormat.{TypeLongLong, TypeVarchar, TypeDouble}
     IndexedSeq(
-      BinlogFormat.ColumnDef(BinlogFormat.TypeLongLong, 0),    // user_id
-      BinlogFormat.ColumnDef(BinlogFormat.TypeVarchar, 64),    // event_type (1-byte len)
-      BinlogFormat.ColumnDef(BinlogFormat.TypeDouble, 8),      // value
-      BinlogFormat.ColumnDef(BinlogFormat.TypeVarchar, 65000)) // props (2-byte len)
+      ColumnDef(TypeLongLong, 0),    // user_id
+      ColumnDef(TypeVarchar, 64),    // event_type (1-byte len)
+      ColumnDef(TypeDouble, 8),      // value
+      ColumnDef(TypeVarchar, 65000)) // props (2-byte len)
+  }
+
+  /** The events table's rows in event_id order (event_id, then the
+    * payload columns) — the driver-side input of every events binlog. */
+  private def eventRows(s: SparkSession, dir: String)
+      : Array[org.apache.spark.sql.Row] = {
+    val evs = s.read.parquet(s"$dir/events.parquet")
+      .select("event_id", "user_id", "event_type", "value", "props")
+      .orderBy("event_id").collect()
+    require(evs.nonEmpty, "events table is empty")
+    evs
   }
 
   /** The events table rendered as the t29-family change stream (signup →
@@ -250,13 +327,8 @@ object PipelineOps {
     * by the plain (t29/t30), self-describing (t35) and compressed (t36)
     * stagings. */
   private def eventsChanges(s: SparkSession, dir: String)
-      : (IndexedSeq[graft.sources.BinlogFixture.Change],
-         graft.sources.BinlogFixture.Change) = {
-    import graft.sources.BinlogFixture.Change
-    val evs = s.read.parquet(s"$dir/events.parquet")
-      .select("event_id", "user_id", "event_type", "value", "props")
-      .orderBy("event_id").collect()
-    require(evs.nonEmpty, "events table is empty")
+      : (IndexedSeq[Change], Change) = {
+    val evs = eventRows(s, dir)
     def img(r: org.apache.spark.sql.Row): IndexedSeq[Any] =
       IndexedSeq(r.get(1), r.get(2), r.get(3), r.get(4))
     def change(r: org.apache.spark.sql.Row): Change =
@@ -276,31 +348,20 @@ object PipelineOps {
       IndexedSeq(u0, "poison", 9.9, "{}")))
   }
 
-  private def buildBinlogFiles(s: SparkSession, dir: String): StagedBinlogs = {
-    import graft.sources.BinlogFixture
-    val cols = EventsBinlogCols
-    val (changes, poison) = eventsChanges(s, dir)
-    val names = (1 to 3).map(i => f"events-bin.$i%06d")
-    val third = (changes.size + 2) / 3
-    // GTID mode on: each transaction carries its gno and each file opens
-    // with the PREVIOUS_GTIDS set of everything before it — the 5.7+
-    // file shape, so the gates decode interleaved GTID events for real
-    var gno = 1L
-    val bytes = names.indices.map { i =>
-      val slice = changes.slice(i * third, math.min((i + 1) * third, changes.size))
-      val txns = slice.grouped(250).toSeq
-      val from = gno
-      gno += txns.size
-      BinlogFixture.encode("graft", "events", cols,
-        txns = txns, checksum = true,
-        rotateTo = if (i < 2) Some(names(i + 1)) else None,
-        uncommittedTail = if (i == 2) Seq(poison) else Nil,
-        gtidFrom = Some(from),
-        // binlog_row_metadata=FULL: the log is self-describing (t35)
-        colNames = IndexedSeq("user_id", "event_type", "value", "props"))
+  /** Shared t29/t30/t35/t38 staging: the events table rendered as three
+    * rotated CRC32-checksummed binlog files (mapping documented on
+    * [[binlogWireCdcLive]]), the last ending in the uncommitted poison
+    * tail. Driver-side by necessity — the encoder plays the server. GTID
+    * mode is on, so the gates decode interleaved GTID events for real;
+    * binlog_row_metadata=FULL makes the log self-describing (t35). */
+  private def eventsBinlogs(s: SparkSession, dir: String): StagedBinlogs =
+    memoized("events", dir) {
+      val (changes, poison) = eventsChanges(s, dir)
+      val t = wireTable("events", EventsBinlogCols, EventsPayload.toIndexedSeq)
+      StagedBinlogs(encodeChain("events-bin",
+        split(changes, 3).map(segment(t, _, 250)), Seq("events" -> poison)),
+        changes.size)
     }
-    StagedBinlogs(names, bytes, changes.size)
-  }
 
   /** T30: [[binlogWireCdcLive]]'s continuous form — the reference's
     * `run_continuous` loop as a file-shipped binlog TAIL through the
@@ -314,10 +375,9 @@ object PipelineOps {
     * differ from the final state (the tail really advanced). Constant
     * version ⇒ same oracle as t1/t29. */
   def binlogStreamCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.BinlogSource
     val Seq(landing, tgt, ckp) =
       dirs("graft_binlog_tail", "src", "tgt", "ckp")
-    val staged = stageBinlogFiles(s, dir)
+    val staged = eventsBinlogs(s, dir)
     val pipe = new CdcPipeline(s, tgt, ckp)
     // streaming rotate-chain validation: every new file's ROTATE target
     // is checked against the name order INSIDE foreachBatch as it lands
@@ -336,10 +396,10 @@ object PipelineOps {
         dropCols = Seq("_file", "_next"))
       q.awaitTermination()
     }
-    staged.write(landing, 0); staged.write(landing, 1)
+    land(landing, staged.files.take(2))
     drain()
     val appliedWave1 = pipe.applied("events_binlog").count()
-    staged.write(landing, 2)
+    land(landing, staged.files.drop(2))
     drain() // resume: only the new file may apply
     require(guard.seenCount == 3,
       s"rotate-chain guard saw ${guard.seenCount} files, expected 3")
@@ -349,11 +409,63 @@ object PipelineOps {
         "offset capture replayed a file or leaked the torn tail")
     require(appliedWave1 < staged.nCommitted,
       "wave 1 already held every change — the tail never advanced")
-    LiveView.live(
-      applied.select(col("user_id"), col("event_type"), col("value"),
-        col("props"), col(VersionCol), col(SeqCol), col(DeletedCol)),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
+    eventsLive(applied)
   }
+
+  /** t31/b8/b9 shared staging: the 10% order sample rendered as TWO
+    * rotated multi-table binlog files (one XID-committed transaction per
+    * order across orders_hdr + orders_ln; the second file ends in an
+    * uncommitted cross-table poison transaction). The committed count is
+    * the number of order headers. */
+  private def orderBinlogs(s: SparkSession, dir: String): StagedBinlogs =
+    memoized("orders", dir) {
+      import graft.sources.BinlogFormat.{TypeLongLong, TypeVarchar, TypeDouble}
+      val hdrCols = IndexedSeq(ColumnDef(TypeLongLong, 0),
+        ColumnDef(TypeVarchar, 32))
+      val lnCols = IndexedSeq(ColumnDef(TypeLongLong, 0),
+        ColumnDef(TypeLongLong, 0), ColumnDef(TypeDouble, 8))
+      // binlog_row_metadata=FULL (COLUMN_NAME TLVs): the log is fully
+      // self-describing, so t31/b8/b9 INFER both tables' schemas from the
+      // bytes (the t35 path on a second and third table shape) instead of
+      // hand-declaring them
+      val tables = Seq(
+        TableDef("graft", "orders_hdr", 31L, hdrCols,
+          colNames = IndexedSeq("o_orderkey", "o_orderpriority")),
+        TableDef("graft", "orders_ln", 32L, lnCols,
+          colNames = IndexedSeq("l_orderkey", "l_linenumber", "l_quantity")))
+      val hdr = s.read.parquet(s"$dir/orders.parquet")
+        .filter(col("o_orderkey") % 10 === 0)
+        .select("o_orderkey", "o_orderpriority")
+        .orderBy("o_orderkey").collect()
+      val lns = s.read.parquet(s"$dir/lineitem.parquet")
+        .filter(col("l_orderkey") % 10 === 0)
+        .select("l_orderkey", "l_linenumber", "l_quantity")
+        .orderBy("l_orderkey", "l_linenumber").collect()
+      require(hdr.nonEmpty && lns.nonEmpty, "empty order sample")
+      val lnByOrder = lns.groupBy(_.getLong(0))
+      // one REAL transaction per order: header insert + its line inserts.
+      // The PK is (orderkey, per-order line SEQUENCE): the harness
+      // lineitem carries duplicate (orderkey, linenumber) pairs, which a
+      // real MySQL PK can't — re-keying keeps every raw line alive through
+      // the live view, so the oracle's raw-row counts hold.
+      val txns: IndexedSeq[Seq[(String, Change)]] = hdr.toIndexedSeq.map { h =>
+        val k = h.getLong(0)
+        ("orders_hdr" -> Change.insert(IndexedSeq(k, h.getString(1)))) +:
+          lnByOrder.getOrElse(k, Array.empty).toIndexedSeq.zipWithIndex.map {
+            case (l, i) => "orders_ln" -> Change.insert(
+              IndexedSeq(l.getLong(0), (i + 1).toLong, l.get(2)))
+          }
+      }
+      require(txns.exists(_.size > 2),
+        "no multi-line order — transactions would not span rows-events")
+      val poisonKey = hdr.last.getLong(0) + 10
+      val poisonTxn = Seq(
+        "orders_hdr" -> Change.insert(IndexedSeq(poisonKey, "POISON")),
+        "orders_ln" -> Change.insert(IndexedSeq(poisonKey, 1L, 99.0)),
+        "orders_ln" -> Change.insert(IndexedSeq(poisonKey, 2L, 98.0)))
+      StagedBinlogs(encodeChain("orders-bin", split(txns, 2).map(tables -> _),
+        poisonTxn), hdr.length)
+    }
 
   /** T31: transactional MULTI-TABLE CDC from the wire itself. t27 proved
     * consistent cross-table cuts with transaction boundaries the HARNESS
@@ -370,115 +482,21 @@ object PipelineOps {
     * events as they stream (the reference applies per-event) would leak
     * a half-order. Output: per-priority order/line/quantity rollup the
     * oracle recomputes from orders⋈lineitem. */
-  private case class StagedMultiBinlogs(landing: String, nHdr: Int)
-
-  /** Shared by t31 (live-view apply) and b8 (co-bucketed sink): the 10%
-    * order sample joined to its lines — the uncommitted poison order
-    * appears in NEITHER, so any atomicity leak flips a count and the
-    * hash. */
-  private val MultiTableRollupOracle =
-    """SELECT o.o_orderpriority,
-      |  CAST(count(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders,
-      |  CAST(count(*) AS BIGINT) AS n_lines,
-      |  CAST(sum(CAST(trunc(l.l_quantity) AS BIGINT) /* truncate like Spark long-cast */) AS BIGINT) AS sum_qty
-      |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      |WHERE o.o_orderkey % 10 = 0
-      |GROUP BY 1""".stripMargin
-
-  private val stagedMulti =
-    new java.util.concurrent.ConcurrentHashMap[String, StagedMultiBinlogs]()
-
-  /** t31/b8 shared staging: the 10% order sample rendered as TWO rotated
-    * multi-table binlog files (one XID-committed transaction per order
-    * across orders_hdr + orders_ln; the second file ends in an
-    * uncommitted cross-table poison transaction). Memoized per sf dir —
-    * the encode is the expensive part and the files are immutable. */
-  private def stageMultiBinlogs(s: SparkSession, dir: String): StagedMultiBinlogs =
-    stagedMulti.computeIfAbsent(dir, _ => buildMultiBinlogs(s, dir))
-
-  private def buildMultiBinlogs(s: SparkSession, dir: String): StagedMultiBinlogs = {
-    import graft.sources.{BinlogFixture, BinlogFormat}
-    import BinlogFixture.{Change, TableDef}
-    val landing = graft.GateCache.tempDir("graft_binlog_mt_src").toString
-    val hdrCols = IndexedSeq(
-      BinlogFormat.ColumnDef(BinlogFormat.TypeLongLong, 0),
-      BinlogFormat.ColumnDef(BinlogFormat.TypeVarchar, 32))
-    val lnCols = IndexedSeq(
-      BinlogFormat.ColumnDef(BinlogFormat.TypeLongLong, 0),
-      BinlogFormat.ColumnDef(BinlogFormat.TypeLongLong, 0),
-      BinlogFormat.ColumnDef(BinlogFormat.TypeDouble, 8))
-    // binlog_row_metadata=FULL (COLUMN_NAME TLVs): the log is fully
-    // self-describing, so t31/b8 INFER both tables' schemas from the
-    // bytes (the t35 path on a second and third table shape) instead of
-    // hand-declaring them
-    val tables = Seq(
-      TableDef("graft", "orders_hdr", 31L, hdrCols,
-        colNames = IndexedSeq("o_orderkey", "o_orderpriority")),
-      TableDef("graft", "orders_ln", 32L, lnCols,
-        colNames = IndexedSeq("l_orderkey", "l_linenumber", "l_quantity")))
-    val hdr = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 10 === 0)
-      .select("o_orderkey", "o_orderpriority")
-      .orderBy("o_orderkey").collect()
-    val lns = s.read.parquet(s"$dir/lineitem.parquet")
-      .filter(col("l_orderkey") % 10 === 0)
-      .select("l_orderkey", "l_linenumber", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber").collect()
-    require(hdr.nonEmpty && lns.nonEmpty, "empty order sample")
-    val lnByOrder = lns.groupBy(_.getLong(0))
-    // one REAL transaction per order: header insert + its line inserts.
-    // The PK is (orderkey, per-order line SEQUENCE): the harness
-    // lineitem carries duplicate (orderkey, linenumber) pairs, which a
-    // real MySQL PK can't — re-keying keeps every raw line alive through
-    // the live view, so the oracle's raw-row counts hold.
-    val txns: IndexedSeq[Seq[(String, Change)]] = hdr.toIndexedSeq.map { h =>
-      val k = h.getLong(0)
-      ("orders_hdr" -> Change.insert(IndexedSeq(k, h.getString(1)))) +:
-        lnByOrder.getOrElse(k, Array.empty).toIndexedSeq.zipWithIndex.map {
-          case (l, i) => "orders_ln" -> Change.insert(
-            IndexedSeq(l.getLong(0), (i + 1).toLong, l.get(2)))
-        }
-    }
-    require(txns.exists(_.size > 2),
-      "no multi-line order — transactions would not span rows-events")
-    val poisonKey = hdr.last.getLong(0) + 10
-    val poisonTxn = Seq(
-      "orders_hdr" -> Change.insert(IndexedSeq(poisonKey, "POISON")),
-      "orders_ln" -> Change.insert(IndexedSeq(poisonKey, 1L, 99.0)),
-      "orders_ln" -> Change.insert(IndexedSeq(poisonKey, 2L, 98.0)))
-    val names = Seq("orders-bin.000001", "orders-bin.000002")
-    val half = (txns.size + 1) / 2
-    Files.write(java.nio.file.Paths.get(landing, names(0)),
-      BinlogFixture.encodeMulti(tables, txns.take(half),
-        rotateTo = Some(names(1)), gtidFrom = Some(1L)))
-    Files.write(java.nio.file.Paths.get(landing, names(1)),
-      BinlogFixture.encodeMulti(tables, txns.drop(half),
-        uncommittedTail = poisonTxn, gtidFrom = Some(1L + half)))
-    StagedMultiBinlogs(landing, hdr.length)
-  }
-
   def binlogMultiTableCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.BinlogSource
-    import graft.operators.CdcTransform
-    val staged = stageMultiBinlogs(s, dir)
-    val landing = staged.landing
+    val staged = orderBinlogs(s, dir)
+    val landing = land(
+      graft.GateCache.tempDir("graft_binlog_mt_src").toString, staged.files)
     // schemas INFERRED from the log's own TABLE_MAP metadata (t35's
     // machinery on the multi-table file) — no hand declaration
-    val hdrSchema = BinlogSource.inferSchema(s, landing, "orders_hdr")
-    val lnSchema = BinlogSource.inferSchema(s, landing, "orders_ln")
-    def applyLive(table: String, schema: StructType,
-                  pks: Seq[String]): DataFrame = {
-      val stamped = CdcTransform.stampBatch(
-        BinlogSource.changes(s, landing, table, schema),
-        opCol = "op", seqCol = "_seq", batchVersionMicros = 1L)
-      LiveView.live(stamped, pks, tieBreak = Some(SeqCol))
-        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    def applyLive(table: String, pks: Seq[String]): DataFrame = {
+      val schema = BinlogSource.inferSchema(s, landing, table)
+      liveOf(stampOne(BinlogSource.changes(s, landing, table, schema)), pks,
+        schema.fieldNames.toSeq)
     }
-    val hdrLive = applyLive("orders_hdr", hdrSchema, Seq("o_orderkey"))
-    val lnLive = applyLive("orders_ln", lnSchema,
-      Seq("l_orderkey", "l_linenumber"))
+    val hdrLive = applyLive("orders_hdr", Seq("o_orderkey"))
+    val lnLive = applyLive("orders_ln", Seq("l_orderkey", "l_linenumber"))
     // atomic torn-tail discard, both tables (bounded count actions)
-    require(hdrLive.count() == staged.nHdr,
+    require(hdrLive.count() == staged.nCommitted,
       "header count off — torn tail leaked or a transaction was lost")
     val orphans = lnLive.join(hdrLive,
       lnLive("l_orderkey") === hdrLive("o_orderkey"), "left_anti").count()
@@ -524,11 +542,7 @@ object PipelineOps {
     * MySQL server); decode runs distributed, one task per rotated file,
     * like t29. */
   def binlogTypedCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource}
     import graft.sources.BinlogFormat._
-    import BinlogFixture.Change
-    import graft.operators.CdcTransform
-    val landing = graft.GateCache.tempDir("graft_binlog_typed_src").toString
     val enumLabels = IndexedSeq("URGENT", "HIGH", "NORMAL", "LOW", "NONE")
     val setLabels = IndexedSeq("red", "green", "blue")
     val cols = IndexedSeq(
@@ -585,40 +599,12 @@ object PipelineOps {
           "flag" -> graft.sources.JsonBinary.JBool(k % 2 == 0),
           "tag" -> graft.sources.JsonBinary.JStr(s"t${k % 7}"))))
     }
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 7 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.nonEmpty, "empty typed sample")
-    val changes =
-      keys.map(k => Change.insert(img(k, updated = false))) ++
-      keys.filter(_ % 3 == 0).map(k =>
-        Change.update(img(k, updated = false), img(k, updated = true))) ++
-      keys.filter(_ % 11 == 0).map(k =>
-        Change.delete(img(k, updated = k % 3 == 0)))
-    val k0 = keys.find(k => k % 11 != 0 && k % 3 != 0).get
-    val poison = Change.update(img(k0, updated = false),
-      img(k0, updated = false).updated(16, "poison")) // flips note
-    val names = IndexedSeq("typed-bin.000001", "typed-bin.000002")
-    val half = (changes.size + 1) / 2
-    val txns1 = changes.take(half).grouped(200).toSeq
-    Files.write(java.nio.file.Paths.get(landing, names(0)),
-      BinlogFixture.encode("graft", "typed", cols, txns1,
-        rotateTo = Some(names(1)), gtidFrom = Some(1L)))
-    Files.write(java.nio.file.Paths.get(landing, names(1)),
-      BinlogFixture.encode("graft", "typed", cols,
-        changes.drop(half).grouped(200).toSeq,
-        uncommittedTail = Seq(poison), gtidFrom = Some(1L + txns1.size)))
-    val typedSchema = StructType.fromDDL(
+    val live = typedWireLive(s, dir, "typed", 7, cols,
       "id BIGINT, utiny BIGINT, i24 BIGINT, u64 DECIMAL(20,0), f32 FLOAT, " +
       "dec DECIMAL(14,2), d DATE, dt TIMESTAMP_NTZ, ts TIMESTAMP, " +
       "tm STRING, y SMALLINT, en STRING, st STRING, bits BIGINT, " +
-      "payload STRING, ch STRING, note STRING, js STRING")
-    val decoded = BinlogSource.changes(s, landing, "typed", typedSchema)
-    val stamped = CdcTransform.stampBatch(decoded, opCol = "op",
-      seqCol = "_seq", batchVersionMicros = 1L)
-    val live = LiveView.live(stamped, pks = Seq("id"), tieBreak = Some(SeqCol))
-    require(live.count() == keys.count(_ % 11 != 0),
-      "typed live-view count off — torn tail leaked or a delete was lost")
+      "payload STRING, ch STRING, note STRING, js STRING",
+      noteAt = 16)(img)
     live.select(
       col("id"),
       col("utiny"),
@@ -635,6 +621,37 @@ object PipelineOps {
       col("note"), col("js"))
   }
 
+  /** The t32/t41 typed-wire script over the o_orderkey % `mod` sample
+    * (every value a pure function of k, `img(k, updated)`): insert every
+    * key, UPDATE every k%3 key, DELETE every k%11 key, and leave an
+    * uncommitted update flipping the first untouched key's note column
+    * (`noteAt`) to 'poison' as the torn tail — two rotated files of
+    * 200-row transactions. Returns the live view over `ddl`, REQUIREd to
+    * hold exactly the undeleted keys. */
+  private def typedWireLive(s: SparkSession, dir: String, table: String,
+      mod: Int, cols: IndexedSeq[ColumnDef], ddl: String, noteAt: Int)(
+      img: (Long, Boolean) => IndexedSeq[Any]): DataFrame = {
+    val landing = graft.GateCache.tempDir(s"graft_binlog_${table}_src").toString
+    val keys = orderKeys(s, dir, mod, 1, s"empty $table sample")
+    val changes =
+      keys.map(k => Change.insert(img(k, false))) ++
+      keys.filter(_ % 3 == 0).map(k =>
+        Change.update(img(k, false), img(k, true))) ++
+      keys.filter(_ % 11 == 0).map(k => Change.delete(img(k, k % 3 == 0)))
+    val k0 = keys.find(k => k % 11 != 0 && k % 3 != 0).get
+    val poison = Change.update(img(k0, false),
+      img(k0, false).updated(noteAt, "poison"))
+    land(landing, encodeChain(s"$table-bin",
+      split(changes, 2).map(segment(wireTable(table, cols), _, 200)),
+      Seq(table -> poison)))
+    val schema = StructType.fromDDL(ddl)
+    val live = liveOf(stampOne(BinlogSource.changes(s, landing, table, schema)),
+      Seq("id"), schema.fieldNames.toSeq)
+    require(live.count() == keys.count(_ % 11 != 0),
+      s"$table live-view count off — torn tail leaked or a delete was lost")
+    live
+  }
+
   /** T41: the PRE-5.6.4 LEGACY wire shapes — a decade-old server's logs
     * still carry MYSQL_TYPE_TIMESTAMP (7: 4-byte LE epoch seconds),
     * TIME (11: 3-byte LE signed H*10000+M*100+S) and DATETIME (12:
@@ -649,11 +666,7 @@ object PipelineOps {
     * schema maps geo to STRING — the decode's Binary→String coercion IS
     * the reference's fallback, exercised from raw bytes. */
   def binlogLegacyTypedCdc(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource}
     import graft.sources.BinlogFormat._
-    import BinlogFixture.Change
-    import graft.operators.CdcTransform
-    val landing = graft.GateCache.tempDir("graft_binlog_legacy_src").toString
     val cols = IndexedSeq(
       ColumnDef(TypeLongLong, 0),  // id
       ColumnDef(TypeTimestamp, 0), // ts (legacy)
@@ -675,38 +688,9 @@ object PipelineOps {
         s"wkb-$k",
         (if (updated) "upd-" else "note-") + k)
     }
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 13 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.nonEmpty, "empty legacy sample")
-    val changes =
-      keys.map(k => Change.insert(img(k, updated = false))) ++
-      keys.filter(_ % 3 == 0).map(k =>
-        Change.update(img(k, updated = false), img(k, updated = true))) ++
-      keys.filter(_ % 11 == 0).map(k =>
-        Change.delete(img(k, updated = k % 3 == 0)))
-    val k0 = keys.find(k => k % 11 != 0 && k % 3 != 0).get
-    val poison = Change.update(img(k0, updated = false),
-      img(k0, updated = false).updated(5, "poison"))
-    val names = IndexedSeq("legacy-bin.000001", "legacy-bin.000002")
-    val half = (changes.size + 1) / 2
-    val txns1 = changes.take(half).grouped(200).toSeq
-    Files.write(java.nio.file.Paths.get(landing, names(0)),
-      BinlogFixture.encode("graft", "legacy", cols, txns1,
-        rotateTo = Some(names(1)), gtidFrom = Some(1L)))
-    Files.write(java.nio.file.Paths.get(landing, names(1)),
-      BinlogFixture.encode("graft", "legacy", cols,
-        changes.drop(half).grouped(200).toSeq,
-        uncommittedTail = Seq(poison), gtidFrom = Some(1L + txns1.size)))
-    val schema = StructType.fromDDL(
+    val live = typedWireLive(s, dir, "legacy", 13, cols,
       "id BIGINT, ts TIMESTAMP, tm STRING, dt TIMESTAMP_NTZ, " +
-      "geo STRING, note STRING")
-    val decoded = BinlogSource.changes(s, landing, "legacy", schema)
-    val stamped = CdcTransform.stampBatch(decoded, opCol = "op",
-      seqCol = "_seq", batchVersionMicros = 1L)
-    val live = LiveView.live(stamped, pks = Seq("id"), tieBreak = Some(SeqCol))
-    require(live.count() == keys.count(_ % 11 != 0),
-      "legacy live-view count off — torn tail leaked or a delete was lost")
+      "geo STRING, note STRING", noteAt = 5)(img)
     live.select(
       col("id"),
       unix_micros(col("ts")).as("ts"),
@@ -728,20 +712,14 @@ object PipelineOps {
     * through the same apply → live view, so the oracle is t29's: a
     * wrong inferred type or name order flips the frame and the hash. */
   def binlogSchemalessCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.BinlogSource
-    import graft.operators.CdcTransform
-    val landing = graft.GateCache.tempDir("graft_binlog_infer_src").toString
-    val staged = stageBinlogFiles(s, dir)
-    staged.names.indices.foreach(i => staged.write(landing, i))
+    val landing = land(
+      graft.GateCache.tempDir("graft_binlog_infer_src").toString,
+      eventsBinlogs(s, dir).files)
     val inferred = BinlogSource.inferSchema(s, landing, "events")
     require(inferred == BinlogRowSchema,
       s"inferred schema differs from the declared one:\n" +
         s"${inferred.treeString} vs ${BinlogRowSchema.treeString}")
-    val decoded = BinlogSource.changes(s, landing, "events", inferred)
-    val stamped = CdcTransform.stampBatch(decoded, opCol = "op",
-      seqCol = "_seq", batchVersionMicros = 1L)
-    LiveView.live(stamped, pks = Seq("user_id"), tieBreak = Some(SeqCol))
-      .select(col("user_id"), col("event_type"), col("value"), col("props"))
+    eventsLive(stampOne(BinlogSource.changes(s, landing, "events", inferred)))
   }
 
   /** T36: COMPRESSED transactions — the 8.0
@@ -758,45 +736,42 @@ object PipelineOps {
     * server's half transaction) and must still vanish. Same final state
     * as t29 ⇒ same oracle; the plan is t29's (one task per file, the
     * decompression inside the sequential per-file pass). */
-  /** Memoized t36 staging (the stagedBinlogs pattern: encode + compress
-    * once per (JVM, sf dir); min-of-3 bench runs re-land, not re-encode).
-    * Second element = the committed change count for the in-gate REQUIRE. */
-  private val stagedZstdBinlog =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Byte], Int)]()
-
   def binlogCompressedCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource}
-    import graft.operators.CdcTransform
-    val landing = graft.GateCache.tempDir("graft_binlog_zstd_src").toString
-    val (bytes, nCommitted) = stagedZstdBinlog.computeIfAbsent(dir, _ => {
+    val staged = memoized("zstd", dir) {
       val (changes, poison) = eventsChanges(s, dir)
-      (BinlogFixture.encode("graft", "events", EventsBinlogCols,
-        txns = changes.grouped(250).toSeq, checksum = true,
-        uncommittedTail = Seq(poison), gtidFrom = Some(1L),
-        compressTxns = true), changes.size)
-    })
-    Files.write(java.nio.file.Paths.get(landing, "events-zst.000001"), bytes)
-    // the compression must actually be exercised: walk the event headers
-    // (type at +4, size at +9 LE) until a TRANSACTION_PAYLOAD appears
-    var off = 4; var sawPayload = false
-    while (off < bytes.length && !sawPayload) {
-      sawPayload = (bytes(off + 4) & 0xff) ==
-        graft.sources.BinlogFormat.TransactionPayloadEvent
-      off += java.nio.ByteBuffer.wrap(bytes, off + 9, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      StagedBinlogs(IndexedSeq("events-zst.000001" ->
+        BinlogFixture.encode("graft", "events", EventsBinlogCols,
+          txns = changes.grouped(250).toSeq, checksum = true,
+          uncommittedTail = Seq(poison), gtidFrom = Some(1L),
+          compressTxns = true)), changes.size)
     }
-    require(sawPayload, "staged file contains no TRANSACTION_PAYLOAD event")
+    val landing = land(
+      graft.GateCache.tempDir("graft_binlog_zstd_src").toString, staged.files)
+    // the compression must actually be exercised
+    require(eventTypes(staged.files.head._2)
+      .contains(graft.sources.BinlogFormat.TransactionPayloadEvent),
+      "staged file contains no TRANSACTION_PAYLOAD event")
     // cached: the in-gate count REQUIRE and the live view both consume
     // this frame — without the cache each run parses and zstd-
     // decompresses the file twice (t33/t34's own pattern)
     val decoded = graft.GateCache.cache(
       BinlogSource.changes(s, landing, "events", BinlogRowSchema))
-    val stamped = CdcTransform.stampBatch(decoded, opCol = "op",
-      seqCol = "_seq", batchVersionMicros = 1L)
-    require(decoded.count() == nCommitted,
+    require(decoded.count() == staged.nCommitted,
       "compressed decode row count off — a payload was lost or replayed")
-    LiveView.live(stamped, pks = Seq("user_id"), tieBreak = Some(SeqCol))
-      .select(col("user_id"), col("event_type"), col("value"), col("props"))
+    eventsLive(stampOne(decoded))
+  }
+
+  /** The type byte of every event in a binlog file, walking the v4
+    * headers after the magic (type at +4, size at +9 LE). */
+  private def eventTypes(bytes: Array[Byte]): IndexedSeq[Int] = {
+    val types = IndexedSeq.newBuilder[Int]
+    var off = 4
+    while (off < bytes.length) {
+      types += bytes(off + 4) & 0xff
+      off += java.nio.ByteBuffer.wrap(bytes, off + 9, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    }
+    types.result()
   }
 
   /** T37: PARTIAL JSON updates — 8.0's
@@ -814,17 +789,13 @@ object PipelineOps {
     * diff path (score replaced, a tag spliced, a member inserted) and
     * any mis-application flips the string and the hash. */
   def binlogPartialJsonLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource, JsonBinary}
-    import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeJson}
-    import BinlogFixture.{Change, Partial}
-    import JsonBinary._
-    import graft.operators.CdcTransform
+    import graft.sources.JsonBinary._
+    import graft.sources.BinlogFormat.{TypeLongLong, TypeJson}
+    import BinlogFixture.Partial
     val landing = graft.GateCache.tempDir("graft_binlog_pjson_src").toString
     val cols = IndexedSeq(ColumnDef(TypeLongLong, 0), ColumnDef(TypeJson, 4))
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 6 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.nonEmpty && keys.exists(_ % 12 == 0), "empty profile sample")
+    val keys = orderKeys(s, dir, 6, 1, "empty profile sample")
+    require(keys.exists(_ % 12 == 0), "empty profile sample")
     def doc(k: Long): J = JObj(IndexedSeq(
       "id" -> JInt(k), "score" -> JInt(k % 100),
       "tags" -> JArr(IndexedSeq(JStr("a")))))
@@ -836,15 +807,12 @@ object PipelineOps {
           Diff(DiffReplace, "$.score", Some(JInt(k % 100 + 50))),
           Diff(DiffInsert, "$.tags[1]", Some(JStr("b"))),
           Diff(DiffInsert, "$.vip", Some(JBool(true))))))))
-    Files.write(java.nio.file.Paths.get(landing, "profiles-bin.000001"),
+    land(landing, Seq("profiles-bin.000001" ->
       BinlogFixture.encode("graft", "profiles", cols,
-        changes.grouped(200).toSeq, gtidFrom = Some(1L)))
+        changes.grouped(200).toSeq, gtidFrom = Some(1L))))
     val schema = StructType.fromDDL("user_id BIGINT, profile STRING")
-    val stamped = CdcTransform.stampBatch(
-      BinlogSource.changes(s, landing, "profiles", schema),
-      opCol = "op", seqCol = "_seq", batchVersionMicros = 1L)
-    LiveView.live(stamped, pks = Seq("user_id"), tieBreak = Some(SeqCol))
-      .select(col("user_id"), col("profile"))
+    liveOf(stampOne(BinlogSource.changes(s, landing, "profiles", schema)),
+      Seq("user_id"), schema.fieldNames.toSeq)
   }
 
   /** T38: the replication-protocol SOCKET half, live over loopback TCP —
@@ -871,31 +839,18 @@ object PipelineOps {
     * nothing either — BOTH resume tokens proven live on the socket.
     * Final state = t29's ⇒ same oracle. */
   def binlogSocketCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixtureServer, BinlogSocketClient, BinlogSource}
-    import graft.operators.CdcTransform
-    val staged = stageBinlogFiles(s, dir)
-    val files = staged.names.indices.map(i => staged.names(i) -> staged.bytes(i))
+    val staged = eventsBinlogs(s, dir)
     // kill the first connection 5 events into FILE 2: file 1's commits
     // are already applied, so the reconnect resumes PAST them
-    def eventCount(bytes: Array[Byte]): Int = {
-      var off = 4; var nEv = 0
-      while (off < bytes.length) {
-        off += java.nio.ByteBuffer.wrap(bytes, off + 9, 4)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-        nEv += 1
-      }
-      nEv
-    }
-    val killAt = eventCount(staged.bytes(0)) + 5
-    val srv = new BinlogFixtureServer(files, "repl", "graft-secret",
+    val killAt = eventTypes(staged.files.head._2).size + 5
+    val srv = new BinlogFixtureServer(staged.files, replUser, replPassword,
       dropAfterEvents = Map(0 -> killAt))
     try {
-      val cli = new BinlogSocketClient("127.0.0.1", srv.port,
-        "repl", "graft-secret")
+      val cli = replica(srv)
       // the reference's startup: discover the primary's position first
       // (`SHOW MASTER STATUS`, src/cdc_replicator.py:84-96)
       val (msFile, msPos) = cli.masterStatus()
-      val r = cli.tail(staged.names.head)
+      val r = cli.tail(staged.files.head._1)
       require(r.reconnects == 1,
         s"expected exactly one mid-stream reconnect, got ${r.reconnects}")
       require(srv.connections == 3, // status query + dump + its reconnect
@@ -915,17 +870,34 @@ object PipelineOps {
       val viaGtid = cli.tailGtid(r.appliedGtids)
       require(viaGtid.changes.isEmpty,
         s"GTID resume replayed ${viaGtid.changes.size} changes")
-      val stamped = CdcTransform.stampBatch(
-        BinlogSource.collectedChanges(s, r.changes, "events", BinlogRowSchema),
-        opCol = "op", seqCol = "_seq", batchVersionMicros = 1L)
-      LiveView.live(stamped, pks = Seq("user_id"), tieBreak = Some(SeqCol))
-        .select(col("user_id"), col("event_type"), col("value"), col("props"))
+      eventsLive(stampOne(BinlogSource.collectedChanges(s, r.changes,
+        "events", BinlogRowSchema)))
     } finally srv.close()
   }
 
   private def refBal0(k: Long): Double = (k % 100).toDouble
   private def refBalW1(k: Long): Double =
     refBal0(k) + (if (k % 3 == 0) 77.0 else 0.0)
+
+  /** The replication account every fixture primary serves and every
+    * replica logs in with. */
+  private val (replUser, replPassword) = ("repl", "graft-secret")
+
+  /** A replica client of `srv` over loopback. */
+  private def replica(srv: BinlogFixtureServer): BinlogSocketClient =
+    new BinlogSocketClient("127.0.0.1", srv.port, replUser, replPassword)
+
+  /** The topology primary's one binlog file. */
+  private val PrimaryBin = "primary-bin.000001"
+
+  private val AccountsSchema = StructType.fromDDL("id BIGINT, bal DOUBLE")
+
+  /** `mysql-binlog` V2 source options reading the accounts table from
+    * the start of `srv`'s log (t44 streaming, t45 batch). */
+  private def binlogSourceOptions(srv: BinlogFixtureServer): Map[String, String] =
+    Map("host" -> "127.0.0.1", "port" -> srv.port.toString,
+      "user" -> replUser, "password" -> replPassword, "table" -> "accounts",
+      "startFile" -> PrimaryBin, "startPos" -> "4")
 
   /** Shared scaffold of the o21/o22 reference-topology gates — the
     * sampled `accounts` table (orders %5 keys), its insert history T
@@ -936,34 +908,37 @@ object PipelineOps {
     * two gates' fixtures and oracle SQLs cannot drift independently. */
   private final case class RefTopology(
       keys: IndexedSeq[Long],
-      cols: IndexedSeq[graft.sources.BinlogFormat.ColumnDef],
-      txnsT: IndexedSeq[Seq[graft.sources.BinlogFixture.Change]],
-      txnsW1: IndexedSeq[Seq[graft.sources.BinlogFixture.Change]],
+      cols: IndexedSeq[ColumnDef],
+      txnsT: IndexedSeq[Seq[Change]],
+      txnsW1: IndexedSeq[Seq[Change]],
       nOverlap: Int,
       snapshot: DataFrame) {
-    /** Encode a txn prefix of the growing log (gtids from 1) — the
-      * same call for every prefix, so longer encodes extend shorter
-      * ones byte-for-byte (positions are cumulative). */
-    def encode(txns: IndexedSeq[Seq[graft.sources.BinlogFixture.Change]])
-        : Array[Byte] =
-      graft.sources.BinlogFixture.encode("graft", "accounts", cols, txns,
-        gtidFrom = Some(1L))
-    /** A binlog only grows: REQUIRE `shorter` is a strict byte prefix
-      * of `longer`, the premise of the truncate/reveal staging. */
-    def requirePrefix(shorter: Array[Byte], longer: Array[Byte]): Unit =
-      require(longer.length > shorter.length && java.util.Arrays.equals(
-        java.util.Arrays.copyOf(longer, shorter.length), shorter),
-        "append-only encode prefix broke — the growing-log premise is off")
+    /** Serve the growing log as [[PrimaryBin]]. Each of `prefixes` is a
+      * txn prefix of the log, encoded the same way (gtids from 1), so a
+      * longer encode extends a shorter one byte-for-byte (positions are
+      * cumulative) — REQUIREd, the premise of the truncate/reveal
+      * staging. The server holds the longest and starts truncated to the
+      * shortest. Returns the server and each prefix's byte length. */
+    def serve(prefixes: IndexedSeq[IndexedSeq[Seq[Change]]],
+              heartbeatMs: Long = 25L): (BinlogFixtureServer, IndexedSeq[Int]) = {
+      val logs = prefixes.map(txns =>
+        BinlogFixture.encode("graft", "accounts", cols, txns, gtidFrom = Some(1L)))
+      logs.sliding(2).foreach { case Seq(shorter, longer) =>
+        require(longer.length > shorter.length && java.util.Arrays.equals(
+          java.util.Arrays.copyOf(longer, shorter.length), shorter),
+          "append-only encode prefix broke — the growing-log premise is off")
+      }
+      val srv = new BinlogFixtureServer(IndexedSeq(PrimaryBin -> logs.last),
+        replUser, replPassword, heartbeatMs = heartbeatMs)
+      srv.truncate(PrimaryBin, logs.head.length)
+      (srv, logs.map(_.length))
+    }
   }
 
   private def refTopology(s: SparkSession, dir: String): RefTopology = {
-    import graft.sources.BinlogFixture.Change
-    import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeDouble}
+    import graft.sources.BinlogFormat.{TypeLongLong, TypeDouble}
     val cols = IndexedSeq(ColumnDef(TypeLongLong, 0), ColumnDef(TypeDouble, 8))
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 5 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.size >= 20, "accounts sample too small")
+    val keys = orderKeys(s, dir, 5, 20, "accounts sample too small")
     // history: every account inserted (the state the capture points at)
     val txnsT = keys.map(k => Change.insert(IndexedSeq[Any](k, refBal0(k))))
       .grouped(50).map(_.toSeq).toIndexedSeq
@@ -987,25 +962,24 @@ object PipelineOps {
     RefTopology(keys, cols, txnsT, txnsW1, nOverlap, snapshot)
   }
 
-  /** The shared apply half of o21/o22: stamp the tailed changes as ONE
-    * batch (version 2 — the initial copy was version 1, the reference's
-    * batch-granular `_version`, cdc_replicator.py:269-271), append them
-    * to the pipeline's accounts target, and read back the deduping live
+  /** Append tailed accounts change rows to the target as ONE batch at
+    * version 2 — the initial copy was version 1, the reference's
+    * batch-granular `_version` (cdc_replicator.py:269-271). */
+  private def appendTail(changes: DataFrame, tgt: String): Unit =
+    CdcTransform.stampBatch(changes, opCol = "op", seqCol = "_seq",
+        batchVersionMicros = 2L)
+      .drop("op", "_seq", "_tbl")
+      .write.mode(SaveMode.Append).parquet(s"$tgt/accounts.parquet")
+
+  /** The shared apply half of o21/o22: [[appendTail]] the tailed changes
+    * to the pipeline's accounts target and read back the deduping live
     * view — the ReplacingMergeTree heal that absorbs the double-applied
     * overlap (at-least-once by design, `README.md:480-497`). */
   private def refApplyTail(s: SparkSession, pipe: CdcPipeline, tgt: String,
       changes: Vector[graft.sources.BinlogFormat.RowChange]): DataFrame = {
-    import graft.operators.CdcTransform
-    import graft.sources.BinlogSource
-    val schema = StructType.fromDDL("id BIGINT, bal DOUBLE")
-    val stamped = CdcTransform.stampBatch(
-      BinlogSource.collectedChanges(s, changes, "accounts", schema),
-      opCol = "op", seqCol = "_seq", batchVersionMicros = 2L)
-    stamped.drop("op", "_seq", "_tbl")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$tgt/accounts.parquet")
-    graft.GateCache.cache(LiveView.live(
-      pipe.applied("accounts"), pks = Seq("id"), tieBreak = Some(SeqCol)))
+    appendTail(BinlogSource.collectedChanges(s, changes, "accounts",
+      AccountsSchema), tgt)
+    graft.GateCache.cache(LiveView.live(pipe.applied("accounts"), pks = Seq("id")))
   }
 
   /** O21: the FULL REFERENCE TOPOLOGY as one gate, in its actual
@@ -1037,28 +1011,20 @@ object PipelineOps {
     * the final source state row-for-row. Output = the live view, its
     * every value recomputable from orders. */
   def referenceTopologyE2e(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixtureServer, BinlogSocketClient}
     val Seq(tgt, ckp) = dirs("graft_reftopo", "tgt", "ckp")
     val topo = refTopology(s, dir)
-    // a binlog only grows: encode the FULL log once; the T-only prefix
-    // is byte-identical (positions are cumulative), so the truncated
-    // server IS the primary as of the capture
-    val file = "primary-bin.000001"
-    val tBytes = topo.encode(topo.txnsT)
-    val fullBytes = topo.encode(topo.txnsT ++ topo.txnsW1)
-    topo.requirePrefix(tBytes, fullBytes)
-    val srv = new BinlogFixtureServer(IndexedSeq(file -> fullBytes),
-      "repl", "graft-secret")
-    srv.truncate(file, tBytes.length)
+    // a binlog only grows: the served FULL log truncated to its T-only
+    // prefix IS the primary as of the capture
+    val (srv, Seq(tLen, fullLen)) =
+      topo.serve(IndexedSeq(topo.txnsT, topo.txnsT ++ topo.txnsW1))
     try {
-      val cli = new BinlogSocketClient("127.0.0.1", srv.port,
-        "repl", "graft-secret")
+      val cli = replica(srv)
       // 1. capture BEFORE the copy — the invariant under test
       val (msFile, msPos) = cli.masterStatus()
-      require(msFile == file && msPos == tBytes.length,
-        s"captured ($msFile, $msPos), expected ($file, ${tBytes.length})")
+      require(msFile == PrimaryBin && msPos == tLen,
+        s"captured ($msFile, $msPos), expected ($PrimaryBin, $tLen)")
       // 2. the overlap writes land
-      srv.reveal(file)
+      srv.reveal(PrimaryBin)
       // 3. initial copy: the source's CURRENT state (post-overlap),
       //    one _version stamp for the whole table (the reference's
       //    batch-granular version, cdc_replicator.py:269-271)
@@ -1074,14 +1040,13 @@ object PipelineOps {
       // …whereas a capture taken AFTER the copy (the bug the order
       // prevents) would see nothing of the window's writes
       val (_, posAfter) = cli.masterStatus()
-      require(posAfter == fullBytes.length.toLong &&
-        cli.tail(file, posAfter).changes.isEmpty,
+      require(posAfter == fullLen.toLong &&
+        cli.tail(PrimaryBin, posAfter).changes.isEmpty,
         "post-copy offset unexpectedly replays the overlap")
       // the live view heals the double-apply: per key the max-version
       // row wins; the overlap's duplicates collapse, deletes tombstone
       val live = refApplyTail(s, pipe, tgt, r.changes)
-      require(live.exceptAll(topo.snapshot).count() == 0 &&
-        topo.snapshot.exceptAll(live).count() == 0,
+      requireSameRows(live, topo.snapshot,
         "live view diverges from the final source state")
       live
     } finally srv.close()
@@ -1105,8 +1070,6 @@ object PipelineOps {
     * mid-tail writes. Output = the live view, every value
     * recomputable from orders. */
   def referenceLiveTailE2e(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixtureServer, BinlogSocketClient}
-    import graft.sources.BinlogFixture.Change
     val Seq(tgt, ckp) = dirs("graft_livetail", "tgt", "ckp")
     val topo = refTopology(s, dir)
     def balW2(k: Long): Double =
@@ -1118,23 +1081,16 @@ object PipelineOps {
       IndexedSeq[Any](k, refBalW1(k)), IndexedSeq[Any](k, balW2(k)))))
     val nOverlap = topo.nOverlap
     val nLive = txnsW2.map(_.size).sum
-    val file = "primary-bin.000001"
-    val tBytes = topo.encode(topo.txnsT)
-    val w1Bytes = topo.encode(topo.txnsT ++ topo.txnsW1)
-    val fullBytes = topo.encode(topo.txnsT ++ topo.txnsW1 ++ txnsW2)
-    topo.requirePrefix(tBytes, w1Bytes)
-    topo.requirePrefix(w1Bytes, fullBytes)
-    val srv = new BinlogFixtureServer(IndexedSeq(file -> fullBytes),
-      "repl", "graft-secret", heartbeatMs = 20L)
-    srv.truncate(file, tBytes.length)
+    val (srv, Seq(tLen, w1Len, fullLen)) = topo.serve(IndexedSeq(topo.txnsT,
+      topo.txnsT ++ topo.txnsW1, topo.txnsT ++ topo.txnsW1 ++ txnsW2),
+      heartbeatMs = 20L)
     try {
-      val cli = new BinlogSocketClient("127.0.0.1", srv.port,
-        "repl", "graft-secret")
+      val cli = replica(srv)
       // 1. capture; 2. overlap lands; 3. copy the post-overlap state
       val (msFile, msPos) = cli.masterStatus()
-      require(msFile == file && msPos == tBytes.length,
-        s"captured ($msFile, $msPos), expected ($file, ${tBytes.length})")
-      srv.truncate(file, w1Bytes.length) // W1 lands (log grows)
+      require(msFile == PrimaryBin && msPos == tLen,
+        s"captured ($msFile, $msPos), expected ($PrimaryBin, $tLen)")
+      srv.truncate(PrimaryBin, w1Len) // W1 lands (log grows)
       val pipe = new CdcPipeline(s, tgt, ckp)
       pipe.initialSync(topo.snapshot.withColumn("s0", lit(0L)), "accounts",
         versionMicros = 1L, seqCol = "s0")
@@ -1151,7 +1107,7 @@ object PipelineOps {
       val r = cli.tailBlocking(msFile, msPos) { (changes, beats) =>
         if (!revealed && changes == nOverlap && beats >= 1) {
           beatsBetween = beats
-          srv.reveal(file) // W2 lands while the connection idles
+          srv.reveal(PrimaryBin) // W2 lands while the connection idles
           revealed = true
         }
         changes == nOverlap + nLive || beats > 1500
@@ -1164,13 +1120,12 @@ object PipelineOps {
       require(beatsBetween >= 1,
         "no heartbeat between the overlap drain and the live wave — " +
           "the connection never idled at log end")
-      require(r.pos == fullBytes.length.toLong,
-        s"final offset ${r.pos} != log end ${fullBytes.length}")
+      require(r.pos == fullLen.toLong,
+        s"final offset ${r.pos} != log end $fullLen")
       val expected = topo.snapshot.withColumn("bal", col("bal") +
         when(col("id") % 4 === 0, 1000.0).otherwise(0.0))
       val live = refApplyTail(s, pipe, tgt, r.changes)
-      require(live.exceptAll(expected).count() == 0 &&
-        expected.exceptAll(live).count() == 0,
+      requireSameRows(live, expected,
         "live view diverges from the final source state (incl. the " +
           "mid-tail wave)")
       live
@@ -1200,45 +1155,29 @@ object PipelineOps {
     * its offsets); and the live view equals the o21 snapshot algebra ⇒
     * the same oracle. */
   def binlogDsv2StreamCdc(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixtureServer, MysqlBinlogSource}
-    import graft.operators.CdcTransform
+    import graft.sources.MysqlBinlogSource
     val Seq(tgt, ckp) = dirs("graft_dsv2", "tgt", "ckp")
     val topo = refTopology(s, dir)
-    val file = "primary-bin.000001"
-    val tBytes = topo.encode(topo.txnsT)
-    val fullBytes = topo.encode(topo.txnsT ++ topo.txnsW1)
-    topo.requirePrefix(tBytes, fullBytes)
-    val srv = new BinlogFixtureServer(IndexedSeq(file -> fullBytes),
-      "repl", "graft-secret")
-    srv.truncate(file, tBytes.length)
+    val (srv, _) = topo.serve(IndexedSeq(topo.txnsT, topo.txnsT ++ topo.txnsW1))
     try {
-      val schema = StructType.fromDDL("id BIGINT, bal DOUBLE")
       def drain(): Unit = BoundedStream.drain(
         s.readStream.format("mysql-binlog")
-          .schema(MysqlBinlogSource.withMeta(schema))
-          .option("host", "127.0.0.1").option("port", srv.port.toString)
-          .option("user", "repl").option("password", "graft-secret")
-          .option("table", "accounts")
-          .option("startFile", file).option("startPos", "4")
+          .schema(MysqlBinlogSource.withMeta(AccountsSchema))
+          .options(binlogSourceOptions(srv))
           .load()
           .writeStream
           .foreachBatch {
             (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
              _: Long) =>
               // the emitted frame IS collectedChanges' shape — the same
-              // stamped apply the imperative tails use (refApplyTail)
-              CdcTransform.stampBatch(b.toDF(), opCol = "op",
-                  seqCol = "_seq", batchVersionMicros = 2L)
-                .drop("op", "_seq", "_tbl")
-                .write.mode(org.apache.spark.sql.SaveMode.Append)
-                .parquet(s"$tgt/accounts.parquet")
-              ()
+              // stamped apply the imperative tails use
+              appendTail(b.toDF(), tgt)
           }, ckp)
       drain() // run 1: the T history
       val afterT = s.read.parquet(s"$tgt/accounts.parquet").count()
       require(afterT == topo.keys.size,
         s"run 1 landed $afterT rows, expected T = ${topo.keys.size}")
-      srv.reveal(file) // the log grows
+      srv.reveal(PrimaryBin) // the log grows
       drain() // run 2: FRESH query, SAME checkpoint — Spark's offset log
       val landed = graft.GateCache.cache(
         s.read.parquet(s"$tgt/accounts.parquet"))
@@ -1253,10 +1192,8 @@ object PipelineOps {
       require(seqs.getLong(0) == total && seqs.getLong(1) == 0L &&
         seqs.getLong(2) == total - 1L,
         s"seq not dense 0..${total - 1}: $seqs")
-      val live = graft.GateCache.cache(LiveView.live(landed,
-        pks = Seq("id"), tieBreak = Some(SeqCol)))
-      require(live.exceptAll(topo.snapshot).count() == 0 &&
-        topo.snapshot.exceptAll(live).count() == 0,
+      val live = graft.GateCache.cache(LiveView.live(landed, pks = Seq("id")))
+      requireSameRows(live, topo.snapshot,
         "live view diverges from the topology's final source state")
       live
     } finally srv.close()
@@ -1275,36 +1212,25 @@ object PipelineOps {
     * bounded frame applied through the same stamped apply yields the
     * o21 topology state ⇒ the same oracle. */
   def binlogBatchReadCdc(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogFixtureServer, MysqlBinlogSource}
-    import graft.operators.CdcTransform
+    import graft.sources.MysqlBinlogSource
     val topo = refTopology(s, dir)
-    val file = "primary-bin.000001"
-    val tw1Bytes = topo.encode(topo.txnsT ++ topo.txnsW1)
     // the poison wave: writes landing AFTER the bounded read's end —
     // a bound leak would flip survivors' bal by 9999
     val poison = IndexedSeq(topo.keys.filter(_ % 7 != 0).take(5).map(k =>
-      BinlogFixture.Change.update(
-        IndexedSeq[Any](k, 0.0), IndexedSeq[Any](k, 9999.0))))
-    val fullBytes = topo.encode(topo.txnsT ++ topo.txnsW1 ++ poison)
-    topo.requirePrefix(tw1Bytes, fullBytes)
-    val srv = new BinlogFixtureServer(IndexedSeq(file -> fullBytes),
-      "repl", "graft-secret")
-    srv.truncate(file, tw1Bytes.length)
+      Change.update(IndexedSeq[Any](k, 0.0), IndexedSeq[Any](k, 9999.0))))
+    val (srv, Seq(tw1Len, _)) = topo.serve(IndexedSeq(
+      topo.txnsT ++ topo.txnsW1, topo.txnsT ++ topo.txnsW1 ++ poison))
     try {
-      val schema = StructType.fromDDL("id BIGINT, bal DOUBLE")
       def read(bounded: Boolean) = {
         var r = s.read.format("mysql-binlog")
-          .schema(MysqlBinlogSource.withMeta(schema))
-          .option("host", "127.0.0.1").option("port", srv.port.toString)
-          .option("user", "repl").option("password", "graft-secret")
-          .option("table", "accounts")
-          .option("startFile", file).option("startPos", "4")
-        if (bounded) r = r.option("endFile", file)
-          .option("endPos", tw1Bytes.length.toString)
+          .schema(MysqlBinlogSource.withMeta(AccountsSchema))
+          .options(binlogSourceOptions(srv))
+        if (bounded) r = r.option("endFile", PrimaryBin)
+          .option("endPos", tw1Len.toString)
         r.load()
       }
       val bounded = read(bounded = true)
-      srv.reveal(file) // the poison lands — PAST the bound
+      srv.reveal(PrimaryBin) // the poison lands — PAST the bound
       val total = (topo.keys.size + topo.nOverlap).toLong
       // land the bounded frame OFF the socket: the gate RETURNS a
       // frame, and its lineage must not trace to a server the finally
@@ -1318,13 +1244,9 @@ object PipelineOps {
           "the bound leaked the post-capture wave or dropped a commit")
       require(read(bounded = false).count() == total + 5,
         "unbounded read should see the revealed wave")
-      val stamped = CdcTransform.stampBatch(frame, opCol = "op",
-        seqCol = "_seq", batchVersionMicros = 1L)
-      val live = graft.GateCache.cache(LiveView.live(
-        stamped.drop("op", "_seq", "_tbl"),
-        pks = Seq("id"), tieBreak = Some(SeqCol)))
-      require(live.exceptAll(topo.snapshot).count() == 0 &&
-        topo.snapshot.exceptAll(live).count() == 0,
+      val live = graft.GateCache.cache(
+        liveOf(stampOne(frame), Seq("id"), AccountsSchema.fieldNames.toSeq))
+      requireSameRows(live, topo.snapshot,
         "live view diverges from the topology state as of the bound")
       live
     } finally srv.close()
@@ -1350,16 +1272,53 @@ object PipelineOps {
     * live view), so a leaked duplicate inflates a count and fails the
     * DuckDB hash. */
   def binlogGtidResume(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource, GtidSet}
-    import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeDouble, parse}
-    import BinlogFixture.Change
-    import graft.operators.CdcTransform
+    import graft.sources.GtidSet
+    import graft.sources.BinlogFormat.parse
     val Seq(landingA, landingB) = dirs("graft_gtid", "a", "b")
+    val ledger = ledgerChain(s, dir, landingA, landingB)
+    import ledger.{m, ov, txns}
+    // phase 1: apply A in full, record the applied GTID set
+    val fromA = BinlogSource.changes(s, landingA, "ledger", LedgerSchema)
+    val appliedGtids = GtidSet.fromGtids(
+      parse(ledger.bytesA).changes.flatMap(_.gtid)) // driver-side: bytes in hand
+    require(appliedGtids.render == ledger.setA,
+      s"unexpected applied set ${appliedGtids.render}")
+    // phase 2: resume on B with the skip filter
+    val fromB = BinlogSource.changes(s, landingB, "ledger", LedgerSchema,
+      skipGtids = appliedGtids)
+    val naiveB = BinlogSource.changes(s, landingB, "ledger", LedgerSchema)
+    val overlapRows = txns.slice(m - ov, m).map(_.size).sum.toLong
+    require(naiveB.count() - fromB.count() == overlapRows,
+      s"skip filter dropped ${naiveB.count() - fromB.count()} rows, " +
+        s"expected the $overlapRows-row overlap exactly")
+    val applied = graft.GateCache.cache(stampOne(fromA.unionByName(fromB)))
+    // every key exactly once: the deduping live view and the raw applied
+    // rows must agree — a replayed transaction would break this
+    val live = LiveView.live(applied, pks = Seq("id"))
+    require(live.count() == applied.count(),
+      "duplicate rows applied — the GTID skip filter leaked a replay")
+    ledgerRollup(applied)
+  }
+
+  private val LedgerSchema = StructType.fromDDL("id BIGINT, amt DOUBLE")
+
+  /** The t33/t40 failover chain: the k%9 ledger sample, one transaction
+    * per 20 inserts. Server A's log holds gtids 1..m; the promoted
+    * replica B's log re-carries A's last `ov` transactions and runs on
+    * to the end. */
+  private case class LedgerChain(txns: IndexedSeq[Seq[Change]], m: Int,
+                                 ov: Int, bytesA: Array[Byte]) {
+    /** The GTID set of everything server A committed. */
+    def setA: String = s"01020304-0506-0708-090a-0b0c0d0e0f10:1-$m"
+  }
+
+  /** Encode the [[LedgerChain]] and land A's and B's logs. */
+  private def ledgerChain(s: SparkSession, dir: String, landingA: String,
+                          landingB: String): LedgerChain = {
+    import graft.sources.BinlogFormat.{TypeLongLong, TypeDouble}
     val cols = IndexedSeq(ColumnDef(TypeLongLong, 0), ColumnDef(TypeDouble, 8))
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 9 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.size >= 60, "sample too small for an overlapping chain")
+    val keys = orderKeys(s, dir, 9, 60,
+      "sample too small for an overlapping chain")
     val txns = keys.map(k =>
       Seq(Change.insert(IndexedSeq[Any](k, (k % 1000).toDouble))))
       .grouped(20).map(_.flatten).toIndexedSeq // one txn per 20 inserts
@@ -1368,37 +1327,19 @@ object PipelineOps {
     require(ov >= 1 && txns.size > m, "degenerate overlap split")
     val bytesA = BinlogFixture.encode("graft", "ledger", cols,
       txns.take(m), gtidFrom = Some(1L))
-    Files.write(java.nio.file.Paths.get(landingA, "srvA-bin.000001"), bytesA)
-    Files.write(java.nio.file.Paths.get(landingB, "srvB-bin.000001"),
+    land(landingA, Seq("srvA-bin.000001" -> bytesA))
+    land(landingB, Seq("srvB-bin.000001" ->
       BinlogFixture.encode("graft", "ledger", cols,
-        txns.slice(m - ov, txns.size), gtidFrom = Some((m - ov + 1).toLong)))
-    val schema = StructType.fromDDL("id BIGINT, amt DOUBLE")
-    // phase 1: apply A in full, record the applied GTID set
-    val fromA = BinlogSource.changes(s, landingA, "ledger", schema)
-    val appliedGtids = GtidSet.fromGtids(
-      parse(bytesA).changes.flatMap(_.gtid)) // driver-side: bytes in hand
-    require(appliedGtids.render == s"01020304-0506-0708-090a-0b0c0d0e0f10:1-$m",
-      s"unexpected applied set ${appliedGtids.render}")
-    // phase 2: resume on B with the skip filter
-    val fromB = BinlogSource.changes(s, landingB, "ledger", schema,
-      skipGtids = appliedGtids)
-    val naiveB = BinlogSource.changes(s, landingB, "ledger", schema)
-    val overlapRows = txns.slice(m - ov, m).map(_.size).sum.toLong
-    require(naiveB.count() - fromB.count() == overlapRows,
-      s"skip filter dropped ${naiveB.count() - fromB.count()} rows, " +
-        s"expected the $overlapRows-row overlap exactly")
-    val applied = graft.GateCache.cache(CdcTransform.stampBatch(
-      fromA.unionByName(fromB), opCol = "op", seqCol = "_seq",
-      batchVersionMicros = 1L))
-    // every key exactly once: the deduping live view and the raw applied
-    // rows must agree — a replayed transaction would break this
-    val live = LiveView.live(applied, pks = Seq("id"), tieBreak = Some(SeqCol))
-    require(live.count() == applied.count(),
-      "duplicate rows applied — the GTID skip filter leaked a replay")
+        txns.slice(m - ov, txns.size), gtidFrom = Some((m - ov + 1).toLong))))
+    LedgerChain(txns, m, ov, bytesA)
+  }
+
+  /** The t33/t40 output: a rollup over the RAW applied ledger rows, so a
+    * leaked replay inflates a bucket and flips the hash. */
+  private def ledgerRollup(applied: DataFrame): DataFrame =
     applied.groupBy((col("id") % 10).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("amt").cast("long")).as("sum_amt"))
-  }
 
   /** T40: t33's GTID failover ON THE STREAMING PATH — the applied set
     * persisted per micro-batch, the way a replica persists
@@ -1419,34 +1360,16 @@ object PipelineOps {
     * Output = t33's rollup over the raw applied rows, so one leaked
     * replay inflates a bucket and flips the hash. */
   def binlogGtidStreamResume(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource, GtidSet}
-    import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeDouble}
-    import BinlogFixture.Change
+    import graft.sources.GtidSet
     val Seq(landingA, landingB, tgt, ckpA, ckpB) =
       dirs("graft_gtidstr", "a", "b", "tgt", "ckpa", "ckpb")
-    val gtidFile = java.nio.file.Paths.get(ckpA, "gtid_executed")
-    val cols = IndexedSeq(ColumnDef(TypeLongLong, 0), ColumnDef(TypeDouble, 8))
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 9 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.size >= 60, "sample too small for an overlapping chain")
-    val txns = keys.map(k =>
-      Seq(Change.insert(IndexedSeq[Any](k, (k % 1000).toDouble))))
-      .grouped(20).map(_.flatten).toIndexedSeq
-    val m = (txns.size * 3) / 5
-    val ov = math.min(5, m - 1)
-    require(ov >= 1 && txns.size > m, "degenerate overlap split")
-    Files.write(java.nio.file.Paths.get(landingA, "srvA-bin.000001"),
-      BinlogFixture.encode("graft", "ledger", cols, txns.take(m),
-        gtidFrom = Some(1L)))
-    Files.write(java.nio.file.Paths.get(landingB, "srvB-bin.000001"),
-      BinlogFixture.encode("graft", "ledger", cols,
-        txns.slice(m - ov, txns.size), gtidFrom = Some((m - ov + 1).toLong)))
-    val schema = StructType.fromDDL("id BIGINT, amt DOUBLE")
+    val gtidFile = Paths.get(ckpA, "gtid_executed")
+    val ledger = ledgerChain(s, dir, landingA, landingB)
+    import ledger.{m, ov, txns}
     val tracker = new BinlogSource.GtidTracker(gtidFile)
     def run(pipe: CdcPipeline, landing: String, skip: GtidSet): Unit =
       pipe.start(
-        BinlogSource.changesStream(s, landing, "ledger", schema,
+        BinlogSource.changesStream(s, landing, "ledger", LedgerSchema,
           skipGtids = skip, gtidCol = true),
         "ledger", opCol = "op", seqCol = "_seq", versionOf = _ => 1L,
         // the POST-write seam: the durable set must only ever claim
@@ -1459,13 +1382,12 @@ object PipelineOps {
     // phase A: tail server A, applied set persisted per micro-batch
     run(new CdcPipeline(s, tgt, ckpA), landingA, GtidSet.Empty)
     val persisted = BinlogSource.GtidTracker.load(gtidFile)
-    require(persisted.render ==
-      s"01020304-0506-0708-090a-0b0c0d0e0f10:1-$m",
+    require(persisted.render == ledger.setA,
       s"unexpected persisted set ${persisted.render}")
     // failover: a NEW stream over B's log, inheriting ONLY the set
     run(new CdcPipeline(s, tgt, ckpB), landingB, persisted)
     // the overlap really was in B's bytes (batch-side naive read) …
-    val naiveB = BinlogSource.changes(s, landingB, "ledger", schema)
+    val naiveB = BinlogSource.changes(s, landingB, "ledger", LedgerSchema)
     val overlapRows = txns.slice(m - ov, m).map(_.size).sum.toLong
     val totalRows = txns.map(_.size).sum.toLong
     require(naiveB.count() == totalRows - txns.take(m - ov).map(_.size).sum,
@@ -1475,9 +1397,7 @@ object PipelineOps {
     require(applied.count() == totalRows,
       s"applied ${applied.count()} != $totalRows — the stream replayed " +
         s"(or over-skipped) part of the $overlapRows-row failover overlap")
-    applied.groupBy((col("id") % 10).cast("long").as("bucket"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("amt").cast("long")).as("sum_amt"))
+    ledgerRollup(applied)
   }
 
   /** T34: the t28 PK-UPDATE-ORPHAN repair fed from RAW WIRE BYTES. t28
@@ -1495,17 +1415,11 @@ object PipelineOps {
     * update's own (version, seq). Output = the six-number ledger, all
     * recomputable from orders. */
   def binlogPkUpdateWire(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource}
-    import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeDouble, TypeVarchar}
-    import BinlogFixture.Change
-    import graft.operators.CdcTransform
+    import graft.sources.BinlogFormat.{TypeLongLong, TypeDouble, TypeVarchar}
     val landing = graft.GateCache.tempDir("graft_pkup_src").toString
     val cols = IndexedSeq(ColumnDef(TypeLongLong, 0),
       ColumnDef(TypeVarchar, 40), ColumnDef(TypeDouble, 8))
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 8 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.nonEmpty, "empty accts sample")
+    val keys = orderKeys(s, dir, 8, 1, "empty accts sample")
     def img(k: Long, id: Long): IndexedSeq[Any] =
       IndexedSeq(id, s"acct-$k", (k % 500).toDouble)
     val moved = keys.filter(_ % 40 == 0)
@@ -1513,20 +1427,16 @@ object PipelineOps {
     val changes =
       keys.map(k => Change.insert(img(k, k))) ++
       moved.map(k => Change.update(img(k, k), img(k, k + 1000000000L)))
-    Files.write(java.nio.file.Paths.get(landing, "accts-bin.000001"),
-      BinlogFixture.encode("graft", "accts", cols,
-        changes.grouped(100).toSeq, gtidFrom = Some(1L)))
+    land(landing, Seq("accts-bin.000001" -> BinlogFixture.encode("graft",
+      "accts", cols, changes.grouped(100).toSeq, gtidFrom = Some(1L))))
     val schema = StructType.fromDDL("id BIGINT, name STRING, val DOUBLE")
     val decoded = graft.GateCache.cache(BinlogSource.changes(
       s, landing, "accts", schema, beforeKey = Some("id")))
     def liveKeys(fix: Boolean): DataFrame =
-      LiveView.live(
-        CdcTransform.stampWithBeforeImage(decoded, opCol = "op",
-            seqCol = "_seq", version = lit(1L), keyCol = "id",
-            beforeKeyCol = "_before_id", fixPkUpdateOrphans = fix)
-          .select(col("id"), col("name"), col("val"),
-            col(VersionCol), col(SeqCol), col(DeletedCol)),
-        pks = Seq("id"), tieBreak = Some(SeqCol))
+      liveOf(CdcTransform.stampWithBeforeImage(decoded, opCol = "op",
+          seqCol = "_seq", version = lit(1L), keyCol = "id",
+          beforeKeyCol = "_before_id", fixPkUpdateOrphans = fix),
+        Seq("id"), schema.fieldNames.toSeq)
     val oldKeys = {
       import s.implicits._
       moved.toDF("mk")
@@ -1567,33 +1477,43 @@ object PipelineOps {
     * t31's per-priority ledger (same oracle), via the two-step
     * aggregate — bucket-local per-order, then priority. */
   def bucketedCdcSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.BinlogSource
-    import graft.operators.{Bucketing, CdcTransform}
-    val staged = stageMultiBinlogs(s, dir)
-    def stamped(table: String, schema: StructType): DataFrame =
-      CdcTransform.stampBatch(
-        BinlogSource.changes(s, staged.landing, table, schema),
-        opCol = "op", seqCol = "_seq", batchVersionMicros = 1L)
-        .drop("op", "_tbl")
+    import graft.operators.Bucketing
+    val staged = orderBinlogs(s, dir)
+    val landing = land(graft.GateCache.tempDir("graft_b8_src").toString,
+      staged.files)
+    def stamped(table: String): DataFrame = stampOne(BinlogSource.changes(
+      s, landing, table, BinlogSource.inferSchema(s, landing, table)))
+      .drop("op", "_tbl")
     // the two rotated files are the two sink generations (the file
     // ordinal rides the top bits of _seq)
     def gen(df: DataFrame, ord: Int): DataFrame =
       df.filter(shiftright(col(SeqCol), 40) === ord)
-    val hdrAll = graft.GateCache.cache(stamped("orders_hdr",
-      BinlogSource.inferSchema(s, staged.landing, "orders_hdr")))
-    val lnAll = graft.GateCache.cache(stamped("orders_ln",
-      BinlogSource.inferSchema(s, staged.landing, "orders_ln")))
+    val hdrAll = graft.GateCache.cache(stamped("orders_hdr"))
+    val lnAll = graft.GateCache.cache(stamped("orders_ln"))
     Bucketing.writeBucketedMulti(gen(hdrAll, 1), "b8_hdr", Seq("o_orderkey"), 8)
     Bucketing.appendBucketedMulti(gen(hdrAll, 2), "b8_hdr", Seq("o_orderkey"), 8)
     Bucketing.writeBucketedMulti(gen(lnAll, 1), "b8_ln", Seq("l_orderkey"), 8)
     Bucketing.appendBucketedMulti(gen(lnAll, 2), "b8_ln", Seq("l_orderkey"), 8)
-    require(s.table("b8_hdr").count() == staged.nHdr,
+    require(s.table("b8_hdr").count() == staged.nCommitted,
       "bucketed sink header count off — torn tail leaked into the layout")
+    val (rows, schema) = auditedRollup(s, "b8", "")
+    s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), schema)
+  }
+
+  /** The b4 audit protocol over the `<sink>_hdr`/`<sink>_ln` co-bucketed
+    * sinks' current state: the cross-table rollup (per order bucket-local,
+    * then per priority) must be a bucket-wise sort-merge join with no
+    * exchange on the bucket key. Broadcast is disabled in an isolated
+    * session so harness-scale AQE can't void the audit; the rows are
+    * collected first so the audited plan is the AQE-final one. `what`
+    * prefixes the failure messages. */
+  private def auditedRollup(s: SparkSession, sink: String, what: String)
+      : (Array[org.apache.spark.sql.Row], StructType) = {
     val iso = s.newSession()
     iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     iso.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    val hdrB = iso.table("b8_hdr")
-    val lnB = iso.table("b8_ln")
+    val hdrB = iso.table(s"${sink}_hdr")
+    val lnB = iso.table(s"${sink}_ln")
     val perOrder = hdrB.join(lnB, hdrB("o_orderkey") === lnB("l_orderkey"))
       .groupBy(hdrB("o_orderkey"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n_ln"),
@@ -1605,34 +1525,41 @@ object PipelineOps {
     val rows = rollup.collect() // materialize so AQE finalizes the plan
     val plan = rollup.queryExecution.executedPlan.toString
     require(plan.contains("SortMergeJoin"),
-      s"sink join is not a bucket-wise sort-merge join:\n$plan")
+      s"${what}sink join is not a bucket-wise sort-merge join:\n$plan")
     val bad = plan.linesIterator.filter(l =>
       l.contains("Exchange hashpartitioning") && l.contains("orderkey")).toSeq
     require(bad.isEmpty,
-      s"CDC sink rollup shuffled on the bucket key: ${bad.mkString("; ")}\n$plan")
-    s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq),
-      rollup.schema)
+      s"${what}CDC sink rollup shuffled on the bucket key: " +
+        s"${bad.mkString("; ")}\n$plan")
+    (rows, rollup.schema)
   }
 
-  /** The shared MINIMAL-image logical history (t42 batch / t43 stream):
-    * insert every key (a MySQL insert is always a FULL row, even under
-    * MINIMAL); then partial updates carrying ONLY the changed column —
-    * +100 bal (k%2), rename (k%3), explicit-NULL name (k%35, after the
-    * rename wave) — and PK-only deletes (k%11). Returns (inserts,
-    * follow-ups) so the stream gate can split them across files/batches
-    * — the cross-batch survival of never-resent columns is the point. */
-  private def minimalImageHistory(keys: IndexedSeq[Long])
-      : (IndexedSeq[graft.sources.BinlogFixture.Change],
-         IndexedSeq[graft.sources.BinlogFixture.Change]) = {
-    import graft.sources.BinlogFixture.{Absent, Change}
-    def name0(k: Long) = s"acct-$k"
-    def bal0(k: Long) = (k % 500).toDouble
-    val inserts =
-      keys.map(k => Change.insert(IndexedSeq(k, name0(k), bal0(k), k % 7)))
+  /** The shared MINIMAL-image logical history (t42 batch / t43 stream)
+    * over the k%6 account sample: insert every key (a MySQL insert is
+    * always a FULL row, even under MINIMAL); then partial updates
+    * carrying ONLY the changed column — +100 bal (k%2), rename (k%3),
+    * explicit-NULL name (k%35, after the rename wave) — and PK-only
+    * deletes (k%11); plus an uncommitted rename of the first surviving
+    * key as the torn tail. Inserts and follow-ups stay apart so the
+    * stream gate can split them across files/batches — the cross-batch
+    * survival of never-resent columns is the point. */
+  private case class MinimalHistory(keys: IndexedSeq[Long],
+      inserts: IndexedSeq[Change], followups: IndexedSeq[Change],
+      poison: Change)
+
+  private def acctName0(k: Long): String = s"acct-$k"
+  private def acctBal0(k: Long): Double = (k % 500).toDouble
+
+  private def minimalImageHistory(s: SparkSession, dir: String,
+                                  what: String): MinimalHistory = {
+    import graft.sources.BinlogFixture.Absent
+    val keys = orderKeys(s, dir, 6, 1, s"empty $what sample")
+    val inserts = keys.map(k => Change.insert(
+      IndexedSeq(k, acctName0(k), acctBal0(k), k % 7)))
     val followups =
       keys.filter(_ % 2 == 0).map(k => Change.update(
         IndexedSeq(k, Absent, Absent, Absent),
-        IndexedSeq(k, Absent, bal0(k) + 100.0, Absent))) ++
+        IndexedSeq(k, Absent, acctBal0(k) + 100.0, Absent))) ++
       keys.filter(_ % 3 == 0).map(k => Change.update(
         IndexedSeq(k, Absent, Absent, Absent),
         IndexedSeq(k, s"acct-$k-u", Absent, Absent))) ++
@@ -1641,8 +1568,28 @@ object PipelineOps {
         IndexedSeq[Any](k, null, Absent, Absent))) ++
       keys.filter(_ % 11 == 0).map(k =>
         Change.delete(IndexedSeq(k, Absent, Absent, Absent)))
-    (inserts, followups)
+    val k0 = keys.find(k => k % 11 != 0 && k % 35 != 0).get
+    val poison = Change.update(IndexedSeq(k0, Absent, Absent, Absent),
+      IndexedSeq(k0, "poison", Absent, Absent))
+    MinimalHistory(keys, inserts, followups, poison)
   }
+
+  private val MinimalCols = {
+    import graft.sources.BinlogFormat.{TypeLongLong, TypeVarchar, TypeDouble}
+    IndexedSeq(
+      ColumnDef(TypeLongLong, 0),  // id
+      ColumnDef(TypeVarchar, 40),  // name
+      ColumnDef(TypeDouble, 8),    // bal
+      ColumnDef(TypeLongLong, 0))  // cnt
+  }
+
+  private val MinimalSchema = StructType.fromDDL(
+    "id BIGINT, name STRING, bal DOUBLE, cnt BIGINT")
+
+  /** The t42/t43 output: a NULLed name reads back as ''. */
+  private def minimalOut(live: DataFrame): DataFrame =
+    live.select(col("id"),
+      coalesce(col("name"), lit("")).as("name"), col("bal"), col("cnt"))
 
   /** T42: binlog_row_image=MINIMAL with a COALESCING apply — the row
     * shape the reference corrupts: a MINIMAL update carries only PK +
@@ -1662,69 +1609,43 @@ object PipelineOps {
     * pinned by `MinimalImageSpec`. One hash aggregate on the PK — the
     * 100 TB apply shape for MINIMAL fleets. */
   def binlogMinimalImageCdc(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource}
-    import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeVarchar, TypeDouble}
-    import BinlogFixture.{Absent, Change}
-    import graft.operators.{CdcTransform, MinimalImage}
+    import graft.operators.MinimalImage
     val Seq(minDir, fullDir) = dirs("graft_minimg", "min_src", "full_src")
-    val cols = IndexedSeq(
-      ColumnDef(TypeLongLong, 0),  // id
-      ColumnDef(TypeVarchar, 40),  // name
-      ColumnDef(TypeDouble, 8),    // bal
-      ColumnDef(TypeLongLong, 0))  // cnt
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 6 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.nonEmpty, "empty minimal-image sample")
-    def name0(k: Long) = s"acct-$k"
-    def bal0(k: Long) = (k % 500).toDouble
+    val h = minimalImageHistory(s, dir, "minimal-image")
+    val keys = h.keys
     def nameAt(k: Long): Any =
       if (k % 35 == 0) null
-      else if (k % 3 == 0) s"acct-$k-u" else name0(k)
-    def balAt(k: Long): Double = bal0(k) + (if (k % 2 == 0) 100.0 else 0.0)
-    val (minInserts, minFollowups) = minimalImageHistory(keys)
-    val minChanges = minInserts ++ minFollowups
-    val fullChanges =
-      keys.map(k => Change.insert(IndexedSeq(k, name0(k), bal0(k), k % 7))) ++
+      else if (k % 3 == 0) s"acct-$k-u" else acctName0(k)
+    def balAt(k: Long): Double =
+      acctBal0(k) + (if (k % 2 == 0) 100.0 else 0.0)
+    // the same history as FULL images, each cumulating the prior state
+    val fullChanges = h.inserts ++
       keys.filter(_ % 2 == 0).map(k => Change.update(
-        IndexedSeq(k, name0(k), bal0(k), k % 7),
-        IndexedSeq(k, name0(k), bal0(k) + 100.0, k % 7))) ++
+        IndexedSeq(k, acctName0(k), acctBal0(k), k % 7),
+        IndexedSeq(k, acctName0(k), acctBal0(k) + 100.0, k % 7))) ++
       keys.filter(_ % 3 == 0).map(k => Change.update(
-        IndexedSeq(k, name0(k), balAt(k), k % 7),
+        IndexedSeq(k, acctName0(k), balAt(k), k % 7),
         IndexedSeq(k, s"acct-$k-u", balAt(k), k % 7))) ++
       keys.filter(_ % 35 == 0).map(k => Change.update(
         IndexedSeq(k, s"acct-$k-u", balAt(k), k % 7),
         IndexedSeq[Any](k, null, balAt(k), k % 7))) ++
       keys.filter(_ % 11 == 0).map(k =>
         Change.delete(IndexedSeq(k, nameAt(k), balAt(k), k % 7)))
-    val k0 = keys.find(k => k % 11 != 0 && k % 35 != 0).get
-    val poison = Change.update(IndexedSeq(k0, Absent, Absent, Absent),
-      IndexedSeq(k0, "poison", Absent, Absent))
-    Files.write(java.nio.file.Paths.get(minDir, "accts-min.000001"),
-      BinlogFixture.encode("graft", "accts", cols,
-        minChanges.grouped(200).toSeq, uncommittedTail = Seq(poison),
-        gtidFrom = Some(1L)))
-    Files.write(java.nio.file.Paths.get(fullDir, "accts-full.000001"),
-      BinlogFixture.encode("graft", "accts", cols,
-        fullChanges.grouped(200).toSeq, gtidFrom = Some(1L)))
-    val schema = StructType.fromDDL(
-      "id BIGINT, name STRING, bal DOUBLE, cnt BIGINT")
-    val minimalLive = MinimalImage.coalesce(
-      BinlogSource.changes(s, minDir, "accts", schema, presentCol = true),
-      pks = Seq("id"))
-    val fullLive = LiveView.live(
-      CdcTransform.stampBatch(
-        BinlogSource.changes(s, fullDir, "accts", schema),
-        opCol = "op", seqCol = "_seq", batchVersionMicros = 1L),
-      pks = Seq("id"), tieBreak = Some(SeqCol))
-      .select(col("id"), col("name"), col("bal"), col("cnt"))
+    land(minDir, Seq("accts-min.000001" -> BinlogFixture.encode("graft",
+      "accts", MinimalCols, (h.inserts ++ h.followups).grouped(200).toSeq,
+      uncommittedTail = Seq(h.poison), gtidFrom = Some(1L))))
+    land(fullDir, Seq("accts-full.000001" -> BinlogFixture.encode("graft",
+      "accts", MinimalCols, fullChanges.grouped(200).toSeq,
+      gtidFrom = Some(1L))))
+    val minimalLive = MinimalImage.coalesce(BinlogSource.changes(s, minDir,
+      "accts", MinimalSchema, presentCol = true), pks = Seq("id"))
+    val fullLive = liveOf(stampOne(BinlogSource.changes(s, fullDir, "accts",
+      MinimalSchema)), Seq("id"), MinimalSchema.fieldNames.toSeq)
     val minC = graft.GateCache.cache(minimalLive)
     val fullC = graft.GateCache.cache(fullLive)
-    require(minC.exceptAll(fullC).count() == 0 &&
-      fullC.exceptAll(minC).count() == 0,
+    requireSameRows(minC, fullC,
       "MINIMAL coalesced live view diverges from the FULL-image run")
-    minC.select(col("id"),
-      coalesce(col("name"), lit("")).as("name"), col("bal"), col("cnt"))
+    minimalOut(minC)
   }
 
   /** T43: t42's MINIMAL-image apply ON THE STREAMING PATH — per
@@ -1744,27 +1665,16 @@ object PipelineOps {
     * equals the BATCH coalesce over the full history row-for-row ⇒
     * t42's oracle. */
   def binlogMinimalStreamCdc(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogSource}
-    import graft.sources.BinlogFormat.{ColumnDef, TypeLongLong, TypeVarchar, TypeDouble}
     import graft.operators.MinimalImage
     val Seq(landing, tgt, ckp) = dirs("graft_minstr", "src", "tgt", "ckp")
-    val cols = IndexedSeq(
-      ColumnDef(TypeLongLong, 0),  // id
-      ColumnDef(TypeVarchar, 40),  // name
-      ColumnDef(TypeDouble, 8),    // bal
-      ColumnDef(TypeLongLong, 0))  // cnt
-    val keys = s.read.parquet(s"$dir/orders.parquet")
-      .filter(col("o_orderkey") % 6 === 0).select("o_orderkey")
-      .orderBy("o_orderkey").collect().map(_.getLong(0)).toIndexedSeq
-    require(keys.nonEmpty, "empty minimal-stream sample")
-    val (inserts, followups) = minimalImageHistory(keys)
-    val k0 = keys.find(k => k % 11 != 0 && k % 35 != 0).get
-    val poison = BinlogFixture.Change.update(
-      IndexedSeq(k0, BinlogFixture.Absent, BinlogFixture.Absent,
-        BinlogFixture.Absent),
-      IndexedSeq(k0, "poison", BinlogFixture.Absent, BinlogFixture.Absent))
-    val schema = StructType.fromDDL(
-      "id BIGINT, name STRING, bal DOUBLE, cnt BIGINT")
+    val h = minimalImageHistory(s, dir, "minimal-stream")
+    val keys = h.keys
+    val schema = MinimalSchema
+    // file 1 = the inserts; file 2 = the partial follow-ups + the poison
+    // tail. No ROTATE: each wave's file lands on its own
+    val t = wireTable("accts", MinimalCols)
+    val files = encodeChain("accts-min", IndexedSeq(segment(t, h.inserts, 200),
+      segment(t, h.followups, 200)), Seq("accts" -> h.poison), rotate = false)
     def drain(): Unit = BoundedStream.drain(
       BinlogSource.changesStream(s, landing, "accts", schema,
           presentCol = true)
@@ -1779,19 +1689,14 @@ object PipelineOps {
             ()
         }, ckp)
     // wave 1: the inserts land (every key touched once)
-    Files.write(java.nio.file.Paths.get(landing, "accts-min.000001"),
-      BinlogFixture.encode("graft", "accts", cols,
-        inserts.grouped(200).toSeq, gtidFrom = Some(1L)))
+    land(landing, files.take(1))
     drain()
     val afterWave1 = s.read.parquet(tgt).count()
     require(afterWave1 == keys.size,
       s"wave 1 landed $afterWave1 partials, expected one per key ${keys.size}")
     // wave 2: the partial follow-ups — a FRESH query on the SAME
     // checkpoint (kill+resume); the offset log must replay nothing
-    Files.write(java.nio.file.Paths.get(landing, "accts-min.000002"),
-      BinlogFixture.encode("graft", "accts", cols,
-        followups.grouped(200).toSeq, uncommittedTail = Seq(poison),
-        gtidFrom = Some((inserts.grouped(200).size + 1).toLong)))
+    land(landing, files.drop(1))
     drain()
     val touchedWave2 = keys.count(k =>
       k % 2 == 0 || k % 3 == 0 || k % 35 == 0 || k % 11 == 0).toLong
@@ -1832,11 +1737,9 @@ object PipelineOps {
     val batchLive = MinimalImage.coalesce(
       BinlogSource.changes(s, landing, "accts", schema, presentCol = true),
       pks = Seq("id"))
-    require(merged.exceptAll(batchLive).count() == 0 &&
-      batchLive.exceptAll(merged).count() == 0,
+    requireSameRows(merged, batchLive,
       "streamed MINIMAL merge diverges from the batch coalesce")
-    merged.select(col("id"),
-      coalesce(col("name"), lit("")).as("name"), col("bal"), col("cnt"))
+    minimalOut(merged)
   }
 
   /** T39: t24's mid-stream ALTER at the WIRE layer — the reference's
@@ -1853,13 +1756,9 @@ object PipelineOps {
     * same oracle; the NULL-backfill path itself is pinned by
     * `BinlogEvolvingCdcSpec` on crafted keys. */
   def binlogEvolvingCdcLive(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BinlogFixture, BinlogFormat}
-    import BinlogFixture.Change
+    import graft.sources.BinlogFormat
     val Seq(landing, tgt, ckp) = dirs("graft_bevo_gate", "src", "tgt", "ckp")
-    val evs = s.read.parquet(s"$dir/events.parquet")
-      .select("event_id", "user_id", "event_type", "value", "props")
-      .orderBy("event_id").collect()
-    require(evs.nonEmpty, "events table is empty")
+    val evs = eventRows(s, dir)
     val cutoff = evs.map(_.getLong(0)).max / 2
     def imgOf(r: org.apache.spark.sql.Row, wide: Boolean): IndexedSeq[Any] = {
       val base = IndexedSeq(r.get(1), r.get(2), r.get(3), r.get(4))
@@ -1879,7 +1778,7 @@ object PipelineOps {
     val wide = evs.filter(_.getLong(0) >= cutoff)
       .map(change(_, wide = true)).toIndexedSeq
     require(narrow.nonEmpty && wide.nonEmpty, "degenerate ALTER split")
-    val baseNames = IndexedSeq("user_id", "event_type", "value", "props")
+    val wideNames = EventsPayload ++ Seq("region", "score")
     val wideCols = EventsBinlogCols ++ IndexedSeq(
       BinlogFormat.ColumnDef(BinlogFormat.TypeVarchar, 32),  // region
       BinlogFormat.ColumnDef(BinlogFormat.TypeDouble, 8))    // score
@@ -1887,27 +1786,26 @@ object PipelineOps {
     val poison = Change.update(
       IndexedSeq(u0, "view", 0.0, null, "r0", 0.0),
       IndexedSeq(u0, "poison", 9.9, "{}", "r9", 9.9))
-    Files.write(java.nio.file.Paths.get(landing, "events-evo.000001"),
-      BinlogFixture.encode("graft", "events", EventsBinlogCols,
-        narrow.grouped(250).toSeq, rotateTo = Some("events-evo.000002"),
-        gtidFrom = Some(1L), colNames = baseNames))
-    Files.write(java.nio.file.Paths.get(landing, "events-evo.000002"),
-      BinlogFixture.encode("graft", "events", wideCols,
-        wide.grouped(250).toSeq, uncommittedTail = Seq(poison),
-        gtidFrom = Some(1L + narrow.grouped(250).size),
-        colNames = baseNames ++ IndexedSeq("region", "score")))
+    land(landing, encodeChain("events-evo", IndexedSeq(
+      segment(wireTable("events", EventsBinlogCols, EventsPayload.toIndexedSeq),
+        narrow, 250),
+      segment(wireTable("events", wideCols, wideNames.toIndexedSeq), wide, 250)),
+      Seq("events" -> poison)))
     val evolved = graft.streaming.BinlogEvolvingCdc.run(
-      s, landing, tgt, ckp, "events", maxFilesPerTrigger = 1)
-    require(evolved.fieldNames.toSeq ==
-      baseNames ++ Seq("region", "score"),
+      s, landing, tgt, ckp, "events")
+    require(evolved.fieldNames.toSeq == wideNames,
       s"schema did not evolve from the wire: ${evolved.treeString}")
-    LiveView.live(
-      graft.streaming.BinlogEvolvingCdc.landed(s, tgt),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
-      .select(col("user_id"), col("event_type"), col("value"), col("props"),
-        coalesce(col("region"), lit("")).as("region"),
-        coalesce(col("score"), lit(-1.0)).as("score"))
+    evolvedEventsLive(graft.streaming.BinlogEvolvingCdc.landed(s, tgt))
   }
+
+  /** The t24/t39 read-back: the evolved events live view, an ALTER-added
+    * column that a pre-ALTER survivor never carried reading back as the
+    * '' / -1.0 sentinel. */
+  private def evolvedEventsLive(landed: DataFrame): DataFrame =
+    liveOf(landed, Seq("user_id"), EventsPayload ++ Seq("region", "score"))
+      .select(EventsPayload.map(col) ++ Seq(
+        coalesce(col("region"), lit("")).as("region"),
+        coalesce(col("score"), lit(-1.0)).as("score")): _*)
 
   /** B9: the b8 co-bucketed CDC sink maintained from a REAL STREAM with
     * a kill+resume in the middle — b8 simulated the two sink generations
@@ -1925,27 +1823,20 @@ object PipelineOps {
     * tables. Schemas inferred from the log (t35); output = t31's
     * ledger, same oracle. */
   def bucketedStreamSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.BinlogSource
-    import graft.operators.{Bucketing, CdcTransform}
-    val staged = stageMultiBinlogs(s, dir)
+    import graft.operators.Bucketing
+    val staged = orderBinlogs(s, dir)
     val Seq(landing, ckp) = dirs("graft_b9", "src", "ckp")
-    val hdrSchema = BinlogSource.inferSchema(s, staged.landing, "orders_hdr")
-    val lnSchema = BinlogSource.inferSchema(s, staged.landing, "orders_ln")
-    val files = Seq("orders-bin.000001", "orders-bin.000002")
-    def land(i: Int): Unit = {
-      Files.copy(java.nio.file.Paths.get(staged.landing, files(i)),
-        java.nio.file.Paths.get(landing, files(i)))
-      ()
-    }
+    // wave 1 ships file 1, which already maps both tables
+    land(landing, staged.files.take(1))
+    val hdrSchema = BinlogSource.inferSchema(s, landing, "orders_hdr")
+    val lnSchema = BinlogSource.inferSchema(s, landing, "orders_ln")
     def drainOne(table: String, schema: StructType, sink: String,
                  keys: Seq[String]): Unit = {
       BoundedStream.drain(BinlogSource.changesStream(s, landing, table, schema)
         .writeStream
         .queryName(s"b9_apply_$table")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val stamped = CdcTransform.stampBatch(batch.toDF(),
-            opCol = "op", seqCol = "_seq", batchVersionMicros = 1L)
-            .drop("op", "_tbl")
+          val stamped = stampOne(batch.toDF()).drop("op", "_tbl")
           // batch 0 = the initial generation (CTAS — also what makes a
           // re-run against a leftover catalog table, or a replay of a
           // crashed first batch, idempotent: overwrite, never append
@@ -1965,45 +1856,19 @@ object PipelineOps {
       s.catalog.refreshTable("b9_hdr")
       s.catalog.refreshTable("b9_ln")
     }
-    // the b4 audit protocol over the CURRENT sink state: the cross-table
-    // rollup must be exchange-free on the bucket key (broadcast disabled
-    // in an isolated session so harness-scale AQE can't void the audit)
-    def auditedRollup(): (Array[org.apache.spark.sql.Row], StructType) = {
-      val iso = s.newSession()
-      iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      iso.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val hdrB = iso.table("b9_hdr")
-      val lnB = iso.table("b9_ln")
-      val perOrder = hdrB.join(lnB, hdrB("o_orderkey") === lnB("l_orderkey"))
-        .groupBy(hdrB("o_orderkey"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_ln"),
-          sum(col("l_quantity").cast("long")).as("qty"))
-      val rollup = perOrder.groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("n_ln")).cast("long").as("n_lines"),
-          sum(col("qty")).cast("long").as("sum_qty"))
-      val rows = rollup.collect() // AQE-final
-      val plan = rollup.queryExecution.executedPlan.toString
-      require(plan.contains("SortMergeJoin"),
-        s"streamed sink join is not a bucket-wise sort-merge join:\n$plan")
-      val bad = plan.linesIterator.filter(l =>
-        l.contains("Exchange hashpartitioning") && l.contains("orderkey")).toSeq
-      require(bad.isEmpty,
-        s"streamed CDC sink rollup shuffled on the bucket key: " +
-          s"${bad.mkString("; ")}\n$plan")
-      (rows, rollup.schema)
-    }
-    land(0); drain()
-    val (wave1, _) = auditedRollup() // exchange-free over generation 1
+    drain()
+    // exchange-free over generation 1
+    val (wave1, _) = auditedRollup(s, "b9", "streamed ")
     val hdrWave1 = s.table("b9_hdr").count()
-    land(1); drain() // RESUME on the same checkpoints: only file 2 applies
-    require(s.table("b9_hdr").count() == staged.nHdr,
+    land(landing, staged.files.drop(1))
+    drain() // RESUME on the same checkpoints: only file 2 applies
+    require(s.table("b9_hdr").count() == staged.nCommitted,
       s"streamed sink holds ${s.table("b9_hdr").count()} headers, " +
-        s"expected ${staged.nHdr} — the resume replayed a file or the " +
+        s"expected ${staged.nCommitted} — the resume replayed a file or the " +
         "torn tail leaked")
-    require(hdrWave1 < staged.nHdr,
+    require(hdrWave1 < staged.nCommitted,
       "wave 1 already held every header — the tail never advanced")
-    val (rows, schema) = auditedRollup()
+    val (rows, schema) = auditedRollup(s, "b9", "streamed ")
     require(wave1.map(_.getLong(1)).sum < rows.map(_.getLong(1)).sum,
       "the second generation added no orders to the rollup")
     s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), schema)
@@ -2049,15 +1914,7 @@ object PipelineOps {
     require(evolved.fieldNames.contains("region") &&
       evolved.fieldNames.contains("score"),
       s"schema did not evolve: ${evolved.treeString}")
-    LiveView.live(
-      graft.streaming.EvolvingCdc.landed(s, tgt)
-        .select(col("user_id"), col("event_type"), col("value"), col("props"),
-          col("region"), col("score"),
-          col(VersionCol), col(SeqCol), col(DeletedCol)),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
-      .select(col("user_id"), col("event_type"), col("value"), col("props"),
-        coalesce(col("region"), lit("")).as("region"),
-        coalesce(col("score"), lit(-1.0)).as("score"))
+    evolvedEventsLive(graft.streaming.EvolvingCdc.landed(s, tgt))
   }
 
   /** Streaming at-ingest exact dedup ≡ batch dedup: documents replayed as
@@ -3431,24 +3288,21 @@ object PipelineOps {
     stampedV1.filter(col(SeqCol) % 5 =!= 0 && col(SeqCol) % 13 === 0)
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(tgt)
     // leg 2: reconciling full re-sync at version 2 — source truth rows…
-    val truth = LiveView.dedupLatest(stampedV1, pks = Seq("user_id"),
-      tieBreak = Some(SeqCol))
+    val truth = LiveView.dedupLatest(stampedV1, pks = Seq("user_id"))
     val truthAlive = truth.filter(col(DeletedCol) === 0)
     truthAlive.withColumn(VersionCol, lit(2L))
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(tgt)
     // …plus tombstones for the target's ghosts (alive in the lossy
     // target, gone at the source)
     val targetAlive = LiveView.dedupLatest(s.read.parquet(tgt)
-        .filter(col(VersionCol) === 1), pks = Seq("user_id"),
-        tieBreak = Some(SeqCol))
+        .filter(col(VersionCol) === 1), pks = Seq("user_id"))
       .filter(col(DeletedCol) === 0)
     targetAlive.join(truthAlive.select(col("user_id")), Seq("user_id"),
         "left_anti")
       .withColumn(VersionCol, lit(2L)).withColumn(DeletedCol, lit(1))
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(tgt)
     // healed view ≡ source truth; flags from the surviving event id
-    LiveView.live(s.read.parquet(tgt), pks = Seq("user_id"),
-        tieBreak = Some(SeqCol))
+    LiveView.live(s.read.parquet(tgt), pks = Seq("user_id"))
       .join(truth.select(col("user_id"), col(SeqCol).as("_srv")), "user_id")
       .select(col("user_id"), col("event_type"), col("value"), col("props"),
         when(col("_srv") % 5 === 0, 1L).otherwise(0L).as("was_healed"),
@@ -3725,7 +3579,7 @@ object PipelineOps {
     val nLive = graft.operators.LiveView.live(
       landed.select(col("USER_ID"), col("VMICRO"), col(VersionCol),
         col(SeqCol), col(DeletedCol)),
-      pks = Seq("USER_ID"), tieBreak = Some(SeqCol)).count()
+      pks = Seq("USER_ID")).count()
     require(nReplay == n2, "replay did not reproduce the uncommitted delta")
     import s.implicits._
     Seq((n1, n2, n3, nReplay, nLanded, nLive, drained))
@@ -3801,7 +3655,7 @@ object PipelineOps {
     val nLive = graft.operators.LiveView.live(
       landed.select(col("USER_ID"), col("VMICRO"), col(VersionCol),
         col(SeqCol), col(DeletedCol)),
-      pks = Seq("USER_ID"), tieBreak = Some(SeqCol)).count()
+      pks = Seq("USER_ID")).count()
     import s.implicits._
     Seq((n1, n2, n3, nTieSplit, nReplay, nLanded, nLive, drained))
       .toDF("n_wave1", "n_wave2", "n_wave3", "n_tie_split", "n_replay",
@@ -3888,7 +3742,7 @@ object PipelineOps {
     }
     require(attempts == 2, s"fault must fire exactly once, took $attempts")
     LiveView.live(graft.streaming.SinkRetry.landed(s, storeDir),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
+      pks = Seq("user_id"))
   }
 
   /** T25: incremental SCD2 history maintenance under streaming
@@ -4328,6 +4182,106 @@ object PipelineOps {
           unix_micros(col("session_start")).as("start_us"),
           (unix_micros(col("session_end")) - 1800000000L).as("last_us"),
           col("n_events"))))
+
+  // Oracle SQL shared by gates that reach the same final state; each is
+  // defined once so the gates cannot drift apart.
+
+  /** Shared by t31 (live-view apply), b8 (co-bucketed sink) and b9
+    * (streamed sink): the 10% order sample joined to its lines — the
+    * uncommitted poison order appears in NEITHER, so any atomicity leak
+    * flips a count and the hash. */
+  private val MultiTableRollupOracle =
+    """SELECT o.o_orderpriority,
+      |  CAST(count(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders,
+      |  CAST(count(*) AS BIGINT) AS n_lines,
+      |  CAST(sum(CAST(trunc(l.l_quantity) AS BIGINT) /* truncate like Spark long-cast */) AS BIGINT) AS sum_qty
+      |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      |WHERE o.o_orderkey % 10 = 0
+      |GROUP BY 1""".stripMargin
+
+  /** t1's final state, which every events-fed CDC gate reaches: survivor per
+    * user = the last event (constant version ⇒ max event id), hidden when it
+    * is the error tombstone. */
+  private val EventsLiveOracle =
+    """SELECT user_id, event_type, value, props FROM (
+      |  SELECT user_id, event_type, value, props,
+      |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
+      |         row_number() OVER (PARTITION BY user_id
+      |           ORDER BY event_id DESC) AS rn
+      |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin
+
+  /** The o21 reference topology's final accounts state: bal carries the
+    * k%3 overlap update, the k%7 deletes are gone. */
+  private val RefTopologyOracle =
+    """SELECT o_orderkey AS id,
+      |  CAST(o_orderkey % 100 +
+      |       CASE WHEN o_orderkey % 3 = 0 THEN 77 ELSE 0 END
+      |       AS DOUBLE) AS bal
+      |FROM orders
+      |WHERE o_orderkey % 5 = 0 AND o_orderkey % 7 <> 0""".stripMargin
+
+  /** The t33/t40 failover union applied exactly once: every k%9 order key
+    * inserted ONE row. */
+  private val LedgerRollupOracle =
+    """SELECT CAST(o_orderkey % 10 AS BIGINT) AS bucket,
+      |       count(*) AS n_rows,
+      |       CAST(sum(o_orderkey % 1000) AS BIGINT) AS sum_amt
+      |FROM orders WHERE o_orderkey % 9 = 0
+      |GROUP BY 1""".stripMargin
+
+  /** The t42/t43 coalesced MINIMAL history: survivors exclude the k%11
+    * deletes; bal carries the k%2 increment, name the k%3 rename unless the
+    * k%35 explicit-NULL wave cleared it; cnt was never re-sent and survives. */
+  private val MinimalImageOracle =
+    """SELECT k AS id,
+      |  CASE WHEN k % 35 = 0 THEN ''
+      |       WHEN k % 3 = 0 THEN 'acct-' || CAST(k AS VARCHAR) || '-u'
+      |       ELSE 'acct-' || CAST(k AS VARCHAR) END AS name,
+      |  CAST(k % 500 + CASE WHEN k % 2 = 0 THEN 100 ELSE 0 END
+      |       AS DOUBLE) AS bal,
+      |  CAST(k % 7 AS BIGINT) AS cnt
+      |FROM (SELECT o_orderkey AS k FROM orders
+      |      WHERE o_orderkey % 6 = 0 AND o_orderkey % 11 <> 0)""".stripMargin
+
+  /** t1's derivation plus the two ALTER-added columns (t24/t39): present
+    * exactly when the survivor post-dates the half-max-event-id cutoff,
+    * else the '' / -1.0 sentinels. */
+  private val EvolvedEventsOracle =
+    """SELECT user_id, event_type, value, props,
+      |  CASE WHEN event_id >= (SELECT max(event_id) // 2 FROM events)
+      |    THEN 'r' || CAST(user_id % 3 AS VARCHAR) ELSE '' END AS region,
+      |  CASE WHEN event_id >= (SELECT max(event_id) // 2 FROM events)
+      |    THEN CAST(user_id % 100 AS DOUBLE) / 10 ELSE -1.0 END AS score
+      |FROM (
+      |  SELECT user_id, event_type, value, props, event_id,
+      |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
+      |         row_number() OVER (PARTITION BY user_id
+      |           ORDER BY event_id DESC) AS rn
+      |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin
+
+  /** The batch sessionization islands (t5) the streamed sessions (t16) must
+    * equal: a gap of more than 30 min breaks a session. */
+  private val SessionsOracle =
+    """WITH e AS (SELECT user_id, epoch_us(ts) AS t FROM events),
+      |m AS (SELECT user_id, t,
+      |    CASE WHEN lag(t) OVER w IS NULL
+      |         OR t - lag(t) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t)),
+      |s AS (SELECT user_id, t, sum(brk) OVER (PARTITION BY user_id
+      |    ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |    AS sid
+      |  FROM m)
+      |SELECT user_id, min(t) AS start_us, max(t) AS last_us,
+      |  count(*) AS n_events
+      |FROM s GROUP BY user_id, sid""".stripMargin
+
+  /** Per-user event count and integer-cent total (t15's final emissions,
+    * t17's recovered state). */
+  private val UserCentsOracle =
+    """SELECT user_id, count(*) AS n_events,
+      |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+      |    AS total_cents
+      |FROM events GROUP BY user_id""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // the ascending-id replay makes the streaming index-accrual dedup
@@ -4870,59 +4824,29 @@ object PipelineOps {
         |  (SELECT count(*) FROM events WHERE user_id % 2 = 0), true""".stripMargin,
 
     // constant version ⇒ order by ingest seq (event_id) alone
-    "t1_cdc_stream_live" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t1_cdc_stream_live" -> EventsLiveOracle,
 
     // same final state as t1: the registered `<table>_live` name resolves
     // to the same window-dedup body; late binding is REQUIREd in-gate
     // (the wave-1 read differs from the final read through one
     // registration)
-    "w2_live_view_sql" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "w2_live_view_sql" -> EventsLiveOracle,
 
     // same final state as t1 (the envelope staging maps signup/error/else
     // onto c/d/u and binlog pos = event_id): survivor per user = max pos,
     // deleted when the survivor is the d-image
-    "t12_debezium_cdc" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t12_debezium_cdc" -> EventsLiveOracle,
 
     // same final state as t1/t12 (binlog row events map signup/error/else
     // onto WRITE/DELETE/UPDATE and _seq restores event order): survivor
     // per user = last event, deleted when the survivor is the tombstone.
     // The uncommitted 'poison' tail and every update before-image must
     // be invisible here — any leak flips a survivor and the hash.
-    "t29_binlog_wire_cdc" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t29_binlog_wire_cdc" -> EventsLiveOracle,
 
     // t29's continuous form: the same final state through the streaming
     // tail (two checkpointed waves; exactly-once REQUIREd in-gate)
-    "t30_binlog_stream_cdc" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t30_binlog_stream_cdc" -> EventsLiveOracle,
 
     // both live tables rebuilt relationally: the 10% order sample joined
     // to its lines (the uncommitted poison order appears in NEITHER, so
@@ -4956,33 +4880,15 @@ object PipelineOps {
     // t29's final state reached over the live replication SOCKET (kill +
     // reconnect + both resume tokens REQUIREd in-gate) — a replayed or
     // lost transaction flips a survivor and the hash
-    "t38_binlog_socket_cdc" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t38_binlog_socket_cdc" -> EventsLiveOracle,
 
     // t29's final state reached through zstd-compressed transaction
     // payloads — a lost or replayed payload flips a survivor and the hash
-    "t36_binlog_compressed_cdc" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t36_binlog_compressed_cdc" -> EventsLiveOracle,
 
     // t29's final state reached with the schema INFERRED from the log's
     // own TABLE_MAP metadata — a wrong type or name order flips the hash
-    "t35_binlog_schemaless_cdc" ->
-      """SELECT user_id, event_type, value, props FROM (
-        |  SELECT user_id, event_type, value, props,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t35_binlog_schemaless_cdc" -> EventsLiveOracle,
 
     // every value a pure function of k = o_orderkey (1/7 sample): the
     // typed wire round-trip recomputed relationally. Survivors exclude
@@ -5046,40 +4952,20 @@ object PipelineOps {
     // the failover union applied exactly once: every k%9==0 order key
     // inserted ONE row — a leaked replay of the overlapping transactions
     // inflates a bucket's count/sum and flips the hash
-    "t33_binlog_gtid_resume" ->
-      """SELECT CAST(o_orderkey % 10 AS BIGINT) AS bucket,
-        |       count(*) AS n_rows,
-        |       CAST(sum(o_orderkey % 1000) AS BIGINT) AS sum_amt
-        |FROM orders WHERE o_orderkey % 9 = 0
-        |GROUP BY 1""".stripMargin,
+    "t33_binlog_gtid_resume" -> LedgerRollupOracle,
 
     // the coalesced MINIMAL history recomputed relationally: survivors
     // exclude the k%11 deletes; bal carries the k%2 increment, name the
     // k%3 rename unless the k%35 explicit-NULL wave cleared it ('' via
     // the output coalesce); cnt was never re-sent after the insert and
     // must SURVIVE (the reference's apply would null it)
-    "t42_binlog_minimal_image" ->
-      """SELECT k AS id,
-        |  CASE WHEN k % 35 = 0 THEN ''
-        |       WHEN k % 3 = 0 THEN 'acct-' || CAST(k AS VARCHAR) || '-u'
-        |       ELSE 'acct-' || CAST(k AS VARCHAR) END AS name,
-        |  CAST(k % 500 + CASE WHEN k % 2 = 0 THEN 100 ELSE 0 END
-        |       AS DOUBLE) AS bal,
-        |  CAST(k % 7 AS BIGINT) AS cnt
-        |FROM (SELECT o_orderkey AS k FROM orders
-        |      WHERE o_orderkey % 6 = 0 AND o_orderkey % 11 <> 0)""".stripMargin,
+    "t42_binlog_minimal_image" -> MinimalImageOracle,
 
     // the reference topology end-to-end: position captured BEFORE the
     // copy, overlap writes in both the snapshot and the tail, dedup
     // absorbing the double-apply — final live state recomputed from
     // orders (bal carries the k%3 update; the k%7 deletes are gone)
-    "o21_reference_e2e" ->
-      """SELECT o_orderkey AS id,
-        |  CAST(o_orderkey % 100 +
-        |       CASE WHEN o_orderkey % 3 = 0 THEN 77 ELSE 0 END
-        |       AS DOUBLE) AS bal
-        |FROM orders
-        |WHERE o_orderkey % 5 = 0 AND o_orderkey % 7 <> 0""".stripMargin,
+    "o21_reference_e2e" -> RefTopologyOracle,
 
     // the continuous-mode topology: o21's final state plus the
     // mid-tail live wave (k%4 survivors gain 1000) — a missed or
@@ -5097,50 +4983,24 @@ object PipelineOps {
     // fold (two checkpointed waves, partials landed append-only): same
     // final state, so the same relational recomputation — a cross-batch
     // erase nulls cnt (never re-sent after wave 1) and flips the hash
-    "t43_binlog_minimal_stream" ->
-      """SELECT k AS id,
-        |  CASE WHEN k % 35 = 0 THEN ''
-        |       WHEN k % 3 = 0 THEN 'acct-' || CAST(k AS VARCHAR) || '-u'
-        |       ELSE 'acct-' || CAST(k AS VARCHAR) END AS name,
-        |  CAST(k % 500 + CASE WHEN k % 2 = 0 THEN 100 ELSE 0 END
-        |       AS DOUBLE) AS bal,
-        |  CAST(k % 7 AS BIGINT) AS cnt
-        |FROM (SELECT o_orderkey AS k FROM orders
-        |      WHERE o_orderkey % 6 = 0 AND o_orderkey % 11 <> 0)""".stripMargin,
+    "t43_binlog_minimal_stream" -> MinimalImageOracle,
 
     // the bounded BATCH read of the V2 source: the o21 state as of an
     // explicit end offset, with a poison wave revealed PAST the bound —
     // a bound leak flips survivors' bal by 9999 and the hash
-    "t45_binlog_batch_read" ->
-      """SELECT o_orderkey AS id,
-        |  CAST(o_orderkey % 100 +
-        |       CASE WHEN o_orderkey % 3 = 0 THEN 77 ELSE 0 END
-        |       AS DOUBLE) AS bal
-        |FROM orders
-        |WHERE o_orderkey % 5 = 0 AND o_orderkey % 7 <> 0""".stripMargin,
+    "t45_binlog_batch_read" -> RefTopologyOracle,
 
     // o21's topology algebra reached through the DataSource V2 source
     // (format("mysql-binlog"), offsets in Spark's own checkpoint, two
     // AvailableNow runs on one offset log) — a replayed T history or a
     // lost W1 wave flips counts and bal values
-    "t44_binlog_dsv2_stream" ->
-      """SELECT o_orderkey AS id,
-        |  CAST(o_orderkey % 100 +
-        |       CASE WHEN o_orderkey % 3 = 0 THEN 77 ELSE 0 END
-        |       AS DOUBLE) AS bal
-        |FROM orders
-        |WHERE o_orderkey % 5 = 0 AND o_orderkey % 7 <> 0""".stripMargin,
+    "t44_binlog_dsv2_stream" -> RefTopologyOracle,
 
     // t33's failover union through the STREAMING path (the applied set
     // persisted per micro-batch, inherited by the failover stream):
     // same raw-rows rollup — a leaked replay inflates a bucket's
     // count/sum and flips the hash
-    "t40_binlog_gtid_stream" ->
-      """SELECT CAST(o_orderkey % 10 AS BIGINT) AS bucket,
-        |       count(*) AS n_rows,
-        |       CAST(sum(o_orderkey % 1000) AS BIGINT) AS sum_amt
-        |FROM orders WHERE o_orderkey % 9 = 0
-        |GROUP BY 1""".stripMargin,
+    "t40_binlog_gtid_stream" -> LedgerRollupOracle,
 
     // the six-number PK-update ledger recomputed from orders: every
     // k%8==0 key is an account, every k%40==0 account is renumbered by
@@ -5160,34 +5020,12 @@ object PipelineOps {
     // t24's derivation reached from RAW BINLOG BYTES: the ALTER arrives
     // as file 2's wider TABLE_MAP, the widened columns present exactly
     // when the survivor post-dates the half-max-event-id cutoff
-    "t39_binlog_evolving_cdc" ->
-      """SELECT user_id, event_type, value, props,
-        |  CASE WHEN event_id >= (SELECT max(event_id) // 2 FROM events)
-        |    THEN 'r' || CAST(user_id % 3 AS VARCHAR) ELSE '' END AS region,
-        |  CASE WHEN event_id >= (SELECT max(event_id) // 2 FROM events)
-        |    THEN CAST(user_id % 100 AS DOUBLE) / 10 ELSE -1.0 END AS score
-        |FROM (
-        |  SELECT user_id, event_type, value, props, event_id,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t39_binlog_evolving_cdc" -> EvolvedEventsOracle,
 
     // t12's derivation plus the two ALTER-added columns: present exactly
     // when the survivor post-dates the half-max-event-id DDL cutoff
     // (earlier survivors would read back NULL → the '' / -1.0 sentinels).
-    "t24_schema_evolution" ->
-      """SELECT user_id, event_type, value, props,
-        |  CASE WHEN event_id >= (SELECT max(event_id) // 2 FROM events)
-        |    THEN 'r' || CAST(user_id % 3 AS VARCHAR) ELSE '' END AS region,
-        |  CASE WHEN event_id >= (SELECT max(event_id) // 2 FROM events)
-        |    THEN CAST(user_id % 100 AS DOUBLE) / 10 ELSE -1.0 END AS score
-        |FROM (
-        |  SELECT user_id, event_type, value, props, event_id,
-        |         CASE WHEN event_type='error' THEN 1 ELSE 0 END AS _deleted,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND _deleted = 0""".stripMargin,
+    "t24_schema_evolution" -> EvolvedEventsOracle,
 
     "t2_stream_dedup" ->
       s"""SELECT lang,
@@ -5208,19 +5046,11 @@ object PipelineOps {
 
     // the final (max-count) emission per user must equal the batch
     // aggregate exactly — integer cents make the totals batch-invariant
-    "t15_transform_with_state" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS total_cents
-        |FROM events GROUP BY user_id""".stripMargin,
+    "t15_transform_with_state" -> UserCentsOracle,
 
     // what the checkpoint's state must contain after the full run —
     // the same per-user totals, recovered WITHOUT replaying the stream
-    "t17_state_store_reader" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS total_cents
-        |FROM events GROUP BY user_id""".stripMargin,
+    "t17_state_store_reader" -> UserCentsOracle,
 
     // everything the t15 value state, the t18 map state and the t18 list
     // state must hold after the full run — recovered from the RocksDB
@@ -5277,31 +5107,7 @@ object PipelineOps {
     // the streamed sessions must equal the batch islands EXACTLY — the
     // ascending replay + 0-delay watermark is lossless, and every
     // session is emitted by eviction before the drain ends
-    "t16_stream_sessionized" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS t FROM events),
-        |m AS (SELECT user_id, t,
-        |    CASE WHEN lag(t) OVER w IS NULL
-        |         OR t - lag(t) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t)),
-        |s AS (SELECT user_id, t, sum(brk) OVER (PARTITION BY user_id
-        |    ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS sid
-        |  FROM m)
-        |SELECT user_id, min(t) AS start_us, max(t) AS last_us,
-        |  count(*) AS n_events
-        |FROM s GROUP BY user_id, sid""".stripMargin,
+    "t16_stream_sessionized" -> SessionsOracle,
 
-    "t5_sessionized" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS t FROM events),
-        |m AS (SELECT user_id, t,
-        |    CASE WHEN lag(t) OVER w IS NULL
-        |         OR t - lag(t) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t)),
-        |s AS (SELECT user_id, t, sum(brk) OVER (PARTITION BY user_id
-        |    ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS sid
-        |  FROM m)
-        |SELECT user_id, min(t) AS start_us, max(t) AS last_us,
-        |  count(*) AS n_events
-        |FROM s GROUP BY user_id, sid""".stripMargin)
+    "t5_sessionized" -> SessionsOracle)
 }

@@ -68,7 +68,7 @@ object ReferenceOps {
             beforeKeyCol = "before_key", fixPkUpdateOrphans = fix)
           .select(col("key"), col("event_type"), col("value"),
             col(VersionCol), col(SeqCol), col(DeletedCol)),
-        pks = Seq("key"), tieBreak = Some(SeqCol))
+        pks = Seq("key"))
     val oldKeys = changes.filter(col("key") =!= col("before_key"))
       .select(col("before_key").as("mk")).distinct()
     def counts(lv: DataFrame): (Long, Long) = {
@@ -93,7 +93,7 @@ object ReferenceOps {
     LiveView.live(
       stamped(s, dir).select("user_id", "event_type", "value", "props",
         VersionCol, SeqCol, DeletedCol),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
+      pks = Seq("user_id"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S3/P1: projection + predicate pushed into the parquet scan.
@@ -140,7 +140,7 @@ object ReferenceOps {
       LiveView.dedupLatestAgg(
           stamped(s, dir).select("user_id", "event_type", "value", "props",
             VersionCol, SeqCol, DeletedCol),
-          pks = Seq("user_id"), tieBreak = Some(SeqCol))
+          pks = Seq("user_id"))
         .filter(col(DeletedCol) === 0)
         .drop(VersionCol, DeletedCol, SeqCol)),
 

@@ -451,7 +451,7 @@ object Warehouse {
         .select(col("user_id"), col("event_type"), col("value"), col("props"),
           col(VersionCol), col(SeqCol), col(DeletedCol))
       def live(f: DataFrame, p: String) =
-        LiveView.live(f, pks = Seq("user_id"), tieBreak = Some(SeqCol))
+        LiveView.live(f, pks = Seq("user_id"))
           .select(col("user_id").as(s"${p}_uid"), col("event_type").as(s"${p}_et"),
             col("value").as(s"${p}_v"), col("props").as(s"${p}_p"))
       val a = live(st.filter(col(VersionCol) <= DiffCutoffUs), "a")

@@ -288,16 +288,24 @@ object BinlogSource {
   // deliberately NOT Serializable: driver-only (holds a local
   // java.nio.file.Path); the marker would falsely invite task-side capture
   final class GtidTracker(path: java.nio.file.Path) {
-    @volatile private var applied: GtidSet =
-      if (java.nio.file.Files.exists(path))
-        GtidSet.parse(java.nio.file.Files.readString(path))
-      else GtidSet.Empty
+    @volatile private var applied: GtidSet = GtidTracker.load(path)
 
     def observe(gtids: IterableOnce[String]): Unit = synchronized {
+      import java.nio.file.StandardOpenOption.{CREATE, TRUNCATE_EXISTING, WRITE}
       applied = applied.union(GtidSet.fromGtids(
         gtids.iterator.filter(_ != null)))
       val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-      java.nio.file.Files.writeString(tmp, applied.render)
+      // the bytes reach the disk BEFORE the rename publishes them: a
+      // crash must never leave an empty record, which would parse as the
+      // empty set and make a failover replay everything already applied
+      val ch = java.nio.channels.FileChannel.open(tmp, CREATE,
+        TRUNCATE_EXISTING, WRITE)
+      try {
+        val buf = java.nio.ByteBuffer.wrap(
+          applied.render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        while (buf.hasRemaining) ch.write(buf)
+        ch.force(true)
+      } finally ch.close()
       java.nio.file.Files.move(tmp, path,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)

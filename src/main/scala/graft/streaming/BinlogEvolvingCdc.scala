@@ -44,18 +44,22 @@ import graft.sources.{BinlogFormat, BinlogSource}
   */
 object BinlogEvolvingCdc {
 
+  /** One binlog file per micro-batch: each batch folds a single file's
+    * TABLE_MAP definitions into the running schema. */
+  private val FilesPerTrigger = 1
+
   /** Ingest every binlog file under `landing` for `table`, deriving and
     * evolving the schema from the files' own TABLE_MAPs. Returns the
     * final evolved schema; landed rows are at `tgt` (read via
     * [[landed]]). */
   def run(s: SparkSession, landing: String, tgt: String, ckp: String,
-          table: String, maxFilesPerTrigger: Int = 1): StructType = {
+          table: String): StructType = {
     // driver-held running schema: foreachBatch runs batches sequentially
     // on the driver, like EvolvingCdc's `current`
     var current: Option[StructType] = None
     BoundedStream.drain(s.readStream.format("binaryFile")
       .schema(BinlogSource.BinaryFileSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", FilesPerTrigger)
       .load(landing)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>

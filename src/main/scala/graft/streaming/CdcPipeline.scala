@@ -135,23 +135,21 @@ final class CdcPipeline(
     * registration are visible with no re-registration, exactly the
     * semantics a DDL view has over a live table (a DataFrame-backed
     * temp view would freeze the file listing at registration time).
-    * Survivor order matches [[graft.operators.LiveView.dedupLatest]]:
-    * `_version DESC` with the `_ingest_seq` tie-break, tombstones
-    * filtered, meta columns projected away. Returns the view name. */
-  def registerLiveView(table: String, pks: Seq[String],
-      tieBreak: Option[String] = None): String = {
+    * Survivor order is [[graft.operators.LiveView]]'s one rule:
+    * `_version DESC`, then `_ingest_seq DESC` when the table carries it;
+    * tombstones filtered, meta columns projected away. Returns the view
+    * name. */
+  def registerLiveView(table: String, pks: Seq[String]): String = {
     import graft.model.{Identifiers, SchemaModel}
     import SchemaModel.{DeletedCol, SeqCol, VersionCol}
     Identifiers.validate(table, "table name")
     pks.foreach(Identifiers.validate(_, "pk column"))
-    tieBreak.foreach(Identifiers.validate(_, "tie-break column"))
     val cols = applied(table).columns
     require(pks.forall(cols.contains), s"pk missing from $table: $pks")
     val meta = Set(VersionCol, SeqCol, DeletedCol)
     val payload = cols.filterNot(meta.contains)
-    val tie = tieBreak.orElse(Option(SeqCol).filter(cols.contains))
-    val ord = (VersionCol +: tie.toSeq).map(c => s"`$c` DESC")
-      .mkString(", ")
+    val ord = (VersionCol +: Seq(SeqCol).filter(cols.contains))
+      .map(c => s"`$c` DESC").mkString(", ")
     val name = s"${table}_live"
     spark.sql(
       s"""CREATE OR REPLACE TEMPORARY VIEW `$name` AS

@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * and simply re-emit it, so downstream sinks converge.
   *
   * Winner rule = max (version, seq) — identical to
-  * `LiveView.live(tieBreak = seq)`; on an exact tie the stored state
+  * `LiveView.live`; on an exact tie the stored state
   * wins, making replays idempotent. Key columns must be non-null;
   * `versionCol`/`seqCol` must be LongType and `deletedCol` IntegerType
   * (the engine's CDC stamp schema, SchemaModel).

@@ -169,6 +169,21 @@ class EntrySmokeSpec extends AnyFunSuite with graft.GateCacheHygiene {
         "update the pin if gates were added/removed on purpose")
   }
 
+  test("oracle SQL text is pinned") {
+    // The oracle SQL stays fixed: a refactor that folds or moves oracle
+    // strings must leave every key's text byte-identical. SHA-256 over
+    // the keys in order, each `key NUL sql LF`. Bump DELIBERATELY, like
+    // the gate count, when gates or their oracles change on purpose.
+    val pinned = "2b4b8cd9b371689bf917acbd65a63cb672f88d76666380ca323bcf8cb8ae61c2"
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (k, sql) =>
+      md.update(s"$k\u0000$sql\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    val digest = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(digest == pinned,
+      s"oracle SQL digest $digest != pinned $pinned — an oracle text changed")
+  }
+
   test("round artifacts are committed: no BENCH_r*/CORRECTNESS_r*.json " +
       "newer than HEAD's newest sits untracked") {
     // Six rounds running the judge found the freshest round artifacts

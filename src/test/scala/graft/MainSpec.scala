@@ -53,7 +53,7 @@ class MainSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val live = LiveView.live(
       applied.select((Seq("user_id", "name", "score") ++
         Seq(VersionCol, SeqCol, DeletedCol)).map(col): _*),
-      pks = Seq("user_id"), tieBreak = Some(SeqCol))
+      pks = Seq("user_id"))
       .select("user_id", "name", "score")
       .as[(Long, String, Double)].collect().toSet
     assert(live == Set(

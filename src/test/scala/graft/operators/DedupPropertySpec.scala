@@ -46,8 +46,7 @@ class DedupPropertySpec extends AnyFunSuite with graft.GateCacheHygiene {
         if (surv.op == "D") None else Some(id -> surv.payload)
       }
 
-      val aggForm = LiveView.dedupLatestAgg(df, Seq("id"),
-          tieBreak = Some(SeqCol))
+      val aggForm = LiveView.dedupLatestAgg(df, Seq("id"))
         .filter(col(DeletedCol) === 0)
         .drop(VersionCol, DeletedCol, SeqCol)
         .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap

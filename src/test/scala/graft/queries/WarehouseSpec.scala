@@ -66,9 +66,9 @@ class WarehouseSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val diff = Warehouse.queries("x_snapshot_diff")(spark, TestSpark.Sf0001)
       .as[(Long, String)].collect().toMap
     val st = ReferenceOps.stamped(spark, TestSpark.Sf0001)
-    import graft.model.SchemaModel.{SeqCol, VersionCol}
+    import graft.model.SchemaModel.VersionCol
     def keys(f: org.apache.spark.sql.DataFrame) =
-      graft.operators.LiveView.live(f, Seq("user_id"), Some(SeqCol))
+      graft.operators.LiveView.live(f, Seq("user_id"))
         .select("user_id").as[Long].collect().toSet
     val a = keys(st.filter(col(VersionCol) <= Warehouse.DiffCutoffUs))
     val b = keys(st)

@@ -54,7 +54,7 @@ class JdbcIncrementalSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val live = graft.operators.LiveView.live(
       landed.select(col("K"), col("V"), col(VersionCol), col(SeqCol),
         col(DeletedCol)),
-      pks = Seq("K"), tieBreak = Some(SeqCol))
+      pks = Seq("K"))
     assert(live.count() == 4) // 100,200,300,400 — replay dups collapsed
     assert(live.filter(col("K") === 200L).select("V").as[Double]
       .head() == 21.0)

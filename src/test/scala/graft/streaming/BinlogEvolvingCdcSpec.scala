@@ -50,12 +50,11 @@ class BinlogEvolvingCdcSpec extends AnyFunSuite with graft.GateCacheHygiene {
     // file 2 re-inserts key 2 with the new column; key 1 stays pre-ALTER
     stage(landing, wideCols, wideNames,
       Seq(IndexedSeq(2L, "two'", 2.5)))
-    val evolved = BinlogEvolvingCdc.run(spark, landing, tgt, ckp, "t",
-      maxFilesPerTrigger = 1)
+    val evolved = BinlogEvolvingCdc.run(spark, landing, tgt, ckp, "t")
     assert(evolved.fieldNames.toSeq == Seq("id", "a", "b"))
     val live = graft.operators.LiveView.live(
       BinlogEvolvingCdc.landed(spark, tgt),
-      pks = Seq("id"), tieBreak = Some(graft.model.SchemaModel.SeqCol))
+      pks = Seq("id"))
     val rows = live.select(col("id"), col("a"), col("b"))
       .orderBy("id").collect()
     assert(rows.length == 2)
@@ -75,8 +74,7 @@ class BinlogEvolvingCdcSpec extends AnyFunSuite with graft.GateCacheHygiene {
       IndexedSeq(narrowCols.head, ColumnDef(BinlogFormat.TypeDouble, 8)),
       narrowNames, Seq(IndexedSeq(2L, 2.5)))
     val e = intercept[StreamingQueryException](
-      BinlogEvolvingCdc.run(spark, landing, tgt, ckp, "t",
-        maxFilesPerTrigger = 1))
+      BinlogEvolvingCdc.run(spark, landing, tgt, ckp, "t"))
     def causes(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
     assert(causes(e).exists(_.getMessage != null) &&

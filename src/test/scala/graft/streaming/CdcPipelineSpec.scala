@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.model.SchemaModel.{SeqCol, VersionCol}
+import graft.model.SchemaModel.VersionCol
 import graft.operators.LiveView
 
 /** End-to-end CDC streaming: initial sync → change-stream apply via
@@ -59,7 +59,7 @@ class CdcPipelineSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(applied.select(VersionCol).distinct().as[Long].collect().toSet ==
       Set(1000L, 2000L, 3000L))
 
-    val live = LiveView.live(applied, Seq("id"), tieBreak = Some(SeqCol))
+    val live = LiveView.live(applied, Seq("id"))
       .select("id", "email").as[(Int, String)].collect().toSet
     assert(live == Set((1, "a2@x.com"), (3, "c@x.com"))) // 2 tombstoned
 
@@ -74,8 +74,7 @@ class CdcPipelineSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val q2 = pipe2.start(stream2, "users", opCol = "op", seqCol = "seq",
       versionOf = _ => 3000L)
     q2.awaitTermination()
-    val liveAfterReplay = LiveView.live(pipe2.applied("users"), Seq("id"),
-      tieBreak = Some(SeqCol))
+    val liveAfterReplay = LiveView.live(pipe2.applied("users"), Seq("id"))
       .select("id", "email").as[(Int, String)].collect().toSet
     assert(liveAfterReplay == live)
   }
@@ -172,8 +171,7 @@ class CdcPipelineSpec extends AnyFunSuite with graft.GateCacheHygiene {
         versionOf = _ => 100L, beforeImage = Some(("id", "before_id")),
         fixPkUpdateOrphans = fix)
       q.awaitTermination()
-      LiveView.live(pipe.applied("users"), pks = Seq("id"),
-        tieBreak = Some(SeqCol))
+      LiveView.live(pipe.applied("users"), pks = Seq("id"))
     }
     // parity: the old key's insert survives — the reference's orphan
     assert(run(fix = false).select("id").as[Int].collect().sorted.toSeq ==

@@ -69,8 +69,7 @@ class EvolvingCdcSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(landed.filter(col("region").isNull).count() == 3)
 
     // live view: survivor per id by binlog pos; id 3's tombstone applies
-    val live = graft.operators.LiveView.live(landed, pks = Seq("id"),
-        tieBreak = Some(graft.model.SchemaModel.SeqCol))
+    val live = graft.operators.LiveView.live(landed, pks = Seq("id"))
       .select("id", "name", "region", "score")
       .as[(Long, String, Option[String], Option[Double])]
       .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
