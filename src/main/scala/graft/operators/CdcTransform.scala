@@ -35,11 +35,7 @@ object CdcTransform {
     * reference's batch-granular stamp (`src/cdc_replicator.py:160`). */
   def stampBatch(changes: DataFrame, opCol: String, seqCol: String,
                  batchVersionMicros: Long): DataFrame =
-    changes
-      .withColumn(VersionCol, lit(batchVersionMicros))
-      .withColumn(SeqCol, col(seqCol).cast("long"))
-      .withColumn(DeletedCol,
-        when(col(opCol) === Delete, lit(1)).otherwise(lit(0)))
+    stamp(changes, opCol, seqCol, lit(batchVersionMicros))
 
   /** General form: caller supplies the version expression. */
   def stamp(changes: DataFrame, opCol: String, seqCol: String,

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.sources.HadoopFs
 
 /** Small-file compaction — the lake-maintenance operator every append-only
   * CDC sink needs (each micro-batch append of
@@ -20,12 +20,8 @@ object Compaction {
       path: String, filesBefore: Int, filesAfter: Int,
       bytesBefore: Long, rows: Long)
 
-  private def parquetFiles(fs: FileSystem, dir: Path)
-      : Array[org.apache.hadoop.fs.FileStatus] =
-    if (fs.exists(dir))
-      fs.listStatus(dir)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    else Array.empty
+  private def parquetFiles(dir: String) = HadoopFs.list(dir)
+    .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
 
   /** Compact one parquet table directory in place (write-new-then-swap via
     * a sibling temp dir — readers of the old files are unaffected until
@@ -41,19 +37,12 @@ object Compaction {
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024,
               cluster: Seq[String] = Nil): CompactionResult = {
-    // all filesystem IO through Hadoop FileSystem: the table dir may be
-    // local, HDFS or object storage (rename is atomic on the first two;
-    // the object-store caveat is the same one the commit markers carry)
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a previous compact that died between its two renames
-    // leaves the data intact in `<dir>._compact_old` with no live dir —
-    // restore it before proceeding instead of requiring manual repair
-    val oldLeftover = new Path(path + "._compact_old")
-    if (!fs.exists(dir) && fs.exists(oldLeftover))
-      require(fs.rename(oldLeftover, dir),
-        s"crash-recovery rename failed: $oldLeftover -> $dir")
-    val before = parquetFiles(fs, dir)
+    // all filesystem IO through HadoopFs: the table dir may be local,
+    // HDFS or object storage. Crash recovery first: a compact that died
+    // between its two swap renames left the data under
+    // `<dir>._compact_old` with no live dir
+    HadoopFs.recoverSwap(path)
+    val before = parquetFiles(path)
     // refuse layouts this flat compactor doesn't understand (partitioned /
     // nested tables) rather than silently rewriting them into one file
     require(before.nonEmpty,
@@ -70,23 +59,14 @@ object Compaction {
       }
       else if (targetFiles < before.length) df.coalesce(targetFiles)
       else df.repartition(targetFiles)
-    val tmp = new Path(path + "._compact_tmp")
-    out.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    // swap: old dir is moved ASIDE first (not deleted) so a crash or
-    // failed rename never leaves the table missing; it is removed only
-    // after the new layout is in place. Concurrent appends during the
-    // compact window are still the caller's responsibility to pause.
-    val old = new Path(path + "._compact_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(dir, old), s"rename failed: $dir -> $old")
-    if (!fs.rename(tmp, dir)) {
-      val restored = fs.rename(old, dir) // roll back
-      throw new IllegalStateException(
-        s"rename failed: $tmp -> $dir (original ${if (restored) "restored" else s"left at $old"})")
+    // the move-aside swap: a crash or failed rename never leaves the
+    // table missing. Concurrent appends during the compact window are
+    // still the caller's responsibility to pause.
+    val rows = HadoopFs.swap(path) { tmp =>
+      out.write.mode(SaveMode.Overwrite).parquet(tmp)
+      spark.read.parquet(tmp).count()
     }
-    fs.delete(old, true)
     CompactionResult(path, before.length,
-      parquetFiles(fs, dir).length, bytes, rows)
+      parquetFiles(path).length, bytes, rows)
   }
 }

@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.io.File
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.model.Identifiers
-import graft.sources.ParquetCatalog
+import graft.sources.{HadoopFs, ParquetCatalog}
 
 /** Result of one table's replication — parity with the reference's result
   * dict (`src/replicator.py:74-85`): counts on both sides and the
@@ -61,7 +60,9 @@ final class SnapshotReplicator(
 
   def targetPath(table: String): String = s"$warehouseDir/$table.parquet"
 
-  def targetExists(table: String): Boolean = new File(targetPath(table)).exists()
+  /** Through [[HadoopFs]], like the catalog's source listing: the
+    * warehouse may be a `file:`/`hdfs:` URI, not only a local path. */
+  def targetExists(table: String): Boolean = HadoopFs.exists(targetPath(table))
 
   def readTarget(table: String): DataFrame =
     spark.read.parquet(targetPath(table))
@@ -191,7 +192,7 @@ final class SnapshotReplicator(
   /** O4/O5: run all tables, optionally in parallel; failures isolated. */
   def run(configured: Seq[String] = Seq.empty,
           parallelism: Int = 1): Seq[ReplicationResult] = {
-    new File(warehouseDir).mkdirs() // K2 create-database analog
+    HadoopFs.mkdirs(warehouseDir) // K2 create-database analog
     val tables = tablesToReplicate(configured)
     if (parallelism <= 1) tables.map(replicateTable(_))
     else {

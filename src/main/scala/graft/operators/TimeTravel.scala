@@ -18,7 +18,8 @@ import graft.sources.HadoopFs
   */
 object TimeTravel {
 
-  private def versionDir(root: String, v: Long) = s"$root/v$v"
+  private def versionDir(root: String, v: Long) =
+    HadoopFs.numbered(root, "v", v)
 
   /** Write `df` as the next version; returns the version number. */
   def write(df: DataFrame, root: String): Long = {
@@ -27,14 +28,10 @@ object TimeTravel {
     v
   }
 
-  /** All committed versions, ascending (listed through Hadoop
-    * FileSystem — the versioned root may be local, HDFS or object). */
+  /** All committed versions, ascending ([[HadoopFs.numberedIds]] — the
+    * versioned root may be local, HDFS or object). */
   def versions(root: String): Seq[Long] =
-    HadoopFs.list(root)
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith("v"))
-      .flatMap(f =>
-        scala.util.Try(f.getPath.getName.drop(1).toLong).toOption)
-      .sorted
+    HadoopFs.numberedIds(root, "v")
 
   def readAt(spark: SparkSession, root: String, v: Long): DataFrame =
     spark.read.parquet(versionDir(root, v))
@@ -48,10 +45,7 @@ object TimeTravel {
   def expire(root: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least the latest version")
     val doomed = versions(root).dropRight(keep)
-    doomed.foreach { v =>
-      val d = versionDir(root, v)
-      HadoopFs.fs(d).delete(new org.apache.hadoop.fs.Path(d), true)
-    }
+    doomed.foreach(v => HadoopFs.delete(versionDir(root, v)))
     doomed
   }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.CdcTransform
+import graft.sources.HadoopFs
 
 /** Schema-evolving CDC ingestion — the reference's FIRST documented
   * limitation, closed (`/root/reference/README.md:585` "No DDL
@@ -94,25 +94,14 @@ object EvolvingCdc {
     * `nullOverride` columns are replaced by a typed null instead of cast:
     * they were provisional, so every landed value is null and the cast
     * may not even exist (STRING→STRUCT). Linear, one-time per widening
-    * event. */
-  /** Crash recovery for the [[rewriteLanded]] swap: a run that died
-    * between its two renames leaves the data under `<tgt>_widen_old`
-    * with no live dir — restore it before reading or rewriting. */
-  private def recoverSwap(s: SparkSession, tgt: String): Unit = {
-    val path = new Path(tgt)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val old = new Path(tgt + "_widen_old")
-    if (!fs.exists(path) && fs.exists(old))
-      require(fs.rename(old, path), s"widen crash-recovery failed: $tgt")
-    ()
-  }
-
+    * event. The rewrite goes through [[HadoopFs.swap]]'s move-aside
+    * protocol, NOT delete-then-rename: a crash at any point leaves every
+    * committed batch reachable under the live or the aside name —
+    * delete-first would destroy all previously committed batches in the
+    * delete→rename window (the checkpoint would NOT replay them). */
   private def rewriteLanded(s: SparkSession, tgt: String,
       schema: StructType, nullOverride: Set[String] = Set.empty): Unit = {
-    recoverSwap(s, tgt)
-    val path = new Path(tgt)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
+    if (!HadoopFs.exists(tgt)) return
     val old = s.read.option("mergeSchema", "true").parquet(tgt)
     val casted = old.select(old.columns.toIndexedSeq.map { c =>
       schema.find(_.name == c) match {
@@ -122,19 +111,7 @@ object EvolvingCdc {
         case None => col(c)
       }
     }: _*)
-    val tmp = new Path(tgt + "_widen_tmp")
-    casted.write.mode("overwrite").parquet(tmp.toString)
-    // move-aside swap (the Compaction.compact protocol), NOT
-    // delete-then-rename: a crash at any point leaves every committed
-    // batch reachable under either the live or the _widen_old name —
-    // delete-first would destroy all previously committed batches in
-    // the delete→rename window (the checkpoint would NOT replay them)
-    val aside = new Path(tgt + "_widen_old")
-    if (fs.exists(aside)) fs.delete(aside, true) // debris of a crashed swap
-    require(fs.rename(path, aside), s"widen-rewrite move-aside failed: $tgt")
-    require(fs.rename(tmp, path), s"widen-rewrite rename failed for $tgt")
-    fs.delete(aside, true)
-    ()
+    HadoopFs.swap(tgt)(casted.write.mode("overwrite").parquet(_))
   }
 
   /** Ingest every Debezium JSON line under `landing` for `table`,
@@ -156,7 +133,7 @@ object EvolvingCdc {
       .text(landing)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        recoverSwap(s, tgt) // a crashed widen swap must not strand tgt
+        HadoopFs.recoverSwap(tgt) // a crashed widen must not strand tgt
         // probe ONLY the target table's envelopes: a multiplexed landing
         // (the `_tbl` filter's whole purpose) must not let table B's
         // fields register as evolved columns of A, or a same-named
@@ -266,7 +243,7 @@ object EvolvingCdc {
     * surface the post-DDL columns as NULL (restores a swap stranded by
     * a crash first). */
   def landed(s: SparkSession, tgt: String): DataFrame = {
-    recoverSwap(s, tgt)
+    HadoopFs.recoverSwap(tgt)
     s.read.option("mergeSchema", "true").parquet(tgt)
   }
 }

@@ -22,9 +22,9 @@ import graft.sources.HadoopFs
   * deltas ≤ v) — at 100 TB the same compaction o6 applies to any
   * append-log applies here.
   *
-  * Substrate note: the marker write and the commit listing here (and the
-  * analogous dir listings in [[SinkRetry.landed]] / [[StreamScd2]]) go
-  * through Hadoop `FileSystem` ([[graft.sources.HadoopFs]]), so the
+  * Substrate note: the marker write and the commit listing here (like
+  * every numbered-dir listing, [[BatchDirs]]) go through Hadoop
+  * `FileSystem` ([[graft.sources.HadoopFs]]), so the
   * protocol runs unchanged on `file:` and `hdfs:` — marker create is
   * atomic on both, and create-after-write ordering holds. On an
   * eventually-consistent object store the marker alone is NOT a
@@ -43,16 +43,15 @@ object MultiTableCdc {
     batch.persist()
     try tables.foreach { tbl =>
       batch.filter(col("tbl") === tbl).drop("tbl")
-        .write.mode("overwrite").parquet(s"$root/$tbl/d$batchId")
+        .write.mode("overwrite")
+        .parquet(BatchDirs.dir(s"$root/$tbl", batchId, "d"))
     } finally { batch.unpersist(); () }
-    if (commit) HadoopFs.touch(s"$root/commits/c$batchId")
+    if (commit) HadoopFs.touch(BatchDirs.dir(s"$root/commits", batchId, "c"))
   }
 
   /** Committed batch ids, ascending. */
   def committed(root: String): Seq[Long] =
-    HadoopFs.list(s"$root/commits")
-      .flatMap(f => scala.util.Try(f.getPath.getName.drop(1).toLong).toOption)
-      .sorted
+    HadoopFs.numberedIds(s"$root/commits", "c")
 
   /** Table contents AT version `v`: every delta whose id is committed
     * and ≤ v. An uncommitted (torn) delta directory is never read. */
@@ -60,7 +59,7 @@ object MultiTableCdc {
       v: Long): DataFrame = {
     val ids = committed(root).filter(_ <= v)
     require(ids.nonEmpty, s"no committed batches ≤ $v under $root")
-    s.read.parquet(ids.map(i => s"$root/$tbl/d$i"): _*)
+    s.read.parquet(ids.map(BatchDirs.dir(s"$root/$tbl", _, "d")): _*)
   }
 
   /** Drain the multiplexed envelope stream. */

@@ -52,11 +52,12 @@ object SinkRetry {
           if (batchId == failAtBatch && fired.add(storeDir)) {
             // the partial insert a dying sink leaves behind…
             batch.limit(1).write.mode("overwrite")
-              .parquet(s"$storeDir/b$batchId")
+              .parquet(BatchDirs.dir(storeDir, batchId))
             sys.error(s"injected transient sink failure at batch $batchId")
           }
           // …is overwritten wholesale on replay: per-batch ownership
-          batch.write.mode("overwrite").parquet(s"$storeDir/b$batchId")
+          batch.write.mode("overwrite")
+            .parquet(BatchDirs.dir(storeDir, batchId))
           ()
         }, checkpointDir)
     }
@@ -67,13 +68,9 @@ object SinkRetry {
     }
   }
 
-  /** All landed rows (union of the per-batch directories; listing via
-    * Hadoop FileSystem so the store may be local, HDFS or object). */
-  def landed(s: SparkSession, storeDir: String): DataFrame = {
-    val dirs = graft.sources.HadoopFs.list(storeDir)
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith("b"))
-      .map(_.getPath.toString)
-    require(dirs.nonEmpty, s"no batches landed under $storeDir")
-    s.read.parquet(dirs: _*)
-  }
+  /** All landed rows: the union of the per-batch directories, listed
+    * through [[BatchDirs]] (local, HDFS or object store). */
+  def landed(s: SparkSession, storeDir: String): DataFrame =
+    BatchDirs.read(s, storeDir).getOrElse(
+      sys.error(s"no batches landed under $storeDir"))
 }

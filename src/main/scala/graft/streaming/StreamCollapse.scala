@@ -1,6 +1,5 @@
 package graft.streaming
 
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.SchemaModel.{SeqCol, VersionCol}
@@ -70,43 +69,19 @@ object StreamCollapse {
   }
 
   /** One micro-batch's fold: reduce the chunk to partial states and merge
-    * them onto the newest snapshot STRICTLY BELOW this batch id — never
-    * the absolute latest: after a crash between the snapshot write and
-    * the checkpoint commit, this batch REPLAYS, and folding from its own
-    * half-committed `v<batchId>` would double-count the partial. Reading
-    * `v<prev>` + overwriting `v<batchId>` makes the replay
-    * byte-idempotent (exactly-once on at-least-once delivery, the
-    * foreachBatch contract — spec'd by a literal double fold). */
+    * them onto the newest snapshot STRICTLY BELOW this batch id
+    * ([[BatchDirs.fold]]) — folding from a crashed attempt's own
+    * `v<batchId>` would double-count the partial, so the replay is
+    * byte-idempotent (spec'd by a literal double fold). */
   private[streaming] def foldBatch(batch: DataFrame, pks: Seq[String],
-      payload: Seq[String], storeDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val p = partial(batch, pks, payload)
-    val folded = latestVersion(storeDir, below = Some(batchId)) match {
-      case Some(v) => merge(spark.read.parquet(s"$storeDir/v$v"), p, pks)
-      case None => p
-    }
-    folded.write.mode("overwrite").parquet(s"$storeDir/v$batchId")
-    ()
-  }
-
-  /** Highest committed store version (optionally strictly below a batch
-    * id — the replay-idempotency read point), if any batch has landed. */
-  private def latestVersion(
-      storeDir: String, below: Option[Long] = None): Option[Long] = {
-    val vs = graft.sources.HadoopFs.list(storeDir)
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith("v"))
-      .flatMap(f =>
-        scala.util.Try(f.getPath.getName.drop(1).toLong).toOption)
-      .filter(v => below.forall(v < _))
-    if (vs.isEmpty) None else Some(vs.max)
-  }
+      payload: Seq[String], storeDir: String, batchId: Long): Unit =
+    BatchDirs.fold(storeDir, batchId, partial(batch, pks, payload))(
+      merge(_, _, pks))
 
   /** FINAL over the newest store snapshot. */
   def finalRows(spark: SparkSession, storeDir: String,
       pks: Seq[String], payload: Seq[String]): DataFrame = {
-    val v = latestVersion(storeDir).getOrElse(
-      sys.error(s"no store versions under $storeDir — stream never ran"))
-    spark.read.parquet(s"$storeDir/v$v")
+    spark.read.parquet(BatchDirs.snapshot(storeDir))
       .filter(col(NetCol) > 0)
       .select((pks.map(col) ++
         payload.map(c => col(s"$CandCol.$c").as(c))): _*)

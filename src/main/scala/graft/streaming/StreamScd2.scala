@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.HadoopFs
 
 /** Incremental SCD2 (slowly-changing-dimension type 2) maintenance over a
   * CDC stream — the history table a warehouse keeps NEXT TO the
@@ -60,13 +59,10 @@ object StreamScd2 {
     val newOpen = chained.filter(col(Vt).isNull).drop(Vt)
     // previous frontier rows for keys in this batch close at the key's
     // FIRST new valid_from; untouched keys carry over unchanged
-    var prevCached: Option[DataFrame] = None
-    val (closed, frontier) = latestVersion(frontierDir(storeDir),
-        below = Some(batchId)) match {
-      case Some(v) =>
-        val prev = s.read
-          .parquet(s"${frontierDir(storeDir)}/v$v").persist()
-        prevCached = Some(prev)
+    val prevCached = BatchDirs.prior(s, frontierDir(storeDir), batchId)
+      .map(_.persist())
+    val (closed, frontier) = prevCached match {
+      case Some(prev) =>
         val firstNew = batch.groupBy(col(Key))
           .agg(min(col(Vf)).as("_first_vf"))
         val closedFromFrontier = prev.join(firstNew, Key)
@@ -79,9 +75,9 @@ object StreamScd2 {
     }
     try {
       closed.write.mode("overwrite")
-        .parquet(s"${closedDir(storeDir)}/b$batchId")
+        .parquet(BatchDirs.dir(closedDir(storeDir), batchId))
       frontier.write.mode("overwrite")
-        .parquet(s"${frontierDir(storeDir)}/v$batchId")
+        .parquet(BatchDirs.dir(frontierDir(storeDir), batchId, "v"))
     } finally {
       chained.unpersist()
       prevCached.foreach(_.unpersist())
@@ -93,32 +89,16 @@ object StreamScd2 {
     * newest frontier, `is_current` on open non-tombstone rows — the
     * column contract of the batch `x_scd2_history` gate. */
   def history(s: SparkSession, storeDir: String): DataFrame = {
-    val closedDirs = HadoopFs.list(closedDir(storeDir))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith("b"))
-      .map(_.getPath.toString)
-    val v = latestVersion(frontierDir(storeDir)).getOrElse(
-      sys.error(s"no frontier under $storeDir — stream never ran"))
-    val open = s.read.parquet(s"${frontierDir(storeDir)}/v$v")
+    val open = s.read.parquet(BatchDirs.snapshot(frontierDir(storeDir)))
       .withColumn(Vt, lit(null).cast("long"))
-    val all =
-      if (closedDirs.isEmpty) open
-      else s.read.parquet(closedDirs.toIndexedSeq: _*).unionByName(open)
+    val all = BatchDirs.read(s, closedDir(storeDir))
+      .fold(open)(_.unionByName(open))
     all.withColumn("is_current", col(Vt).isNull && col("deleted") === 0)
       .drop(graft.model.SchemaModel.SeqCol)
   }
 
   private def closedDir(storeDir: String) = s"$storeDir/closed"
   private[graft] def frontierDir(storeDir: String) = s"$storeDir/frontier"
-
-  private[graft] def latestVersion(
-      dir: String, below: Option[Long] = None): Option[Long] = {
-    val vs = HadoopFs.list(dir)
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith("v"))
-      .flatMap(f =>
-        scala.util.Try(f.getPath.getName.drop(1).toLong).toOption)
-      .filter(v => below.forall(v < _))
-    if (vs.isEmpty) None else Some(vs.max)
-  }
 
   /** Drain a staged CDC stream through foreachBatch and return the
     * assembled history. */

@@ -93,6 +93,19 @@ class SnapshotSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(r3.success && r3.sourceCount == 500 && mark3 == 999L)
   }
 
+  test("incremental snapshot into a file: URI warehouse sees its target") {
+    val wh = "file:" + Files.createTempDirectory("graft_wh_uri").toString
+    val rep = new SnapshotReplicator(spark, TestSpark.Sf0001, wh)
+    val (r1, mark1) = rep.replicateIncremental("events", "event_id", 499L)
+    assert(r1.success && r1.sourceCount == 500 && r1.targetCount == 500)
+    assert(mark1 == 999L && rep.targetExists("events"))
+    assert(rep.targetCount("events") == 500)
+    // the warehouse dir is created through the URI, not as a local
+    // relative directory literally named `file:`
+    assert(rep.run(Seq("region")).forall(_.success))
+    assert(!new java.io.File("file:").exists())
+  }
+
   test("incremental snapshot: NULL watermarks included on first full run, " +
       "all-NULL delta keeps the mark") {
     import spark.implicits._

@@ -68,7 +68,7 @@ class StreamScd2Spec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(got.contains((2L, "error", 9.0, 1, 22L, None, false)))
     assert(got.contains((4L, "click", 4.0, 0, 21L, Some(21L), false)))
     // frontier = exactly one open row per key ever seen
-    val v = StreamScd2.latestVersion(StreamScd2.frontierDir(store)).get
+    val v = BatchDirs.latest(StreamScd2.frontierDir(store)).get
     assert(spark.read.parquet(s"${StreamScd2.frontierDir(store)}/v$v")
       .count() == 4L)
   }
