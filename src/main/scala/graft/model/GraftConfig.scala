@@ -25,12 +25,7 @@ final case class ReplicationConfig(
     tables: Seq[String] = Seq.empty,        // empty = all tables
     batchSize: Int = 50000,                 // src/config.py:72
     parallelTables: Int = 1,                // src/config.py:75
-    dropExisting: Boolean = false,
-    // extension (no reference analog): emit a tombstone for the old key
-    // on PK-changing updates instead of orphaning it — see
-    // CdcTransform.stampWithBeforeImage. Default FALSE = bug-for-bug
-    // parity with src/cdc_replicator.py:184-186.
-    fixPkUpdateOrphans: Boolean = false)
+    dropExisting: Boolean = false)
 
 final case class GraftConfig(
     source: SourceConfig,
@@ -79,8 +74,6 @@ object GraftConfig {
         batchSize = get("REPLICATION_BATCH_SIZE", "50000").toInt,
         parallelTables = get("REPLICATION_PARALLEL_TABLES", "1").toInt,
         dropExisting = get("REPLICATION_DROP_EXISTING", "false")
-          .toLowerCase == "true",
-        fixPkUpdateOrphans = get("REPLICATION_FIX_PK_UPDATE_ORPHANS", "false")
           .toLowerCase == "true"))
   }
 }

@@ -52,8 +52,7 @@ object CdcTransform {
     * primary key leaves the OLD key's last pre-update row alive in the
     * target forever (the PK-update orphan, SURVEY §7.4 — reproduced
     * bug-for-bug by the plain [[stamp]] path for parity). With
-    * `fixPkUpdateOrphans=true` (opt-in;
-    * `ReplicationConfig.fixPkUpdateOrphans`, default = parity) every
+    * `fixPkUpdateOrphans=true` (opt-in per call, default = parity) every
     * update whose before-image key differs from its after-image key also
     * emits a tombstone for the old key, stamped with the SAME
     * (version, seq) as the update itself so it supersedes everything the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
 import graft.operators.{CdcTransform, LiveView, SnapshotReplicator}
-import graft.sources.{BinlogFixture, BinlogFixtureServer, BinlogSocketClient, BinlogSource}
+import graft.sources.{BinlogFixture, BinlogFixtureServer, BinlogFormat, BinlogSocketClient, BinlogSource}
 import graft.sources.BinlogFixture.{Change, TableDef}
 import graft.sources.BinlogFormat.ColumnDef
 import graft.streaming.{BatchDirs, BoundedStream, CdcPipeline}
@@ -748,8 +748,8 @@ object PipelineOps {
     val landing = land(
       graft.GateCache.tempDir("graft_binlog_zstd_src").toString, staged.files)
     // the compression must actually be exercised
-    require(eventTypes(staged.files.head._2)
-      .contains(graft.sources.BinlogFormat.TransactionPayloadEvent),
+    require(BinlogFormat.frames(staged.files.head._2)
+      .exists(_.tpe == BinlogFormat.TransactionPayloadEvent),
       "staged file contains no TRANSACTION_PAYLOAD event")
     // cached: the in-gate count REQUIRE and the live view both consume
     // this frame — without the cache each run parses and zstd-
@@ -759,19 +759,6 @@ object PipelineOps {
     require(decoded.count() == staged.nCommitted,
       "compressed decode row count off — a payload was lost or replayed")
     eventsLive(stampOne(decoded))
-  }
-
-  /** The type byte of every event in a binlog file, walking the v4
-    * headers after the magic (type at +4, size at +9 LE). */
-  private def eventTypes(bytes: Array[Byte]): IndexedSeq[Int] = {
-    val types = IndexedSeq.newBuilder[Int]
-    var off = 4
-    while (off < bytes.length) {
-      types += bytes(off + 4) & 0xff
-      off += java.nio.ByteBuffer.wrap(bytes, off + 9, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-    }
-    types.result()
   }
 
   /** T37: PARTIAL JSON updates — 8.0's
@@ -842,7 +829,7 @@ object PipelineOps {
     val staged = eventsBinlogs(s, dir)
     // kill the first connection 5 events into FILE 2: file 1's commits
     // are already applied, so the reconnect resumes PAST them
-    val killAt = eventTypes(staged.files.head._2).size + 5
+    val killAt = BinlogFormat.frames(staged.files.head._2).size + 5
     val srv = new BinlogFixtureServer(staged.files, replUser, replPassword,
       dropAfterEvents = Map(0 -> killAt))
     try {

@@ -3,7 +3,6 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.CRC32
 
 /** Binlog v4 test-vector ENCODER — the sandbox's stand-in for the MySQL
   * server side of the reference's replication link (no MySQL in the
@@ -97,29 +96,8 @@ object BinlogFixture {
                   gtidFrom: Option[Long] = None,
                   compressTxns: Boolean = false): Array[Byte] = {
     val byName = tables.map(t => t.table -> t).toMap
-    val out = new ByteArrayOutputStream()
-    out.write(Magic)
-    var pos = 4L
-    def emit(tpe: Int, body: Array[Byte], reservedTail: Int = 0): Unit = {
-      val crcLen = if (checksum || reservedTail > 0) 4 else 0
-      val size = HeaderLen + body.length + crcLen
-      val ev = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
-      ev.putInt(1700000000) // timestamp (fixed: fixtures are deterministic)
-      ev.put(tpe.toByte)
-      ev.putInt(serverId)
-      ev.putInt(size)
-      pos += size
-      ev.putInt(pos.toInt) // end-log-pos
-      ev.putShort(0) // flags
-      ev.put(body)
-      if (crcLen == 4) {
-        if (checksum) {
-          val crc = new CRC32(); crc.update(ev.array(), 0, size - 4)
-          ev.putInt(crc.getValue.toInt)
-        } else ev.putInt(0) // FDE reserved tail when alg = off
-      }
-      out.write(ev.array())
-    }
+    val w = new EventWriter(4L, serverId, checksum)
+    w.out.write(Magic)
 
     // FORMAT_DESCRIPTION: ver=4, server version, create ts, header len,
     // one post-header len per known event type (index = type - 1), alg
@@ -142,7 +120,7 @@ object BinlogFixture {
     phl(PartialUpdateRowsV2 - 1) = 10
     fde.put(phl)
     fde.put((if (checksum) 1 else 0).toByte)
-    emit(FormatDescriptionEvent, fde.array(), reservedTail = 4)
+    w.emit(FormatDescriptionEvent, fde.array(), fde = true)
 
     // PREVIOUS_GTIDS: one sid, one interval [1, gtidFrom) applied before;
     // nothing applied yet (from <= 1) is the EMPTY set — zero sids, the
@@ -155,7 +133,7 @@ object BinlogFixture {
           .order(ByteOrder.LITTLE_ENDIAN)
           .putLong(1L).put(FixtureSid).putLong(1L)
           .putLong(1L).putLong(from) // interval end is EXCLUSIVE on the wire
-      emit(PreviousGtidsEvent, b.array())
+      w.emit(PreviousGtidsEvent, b.array())
     }
 
     // TABLE_MAP placement follows real servers: each transaction
@@ -163,12 +141,11 @@ object BinlogFixture {
     // what makes a mid-file COM_BINLOG_DUMP resume work — the resumed
     // stream starts at a transaction boundary and carries its own maps);
     // compressed transactions carry theirs INSIDE the payload instead
-    def emitMaps(changes: Seq[(String, Change)],
-                 sink: (Int, Array[Byte]) => Unit): Unit =
+    def emitMaps(changes: Seq[(String, Change)], sink: EventWriter): Unit =
       changes.map(_._1).distinct.foreach { tn =>
         val t = byName.getOrElse(tn,
           throw new IllegalArgumentException(s"unmapped table $tn"))
-        sink(TableMapEvent,
+        sink.emit(TableMapEvent,
           tableMapBody(t.db, t.table, t.cols, t.tableId, t.colNames))
       }
 
@@ -180,8 +157,7 @@ object BinlogFixture {
     def masks(c: Change): (Seq[Boolean], Seq[Boolean]) = (
       Option(c.before).fold(Seq.empty[Boolean])(_.map(_ != Absent)),
       Option(c.after).fold(Seq.empty[Boolean])(_.map(_ != Absent)))
-    def rowsEvents(changes: Seq[(String, Change)],
-                   sink: (Int, Array[Byte]) => Unit): Unit = {
+    def rowsEvents(changes: Seq[(String, Change)], sink: EventWriter): Unit = {
       var i = 0
       val cs = changes.toIndexedSeq
       while (i < cs.length) {
@@ -198,32 +174,20 @@ object BinlogFixture {
           case "P" => PartialUpdateRowsV2
           case "D" => DeleteRowsV2
         }
-        sink(tpe, rowsBody(tpe, slice, tdef.cols, tdef.tableId))
+        sink.emit(tpe, rowsBody(tpe, slice, tdef.cols, tdef.tableId))
         i = j
       }
     }
-    def emitSink(tpe: Int, body: Array[Byte]): Unit = emit(tpe, body)
-
     // one transaction's events rendered CRC-less into a buffer (the
     // inner stream of a TRANSACTION_PAYLOAD), then zstd-compressed
     def compressedTxn(txn: Seq[(String, Change)]): Array[Byte] = {
-      val innerOut = new ByteArrayOutputStream()
-      var ipos = 0L
-      def innerEmit(tpe: Int, body: Array[Byte]): Unit = {
-        val size = HeaderLen + body.length
-        val ev = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
-        ev.putInt(1700000000); ev.put(tpe.toByte); ev.putInt(serverId)
-        ev.putInt(size)
-        ipos += size; ev.putInt(ipos.toInt)
-        ev.putShort(0); ev.put(body)
-        innerOut.write(ev.array())
-      }
-      emitMaps(txn, innerEmit)
-      rowsEvents(txn, innerEmit)
+      val iw = new EventWriter(0L, serverId, checksum = false)
+      emitMaps(txn, iw)
+      rowsEvents(txn, iw)
       val xid = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      xid.putLong(ipos)
-      innerEmit(XidEvent, xid.array())
-      val inner = innerOut.toByteArray
+      xid.putLong(iw.pos)
+      iw.emit(XidEvent, xid.array())
+      val inner = iw.out.toByteArray
       val compressed = com.github.luben.zstd.Zstd.compress(inner)
       // fields: (type lenenc, length lenenc, value lenenc) …, end mark,
       // then the compressed payload bytes
@@ -249,29 +213,47 @@ object BinlogFixture {
           .order(ByteOrder.LITTLE_ENDIAN)
         b.put(1.toByte).put(FixtureSid).putLong(from + ti)
         b.put(2.toByte).putLong(ti.toLong).putLong(ti.toLong + 1)
-        emit(GtidEvent, b.array())
+        w.emit(GtidEvent, b.array())
       }
-      if (compressTxns) emit(TransactionPayloadEvent, compressedTxn(txn))
+      if (compressTxns) w.emit(TransactionPayloadEvent, compressedTxn(txn))
       else {
-        emitMaps(txn, emitSink)
-        rowsEvents(txn, emitSink)
+        emitMaps(txn, w)
+        rowsEvents(txn, w)
         val xid = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-        xid.putLong(pos) // any id; fixtures use the position
-        emit(XidEvent, xid.array())
+        xid.putLong(w.pos) // any id; fixtures use the position
+        w.emit(XidEvent, xid.array())
       }
     }
     if (uncommittedTail.nonEmpty) {
       // a torn transaction carries its own maps too, like a real one
-      emitMaps(uncommittedTail, emitSink)
-      rowsEvents(uncommittedTail, emitSink)
+      emitMaps(uncommittedTail, w)
+      rowsEvents(uncommittedTail, w)
     }
     rotateTo.foreach { next =>
       val name = next.getBytes(UTF_8)
       val b = ByteBuffer.allocate(8 + name.length).order(ByteOrder.LITTLE_ENDIAN)
       b.putLong(4L).put(name)
-      emit(RotateEvent, b.array())
+      w.emit(RotateEvent, b.array())
     }
-    out.toByteArray
+    w.out.toByteArray
+  }
+
+  /** Back-to-back events from stream position `start` (4 after a file's
+    * magic, 0 inside a payload), each framed by [[BinlogFormat.frame]]
+    * with its true end-log-pos and, when `checksum`, a CRC32 trailer. */
+  private final class EventWriter(start: Long, serverId: Int,
+                                  checksum: Boolean) {
+    val out = new ByteArrayOutputStream()
+    var pos: Long = start
+    /** `fde`: the FORMAT_DESCRIPTION reserves its 4 trailer bytes even
+      * with checksums off (alg byte + reserved tail, >= 5.6.1). */
+    def emit(tpe: Int, body: Array[Byte], fde: Boolean = false): Unit = {
+      val ev = frame(tpe, body, pos + _, crc = checksum,
+        reserveTrailer = fde, serverId = serverId,
+        timestamp = 1700000000) // fixed: fixtures are deterministic
+      pos += ev.length
+      out.write(ev)
+    }
   }
 
   /** Length-encoded integer writer (net_store_length, fixture subset —

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.{DataInputStream, IOException, OutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** An in-process loopback MySQL PRIMARY for replication tests — the
@@ -289,9 +288,12 @@ final class BinlogFixtureServer(
       return
     }
     // a checksummed log (FDE alg byte = 1) demands the session SET first
-    // — the real server's refusal, verbatim error text (8.0 spelling)
-    if (demandChecksumNegotiation && fdeChecksummed(files(startIdx)._2) &&
-        !checksumNegotiated) {
+    // — the real server's refusal, verbatim error text (8.0 spelling).
+    // THIS dump's FDE (the start file's, which stream() always re-sends)
+    // also decides whether heartbeats carry the CRC32 trailer; a file's
+    // first frame is its FDE, whose `crc` is alg = CRC32
+    val checksummed = BinlogFormat.frames(files(startIdx)._2).next().crc
+    if (demandChecksumNegotiation && checksummed && !checksumNegotiated) {
       writePacket(out, 1, errPacket(1236,
         "Replica can not handle replication events with the checksum " +
           "that source is configured to log; the first event " +
@@ -318,46 +320,33 @@ final class BinlogFixtureServer(
     // walk one file's events from `from` to its CURRENTLY visible end,
     // sending what the dump rules allow; returns the offset reached and
     // the GTID-suppress state (a suppressed transaction could in
-    // principle straddle a reveal boundary)
-    def walk(fi: Int, from: Int, suppress0: Boolean): (Int, Boolean) = {
+    // principle straddle a reveal boundary). `framing` is the file's
+    // own, kept across a growth re-walk so its FDE still governs
+    def walk(fi: Int, framing: BinlogFormat.Framing, from: Int,
+             suppress0: Boolean): (Int, Boolean) = {
       val bytes = files(fi)._2
-      val visEnd = visibleLen(files(fi)._1)
-      require(bytes.length >= 4, s"fixture file ${files(fi)._1} too short")
-      var off = from
-      var suppress = suppress0
-      while (off < visEnd) {
-        require(visEnd - off >= BinlogFormat.HeaderLen,
-          s"truncated fixture event at $off")
-        val tpe = bytes(off + 4) & 0xff
-        val size = ByteBuffer.wrap(bytes, off + 9, 4)
-          .order(ByteOrder.LITTLE_ENDIAN).getInt
-        require(size >= BinlogFormat.HeaderLen && size <= visEnd - off,
-          s"fixture event at $off overruns the visible log (size=$size)")
-        val isFde = tpe == BinlogFormat.FormatDescriptionEvent
-        if (tpe == BinlogFormat.GtidEvent && !skip.isEmpty) {
-          // body: flags1, sid16, gno8 — enough to decide the skip
-          val b = ByteBuffer.wrap(bytes, off + BinlogFormat.HeaderLen + 1, 24)
-            .order(ByteOrder.LITTLE_ENDIAN)
-          val sid = new Array[Byte](16); b.get(sid)
-          val gno = b.getLong()
-          if (skip.contains(s"${BinlogFormat.uuidStr(sid)}:$gno"))
-            suppress = true
+      framing.walk(bytes, from, visibleLen(files(fi)._1))
+        .foldLeft((from, suppress0)) { case ((_, suppressed), f) =>
+          val suppress = suppressed || (f.tpe == BinlogFormat.GtidEvent &&
+            !skip.isEmpty &&
+            skip.contains(BinlogFormat.gtidOf(BinlogFormat.body(bytes, f))))
+          val positional = fi > startIdx ||
+            f.tpe == BinlogFormat.FormatDescriptionEvent || f.off >= pos
+          if (positional && !suppress) send(bytes, f.off, f.size)
+          // a suppressed transaction ends WITH its XID — or with its
+          // TRANSACTION_PAYLOAD, which carries the whole compressed
+          // transaction including the inner XID
+          (f.end, suppress && f.tpe != BinlogFormat.XidEvent &&
+            f.tpe != BinlogFormat.TransactionPayloadEvent)
         }
-        val positional = fi > startIdx || isFde || off >= pos
-        if (positional && !suppress) send(bytes, off, size)
-        // a suppressed transaction ends WITH its XID — or with its
-        // TRANSACTION_PAYLOAD, which carries the whole compressed
-        // transaction including the inner XID
-        if (suppress && (tpe == BinlogFormat.XidEvent ||
-            tpe == BinlogFormat.TransactionPayloadEvent)) suppress = false
-        off += size
-      }
-      (off, suppress)
     }
     var lastOff = 4
     var suppressTail = false
+    val tailFraming = new BinlogFormat.Framing
     (startIdx until files.size).foreach { fi =>
-      val (off, sup) = walk(fi, 4, suppress0 = false)
+      val framing =
+        if (fi == files.size - 1) tailFraming else new BinlogFormat.Framing
+      val (off, sup) = walk(fi, framing, 4, suppress0 = false)
       lastOff = off
       suppressTail = sup
     }
@@ -372,49 +361,23 @@ final class BinlogFixtureServer(
       // (T9 graceful stop) or the fixture closes.
       val name = files.last._1.getBytes(
         java.nio.charset.StandardCharsets.UTF_8)
-      // THIS dump's FDE (the start file's — the one stream() re-sent)
-      // declared the checksum algorithm, so heartbeats carry the CRC32
-      // trailer iff it did
-      val checksummed = fdeChecksummed(files(startIdx)._2)
-      val crcLen = if (checksummed) 4 else 0
-      val size = BinlogFormat.HeaderLen + name.length + crcLen
-      def heartbeat(atPos: Int): Array[Byte] = {
-        val ev = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
-        ev.putInt(0) // heartbeats carry no timestamp
-        ev.put(BinlogFormat.HeartbeatEvent.toByte)
-        ev.putInt(0)
-        ev.putInt(size)
-        ev.putInt(atPos)
-        ev.putShort(0)
-        ev.put(name)
-        if (checksummed) {
-          val crc = new java.util.zip.CRC32()
-          crc.update(ev.array(), 0, size - 4)
-          ev.putInt(crc.getValue.toInt)
-        }
-        ev.array()
-      }
+      def heartbeat(atPos: Int): Array[Byte] = BinlogFormat.frame(
+        BinlogFormat.HeartbeatEvent, name, _ => atPos.toLong,
+        crc = checksummed) // heartbeats carry no timestamp or server id
       var hb = heartbeat(lastOff)
       while (!closed) {
         Thread.sleep(heartbeatMs)
         // writes that landed since the last pass (reveal() mid-dump)
         if (visibleLen(files.last._1) > lastOff) {
-          val (off, sup) = walk(files.size - 1, lastOff, suppressTail)
+          val (off, sup) =
+            walk(files.size - 1, tailFraming, lastOff, suppressTail)
           lastOff = off
           suppressTail = sup
           hb = heartbeat(lastOff)
         }
-        send(hb, 0, size) // IOException on hangup ends us
+        send(hb, 0, hb.length) // IOException on hangup ends us
       }
     }
-  }
-
-  /** Does this file's FDE declare CRC32 checksums? (alg = the byte at
-    * eventSize-5 of the FDE, which starts at offset 4.) */
-  private def fdeChecksummed(bytes: Array[Byte]): Boolean = {
-    val fdeSize = ByteBuffer.wrap(bytes, 4 + 9, 4)
-      .order(ByteOrder.LITTLE_ENDIAN).getInt
-    bytes(4 + fdeSize - 5) == 1
   }
 
   override def close(): Unit = {

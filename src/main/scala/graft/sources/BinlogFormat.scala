@@ -77,6 +77,14 @@ import java.util.zip.CRC32
   * stream and can replay a torn tail on reconnect (its at-least-once
   * contract absorbs that; ours never surfaces uncommitted rows at all).
   *
+  * The event frame — the 19-byte header plus the CRC32 trailer the FDE
+  * declares — has ONE owner, this object: [[header]] reads the header,
+  * a [[Framing]] applies the stream rules (bounds, FDE first, checksum
+  * alg 0 or 1, room for the CRC), [[frames]] walks a file under them
+  * and [[frame]] writes one event. The decoder, the scans, the socket
+  * client, the fixture encoder and the fixture server all go through
+  * these, so every reader rejects the same malformed input.
+  *
   * Integrity: when the FDE declares CRC32 (alg=1), every event's trailing
   * 4 bytes are verified against `java.util.zip.CRC32` over the rest of
   * the event; a mismatch aborts the parse (corrupt log ≠ skippable row).
@@ -196,19 +204,145 @@ object BinlogFormat {
                                 droppedUncommitted: Int,
                                 previousGtids: Option[String] = None)
 
+  /** One event's place in a stream and its v4 common-header fields:
+    * `off` = where it starts, `size` = its total length (header + body +
+    * trailer), `logPos` = its end-log-pos. `trailer` = the bytes after
+    * the body (4 on every event when the FDE declares CRC32, and always
+    * 4 on the FDE itself); `crc` = whether that trailer holds a CRC32 to
+    * verify. [[header]] leaves both at their defaults; a [[Framing]]
+    * fills them in. */
+  final case class Frame(off: Int, tpe: Int, size: Int, logPos: Long,
+                         trailer: Int = 0, crc: Boolean = false) {
+    def end: Int = off + size
+  }
+
+  /** The common header at `bytes(off)`, bounds-checked against the
+    * `available` bytes (`bytes.length - off` for a file, the packet
+    * length for a socket) — the one place the header's fields are read. */
+  private[sources] def header(bytes: Array[Byte], off: Int,
+                              available: Int): Frame = {
+    require(available >= HeaderLen, s"truncated event header at $off")
+    val b = buf(bytes, off, HeaderLen)
+    b.getInt() // timestamp
+    val tpe = b.get() & 0xff
+    b.getInt() // server id
+    val size = b.getInt()
+    val logPos = b.getInt().toLong & 0xffffffffL
+    // overflow-safe form: size can be any corrupt Int, so compare
+    // against the REMAINING length, never `off + size`
+    require(size >= HeaderLen && size <= available,
+      s"event at $off overruns file (size=$size)")
+    Frame(off, tpe, size, logPos)
+  }
+
+  /** The frame rules of one event stream: it opens with a
+    * FORMAT_DESCRIPTION whose checksum algorithm (0 = none, 1 = CRC32)
+    * sets every later event's trailer, and every event has room for
+    * that trailer. A TRANSACTION_PAYLOAD's inner stream ([[Framing]]
+    * built with `inPayload`) has no FDE and no trailers. Every reader of
+    * binlog bytes — [[parse]]'s decoder, the socket decoder, the scans
+    * and the fixture server — frames through one of these, so all of
+    * them reject the same malformed input. */
+  final class Framing private[sources] (inPayload: Boolean) {
+    def this() = this(inPayload = false)
+
+    // -1 until the FDE arrives; a payload's inner stream has none
+    private var alg = if (inPayload) 0 else -1
+
+    /** Check and frame the ONE event at `bytes(off)`. */
+    def next(bytes: Array[Byte], off: Int, available: Int): Frame = {
+      val h = header(bytes, off, available)
+      if (h.tpe == FormatDescriptionEvent) {
+        require(!inPayload, s"FORMAT_DESCRIPTION inside a payload at $off")
+        // The FDE always reserves its trailing 5 bytes for alg + checksum
+        // (MySQL >= 5.6.1 layout; its own reader fetches the alg byte at
+        // eventSize-5 unconditionally, log_event.cc get_checksum_alg):
+        // header + fixed part (2+50+4+1) + alg + crc = the v4 minimum
+        require(h.size >= HeaderLen + 62, s"FDE too short: ${h.size}")
+        val a = bytes(off + h.size - 5) & 0xff
+        require(a == 0 || a == 1, s"unsupported checksum alg $a")
+        alg = a
+        h.copy(trailer = 4, crc = a == 1)
+      } else {
+        require(alg >= 0,
+          s"first event must be FORMAT_DESCRIPTION, got type ${h.tpe}")
+        val t = if (alg == 1) 4 else 0
+        require(h.size >= HeaderLen + t,
+          s"event at $off too short for its checksum (size=${h.size})")
+        h.copy(trailer = t, crc = alg == 1)
+      }
+    }
+
+    /** The frames of the back-to-back events in `bytes[from, until)`. */
+    def walk(bytes: Array[Byte], from: Int, until: Int): Iterator[Frame] =
+      Iterator.unfold(from) { off =>
+        if (off >= until) None
+        else { val f = next(bytes, off, until - off); Some((f, f.end)) }
+      }
+  }
+
+  /** Every event of a binlog FILE (magic, then back-to-back events),
+    * framed under the rules [[parse]] applies. */
+  def frames(bytes: Array[Byte]): Iterator[Frame] = {
+    require(bytes.length >= 4 && Magic.indices.forall(i => bytes(i) == Magic(i)),
+      "not a binlog: bad magic")
+    new Framing().walk(bytes, 4, bytes.length)
+  }
+
+  /** A frame's body: header and trailer excluded. */
+  private[sources] def body(bytes: Array[Byte], f: Frame): ByteBuffer =
+    buf(bytes, f.off + HeaderLen, f.size - HeaderLen - f.trailer)
+
+  /** Write one event: the common header, `body`, then — when `crc` or
+    * `reserveTrailer` — a 4-byte trailer holding the CRC32 of everything
+    * before it (zeros when only reserved: the FDE's slot with
+    * checksums off). `logPos` maps the event's size to the end-log-pos
+    * field. The one writer of event headers. */
+  private[sources] def frame(tpe: Int, body: Array[Byte],
+                             logPos: Int => Long, crc: Boolean,
+                             reserveTrailer: Boolean = false,
+                             serverId: Int = 0,
+                             timestamp: Int = 0): Array[Byte] = {
+    val size = HeaderLen + body.length + (if (crc || reserveTrailer) 4 else 0)
+    val ev = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
+    ev.putInt(timestamp).put(tpe.toByte).putInt(serverId).putInt(size)
+      .putInt(logPos(size).toInt).putShort(0.toShort).put(body)
+    if (crc) {
+      val c = new CRC32(); c.update(ev.array(), 0, size - 4)
+      ev.putInt(c.getValue.toInt)
+    }
+    ev.array()
+  }
+
+  /** A GTID body's `uuid:gno`: flags1, sid16, gno8 — the 5.7+
+    * logical-clock tail is version-dependent and skipped. */
+  private[sources] def gtidOf(b: ByteBuffer): String = {
+    require(b.remaining() >= 1 + 16 + 8, "GTID body too short")
+    b.get()
+    val sid = new Array[Byte](16); b.get(sid)
+    s"${uuidStr(sid)}:${b.getLong()}"
+  }
+
+  /** A ROTATE body's next file name (after nextPos8, always 4). */
+  private def rotateTarget(b: ByteBuffer): String = {
+    require(b.remaining() >= 8, "rotate body too short")
+    b.getLong()
+    str(b, b.remaining())
+  }
+
   import CdcTransformOps.{InsertOp, UpdateOp, DeleteOp}
 
   /** Incremental event decoder — the stateful core shared by the
     * whole-file [[parse]] and the replication-SOCKET consumer
     * ([[BinlogSocketClient]]), where events arrive one per stream packet
     * instead of back-to-back in a file. Holds exactly the cross-event
-    * state the format requires: the FDE's checksum algorithm, the
-    * per-tableId TABLE_MAP registry, the pending (uncommitted)
-    * transaction, the current GTID stamp, and the trailing
-    * ROTATE/PREVIOUS_GTIDS markers.
+    * state the format requires: the stream's [[Framing]] (the FDE's
+    * checksum algorithm), the per-tableId TABLE_MAP registry, the
+    * pending (uncommitted) transaction, the current GTID stamp, and the
+    * trailing ROTATE/PREVIOUS_GTIDS markers.
     *
     * Contract: [[onEvent]] decodes ONE complete event (header + body
-    * [+ CRC]) and returns its size; committed row changes accumulate
+    * [+ CRC]) and returns its frame; committed row changes accumulate
     * until [[drainCommitted]] (a socket consumer drains at each commit
     * boundary, a file consumer once at the end). Reconnects get a FRESH
     * decoder ([[BinlogSocketClient]]'s loop): the torn pending
@@ -218,8 +352,7 @@ object BinlogFormat {
     * full — at-least-once on the wire, exactly-once at transaction
     * granularity. */
   final class EventStreamDecoder {
-    private var checksummed = false
-    private var sawFde = false
+    private val framing = new Framing
     private val tableMaps = scala.collection.mutable.Map[Long, TableMap]()
     private var committed = Vector.newBuilder[RowChange]
     private var pending = Vector.empty[RowChange]
@@ -260,28 +393,20 @@ object BinlogFormat {
         currentGtid = None
 
       case GtidEvent =>
-        // flags1, sid16, gno8 — the logical-clock tail (5.7+) is
-        // version-dependent and skipped
-        body.get()
-        val sid = new Array[Byte](16); body.get(sid)
-        val gno = body.getLong()
-        currentGtid = Some(s"${uuidStr(sid)}:$gno")
+        currentGtid = Some(gtidOf(body))
 
       case PreviousGtidsEvent =>
         _previousGtids = Some(parseGtidSet(body))
 
       case RotateEvent =>
-        body.getLong() // next position (always 4 post-magic)
-        val name = new Array[Byte](body.remaining())
-        body.get(name)
-        _nextFile = Some(new String(name, UTF_8))
+        _nextFile = Some(rotateTarget(body))
 
       case TransactionPayloadEvent =>
         // 8.0 binlog_transaction_compression: the transaction's events
         // travel zstd-compressed inside ONE payload event
         require(!inPayload, "nested TRANSACTION_PAYLOAD — malformed")
-        foreachInnerEvent(payloadEvents(body)) { (itpe, ibody, ipos) =>
-          dispatch(itpe, ibody, ipos, inPayload = true)
+        innerEvents(body).foreach { case (f, ibody) =>
+          dispatch(f.tpe, ibody, f.logPos, inPayload = true)
         }
 
       case _ => // QUERY/STOP/… — size-skipped, row consumers don't need them
@@ -289,72 +414,39 @@ object BinlogFormat {
 
     /** Decode the ONE event starting at `bytes(off)`; `available` bounds
       * the read (`bytes.length - off` for files, the packet length for a
-      * socket). Returns the event's size so a file walk can advance. */
-    def onEvent(bytes: Array[Byte], off: Int, available: Int): Int = {
-      require(available >= HeaderLen, s"truncated event header at $off")
-      val b = buf(bytes, off, HeaderLen)
-      b.getInt() // timestamp
-      val tpe = b.get() & 0xff
-      b.getInt() // server id
-      val eventSize = b.getInt()
-      val logPos = b.getInt().toLong & 0xffffffffL
-      b.getShort() // flags
-      // overflow-safe form: eventSize can be any corrupt Int, so compare
-      // against the REMAINING length, never `off + eventSize`
-      require(eventSize >= HeaderLen && eventSize <= available,
-        s"event at $off overruns file (size=$eventSize)")
-      require(sawFde || tpe == FormatDescriptionEvent,
-        s"first event must be FORMAT_DESCRIPTION, got type $tpe")
+      * socket). Returns the event's frame, so a caller can advance and
+      * act on its type and end-log-pos without re-reading the header. */
+    def onEvent(bytes: Array[Byte], off: Int, available: Int): Frame = {
+      val f = framing.next(bytes, off, available)
+      decode(bytes, f)
+      f
+    }
 
-      // The FDE always reserves its trailing 5 bytes for alg + checksum
-      // (MySQL >= 5.6.1 layout; its own reader fetches the alg byte at
-      // eventSize-5 unconditionally, log_event.cc get_checksum_alg).
-      // Later events carry the 4 CRC bytes only when alg = CRC32.
-      val fdeAlg =
-        if (tpe == FormatDescriptionEvent) {
-          // header + fixed part (2+50+4+1) + alg + crc = the v4 minimum
-          require(eventSize >= HeaderLen + 62, s"FDE too short: $eventSize")
-          bytes(off + eventSize - 5) & 0xff
-        } else -1
-      val crcLen =
-        if (tpe == FormatDescriptionEvent) 4
-        else if (checksummed) 4
-        else 0
-      require(eventSize >= HeaderLen + crcLen,
-        s"event at $off too short for its checksum (size=$eventSize)")
-      if (crcLen == 4 && (fdeAlg == 1 || (fdeAlg == -1 && checksummed))) {
+    /** Decode one event already framed by a file walk ([[frames]]). */
+    private[BinlogFormat] def decode(bytes: Array[Byte], f: Frame): Unit = {
+      if (f.crc) {
         val crc = new CRC32()
-        crc.update(bytes, off, eventSize - 4)
-        val stored = buf(bytes, off + eventSize - 4, 4).getInt().toLong & 0xffffffffL
+        crc.update(bytes, f.off, f.size - 4)
+        val stored = buf(bytes, f.end - 4, 4).getInt().toLong & 0xffffffffL
         require(crc.getValue == stored,
-          f"CRC32 mismatch on event type $tpe at offset $off: " +
+          f"CRC32 mismatch on event type ${f.tpe} at offset ${f.off}: " +
             f"computed ${crc.getValue}%08x, stored $stored%08x")
       }
-      val body = buf(bytes, off + HeaderLen, eventSize - HeaderLen - crcLen)
-
-      if (tpe == FormatDescriptionEvent) {
-        val ver = body.getShort().toInt
+      val b = body(bytes, f)
+      if (f.tpe == FormatDescriptionEvent) {
+        val ver = b.getShort().toInt
         require(ver == 4, s"unsupported binlog version $ver")
-        skip(body, 50 + 4) // server version, create ts
-        val hdrLen = body.get() & 0xff
+        skip(b, 50 + 4) // server version, create ts
+        val hdrLen = b.get() & 0xff
         require(hdrLen == HeaderLen, s"unsupported common header len $hdrLen")
-        // remaining body = postHeaderLen array; alg already read at -5
-        require(fdeAlg == 0 || fdeAlg == 1,
-          s"unsupported checksum alg $fdeAlg")
-        checksummed = fdeAlg == 1
-        sawFde = true
-      } else dispatch(tpe, body, logPos, inPayload = false)
-      eventSize
+        // remaining body = postHeaderLen array; the alg byte was framed
+      } else dispatch(f.tpe, b, f.logPos, inPayload = false)
     }
   }
 
   def parse(bytes: Array[Byte]): ParsedBinlog = {
-    require(bytes.length >= 4 && Magic.indices.forall(i => bytes(i) == Magic(i)),
-      "not a binlog: bad magic")
     val dec = new EventStreamDecoder
-    var off = 4
-    while (off < bytes.length)
-      off += dec.onEvent(bytes, off, bytes.length - off)
+    frames(bytes).foreach(dec.decode(bytes, _))
     ParsedBinlog(dec.drainCommitted(), dec.nextFile, dec.pendingCount,
       dec.previousGtids)
   }
@@ -362,38 +454,12 @@ object BinlogFormat {
   /** Header-only walk returning the trailing ROTATE target — the chain
     * link at O(events) header reads, no row decode, no CRC pass (the
     * full [[parse]] is the integrity authority; this exists so chain
-    * validation doesn't decode every row image a second time). */
-  def scanRotate(bytes: Array[Byte]): Option[String] = {
-    require(bytes.length >= 4 && Magic.indices.forall(i => bytes(i) == Magic(i)),
-      "not a binlog: bad magic")
-    var off = 4
-    var checksummed = false
-    var nextFile: Option[String] = None
-    while (off < bytes.length) {
-      require(bytes.length - off >= HeaderLen, s"truncated event header at $off")
-      val b = buf(bytes, off, HeaderLen)
-      b.getInt()
-      val tpe = b.get() & 0xff
-      b.getInt()
-      val eventSize = b.getInt()
-      require(eventSize >= HeaderLen && eventSize <= bytes.length - off,
-        s"event at $off overruns file (size=$eventSize)")
-      if (tpe == FormatDescriptionEvent) {
-        require(eventSize >= HeaderLen + 62, s"FDE too short: $eventSize")
-        checksummed = (bytes(off + eventSize - 5) & 0xff) == 1
-      } else if (tpe == RotateEvent) {
-        val crcLen = if (checksummed) 4 else 0
-        require(eventSize >= HeaderLen + 8 + crcLen, "rotate body too short")
-        val body = buf(bytes, off + HeaderLen, eventSize - HeaderLen - crcLen)
-        body.getLong()
-        val name = new Array[Byte](body.remaining())
-        body.get(name)
-        nextFile = Some(new String(name, UTF_8))
-      }
-      off += eventSize
+    * validation doesn't decode every row image a second time). Framed
+    * like [[parse]], so it rejects the same malformed files. */
+  def scanRotate(bytes: Array[Byte]): Option[String] =
+    frames(bytes).foldLeft(Option.empty[String]) { (next, f) =>
+      if (f.tpe == RotateEvent) Some(rotateTarget(body(bytes, f))) else next
     }
-    nextFile
-  }
 
   // TRANSACTION_PAYLOAD field type codes (libbinlogevents
   // Transaction_payload_event, binlog_transaction_compression)
@@ -405,27 +471,14 @@ object BinlogFormat {
   private val CompressionNone = 255
   private val MaxUncompressed = 1L << 28 // 256 MiB zip-bomb bound
 
-  /** Walk a decompressed TRANSACTION_PAYLOAD's inner event stream —
-    * back-to-back v4 events with NO checksum trailers — shared by the
-    * full parse and the schema-discovery scan so the bounds contract
-    * lives once. */
-  private def foreachInnerEvent(inner: Array[Byte])(
-      f: (Int, ByteBuffer, Long) => Unit): Unit = {
-    var ioff = 0
-    while (ioff < inner.length) {
-      require(inner.length - ioff >= HeaderLen,
-        s"truncated inner event header at $ioff")
-      val hb = buf(inner, ioff, HeaderLen)
-      hb.getInt() // timestamp
-      val itpe = hb.get() & 0xff
-      hb.getInt() // server id
-      val isize = hb.getInt()
-      val ipos = hb.getInt().toLong & 0xffffffffL
-      require(isize >= HeaderLen && isize <= inner.length - ioff,
-        s"inner event at $ioff overruns payload (size=$isize)")
-      f(itpe, buf(inner, ioff + HeaderLen, isize - HeaderLen), ipos)
-      ioff += isize
-    }
+  /** A TRANSACTION_PAYLOAD body's inner events, each with its body:
+    * the payload decompressed, then walked CRC-less ([[Framing]] with
+    * `inPayload`) — shared by the decoder and the schema-discovery scan
+    * so the bounds contract lives once. */
+  private def innerEvents(payloadBody: ByteBuffer): Iterator[(Frame, ByteBuffer)] = {
+    val inner = payloadEvents(payloadBody)
+    new Framing(inPayload = true).walk(inner, 0, inner.length)
+      .map(f => (f, body(inner, f)))
   }
 
   /** TRANSACTION_PAYLOAD body → the inner event stream (decompressed).
@@ -474,52 +527,26 @@ object BinlogFormat {
   /** TABLE_MAP-only walk: the table definitions a file announces, by
     * (db, table) — last definition wins, like the parser's per-tableId
     * map. Skips row images and CRC verification (the full [[parse]] is
-    * the integrity authority); this is the schema-DISCOVERY path:
+    * the integrity authority) but frames like [[parse]], so it rejects
+    * the same malformed files; this is the schema-DISCOVERY path:
     * together with the 8.0 COLUMN_NAME / SIGNEDNESS / ENUM_STR_VALUE
     * optional metadata it lets a consumer derive the Spark schema from
     * the log itself instead of a separate catalog query (the reference
     * needs a live `information_schema` connection for the same job,
     * `src/mysql_client.py`). */
-  def scanTableMaps(bytes: Array[Byte]): Map[(String, String), TableMap] = {
-    require(bytes.length >= 4 && Magic.indices.forall(i => bytes(i) == Magic(i)),
-      "not a binlog: bad magic")
-    var off = 4
-    var checksummed = false
-    val out = scala.collection.mutable.LinkedHashMap[(String, String), TableMap]()
-    while (off < bytes.length) {
-      require(bytes.length - off >= HeaderLen, s"truncated event header at $off")
-      val b = buf(bytes, off, HeaderLen)
-      b.getInt()
-      val tpe = b.get() & 0xff
-      b.getInt()
-      val eventSize = b.getInt()
-      require(eventSize >= HeaderLen && eventSize <= bytes.length - off,
-        s"event at $off overruns file (size=$eventSize)")
-      if (tpe == FormatDescriptionEvent) {
-        require(eventSize >= HeaderLen + 62, s"FDE too short: $eventSize")
-        checksummed = (bytes(off + eventSize - 5) & 0xff) == 1
-      } else if (tpe == TableMapEvent) {
-        val crcLen = if (checksummed) 4 else 0
-        val tm = parseTableMap(
-          buf(bytes, off + HeaderLen, eventSize - HeaderLen - crcLen))
-        out((tm.db, tm.table)) = tm
-      } else if (tpe == TransactionPayloadEvent) {
-        // compressed transactions carry their TABLE_MAPs INSIDE the
-        // payload — schema discovery must look through the compression
-        val crcLen = if (checksummed) 4 else 0
-        foreachInnerEvent(payloadEvents(
-          buf(bytes, off + HeaderLen, eventSize - HeaderLen - crcLen))) {
-          (itpe, ibody, _) =>
-            if (itpe == TableMapEvent) {
-              val tm = parseTableMap(ibody)
-              out((tm.db, tm.table)) = tm
-            }
+  def scanTableMaps(bytes: Array[Byte]): Map[(String, String), TableMap] =
+    frames(bytes).flatMap { f =>
+      if (f.tpe == TableMapEvent) Iterator(parseTableMap(body(bytes, f)))
+      // compressed transactions carry their TABLE_MAPs INSIDE the
+      // payload — schema discovery must look through the compression
+      else if (f.tpe == TransactionPayloadEvent)
+        innerEvents(body(bytes, f)).collect {
+          case (i, ib) if i.tpe == TableMapEvent => parseTableMap(ib)
         }
-      }
-      off += eventSize
+      else Iterator.empty
+    }.foldLeft(Map.empty[(String, String), TableMap]) { (m, tm) =>
+      m.updated((tm.db, tm.table), tm)
     }
-    out.toMap
-  }
 
   /** GTID-set wire encoding (PREVIOUS_GTIDS body): n_sids8, then per sid
     * sid16 + n_intervals8 + (start8, endExclusive8)*. Rendered in the

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.{DataInputStream, IOException}
 import java.net.{InetSocketAddress, Socket}
-import java.nio.{ByteBuffer, ByteOrder}
 
 /** The replication-protocol CLIENT — the half of the reference's
   * `BinLogStreamReader` that lives on the network
@@ -221,8 +220,8 @@ final class BinlogSocketClient(
           else if (isErr(p)) throw new IllegalStateException(errMessage(p))
           else {
             require(isOk(p), s"unexpected stream packet ${p.headOption}")
-            dec.onEvent(p, 1, p.length - 1)
-            val tpe = p(1 + 4) & 0xff
+            val ev = dec.onEvent(p, 1, p.length - 1)
+            val tpe = ev.tpe
             if (tpe == BinlogFormat.HeartbeatEvent) {
               heartbeats += 1
               // a live, heartbeating connection is forward progress
@@ -238,8 +237,7 @@ final class BinlogSocketClient(
               // a transaction commits at its XID — which for a
               // compressed transaction lives INSIDE the payload event,
               // so the payload packet is itself the commit boundary
-              val commitEnd = ByteBuffer.wrap(p, 1 + 13, 4)
-                .order(ByteOrder.LITTLE_ENDIAN).getInt().toLong & 0xffffffffL
+              val commitEnd = ev.logPos
               // bound discipline, evaluated ONLY at commits (the
               // offsets' granularity): a commit ending AT the bound is
               // the last one included; a commit ending PAST it — the

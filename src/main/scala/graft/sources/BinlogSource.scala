@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types._
 
 /** Distributed bridge: directory of rotated binlog files →
@@ -33,6 +34,13 @@ import org.apache.spark.sql.types._
   * order-isomorphic to (end-log-pos, row-index-in-event) and < 2^40 for
   * any real file (MySQL caps binlogs at 1 GiB); the raw pos stays on
   * [[BinlogFormat.RowChange]] as the resume offset.
+  *
+  * This object owns the CHANGE ROW for every binlog path — files here,
+  * a collected socket tail ([[collectedChanges]]) and the
+  * `mysql-binlog` V2 source ([[MysqlBinlogSource]]): which image a
+  * change surfaces, the arity check and pre-ALTER padding, the value
+  * coercion onto the caller's schema, and the `op`/`_seq`/`_tbl` tail
+  * all live in [[changeRow]].
   *
   * Row-image policy (parity with the reference's processors,
   * `src/cdc_replicator.py:157-212`): updates surface the AFTER image
@@ -80,19 +88,44 @@ object BinlogSource {
     l
   }
 
-  /** The row image a change SURFACES (deletes carry only their before
-    * image), arity-checked against the caller schema — shared by
-    * [[collectedChanges]] and the V2 reader
-    * ([[BinlogPartitionReaderFactory]]) so the two collected paths
-    * cannot diverge. */
-  private[sources] def surfacedImage(ch: BinlogFormat.RowChange,
-                                     n: Int): IndexedSeq[Any] = {
-    val img = (if (ch.op == "D") ch.before else ch.after)
+  /** The row image a change SURFACES: updates and inserts their after
+    * image, deletes their before image (the reference's processors,
+    * `src/cdc_replicator.py:157-212`). The one image rule. */
+  private def surfaced(ch: BinlogFormat.RowChange): IndexedSeq[Any] =
+    (if (ch.op == "D") ch.before else ch.after)
       .getOrElse(throw new IllegalStateException(
         s"${ch.op} row without its image at pos ${ch.pos}"))
-    require(img.size == n,
+
+  /** The change row: the [[surfaced]] image arity-checked against
+    * `fieldTypes` and coerced onto them, then `op`, `_seq` and `_tbl` —
+    * in an array of `width` slots, so a caller can fill extra tail
+    * columns after them. `padNarrower` lets an image with FEWER
+    * columns (a pre-ALTER file under an evolved schema) pad the added
+    * trailing columns with NULL, MySQL's own ADD COLUMN semantics.
+    * `conv` maps each value onto the caller's representation: the
+    * identity for an external `Row`, Catalyst's internal form for the
+    * V2 reader. Shared by every decode path — files, a collected socket
+    * tail and the `mysql-binlog` source — so their frames cannot
+    * diverge. */
+  private[sources] def changeRow(ch: BinlogFormat.RowChange, seq: Long,
+      fieldTypes: IndexedSeq[DataType], width: Int,
+      padNarrower: Boolean = false,
+      conv: (Any, DataType) => Any = (v, _) => v): Array[Any] = {
+    val n = fieldTypes.size
+    val img = surfaced(ch)
+    require(img.size == n || (padNarrower && img.size < n),
       s"row arity ${img.size} != schema arity $n for ${ch.table}")
-    img
+    val vals = new Array[Any](width)
+    var k = 0
+    while (k < img.size) {
+      vals(k) = conv(coerce(img(k), fieldTypes(k)), fieldTypes(k))
+      k += 1
+    }
+    // k < n only under padNarrower: the slots stay null
+    vals(n) = conv(ch.op, StringType)
+    vals(n + 1) = conv(seq, LongType)
+    vals(n + 2) = conv(ch.table, StringType)
+    vals
   }
 
   private[sources] def coerce(v: Any, dt: DataType): Any = (v, dt) match {
@@ -122,8 +155,7 @@ object BinlogSource {
                      gtidCol: Boolean = false,
                      padNarrower: Boolean = false,
                      presentCol: Boolean = false): DataFrame = {
-    val base = rowSchema
-      .add("op", StringType).add("_seq", LongType).add("_tbl", StringType)
+    val base = MysqlBinlogSource.withMeta(rowSchema)
     val withBk = beforeKey.fold(base)(f =>
       base.add(s"_before_$f", rowSchema(f).dataType))
     val withGtid = if (gtidCol) withBk.add("_gtid", StringType) else withBk
@@ -140,10 +172,6 @@ object BinlogSource {
     files.flatMap { case (path, bytes) =>
       val ord = fileOrdinal(path)
       val parsed = BinlogFormat.parse(bytes)
-      val chainTail: Seq[Any] =
-        if (!chainCols) Nil
-        else Seq(path.substring(path.lastIndexOf('/') + 1),
-          parsed.nextFile.orNull)
       parsed.changes.iterator
         .zipWithIndex // per-file change ordinal: see ordering scaladoc
         .filter(_._1.table == table)
@@ -151,36 +179,35 @@ object BinlogSource {
         // (unstamped changes are never "already applied")
         .filter(!_._1.gtid.exists(skipGtids.contains))
         .map { case (ch, i) =>
-          val img0 = (if (ch.op == "D") ch.before else ch.after)
-            .getOrElse(throw new IllegalStateException(
-              s"${ch.op} row without its image at pos ${ch.pos}"))
-          require(img0.size == n || (padNarrower && img0.size < n),
-            s"row arity ${img0.size} != schema arity $n for $table")
-          // pre-ALTER rows under an evolved schema: the added trailing
-          // columns backfill as NULL, MySQL's own ADD COLUMN semantics
-          val img = if (img0.size < n)
-            img0 ++ IndexedSeq.fill(n - img0.size)(null) else img0
-          val coerced = img.lazyZip(fieldTypes).map(coerce)
+          val vals = changeRow(ch, (ord << 40) | i.toLong, fieldTypes,
+            out.size, padNarrower)
+          var k = n + 3
           // before-image key: for updates the OLD key (the one the
           // reference discards — the t28 orphan repair's input); for
           // inserts/deletes it equals the image's own key
-          val bkTail: Seq[Any] = bkIdx.toSeq.map { k =>
-            val src = if (ch.op == "U")
-              ch.before.getOrElse(throw new IllegalStateException(
-                s"update without before-image at pos ${ch.pos}"))
-            else img
-            coerce(src(k), fieldTypes(k))
+          bkIdx.foreach { b =>
+            vals(k) =
+              if (ch.op != "U") vals(b)
+              else coerce(ch.before.getOrElse(throw new IllegalStateException(
+                s"update without before-image at pos ${ch.pos}"))(b),
+                fieldTypes(b))
+            k += 1
           }
-          val gtidTail: Seq[Any] = if (gtidCol) Seq(ch.gtid.orNull) else Nil
+          if (gtidCol) { vals(k) = ch.gtid.orNull; k += 1 }
           // the surfaced image's columns-present bitmap, padded to the
           // caller schema (an evolving decode's added columns read as
           // absent for pre-ALTER rows — which they are)
-          val presentTail: Seq[Any] =
-            if (!presentCol) Nil
-            else Seq((if (ch.present.isEmpty) IndexedSeq.fill(img0.size)(true)
-                      else ch.present).padTo(n, false))
-          Row.fromSeq(coerced ++ Seq(ch.op, (ord << 40) | i.toLong, ch.table)
-            ++ bkTail ++ gtidTail ++ presentTail ++ chainTail)
+          if (presentCol) {
+            vals(k) = (if (ch.present.isEmpty)
+              IndexedSeq.fill(surfaced(ch).size)(true)
+            else ch.present).padTo(n, false)
+            k += 1
+          }
+          if (chainCols) {
+            vals(k) = path.substring(path.lastIndexOf('/') + 1)
+            vals(k + 1) = parsed.nextFile.orNull
+          }
+          new GenericRow(vals): Row
         }
     }.toDF()
   }
@@ -189,6 +216,10 @@ object BinlogSource {
     df.select("path", "content")
       .as[(String, Array[Byte])](
         Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+
+  /** Every binlog file under `dir` as a `binaryFile` frame. */
+  private def load(s: SparkSession, dir: String): DataFrame =
+    s.read.format("binaryFile").load(dir)
 
   /** Change rows for `table` from every binlog file under `dir`.
     * `rowSchema` = the row-image columns in TABLE_MAP order, with Spark
@@ -210,8 +241,8 @@ object BinlogSource {
               skipGtids: GtidSet = GtidSet.Empty,
               beforeKey: Option[String] = None,
               presentCol: Boolean = false): DataFrame =
-    decode(asFiles(s.read.format("binaryFile").load(dir)), table, rowSchema,
-      skipGtids, beforeKey, presentCol = presentCol)
+    decode(asFiles(load(s, dir)), table, rowSchema, skipGtids, beforeKey,
+      presentCol = presentCol)
 
   /** [[changes]] over an ALREADY-LOADED (path, content) frame — the form
     * a `foreachBatch` consumer needs (the batch is the file set; loading
@@ -235,18 +266,14 @@ object BinlogSource {
   def collectedChanges(s: SparkSession,
                        changes: Seq[BinlogFormat.RowChange],
                        table: String, rowSchema: StructType): DataFrame = {
-    val base = rowSchema
-      .add("op", StringType).add("_seq", LongType).add("_tbl", StringType)
-    val n = rowSchema.size
+    val out = MysqlBinlogSource.withMeta(rowSchema)
     val fieldTypes = rowSchema.fields.map(_.dataType).toIndexedSeq
     val rows = changes.iterator.zipWithIndex
       .filter(_._1.table == table)
       .map { case (ch, i) =>
-        val img = surfacedImage(ch, n)
-        Row.fromSeq(img.lazyZip(fieldTypes).map(coerce)
-          ++ Seq(ch.op, i.toLong, ch.table))
+        new GenericRow(changeRow(ch, i.toLong, fieldTypes, out.size)): Row
       }.toSeq
-    s.createDataFrame(s.sparkContext.parallelize(rows), base)
+    s.createDataFrame(s.sparkContext.parallelize(rows), out)
   }
 
   /** Streaming form — the reference's continuous mode
@@ -410,16 +437,8 @@ object BinlogSource {
     * silent schema pick). Bounded: one row per (file, table) — the
     * table-map scan never decodes row images. */
   def inferSchema(s: SparkSession, dir: String, table: String): StructType = {
-    val defs = s.read.format("binaryFile").load(dir)
-      .select("path", "content")
-      .as[(String, Array[Byte])](
-        Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .flatMap { case (_, bytes) =>
-        BinlogFormat.scanTableMaps(bytes).collect {
-          case ((_, t), tm) if t == table => (tm.cols, tm.colNames)
-        }
-      }(Encoders.kryo[(IndexedSeq[BinlogFormat.ColumnDef], IndexedSeq[String])])
-      .collect().distinct
+    val defs = tableDefs(load(s, dir), table)
+      .map { case (_, tm) => (tm.cols, tm.colNames) }.distinct
     require(defs.nonEmpty, s"no TABLE_MAP for `$table` under $dir")
     require(defs.length == 1,
       s"`$table` has ${defs.length} distinct definitions across $dir — " +
@@ -427,6 +446,23 @@ object BinlogSource {
         "replication")
     structOf(defs.head._1, defs.head._2)
   }
+
+  /** `table`'s TABLE_MAP definitions per binlog file of a (path,
+    * content) frame, as (path, definition) in file-ordinal order —
+    * the schema-discovery walk [[inferSchema]] and
+    * [[graft.streaming.BinlogEvolvingCdc]] share. Bounded collect: one
+    * row per (file, table); [[BinlogFormat.scanTableMaps]] never decodes
+    * row images. */
+  def tableDefs(files: DataFrame, table: String)
+      : Seq[(String, BinlogFormat.TableMap)] =
+    asFiles(files)
+      .flatMap { case (path, bytes) =>
+        BinlogFormat.scanTableMaps(bytes).collect {
+          case ((_, t), tm) if t == table => (path, tm)
+        }
+      }(Encoders.kryo[(String, BinlogFormat.TableMap)])
+      .collect().toSeq
+      .sortBy(d => fileOrdinal(d._1))
 
   /** One TABLE_MAP definition → its Spark schema: [[sparkTypeOf]] per
     * column, named from COLUMN_NAME metadata when present, else
@@ -448,10 +484,7 @@ object BinlogSource {
     * validation never decodes row images a second time. Bounded collect:
     * one row per FILE (a fleet's file count, not rows). */
   def rotateChain(s: SparkSession, dir: String): Seq[(String, Option[String])] =
-    s.read.format("binaryFile").load(dir)
-      .select("path", "content")
-      .as[(String, Array[Byte])](
-        Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+    asFiles(load(s, dir))
       .map { case (path, bytes) =>
         (path.substring(path.lastIndexOf('/') + 1),
           BinlogFormat.scanRotate(bytes).getOrElse(""))

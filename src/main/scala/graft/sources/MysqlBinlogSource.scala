@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.{Map => JuMap}
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -186,34 +185,26 @@ private[sources] final class BinlogBatch(schema: StructType,
     Array(BinlogRangePartition(sf, sp, ef, ep))
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new BinlogRangeReaderFactory(schema, cfg)
+    new BinlogPartitionReaderFactory(schema, cfg)
 }
 
-/** One partition: the range is one ordered dump (the same
-  * one-connection-per-primary shape as the stream). */
+/** A partition of the source: its changes (this table's, in commit
+  * order) and the `_seq` of the first. */
+private[sources] sealed trait BinlogPartition extends InputPartition {
+  def changes(cfg: MysqlBinlogSource.Config): IndexedSeq[BinlogFormat.RowChange]
+  def baseSeq: Long
+}
+
+/** A batch read's partition: the range is one ordered dump (the same
+  * one-connection-per-primary shape as the stream), run in the TASK
+  * that reads it; `_seq` is the range's 0-based commit-order ordinal. */
 private[sources] final case class BinlogRangePartition(
     fromFile: String, fromPos: Long, endFile: String, endPos: Long)
-    extends InputPartition
-
-private[sources] final class BinlogRangeReaderFactory(schema: StructType,
-    cfg: MysqlBinlogSource.Config) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[BinlogRangePartition]
-    val payloadTypes = StructType(schema.dropRight(3))
-      .fields.map(_.dataType).toIndexedSeq
-    new PartitionReader[InternalRow] {
-      // the dump happens lazily in the TASK, on first next()
-      private lazy val changes = cfg.client()
-        .tailUntil(part.fromFile, part.fromPos, part.endFile, part.endPos)
-        .changes.filter(cfg.matches)
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < changes.size }
-      override def get(): InternalRow =
-        BinlogPartitionReaderFactory.internalRow(
-          changes(i), i.toLong, payloadTypes, schema.size)
-      override def close(): Unit = ()
-    }
-  }
+    extends BinlogPartition {
+  def baseSeq: Long = 0L
+  def changes(cfg: MysqlBinlogSource.Config): IndexedSeq[BinlogFormat.RowChange] =
+    cfg.client().tailUntil(fromFile, fromPos, endFile, endPos)
+      .changes.filter(cfg.matches)
 }
 
 /** The stream offset: the primary's (file, pos) the NEXT dump resumes
@@ -326,7 +317,7 @@ private[sources] final class BinlogMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BinlogPartitionReaderFactory(schema)
+    new BinlogPartitionReaderFactory(schema, cfg)
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[BinlogSourceOffset]
@@ -344,51 +335,42 @@ private[sources] final class BinlogMicroBatchStream(
 
 /** One partition per micro-batch: the replication stream is one
   * ordered connection per primary (see [[MysqlBinlogSource]]'s scale
-  * note); `baseSeq` anchors the rows' `_seq` so it is globally
-  * monotonic and replay-stable across batches. */
+  * note), already tailed on the driver; `baseSeq` anchors the rows'
+  * `_seq` so it is globally monotonic and replay-stable across
+  * batches. */
 private[sources] final case class BinlogInputPartition(
-    changes: Seq[BinlogFormat.RowChange], baseSeq: Long)
-    extends InputPartition
+    rows: IndexedSeq[BinlogFormat.RowChange], baseSeq: Long)
+    extends BinlogPartition {
+  def changes(cfg: MysqlBinlogSource.Config): IndexedSeq[BinlogFormat.RowChange] =
+    rows
+}
 
-private[sources] final class BinlogPartitionReaderFactory(schema: StructType)
-    extends PartitionReaderFactory {
-  private val payload = StructType(schema.dropRight(3))
+/** The one reader of both partition kinds: each change becomes the
+  * source's internal row through [[BinlogSource.changeRow]] — payload
+  * columns in TABLE_MAP order, then op / `_seq` / `_tbl` — converted
+  * straight to Catalyst's form, so the stream and batch frames cannot
+  * diverge. */
+private[sources] final class BinlogPartitionReaderFactory(schema: StructType,
+    cfg: MysqlBinlogSource.Config) extends PartitionReaderFactory {
+  private val payloadTypes = schema.fields.dropRight(3).map(_.dataType).toIndexedSeq
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[BinlogInputPartition]
-    val fieldTypes = payload.fields.map(_.dataType).toIndexedSeq
+    val part = p.asInstanceOf[BinlogPartition]
     new PartitionReader[InternalRow] {
+      // a batch range dumps here, in the task, on first next()
+      private lazy val changes = part.changes(cfg)
       private var i = -1
-      override def next(): Boolean = { i += 1; i < part.changes.size }
+      override def next(): Boolean = { i += 1; i < changes.size }
       override def get(): InternalRow =
-        BinlogPartitionReaderFactory.internalRow(
-          part.changes(i), part.baseSeq + i, fieldTypes, schema.size)
+        new GenericInternalRow(BinlogSource.changeRow(changes(i),
+          part.baseSeq + i, payloadTypes, schema.size,
+          conv = BinlogPartitionReaderFactory.toCatalyst))
       override def close(): Unit = ()
     }
   }
 }
 
 private[sources] object BinlogPartitionReaderFactory {
-  /** One change → the source's internal row: payload columns in
-    * TABLE_MAP order, then op / `seq` / `_tbl` — shared by the stream
-    * and batch readers so the two emitted frames cannot diverge. */
-  private[sources] def internalRow(ch: BinlogFormat.RowChange, seq: Long,
-      payloadTypes: IndexedSeq[DataType], nOut: Int): InternalRow = {
-    val n = payloadTypes.size
-    val img = BinlogSource.surfacedImage(ch, n)
-    val vals = new Array[Any](nOut)
-    var k = 0
-    while (k < n) {
-      vals(k) = toCatalyst(
-        BinlogSource.coerce(img(k), payloadTypes(k)), payloadTypes(k))
-      k += 1
-    }
-    vals(n) = UTF8String.fromString(ch.op)
-    vals(n + 1) = seq
-    vals(n + 2) = UTF8String.fromString(ch.table)
-    new GenericInternalRow(vals)
-  }
-
   /** External JVM value ([[BinlogSource.coerce]]'s output range) →
     * Catalyst internal representation. Hand-rolled instead of the
     * private CatalystTypeConverters: the decode surface is a closed

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.operators.CdcTransform
-import graft.sources.{BinlogFormat, BinlogSource}
+import graft.sources.BinlogSource
 
 /** Schema-evolving CDC ingestion at the WIRE layer — the binlog-path
   * twin of [[EvolvingCdc]], closing the reference's "No DDL replication
@@ -15,7 +15,7 @@ import graft.sources.{BinlogFormat, BinlogSource}
   * wire types + signedness + column names), so evolution is exact:
   *
   *   - per micro-batch, the files' definitions of `table` are scanned
-  *     (one bounded row per file — [[BinlogFormat.scanTableMaps]] never
+  *     (one bounded row per file — [[BinlogSource.tableDefs]] never
   *     decodes row images) and folded into the running schema in
   *     file-ordinal order;
   *   - a definition must be PREFIX-COMPATIBLE with the running schema
@@ -65,20 +65,8 @@ object BinlogEvolvingCdc {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val files = batch.toDF().persist() // scanned twice: defs + decode
         try {
-          val defs = files.select("path", "content")
-            .as[(String, Array[Byte])](
-              Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-            .flatMap { case (path, bytes) =>
-              BinlogFormat.scanTableMaps(bytes).collect {
-                case ((_, t), tm) if t == table =>
-                  (path, tm.cols, tm.colNames)
-              }
-            }(Encoders.kryo[(String, IndexedSeq[BinlogFormat.ColumnDef],
-              IndexedSeq[String])])
-            .collect()
-            .sortBy(d => BinlogSource.fileOrdinal(d._1))
-          defs.foreach { case (path, cols, names) =>
-            val st = BinlogSource.structOf(cols, names)
+          BinlogSource.tableDefs(files, table).foreach { case (path, tm) =>
+            val st = BinlogSource.structOf(tm.cols, tm.colNames)
             current match {
               case None => current = Some(st)
               case Some(cur) =>

@@ -53,9 +53,11 @@ final class CdcPipeline(
     *
     * `beforeImage = Some((keyCol, beforeKeyCol))` routes the batch through
     * [[CdcTransform.stampWithBeforeImage]] so a PK-changing update also
-    * tombstones its old key when `fixPkUpdateOrphans` is on
-    * (`ReplicationConfig.fixPkUpdateOrphans`; default preserves the
-    * reference's orphaning behavior — T28).
+    * tombstones its old key when the `fixPkUpdateOrphans` argument is
+    * on (default off preserves the reference's orphaning behavior —
+    * T28). It is a parameter of this call only: no env var or config
+    * field sets it, since `Main`'s `cdc` change stream carries no
+    * before-image to repair from.
     *
     * `onBatch` runs on the DRIVER against each raw micro-batch before the
     * stamp — the hook stream-side validators plug into (e.g.

@@ -13,15 +13,7 @@ class GraftConfigSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(c.replication.parallelTables == 1)
     assert(c.replication.tables.isEmpty)
     assert(!c.replication.dropExisting)
-    // extension flag defaults to PARITY (orphan preserved) — T28
-    assert(!c.replication.fixPkUpdateOrphans)
     assert(c.source.port == 3306 && c.target.port == 8123)
-  }
-
-  test("fix-PK-update-orphans opt-in parses from env (extension, T28)") {
-    val c = GraftConfig.fromEnv(
-      Map("REPLICATION_FIX_PK_UPDATE_ORPHANS" -> "TRUE"))
-    assert(c.replication.fixPkUpdateOrphans)
   }
 
   test("table list: comma-split + trim, empties dropped (src/config.py:84-87)") {

@@ -230,6 +230,36 @@ class BinlogFormatSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](parse(noFde))
   }
 
+  test("malformed frames: parse and both scans reject the same inputs") {
+    // the scans frame like parse does, so chain validation and schema
+    // discovery cannot accept a file the decode then rejects
+    val fdeLen = 116 // the golden FDE; its alg byte sits at fdeLen - 5
+    val noFde = Magic ++ golden.slice(4 + fdeLen, golden.length)
+    val alg7 = golden.clone()
+    alg7(4 + fdeLen - 5) = 7
+    // a CRC32 file (golden FDE with alg = 1, its CRC recomputed) whose
+    // next event is a bare 19-byte TABLE_MAP header: no room for a CRC
+    val fde1 = golden.slice(4, 4 + fdeLen)
+    fde1(fdeLen - 5) = 1
+    val crc = new java.util.zip.CRC32()
+    crc.update(fde1, 0, fdeLen - 4)
+    java.nio.ByteBuffer.wrap(fde1, fdeLen - 4, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(crc.getValue.toInt)
+    val shortEvent = Magic ++ fde1 ++
+      hex("00 00 00 00 13 01 00 00 00 13 00 00 00 8B 00 00 00 00 00")
+    assert(parse(Magic ++ fde1).changes.isEmpty) // the FDE alone is fine
+    val readers = Seq[(String, Array[Byte] => Any)](
+      "parse" -> (b => parse(b)),
+      "scanRotate" -> (b => scanRotate(b)),
+      "scanTableMaps" -> (b => scanTableMaps(b)))
+    for ((input, bytes) <- Seq("no FDE first" -> noFde, "FDE alg 7" -> alg7,
+           "event shorter than header + CRC" -> shortEvent);
+         (reader, f) <- readers)
+      withClue(s"$reader on $input: ") {
+        intercept[IllegalArgumentException](f(bytes))
+      }
+  }
+
   test("robustness property: truncation/corruption fails cleanly, never hangs") {
     // A CDC source swallows whatever a crashed server left on disk: for
     // ANY truncation point and ANY single-byte corruption the parser

@@ -617,11 +617,9 @@ class MysqlProtocolSpec extends AnyFunSuite {
     // feed up to (but not including) the first XID: a torn transaction
     var stop = false
     while (!stop && off < bytes.length) {
-      val tpe = bytes(off + 4) & 0xff
-      val size = java.nio.ByteBuffer.wrap(bytes, off + 9, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-      if (tpe == BinlogFormat.XidEvent) stop = true
-      else { dec.onEvent(bytes, off, bytes.length - off); off += size }
+      val h = BinlogFormat.header(bytes, off, bytes.length - off)
+      if (h.tpe == BinlogFormat.XidEvent) stop = true
+      else { dec.onEvent(bytes, off, bytes.length - off); off += h.size }
     }
     assert(dec.pendingCount == 1 && dec.drainCommitted().isEmpty)
     // the reconnect constructs a FRESH decoder (the client's loop): it
