@@ -4,16 +4,32 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.GraftConfig
 import graft.operators.SnapshotReplicator
-import graft.streaming.CdcPipeline
+import graft.streaming.{BoundedStream, CdcPipeline}
 
 /** Replicator entry point — O1 mode dispatch (`src/main.py:65-97` parity):
   * env-configured, `snapshot` → batch copy with count validation, `cdc` →
-  * initial sync + change-stream apply. Backends: directory paths here
-  * (harness layout); swap in [[graft.sources.JdbcConnectors]] for real
-  * MySQL/ClickHouse endpoints — operator code is backend-agnostic.
+  * the binlog replica ([[graft.streaming.CdcPipeline.replicate]]).
+  * Snapshot backends: directory paths here (harness layout); swap in
+  * [[graft.sources.JdbcConnectors]] for real MySQL/ClickHouse endpoints —
+  * operator code is backend-agnostic.
   *
-  * Usage: `runMain graft.Main <sourceDir> <warehouseDir> [changeStreamDir]`
-  * with `REPLICATION_*` env vars as in the reference.
+  * Usage: `runMain graft.Main <sourceDir> <warehouseDir>` with
+  * `REPLICATION_*` env vars as in the reference. `<sourceDir>` holds one
+  * `<table>.parquet` per source table (the harness layout); the target is
+  * `<warehouseDir>/<table>.parquet`, the stream checkpoints
+  * `<warehouseDir>/_checkpoints/<table>`.
+  *
+  * `cdc` mode tails the primary named by `MYSQL_HOST`, `MYSQL_PORT`,
+  * `MYSQL_USER`, `MYSQL_PASSWORD` (or `MYSQL_PASSWORD_FILE`) and, when
+  * set, `MYSQL_DATABASE`. In order: capture the primary's binlog
+  * position once (`SHOW MASTER STATUS`), copy each `<table>.parquet`
+  * under one `_version`, then stream each table's binlog rows from the
+  * capture. A restart resumes a table from its checkpoint when the
+  * checkpoint holds a committed batch; otherwise it drops that
+  * checkpoint and redoes the capture and the copy, which replaces the
+  * target. When every table resumes, nothing is captured.
+  * `GRAFT_CDC_ONCE=true` drains what the log holds and exits; otherwise
+  * the streams run at the reference's 5-second cadence.
   *
   * The mode bodies are the public [[runSnapshot]]/[[runCdc]] methods so
   * the whole pipeline (not just its operators) is drivable end-to-end in
@@ -22,9 +38,8 @@ import graft.streaming.CdcPipeline
 object Main {
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: graft.Main <sourceDir> <warehouseDir> [changeStreamDir]")
-    val Array(sourceDir, warehouseDir) = args.take(2)
+    require(args.length == 2, "usage: graft.Main <sourceDir> <warehouseDir>")
+    val Array(sourceDir, warehouseDir) = args
     val cfg = GraftConfig.fromEnv()
     val spark = Sessions.start(Sessions.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -43,9 +58,7 @@ object Main {
         if (results.exists(!_.success)) sys.exit(1)
 
       case "cdc" =>
-        val streamDir = args.lift(2).getOrElse(
-          s"$sourceDir/_changes") // change-stream landing dir
-        runCdc(spark, cfg, sourceDir, warehouseDir, streamDir,
+        runCdc(spark, cfg, sourceDir, warehouseDir,
           once = sys.env.get("GRAFT_CDC_ONCE").contains("true"))
     }
     spark.stop()
@@ -60,67 +73,28 @@ object Main {
     rep.run(cfg.replication.tables, cfg.replication.parallelTables)
   }
 
-  /** CDC mode: initial sync of the configured tables with one version
-    * stamp (T7), then the change-stream apply — change rows
-    * (op/seq/table_name columns) from `streamDir`, one streaming query
-    * per replicated table with per-table checkpoints, like the
-    * reference's per-table apply loop.
+  /** CDC mode: the binlog replica of the configured tables
+    * ([[graft.streaming.CdcPipeline.replicate]]), one streaming query
+    * per table with per-table checkpoints, like the reference's
+    * per-table apply loop; blocks until the queries end.
     *
-    * `once=true` drains available data and returns (testable /
+    * `once=true` drains what the log holds and returns (testable /
     * batch-catchup mode); otherwise runs continuously at the reference's
     * 5-second cadence. `initialVersion`/`versionOf` are injectable for
     * deterministic tests; defaults are µs wall clock like the reference
     * (`src/cdc_replicator.py:147-148`). */
   def runCdc(spark: SparkSession, cfg: GraftConfig, sourceDir: String,
-             warehouseDir: String, streamDir: String, once: Boolean,
+             warehouseDir: String, once: Boolean,
              initialVersion: Long = System.currentTimeMillis() * 1000L,
              versionOf: Long => Long = _ => System.currentTimeMillis() * 1000L)
       : Unit = {
     val pipe = new CdcPipeline(spark, warehouseDir,
       s"$warehouseDir/_checkpoints")
-    val rep = new SnapshotReplicator(spark, sourceDir, warehouseDir)
-    rep.tablesToReplicate(cfg.replication.tables).foreach { t =>
-      val snap = spark.read.parquet(s"$sourceDir/$t.parquet")
-        .withColumn("_seq", org.apache.spark.sql.functions
-          .monotonically_increasing_id())
-      pipe.initialSync(snap, t, initialVersion, "_seq")
-    }
+    val tables = new SnapshotReplicator(spark, sourceDir, warehouseDir)
+      .tablesToReplicate(cfg.replication.tables)
     val trigger =
       if (once) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    // stream schema: from landed change files if any exist; on a fresh
-    // deployment (empty landing dir) derive it — the UNION of every
-    // replicated table's source schema (one shared landing dir carries
-    // all tables' change rows, so a single-table schema would silently
-    // null out other tables' payload columns) + the change-envelope
-    // columns — instead of dying on schema inference before the first
-    // change arrives
-    val streamSchema = scala.util.Try(spark.read.parquet(streamDir).schema)
-      .getOrElse {
-        val merged = rep.tablesToReplicate(cfg.replication.tables)
-          .foldLeft(new org.apache.spark.sql.types.StructType()) { (acc, t) =>
-            spark.read.parquet(s"$sourceDir/$t.parquet").schema
-              .foldLeft(acc) { (a, f) =>
-                a.fields.find(_.name == f.name) match {
-                  case Some(ex) =>
-                    require(ex.dataType == f.dataType,
-                      s"conflicting types for shared column ${f.name}: " +
-                        s"${ex.dataType.sql} vs ${f.dataType.sql} (table $t)")
-                    a
-                  case None => a.add(f)
-                }
-              }
-          }
-        merged
-          .add("op", org.apache.spark.sql.types.StringType)
-          .add("seq", org.apache.spark.sql.types.LongType)
-          .add("table_name", org.apache.spark.sql.types.StringType)
-      }
-    val stream = spark.readStream.schema(streamSchema).parquet(streamDir)
-    val queries = rep.tablesToReplicate(cfg.replication.tables).map { t =>
-      pipe.start(stream, t, opCol = "op", seqCol = "seq",
-        tables = Seq(t), tableCol = Some("table_name"),
-        versionOf = versionOf, trigger = trigger)
-    }
-    queries.foreach(_.awaitTermination())
+    BoundedStream.await(pipe.replicate(cfg.source, tables, sourceDir, trigger,
+      initialVersion, versionOf): _*)
   }
 }

@@ -24,8 +24,7 @@ final case class ReplicationConfig(
     mode: String = "snapshot",              // "snapshot" | "cdc" (src/config.py:17-19)
     tables: Seq[String] = Seq.empty,        // empty = all tables
     batchSize: Int = 50000,                 // src/config.py:72
-    parallelTables: Int = 1,                // src/config.py:75
-    dropExisting: Boolean = false)
+    parallelTables: Int = 1)                // src/config.py:75
 
 final case class GraftConfig(
     source: SourceConfig,
@@ -72,8 +71,6 @@ object GraftConfig {
         mode = mode,
         tables = parseTableList(get("REPLICATION_TABLES", "")),
         batchSize = get("REPLICATION_BATCH_SIZE", "50000").toInt,
-        parallelTables = get("REPLICATION_PARALLEL_TABLES", "1").toInt,
-        dropExisting = get("REPLICATION_DROP_EXISTING", "false")
-          .toLowerCase == "true"))
+        parallelTables = get("REPLICATION_PARALLEL_TABLES", "1").toInt))
   }
 }

@@ -1,12 +1,13 @@
 package graft.queries
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
 import graft.operators.{CdcTransform, LiveView, SnapshotReplicator}
-import graft.sources.{BinlogFixture, BinlogFixtureServer, BinlogFormat, BinlogSocketClient, BinlogSource}
+import graft.model.SourceConfig
+import graft.sources.{BinlogFixture, BinlogFixtureServer, BinlogFormat, BinlogSocketClient, BinlogSource, MysqlBinlogSource}
 import graft.sources.BinlogFixture.{Change, TableDef}
 import graft.sources.BinlogFormat.ColumnDef
 import graft.streaming.{BatchDirs, BoundedStream, CdcPipeline}
@@ -117,9 +118,8 @@ object PipelineOps {
     Files.createSymbolicLink(java.nio.file.Paths.get(srcDir, "events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     val stream = withEventsOp(s.readStream.schema(schema).parquet(srcDir))
-    val q = pipe.start(stream, "events_cdc", opCol = "op",
-      seqCol = "event_id", versionOf = _ => 1L)
-    q.awaitTermination()
+    BoundedStream.await(pipe.start(stream, "events_cdc", opCol = "op",
+      seqCol = "event_id", versionOf = _ => 1L))
 
     eventsLive(pipe.applied("events_cdc"))
   }
@@ -144,9 +144,8 @@ object PipelineOps {
     def drainWave(pred: org.apache.spark.sql.Column): Unit = {
       ev.filter(pred).write.mode("append").parquet(srcDir)
       val stream = withEventsOp(s.readStream.schema(schema).parquet(srcDir))
-      val q = pipe.start(stream, "events_reg", opCol = "op",
-        seqCol = "event_id", versionOf = _ => 1L)
-      q.awaitTermination()
+      BoundedStream.await(pipe.start(stream, "events_reg", opCol = "op",
+        seqCol = "event_id", versionOf = _ => 1L))
     }
     drainWave(col("event_id") < mid)
     val name = pipe.registerLiveView("events_reg", Seq("user_id"))
@@ -194,9 +193,9 @@ object PipelineOps {
     val pipe = new CdcPipeline(s, tgt, ckp)
     val changes = graft.streaming.DebeziumEnvelope.parse(
       s.readStream.text(landing), "value", rowSchema)
-    val q = pipe.start(changes, "events_dbz", opCol = "op", seqCol = "_seq",
-      tables = Seq("events"), tableCol = Some("_tbl"), versionOf = _ => 1L)
-    q.awaitTermination()
+    BoundedStream.await(pipe.start(changes, "events_dbz", opCol = "op",
+      seqCol = "_seq", tables = Seq("events"), tableCol = Some("_tbl"),
+      versionOf = _ => 1L))
     eventsLive(pipe.applied("events_dbz"))
   }
 
@@ -384,18 +383,15 @@ object PipelineOps {
     // (the batch path validates up front via rotateChain; the stream
     // used to trust the name ordinal alone)
     val guard = new BinlogSource.RotateChainGuard
-    def drain(): Unit = {
-      val q = pipe.start(
-        BinlogSource.changesStream(s, landing, "events", BinlogRowSchema,
-          chainCols = true),
-        "events_binlog", opCol = "op", seqCol = "_seq",
-        tables = Seq("events"), tableCol = Some("_tbl"),
-        versionOf = _ => 1L,
-        onBatch = Some(b => b.select("_file", "_next").distinct().collect()
-          .foreach(r => guard.observe(r.getString(0), Option(r.getString(1))))),
-        dropCols = Seq("_file", "_next"))
-      q.awaitTermination()
-    }
+    def drain(): Unit = BoundedStream.await(pipe.start(
+      BinlogSource.changesStream(s, landing, "events", BinlogRowSchema,
+        chainCols = true),
+      "events_binlog", opCol = "op", seqCol = "_seq",
+      tables = Seq("events"), tableCol = Some("_tbl"),
+      versionOf = _ => 1L,
+      onBatch = Some(b => b.select("_file", "_next").distinct().collect()
+        .foreach(r => guard.observe(r.getString(0), Option(r.getString(1))))),
+      dropCols = Seq("_file", "_next")))
     land(landing, staged.files.take(2))
     drain()
     val appliedWave1 = pipe.applied("events_binlog").count()
@@ -882,9 +878,9 @@ object PipelineOps {
   /** `mysql-binlog` V2 source options reading the accounts table from
     * the start of `srv`'s log (t44 streaming, t45 batch). */
   private def binlogSourceOptions(srv: BinlogFixtureServer): Map[String, String] =
-    Map("host" -> "127.0.0.1", "port" -> srv.port.toString,
-      "user" -> replUser, "password" -> replPassword, "table" -> "accounts",
-      "startFile" -> PrimaryBin, "startPos" -> "4")
+    MysqlBinlogSource.options(
+      SourceConfig("127.0.0.1", srv.port, replUser, replPassword),
+      "accounts", Some(PrimaryBin -> 4L))
 
   /** Shared scaffold of the o21/o22 reference-topology gates — the
     * sampled `accounts` table (orders %5 keys), its insert history T
@@ -949,23 +945,17 @@ object PipelineOps {
     RefTopology(keys, cols, txnsT, txnsW1, nOverlap, snapshot)
   }
 
-  /** Append tailed accounts change rows to the target as ONE batch at
-    * version 2 — the initial copy was version 1, the reference's
-    * batch-granular `_version` (cdc_replicator.py:269-271). */
-  private def appendTail(changes: DataFrame, tgt: String): Unit =
-    CdcTransform.stampBatch(changes, opCol = "op", seqCol = "_seq",
-        batchVersionMicros = 2L)
-      .drop("op", "_seq", "_tbl")
-      .write.mode(SaveMode.Append).parquet(s"$tgt/accounts.parquet")
-
-  /** The shared apply half of o21/o22: [[appendTail]] the tailed changes
-    * to the pipeline's accounts target and read back the deduping live
-    * view — the ReplacingMergeTree heal that absorbs the double-applied
-    * overlap (at-least-once by design, `README.md:480-497`). */
-  private def refApplyTail(s: SparkSession, pipe: CdcPipeline, tgt: String,
+  /** The shared apply half of o21/o22: land the tailed changes in the
+    * pipeline's accounts target as ONE batch at version 2 — the initial
+    * copy was version 1, the reference's batch-granular `_version`
+    * (cdc_replicator.py:269-271) — and read back the deduping live view,
+    * the ReplacingMergeTree heal that absorbs the double-applied overlap
+    * (at-least-once by design, `README.md:480-497`). */
+  private def refApplyTail(s: SparkSession, pipe: CdcPipeline,
       changes: Vector[graft.sources.BinlogFormat.RowChange]): DataFrame = {
-    appendTail(BinlogSource.collectedChanges(s, changes, "accounts",
-      AccountsSchema), tgt)
+    pipe.land(BinlogSource.collectedChanges(s, changes, "accounts",
+      AccountsSchema), "accounts", "op", "_seq", version = 2L,
+      dropCols = Seq("_tbl"))
     graft.GateCache.cache(LiveView.live(pipe.applied("accounts"), pks = Seq("id")))
   }
 
@@ -1032,7 +1022,7 @@ object PipelineOps {
         "post-copy offset unexpectedly replays the overlap")
       // the live view heals the double-apply: per key the max-version
       // row wins; the overlap's duplicates collapse, deletes tombstone
-      val live = refApplyTail(s, pipe, tgt, r.changes)
+      val live = refApplyTail(s, pipe, r.changes)
       requireSameRows(live, topo.snapshot,
         "live view diverges from the final source state")
       live
@@ -1111,7 +1101,7 @@ object PipelineOps {
         s"final offset ${r.pos} != log end $fullLen")
       val expected = topo.snapshot.withColumn("bal", col("bal") +
         when(col("id") % 4 === 0, 1000.0).otherwise(0.0))
-      val live = refApplyTail(s, pipe, tgt, r.changes)
+      val live = refApplyTail(s, pipe, r.changes)
       requireSameRows(live, expected,
         "live view diverges from the final source state (incl. the " +
           "mid-tail wave)")
@@ -1142,32 +1132,27 @@ object PipelineOps {
     * its offsets); and the live view equals the o21 snapshot algebra ⇒
     * the same oracle. */
   def binlogDsv2StreamCdc(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.MysqlBinlogSource
     val Seq(tgt, ckp) = dirs("graft_dsv2", "tgt", "ckp")
+    val pipe = new CdcPipeline(s, tgt, ckp)
     val topo = refTopology(s, dir)
     val (srv, _) = topo.serve(IndexedSeq(topo.txnsT, topo.txnsT ++ topo.txnsW1))
     try {
-      def drain(): Unit = BoundedStream.drain(
+      // the emitted frame IS collectedChanges' shape — the same stamped
+      // apply the imperative tails use
+      def drain(): Unit = BoundedStream.await(pipe.start(
         s.readStream.format("mysql-binlog")
           .schema(MysqlBinlogSource.withMeta(AccountsSchema))
           .options(binlogSourceOptions(srv))
-          .load()
-          .writeStream
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) =>
-              // the emitted frame IS collectedChanges' shape — the same
-              // stamped apply the imperative tails use
-              appendTail(b.toDF(), tgt)
-          }, ckp)
+          .load(),
+        "accounts", opCol = "op", seqCol = "_seq", tableCol = Some("_tbl"),
+        versionOf = _ => 2L))
       drain() // run 1: the T history
-      val afterT = s.read.parquet(s"$tgt/accounts.parquet").count()
+      val afterT = pipe.applied("accounts").count()
       require(afterT == topo.keys.size,
         s"run 1 landed $afterT rows, expected T = ${topo.keys.size}")
       srv.reveal(PrimaryBin) // the log grows
       drain() // run 2: FRESH query, SAME checkpoint — Spark's offset log
-      val landed = graft.GateCache.cache(
-        s.read.parquet(s"$tgt/accounts.parquet"))
+      val landed = graft.GateCache.cache(pipe.applied("accounts"))
       val total = (topo.keys.size + topo.nOverlap).toLong
       require(landed.count() == total,
         s"run 2 landed ${landed.count()} != $total — the offset log " +
@@ -1199,7 +1184,6 @@ object PipelineOps {
     * bounded frame applied through the same stamped apply yields the
     * o21 topology state ⇒ the same oracle. */
   def binlogBatchReadCdc(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.MysqlBinlogSource
     val topo = refTopology(s, dir)
     // the poison wave: writes landing AFTER the bounded read's end —
     // a bound leak would flip survivors' bal by 9999
@@ -1355,7 +1339,7 @@ object PipelineOps {
     import ledger.{m, ov, txns}
     val tracker = new BinlogSource.GtidTracker(gtidFile)
     def run(pipe: CdcPipeline, landing: String, skip: GtidSet): Unit =
-      pipe.start(
+      BoundedStream.await(pipe.start(
         BinlogSource.changesStream(s, landing, "ledger", LedgerSchema,
           skipGtids = skip, gtidCol = true),
         "ledger", opCol = "op", seqCol = "_seq", versionOf = _ => 1L,
@@ -1364,8 +1348,7 @@ object PipelineOps {
         // could make a failover skip a crash-lost batch forever
         onBatchApplied = Some(b => tracker.observe(b.select("_gtid")
           .distinct().collect().map(_.getString(0)))),
-        dropCols = Seq("_gtid"))
-        .awaitTermination()
+        dropCols = Seq("_gtid")))
     // phase A: tail server A, applied set persisted per micro-batch
     run(new CdcPipeline(s, tgt, ckpA), landingA, GtidSet.Empty)
     val persisted = BinlogSource.GtidTracker.load(gtidFile)
@@ -2378,9 +2361,9 @@ object PipelineOps {
       .withColumn("op", lit("I"))
       .withColumn("_tbl",
         when(col("user_id") % 2 === 0, "events_a").otherwise("events_b"))
-    val q = pipe.start(stream, "events_a", opCol = "op", seqCol = "event_id",
-      tables = Seq("events_a"), tableCol = Some("_tbl"), versionOf = _ => 1L)
-    q.awaitTermination()
+    BoundedStream.await(pipe.start(stream, "events_a", opCol = "op",
+      seqCol = "event_id", tables = Seq("events_a"), tableCol = Some("_tbl"),
+      versionOf = _ => 1L))
     val cdcRows = Seq(
       ("cdc_filter", "events_a", pipe.applied("events_a").count(), true))
 

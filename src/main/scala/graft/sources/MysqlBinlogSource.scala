@@ -12,6 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.model.SourceConfig
 
 /** `spark.readStream.format("mysql-binlog")` — the replication-protocol
   * tail as a first-class DataSource V2 streaming source: the idiomatic
@@ -76,6 +77,18 @@ object MysqlBinlogSource {
     * exact frame [[BinlogSource.collectedChanges]] emits. */
   def withMeta(rowSchema: StructType): StructType = rowSchema
     .add("op", StringType).add("_seq", LongType).add("_tbl", StringType)
+
+  /** The reader options that tail `table` from `source`'s binlog,
+    * starting at `start` (file, pos). With no `start` the stream's
+    * initial offset is the primary's position when it first plans; an
+    * empty `source.database` sets no database filter. */
+  def options(source: SourceConfig, table: String,
+              start: Option[(String, Long)]): Map[String, String] =
+    Map("host" -> source.host, "port" -> source.port.toString,
+      "user" -> source.user, "password" -> source.password,
+      "database" -> source.database, "table" -> table) ++
+      start.toSeq.flatMap { case (f, p) =>
+        Seq("startFile" -> f, "startPos" -> p.toString) }
 
   private[sources] def validateSchema(schema: StructType): Unit = {
     require(schema.size > 3 &&

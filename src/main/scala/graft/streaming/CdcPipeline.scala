@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.model.SourceConfig
 import graft.operators.CdcTransform
+import graft.sources.{BinlogSocketClient, HadoopFs, MysqlBinlogSource, ParquetCatalog}
 
 /** CDC mode as Structured Streaming — the reference's binlog apply loop
   * (`CDCReplicator.run`, `src/cdc_replicator.py:296-414`) re-expressed:
@@ -20,9 +22,10 @@ import graft.operators.CdcTransform
   *     [[graft.operators.LiveView]] dedup exactly like ReplacingMergeTree;
   *   - F1 batch-granular version stamp (`:160`) → one stamp per micro-batch
   *     in `foreachBatch` (preserves the duplicate-`_version` semantics);
-  *   - T7 initial sync → [[initialSync]] bulk append with a single
-  *     `_version`, then the stream starts (offset handoff is the
-  *     checkpoint's job);
+  *   - T7 initial sync → [[initialSync]] bulk copy with a single
+  *     `_version`; [[replicate]] captures the binlog position BEFORE the
+  *     copy and streams from it (the offset handoff is the checkpoint's
+  *     job);
   *   - T8/T9 reconnect/backoff + graceful shutdown → Spark restart
   *     semantics on the same checkpoint dir; `query.stop()`.
   *
@@ -36,14 +39,36 @@ final class CdcPipeline(
 
   /** T7: bulk-load the current snapshot with one version stamp for the
     * whole table (`_sync_table_with_cdc_columns`,
-    * `src/cdc_replicator.py:263-278`). */
+    * `src/cdc_replicator.py:263-278`). The copy REPLACES the target: a
+    * restart that redoes the copy (no stream offset was committed after
+    * the first one) must not leave the first copy's rows behind, where a
+    * key deleted between the two captures would come back from. */
   def initialSync(snapshot: DataFrame, table: String,
                   versionMicros: Long, seqCol: String): Unit =
-    snapshot
-      .withColumn("op", lit(CdcTransform.Insert))
-      .transform(df => CdcTransform.stampBatch(df, "op", seqCol, versionMicros))
-      .drop("op", seqCol) // bookkeeping absorbed into _ingest_seq
-      .write.mode("append").parquet(s"$targetDir/$table.parquet")
+    land(snapshot.withColumn("op", lit(CdcTransform.Insert)), table, "op",
+      seqCol, versionMicros, mode = SaveMode.Overwrite)
+
+  /** The one landing step of the copy, the stream batches and the gates'
+    * one-shot tails: stamp `changes` with ONE `version` (through
+    * [[CdcTransform.stampWithBeforeImage]] when `beforeImage` names the
+    * key columns), drop the bookkeeping columns (`opCol`, `seqCol`,
+    * `dropCols`; absorbed into `_ingest_seq`) so applied rows share the
+    * initial-sync schema (source cols + meta cols), and write them to
+    * `<table>.parquet`. */
+  def land(changes: DataFrame, table: String, opCol: String, seqCol: String,
+           version: Long, dropCols: Seq[String] = Nil,
+           beforeImage: Option[(String, String)] = None,
+           fixPkUpdateOrphans: Boolean = false,
+           mode: SaveMode = SaveMode.Append): Unit = {
+    val stamped = beforeImage match {
+      case Some((keyCol, beforeKeyCol)) =>
+        CdcTransform.stampWithBeforeImage(changes, opCol, seqCol,
+          lit(version), keyCol, beforeKeyCol, fixPkUpdateOrphans)
+      case None => CdcTransform.stampBatch(changes, opCol, seqCol, version)
+    }
+    stamped.drop((Seq(opCol, seqCol) ++ dropCols): _*)
+      .write.mode(mode).parquet(s"$targetDir/$table.parquet")
+  }
 
   /** Start the change-stream apply: change rows (op column I/U/D) →
     * batch-stamped upsert rows appended to the target. `versionOf` maps a
@@ -102,18 +127,8 @@ final class CdcPipeline(
         if (onBatch.isDefined || onBatchApplied.isDefined) { df.persist(); () }
         try {
           onBatch.foreach(f => f(df))
-          // drop bookkeeping columns after stamping so applied rows share
-          // the initial-sync schema (source cols + meta cols)
-          val stamped = beforeImage match {
-            case Some((keyCol, beforeKeyCol)) =>
-              CdcTransform.stampWithBeforeImage(df, opCol, seqCol,
-                lit(versionOf(batchId)), keyCol, beforeKeyCol,
-                fixPkUpdateOrphans)
-            case None =>
-              CdcTransform.stampBatch(df, opCol, seqCol, versionOf(batchId))
-          }
-          stamped.drop((Seq(opCol, seqCol) ++ tableCol.toSeq ++ dropCols): _*)
-            .write.mode("append").parquet(s"$targetDir/$table.parquet")
+          land(df, table, opCol, seqCol, versionOf(batchId),
+            tableCol.toSeq ++ dropCols, beforeImage, fixPkUpdateOrphans)
           onBatchApplied.foreach(f => f(df))
         } finally if (onBatch.isDefined || onBatchApplied.isDefined) {
           df.unpersist(); ()
@@ -121,6 +136,61 @@ final class CdcPipeline(
         ()
       }
       .start()
+  }
+
+  /** The binlog replica — `graft.Main`'s cdc mode, in the reference's
+    * `initial_sync` order (`src/cdc_replicator.py:238-261`):
+    *   1. every table's key ([[graft.sources.ParquetCatalog.HarnessPks]])
+    *      and snapshot schema (`<sourceDir>/<t>.parquet`) resolved, so a
+    *      table with no known key or no snapshot fails before anything
+    *      is captured, copied or started;
+    *   2. one `SHOW MASTER STATUS` capture on the primary `source` names;
+    *   3. [[initialSync]] of each table that does not resume, under
+    *      `initialVersion`;
+    *   4. per table, `<t>_live` registered on its key and one
+    *      `mysql-binlog` query from the capture, its schema the
+    *      snapshot's row image ([[graft.sources.MysqlBinlogSource.withMeta]]),
+    *      rows filtered on `_tbl`, batches stamped by `versionOf`.
+    * Resume rule: a table resumes when its stream checkpoint holds a
+    * COMMITTED batch. The stream then continues from the checkpoint (the
+    * position file), with no capture and no copy: a re-copy's fresh
+    * `_version` would outrank every change already applied. An offset
+    * without a commit does not count: an uncommitted batch 0 replays from
+    * the source's initial offset, i.e. from the NEW run's capture, not
+    * the one it was planned from. So a table with no commit drops its
+    * checkpoint and redoes the capture and the copy, which replaces the
+    * target. When every table resumes,
+    * nothing is captured. If a query fails to start, those already
+    * started are stopped. Returns the started queries; the caller
+    * awaits them. */
+  def replicate(source: SourceConfig, tables: Seq[String], sourceDir: String,
+                trigger: Trigger, initialVersion: Long,
+                versionOf: Long => Long): Seq[StreamingQuery] = {
+    val keys = tables.map(t => ParquetCatalog.HarnessPks.getOrElse(t,
+      throw new IllegalArgumentException(s"no known primary key for table $t")))
+    val snapshots = tables.map(t => spark.read.parquet(s"$sourceDir/$t.parquet"))
+    val fresh = tables.filter(t =>
+      HadoopFs.numberedIds(s"$checkpointDir/$t/commits", "").isEmpty).toSet
+    val capture = if (fresh.isEmpty) None else Some(new BinlogSocketClient(
+      source.host, source.port, source.user, source.password).masterStatus())
+    tables.zip(snapshots).filter(ts => fresh(ts._1)).foreach { case (t, snap) =>
+      HadoopFs.delete(s"$checkpointDir/$t")
+      initialSync(snap.withColumn("_seq", monotonically_increasing_id()), t,
+        initialVersion, "_seq")
+    }
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try tables.lazyZip(keys).lazyZip(snapshots).foreach { (t, pks, snap) =>
+      val changes = spark.readStream.format("mysql-binlog")
+        .schema(MysqlBinlogSource.withMeta(snap.schema))
+        .options(MysqlBinlogSource.options(source, t,
+          if (fresh(t)) capture else None))
+        .load()
+      registerLiveView(t, pks)
+      started += start(changes, t, opCol = "op", seqCol = "_seq",
+        tables = Seq(t), tableCol = Some("_tbl"), versionOf = versionOf,
+        trigger = trigger)
+    } catch { case e: Throwable => started.foreach(_.stop()); throw e }
+    started.toSeq
   }
 
   /** Read the applied (versioned, append-only) table. */

@@ -12,7 +12,6 @@ class GraftConfigSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(c.replication.batchSize == 50000)
     assert(c.replication.parallelTables == 1)
     assert(c.replication.tables.isEmpty)
-    assert(!c.replication.dropExisting)
     assert(c.source.port == 3306 && c.target.port == 8123)
   }
 

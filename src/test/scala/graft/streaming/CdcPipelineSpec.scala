@@ -180,4 +180,21 @@ class CdcPipelineSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(run(fix = true).select("id").as[Int].collect().sorted.toSeq ==
       Seq(2, 9))
   }
+
+  test("BoundedStream.await: a failing query ends the wait at once and " +
+      "stops the others, a continuous one included") {
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    def rate(ckp: String) = spark.readStream.format("rate")
+      .option("rowsPerSecond", "1").load().writeStream
+      .option("checkpointLocation", ckp)
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+    val endless = rate(freshDirs()._3).format("noop").start()
+    val failing = rate(freshDirs()._3).foreachBatch {
+      (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException("boom")
+    }.start()
+    val e = intercept[StreamingQueryException](BoundedStream.await(endless, failing))
+    assert(e.getMessage.contains("boom"))
+    assert(!endless.isActive && !failing.isActive)
+  }
 }

@@ -1,9 +1,11 @@
 #!/bin/bash
 # Run a graft main class directly (no sbt overhead): tools/run_main.sh <Class> [args...]
+# Runs the classes (and resources) of the checkout this script belongs to.
 # Extra JVM flags via JVM_EXTRA. Heap via SPARK_DRIVER_MEM (default 8g).
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 CLS=$1; shift
-CP="/root/repo/target/scala-2.13/classes:$(echo /opt/spark/jars/*.jar | tr ' ' ':')"
+CP="$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:$(echo /opt/spark/jars/*.jar | tr ' ' ':')"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
