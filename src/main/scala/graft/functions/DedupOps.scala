@@ -231,20 +231,14 @@ object DedupOps {
     * smaller ids), so labels fall out as each node's star root. Each
     * round is two partition-by-node window mins + distincts over a
     * SHRINKING edge set — all distributed; the driver only compares edge
-    * counts. Lineage is truncated with `localCheckpoint` every
-    * [[CcCheckpointEvery]] rounds (iterative plans otherwise stack — a
-    * driver/stack risk at 100 TB; on a real cluster prefer a reliable
-    * `checkpoint` dir, since local checkpoints die with an executor).
+    * counts. Every [[Bsp.CheckpointEvery]]-th round, the last included, is
+    * a [[Bsp.Cut]]; the rounds in between are persisted.
     * Convergence (set equality round-over-round) is asserted within
     * `maxIter`, and the round count is logged to stderr so bench runs can
     * adjudicate convergence behavior. Deterministic: the fixpoint is
     * unique. Returns (id, label) for every node with ≥1 edge. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          inputDistinct: Boolean = false): DataFrame =
-    connectedComponentsWithRounds(pairs, maxIter, inputDistinct)._1
-
-  /** Rounds between lineage truncations in [[connectedComponents]]. */
-  val CcCheckpointEvery = 3
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+    connectedComponentsWithRounds(pairs, maxIter)._1
 
   /** Star-round counts of every [[connectedComponents]] run since the last
     * drain — harness mains drain this per query so convergence behavior
@@ -265,16 +259,15 @@ object DedupOps {
     * exposed so specs can pin log-bounded (not diameter-bound)
     * convergence.
     *
-    * `inputDistinct` (optimization r16): when the caller guarantees
-    * `pairs` is already DISTINCT with id1 ≠ id2 on every row (the LSH
-    * candidate stage ends in exactly that), the canonicalizing map
-    * (id1, id2) → (greatest, least) is injective — two distinct
-    * unordered pairs cannot collapse — so the initial full-exchange
-    * dedup is provably a no-op and is skipped. Default false: arbitrary
-    * callers (specs feed crafted multisets) keep the safe dedup. */
+    * The input is never deduplicated up front (a full exchange that is a
+    * no-op on the LSH candidate stage, which ends in a distinct with
+    * id1 < id2): a multiset is still correct. Large-star's window min
+    * ignores duplicates, round 1's small-star ends in a distinct, and the
+    * convergence check cannot pass on a multiset — equal counts plus
+    * next ⊆ cur would need |set(cur)| ≥ |cur|. A duplicated input costs
+    * at most one extra round, and only when it is already a fixpoint. */
   def connectedComponentsWithRounds(pairs: DataFrame,
-                                    maxIter: Int = 25,
-                                    inputDistinct: Boolean = false): (DataFrame, Int) = {
+                                    maxIter: Int = 25): (DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
     val MD = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -311,37 +304,17 @@ object DedupOps {
       .select(greatest(col("id1"), col("id2")).as("u"),
         least(col("id1"), col("id2")).as("v"))
       .filter(col("u") =!= col("v"))
-    var cur = (if (inputDistinct) canon else canon.distinct()).persist(MD)
+    var cur = canon.persist(MD)
     var curCnt = cur.count()
-    // The live local checkpoint's backing RDD: freed only once the NEXT
-    // checkpoint exists (persisted rounds in between recompute through the
-    // last checkpoint if evicted — its blocks must stay). Identified
-    // DIRECTLY from the checkpointed Dataset's LogicalRDD leaf — not by
-    // diffing sc.getPersistentRDDs, which would misattribute any
-    // concurrent persist (parallel gates, streaming state) in the window
-    // around the checkpoint call and unpersist unrelated data.
-    var liveCkpt = Option.empty[org.apache.spark.rdd.RDD[_]]
+    val cut = new Bsp.Cut
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       iter += 1
       val nextRaw = smallStar(largeStar(cur))
       val next =
-        if (iter % CcCheckpointEvery == 0) {
-          val ck = nextRaw.localCheckpoint() // eager: materializes + truncates
-          val created = ck.queryExecution.logical.collectFirst {
-            case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-          }
-          // A Spark upgrade that changes localCheckpoint's plan shape
-          // would make this None and silently leak every checkpoint's
-          // blocks for the rest of the run — make that visible.
-          if (created.isEmpty) System.err.println(
-            "[graft][cc] WARN: localCheckpoint plan has no LogicalRDD " +
-              "leaf; checkpoint blocks cannot be released this round")
-          liveCkpt.foreach(_.unpersist(false))
-          liveCkpt = created
-          ck
-        } else nextRaw.persist(MD)
+        if (iter % Bsp.CheckpointEvery == 0) cut(nextRaw)
+        else nextRaw.persist(MD)
       val nextCnt = next.count()
       // set equality: |next| == |cur| and next \ cur = ∅ ⇒ fixpoint.
       // Count first — unequal counts settle it without the anti-join
@@ -359,15 +332,12 @@ object DedupOps {
       s"[graft] connectedComponents: converged in $iter star rounds " +
         s"($curCnt star edges)")
     ccRoundLog.add(iter)
-    // the final edge frame (persisted or locally-checkpointed) backs the
-    // returned plan — its storage is released by the harness AFTER the
-    // caller's action, via the GateCache pairing
+    // the final edge frame (persisted or cut) backs the returned plan —
+    // its storage is released by the harness AFTER the caller's action,
+    // via the GateCache pairing
     val fin = cur
-    val finCkpt = liveCkpt
-    graft.GateCache.onRelease { () =>
-      fin.unpersist()
-      finCkpt.foreach(_.unpersist(false))
-    }
+    graft.GateCache.onRelease { () => fin.unpersist(); () }
+    cut.release()
     // fixpoint = star forest rooted at component minima: non-roots appear
     // as u (pointing at their root), roots appear as v (labeling selves)
     val labels = cur.select(col("u").as("id"), col("v").as("label"))

@@ -22,10 +22,10 @@ final case class ReplicationResult(
   *   - O2 table-set resolution (configured list else all,
   *     `src/replicator.py:26-32`);
   *   - K3/K6 create/drop target → `SaveMode.Overwrite` parquet write (the
-  *     declarative equivalent of DROP+CREATE+INSERT; `ORDER BY(pk)` in the
-  *     reference's DDL (`src/schema_converter.py:77`) maps to an optional
-  *     `sortWithinPartitions` — a physical-layout hint, not a correctness
-  *     requirement);
+  *     declarative equivalent of DROP+CREATE+INSERT; the `ORDER BY(pk)` in
+  *     the reference's DDL (`src/schema_converter.py:77`) is a MergeTree
+  *     layout directive with no correctness meaning, so the copy keeps
+  *     the source's row order);
   *   - O3 per-table pipeline: introspect → copy → validate
   *     (`replicate_table`, `src/replicator.py:65-85`). The reference's
   *     explicit batch loop (50k rows, `src/replicator.py:46-63`)
@@ -80,18 +80,12 @@ final class SnapshotReplicator(
       .write.mode(SaveMode.Overwrite).parquet(targetPath(table))
   }
 
-  /** O3: one table end-to-end. `sortWithinPartitions(pk)` mirrors the
-    * MergeTree ORDER BY layout when requested. */
-  def replicateTable(table: String, sortByPk: Boolean = false): ReplicationResult =
+  /** O3: one table end-to-end: count, copy, count again. */
+  def replicateTable(table: String): ReplicationResult =
     Try {
       val src = catalog.read(table)
       val sourceCount = src.count() // A1 pre-copy count
-      val pks = catalog.primaryKeys.getOrElse(table, Seq.empty)
-      val out =
-        if (sortByPk && pks.nonEmpty)
-          src.sortWithinPartitions(pks.map(org.apache.spark.sql.functions.col): _*)
-        else src
-      out.write.mode(SaveMode.Overwrite).parquet(targetPath(table))
+      src.write.mode(SaveMode.Overwrite).parquet(targetPath(table))
       val tgtCount = targetCount(table)
       ReplicationResult(table, sourceCount, tgtCount,
         success = sourceCount == tgtCount) // A4

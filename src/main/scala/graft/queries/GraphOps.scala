@@ -28,6 +28,13 @@ import org.apache.spark.sql.functions._
   * into one plan (the x_kmeans_embed pattern — no driver-side loop over
   * collected data). At 1000 executors each iteration is one co-partitioned
   * shuffle join; skewed hub nodes are AQE's skew-join case.
+  *
+  * One kit: every graph comes from the one orders ⋈ lineitem join
+  * ([[tradeLines]]), node-encoded by [[encode]] and made undirected by
+  * the one [[mirror]]; every loop folds through
+  * [[graft.functions.Bsp.loop]], whose lineage cut the star CC shares;
+  * BFS, SSSP and label propagation are one min-propagation superstep
+  * ([[minPropagate]]) that differs only in the message.
   */
 object GraphOps {
 
@@ -42,17 +49,43 @@ object GraphOps {
   val PrJumpNano = 150000000L
   val PrDampPct = 85L
 
-  /** Distinct trade edges, both directions: c<custkey> ↔ s<suppkey>. */
-  private[queries] def tradeEdges(s: SparkSession, dir: String): DataFrame = {
-    val e0 = t(s, dir, "orders")
+  /** orders ⋈ lineitem — the trade relation every graph here is mined
+    * from: one row per order line with `o_custkey`, `l_suppkey` and the
+    * `extra` lineitem columns. */
+  private def tradeLines(s: SparkSession, dir: String,
+      extra: String*): DataFrame =
+    t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
+      .join(t(s, dir, "lineitem")
+          .select(("l_orderkey" +: "l_suppkey" +: extra).map(col): _*),
         col("o_orderkey") === col("l_orderkey"))
-      .select(concat(lit("c"), col("o_custkey").cast("string")).as("src"),
-        concat(lit("s"), col("l_suppkey").cast("string")).as("dst"))
-      .distinct()
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** Trade rows as customer → supplier edges: node ids encoded by
+    * `node(key, isSupplier)`, the `rest` columns riding along. */
+  private def encode(trades: DataFrame, node: (Column, Boolean) => Column,
+      rest: Column*): DataFrame =
+    trades.select(node(col("o_custkey"), false).as("src") +:
+      node(col("l_suppkey"), true).as("dst") +: rest: _*)
+
+  /** The undirected graph of the directed edges `e0`: every edge plus its
+    * reverse, any further columns (a weight) riding along. Sampling
+    * happens on `e0`, BEFORE the mirror — sampling per direction would
+    * break symmetry and make "undirected" a lie. */
+  private def mirror(e0: DataFrame): DataFrame = {
+    val rest = e0.columns.drop(2).toSeq.map(col)
+    e0.unionAll(e0.select(col("dst").as("src") +: col("src").as("dst") +:
+      rest: _*))
   }
+
+  /** Every 1-in-[[LpSampleMod]] distinct (o_custkey, l_suppkey) trade
+    * pair, kept by a portable 32-bit hash of the canonical STRING key
+    * "c<ck>>s<sk>" — the same bytes the DuckDB oracle hashes, so the
+    * sample is the same whatever the node encoding. */
+  private def sampledTradePairs(s: SparkSession, dir: String): DataFrame =
+    tradeLines(s, dir).select(col("o_custkey"), col("l_suppkey")).distinct()
+      .filter(graft.functions.PortableHash.hash32(
+        concat(lit("c"), col("o_custkey").cast("string"),
+          lit(">s"), col("l_suppkey").cast("string"))) % LpSampleMod === 0)
 
   // ---- compact node ids (optimization round 15) ----------------------
   // The BSP loops shuffle node ids every round (join on src + agg on the
@@ -64,83 +97,36 @@ object GraphOps {
   // carries fixed-width longs instead. Only the FINAL projection (and
   // only where the gate exposes node ids at all) formats the string back
   // — bit-identical output, oracle-checked. Gates whose result depends
-  // on the STRING ordering of ids (x_label_propagation's min-label) keep
-  // the string form — the long order differs from the lexicographic one.
+  // on the STRING ordering of ids (x_label_propagation's min-label) use
+  // [[lexPack]] instead — the long order differs from the lexicographic one.
 
-  /** Pack a customer/supplier key into the long node id space. */
-  private def packC(k: Column): Column = k.cast("long") * 2
-  private def packS(k: Column): Column = k.cast("long") * 2 + 1
+  /** Pack a customer (`supp = false`) or supplier key into the long node
+    * id space. */
+  private def pack(k: Column, supp: Boolean): Column =
+    if (supp) k.cast("long") * 2 + 1 else k.cast("long") * 2
 
-  /** Format a packed long node id back to the public "c<k>"/"s<k>" form
-    * (exactly [[tradeEdges]]'s string construction). */
+  /** Format a packed long node id back to the public "c<k>"/"s<k>" form. */
   private def fmtNode(n: Column): Column =
     concat(when(n % 2 === 0, lit("c")).otherwise(lit("s")),
       shiftright(n, 1).cast("string")) // keys ≥ 0, so >> 1 ≡ div 2
 
-  /** [[tradeEdges]] with packed long node ids — same graph, same
-    * direction conventions, 8-byte shuffle keys. */
-  private[queries] def tradeEdgesLong(s: SparkSession, dir: String): DataFrame = {
-    val e0 = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(packC(col("o_custkey")).as("src"),
-        packS(col("l_suppkey")).as("dst"))
-      .distinct()
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-  }
+  /** An edge frame with its packed ids formatted as the public strings —
+    * the specs' reference form of each graph. */
+  private def strings(e: DataFrame): DataFrame =
+    e.select(fmtNode(col("src")).as("src") +: fmtNode(col("dst")).as("dst") +:
+      e.columns.drop(2).toSeq.map(col): _*)
 
-  /** Lineage is truncated with an eager `localCheckpoint` every this many
-    * iterations (when running beyond the gate's PrIters unroll), so plan
-    * depth — and Catalyst analysis cost — is bounded by the segment
-    * length at ANY iteration count instead of growing linearly (r7
-    * VERDICT #5: the unbounded unroll was the one scale defect left in
-    * this operator). */
-  val PrCheckpointEvery = 3
+  /** Distinct trade edges, both directions, packed: c<custkey> ↔ s<suppkey>. */
+  private[queries] def tradeEdgesLong(s: SparkSession, dir: String): DataFrame =
+    mirror(encode(tradeLines(s, dir), pack).distinct())
 
-  /** Shared bounded-lineage BSP driver for every iterative operator in
-    * this family (PageRank, BFS, SSSP, label propagation — r9 VERDICT
-    * #3: khop/sssp/labelprop were plain foldLeft unrolls, re-growing the
-    * exact plan-depth defect the PageRank checkpoint protocol fixed).
-    * Folds `step` `rounds` times from `init`; at `rounds ≤
-    * PrCheckpointEvery` (every gate shape) no checkpoint fires and the
-    * plan is the pure lazy unroll the DuckDB oracles mirror. Beyond
-    * that, each segment materializes via an eager localCheckpoint —
-    * every operator here is a monotone integer recurrence, so
-    * truncation cannot change a value — and the PREVIOUS checkpoint's
-    * blocks are freed as soon as the next exists (the
-    * [[graft.functions.DedupOps.connectedComponents]] protocol); the
-    * final live checkpoint is released through [[graft.GateCache]] with
-    * the other gate caches. Plan depth, and with it Catalyst analysis
-    * cost and lineage-recovery length, is bounded by ONE segment at any
-    * round count — a 50-hop BFS on a 100 TB graph re-plans a 3-round
-    * window, not a 50-round one. */
-  private[queries] def bspLoop(init: DataFrame, rounds: Int)
-      (step: DataFrame => DataFrame): DataFrame = {
-    var liveCkpt = Option.empty[org.apache.spark.rdd.RDD[_]]
-    val fin = (1 to rounds).foldLeft(init) { (r, i) =>
-      val next = step(r)
-      if (i % PrCheckpointEvery == 0 && i < rounds) {
-        val ck = next.localCheckpoint() // eager: materializes + truncates
-        val created = ck.queryExecution.logical.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }
-        if (created.isEmpty) System.err.println(
-          "[graft][bsp] WARN: localCheckpoint plan has no LogicalRDD " +
-            "leaf; checkpoint blocks cannot be released this round")
-        liveCkpt.foreach(_.unpersist(false))
-        liveCkpt = created
-        ck
-      } else next
-    }
-    liveCkpt.foreach(ck => graft.GateCache.onRelease(() => {
-      ck.unpersist(false); ()
-    }))
-    fin
-  }
+  /** [[tradeEdgesLong]] with the public string ids. */
+  private[queries] def tradeEdges(s: SparkSession, dir: String): DataFrame =
+    strings(tradeEdgesLong(s, dir))
 
-  /** PageRank for an arbitrary iteration count via [[bspLoop]] (integer
-    * recurrence — bit-exact through checkpoint materialization).
+  /** PageRank for an arbitrary iteration count via
+    * [[graft.functions.Bsp.loop]] (integer recurrence — bit-exact through
+    * checkpoint materialization).
     *
     * Optimization-round shape (guide §2.4/§2.3): the source's outdegree
     * is pre-joined ONCE onto the cached edge frame, so the loop state is
@@ -159,7 +145,7 @@ object GraphOps {
     val edges = graft.GateCache.cache(e0.join(deg, "src"))
     val init = deg.select(col("src").as("node"),
       lit(1000000000L).as("rank_nano"))
-    val ranks = bspLoop(init, iters) { r =>
+    val ranks = graft.functions.Bsp.loop(init, iters) { r =>
       edges.join(r, edges("src") === r("node"))
         .select(col("dst"), expr("rank_nano div outdeg").as("c"))
         .groupBy(col("dst"))
@@ -285,22 +271,15 @@ object GraphOps {
     * the sparsified graph fragments into a real component-size spectrum. */
   val LpSampleMod = 20
 
-  /** Deterministically sparsified trade edges: the canonical c→s edge set
-    * filtered by a portable 32-bit hash of "src>dst", then mirrored so the
-    * graph stays undirected. The filter is BEFORE the mirror — sampling
-    * per-direction would break symmetry and make "undirected" a lie. */
-  private[queries] def sparseTradeEdges(s: SparkSession, dir: String): DataFrame = {
-    val e0 = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(concat(lit("c"), col("o_custkey").cast("string")).as("src"),
-        concat(lit("s"), col("l_suppkey").cast("string")).as("dst"))
-      .distinct()
-      .filter(graft.functions.PortableHash.hash32(
-        concat(col("src"), lit(">"), col("dst"))) % LpSampleMod === 0)
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-  }
+  /** [[LpSampleMod]]-sparsified trade edges, packed ids for the peel
+    * loop. */
+  private[queries] def sparseTradeEdgesLong(s: SparkSession,
+      dir: String): DataFrame =
+    mirror(encode(sampledTradePairs(s, dir), pack))
+
+  /** [[sparseTradeEdgesLong]] with the public string ids. */
+  private[queries] def sparseTradeEdges(s: SparkSession, dir: String): DataFrame =
+    strings(sparseTradeEdgesLong(s, dir))
 
   // ---- lexicographic order-embedding pack (optimization round 16) ----
   // x_label_propagation's min-label is defined over the LEXICOGRAPHIC
@@ -348,66 +327,44 @@ object GraphOps {
       k.cast("string"))
   }
 
-  /** [[sparseTradeEdges]] on [[lexPack]]ed ids — same surviving edges
-    * (the Bernoulli filter hashes the identical canonical STRING key),
-    * same undirected mirroring; only the ids the label rounds shuffle
-    * are packed. */
+  /** [[sparseTradeEdges]] on [[lexPack]]ed ids — the same surviving
+    * edges; only the ids the label rounds shuffle are packed. */
   private[queries] def sparseTradeEdgesLex(s: SparkSession,
-      dir: String): DataFrame = {
-    val e0 = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey"), col("l_suppkey"))
-      .distinct()
-      .filter(graft.functions.PortableHash.hash32(
-        concat(lit("c"), col("o_custkey").cast("string"),
-          lit(">s"), col("l_suppkey").cast("string"))) % LpSampleMod === 0)
-      .select(lexPack(col("o_custkey"), supp = false).as("src"),
-        lexPack(col("l_suppkey"), supp = true).as("dst"))
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-  }
+      dir: String): DataFrame =
+    mirror(encode(sampledTradePairs(s, dir), lexPack))
 
-  /** [[sparseTradeEdges]] with packed long node ids for the peel loop.
-    * The Bernoulli filter still hashes the canonical STRING edge key
-    * ("c<ck>>s<sk>" — the same bytes as the string builder and the
-    * DuckDB oracle), so exactly the same edges survive; only the ids the
-    * loop shuffles afterwards are packed. */
-  private[queries] def sparseTradeEdgesLong(s: SparkSession,
-      dir: String): DataFrame = {
-    val e0 = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey"), col("l_suppkey"))
-      .distinct()
-      .filter(graft.functions.PortableHash.hash32(
-        concat(lit("c"), col("o_custkey").cast("string"),
-          lit(">s"), col("l_suppkey").cast("string"))) % LpSampleMod === 0)
-      .select(packC(col("o_custkey")).as("src"),
-        packS(col("l_suppkey")).as("dst"))
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+  /** The one min-propagation superstep of BFS, SSSP and label propagation
+    * (Pregel's vertex program with a min combiner), folded `rounds` times
+    * from `init` (node, value): every node with a value sends
+    * `msg` — an expression over the joined edge and state row — to each
+    * out-neighbor, and each node keeps the minimum of its own value and
+    * what it received. UNION ALL + min-groupBy, so a round is one
+    * co-partitioned join on `src` plus one partial-agg'd shuffle on
+    * `node`, with no anti-join against a visited set; monotone and
+    * idempotent, so partition order cannot change a value. The state is
+    * cached per superstep: it feeds BOTH the join and the union, so a
+    * lazy unroll would re-execute earlier rounds ~2^depth times (the
+    * x_kcore lesson applied family-wide). */
+  private def minPropagate(edges: DataFrame, init: DataFrame, rounds: Int)
+      (msg: Column): DataFrame = {
+    val v = init.columns(1)
+    graft.functions.Bsp.loop(init, rounds) { r0 =>
+      val r = graft.GateCache.cache(r0)
+      val sent = edges.join(r, edges("src") === r("node"))
+        .select(col("dst").as("node"), msg.as(v))
+      r.unionAll(sent).groupBy(col("node")).agg(min(col(v)).as(v))
+    }
   }
 
   /** Synchronous min-label propagation (community detection): every round
-    * each node takes the minimum label over {itself} ∪ in-neighbors —
-    * expressed as UNION ALL + min-groupBy, the same one-shuffle-per-round
-    * BSP relax step as [[khopFromEdges]]. String labels (the node ids)
-    * order identically under Spark's and DuckDB's binary collation, so the
-    * fixpoint is engine-exact. Per round the cost is one co-partitioned
-    * join on `src` plus one partial-agg'd shuffle on `node`; at 1000
-    * executors the frontier never materializes on the driver. Converged
-    * communities carry their minimum member id as the label. */
-  private[queries] def labelPropFromEdges(edges: DataFrame, rounds: Int): DataFrame = {
-    val init = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    bspLoop(init, rounds) { l0 =>
-      val l = graft.GateCache.cache(l0) // superstep cache — see khop
-      val nbr = edges.join(l, edges("src") === l("node"))
-        .select(col("dst").as("node"), col("label"))
-      l.unionAll(nbr).groupBy(col("node")).agg(min(col("label")).as("label"))
-    }
-  }
+    * each node takes the minimum label over {itself} ∪ in-neighbors
+    * ([[minPropagate]] with the label as the message). String labels (the
+    * node ids) order identically under Spark's and DuckDB's binary
+    * collation, so the fixpoint is engine-exact. Converged communities
+    * carry their minimum member id as the label. */
+  private[queries] def labelPropFromEdges(edges: DataFrame, rounds: Int): DataFrame =
+    minPropagate(edges, edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")), rounds)(col("label"))
 
   /** Gate shape: community-size histogram after [[LpRounds]] rounds over
     * the sparsified trade graph — label = min member id, size = members.
@@ -428,27 +385,16 @@ object GraphOps {
     * multi-source frontier — a fixed 1/10 of the supplier side at any SF. */
   val BfsSeedMod = 10
 
-  /** Multi-source BFS as iterative min-distance relaxation: reached set
-    * starts at the seeds (dist 0); each round appends every out-neighbor
-    * at dist+1 and re-minimizes per node. Relaxation (min-agg over the
-    * whole reached set) rather than frontier-difference keeps every round
-    * a pure join + partial agg — no anti-join against the visited set, so
-    * the plan is two exchanges per hop regardless of graph shape; the
-    * min-agg dedups re-reached nodes exactly like the visited check would.
-    * Monotone + idempotent, so partition order cannot change a distance. */
+  /** Multi-source BFS as iterative min-distance relaxation: the reached
+    * set starts at the seeds (dist 0) and each round offers every
+    * out-neighbor dist+1 ([[minPropagate]]). Relaxation over the whole
+    * reached set rather than frontier difference: the min dedups
+    * re-reached nodes exactly like a visited check would, so the plan is
+    * two exchanges per hop regardless of graph shape. */
   private[queries] def khopFromEdges(edges: DataFrame, seeds: DataFrame,
-      hops: Int): DataFrame = {
-    val d0 = seeds.select(col("node"), lit(0L).as("dist"))
-    bspLoop(d0, hops) { r0 =>
-      // superstep cache: the relax state feeds BOTH the expand join and
-      // the unionAll, so a lazy unroll re-executes earlier rounds
-      // ~2^depth times (the x_kcore lesson applied family-wide)
-      val r = graft.GateCache.cache(r0)
-      val expand = edges.join(r, edges("src") === r("node"))
-        .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
-      r.unionAll(expand).groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    }
-  }
+      hops: Int): DataFrame =
+    minPropagate(edges, seeds.select(col("node"), lit(0L).as("dist")), hops)(
+      col("dist") + lit(1L))
 
   /** Gate shape: nodes-per-hop-distance histogram after [[BfsHops]] hops
     * from the supplier seed set over the full (connected) trade graph.
@@ -457,7 +403,7 @@ object GraphOps {
   private def bfsKhop(s: SparkSession, dir: String): DataFrame = {
     val seeds = t(s, dir, "supplier")
       .filter(col("s_suppkey") % BfsSeedMod === 0)
-      .select(packS(col("s_suppkey")).as("node"))
+      .select(pack(col("s_suppkey"), supp = true).as("node"))
     khopFromEdges(graft.GateCache.cache(tradeEdgesLong(s, dir)), seeds, BfsHops)
       .groupBy(col("dist")).agg(count(lit(1)).as("n_nodes"))
   }
@@ -465,60 +411,32 @@ object GraphOps {
   /** Relaxation budget for the weighted-SSSP gate (unroll rule again). */
   val SsspRounds = 3
 
-  /** Weighted trade edges: weight = the MINIMUM line quantity ever traded
-    * on the c–s relation (the "cheapest lane" reading), mirrored
-    * undirected. Harness quantities are integral-valued doubles
+  /** Weighted trade edges, packed ids: weight = the MINIMUM line quantity
+    * ever traded on the c–s relation (the "cheapest lane" reading),
+    * mirrored undirected. Harness quantities are integral-valued doubles
     * (spec-checked), so the bigint cast is exact and identical under
     * Spark's truncating and DuckDB's rounding double→int conversion —
     * all downstream path sums are integer arithmetic, bit-exact in any
     * relaxation order. One partial-agg'd shuffle builds the edge list. */
-  private[queries] def weightedTradeEdges(s: SparkSession, dir: String): DataFrame = {
-    val e0 = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(concat(lit("c"), col("o_custkey").cast("string")).as("src"),
-        concat(lit("s"), col("l_suppkey").cast("string")).as("dst"),
-        col("l_quantity").cast("bigint").as("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-  }
-
-  /** [[weightedTradeEdges]] with packed long node ids (same min-quantity
-    * weights, same mirroring). */
   private[queries] def weightedTradeEdgesLong(s: SparkSession,
-      dir: String): DataFrame = {
-    val e0 = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(packC(col("o_custkey")).as("src"),
-        packS(col("l_suppkey")).as("dst"),
+      dir: String): DataFrame =
+    mirror(encode(tradeLines(s, dir, "l_quantity"), pack,
         col("l_quantity").cast("bigint").as("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-  }
+      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
+
+  /** [[weightedTradeEdgesLong]] with the public string ids. */
+  private[queries] def weightedTradeEdges(s: SparkSession, dir: String): DataFrame =
+    strings(weightedTradeEdgesLong(s, dir))
 
   /** Multi-source single-source-shortest-path by Bellman–Ford relaxation:
     * [[khopFromEdges]] with the +1 hop cost generalized to the edge
-    * weight. Each round is still one co-partitioned join plus one
-    * partial-agg'd min shuffle; k rounds bound path LENGTH at k edges
-    * (Bellman–Ford's invariant), so a longer-hop-but-lighter path wins
-    * exactly when it fits the budget — the behavior the crafted spec
-    * pins. Monotone + idempotent like BFS: partition order can't change
-    * a distance. */
+    * weight. k rounds bound path LENGTH at k edges (Bellman–Ford's
+    * invariant), so a longer-hop-but-lighter path wins exactly when it
+    * fits the budget — the behavior the crafted spec pins. */
   private[queries] def ssspFromEdges(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
-    val d0 = seeds.select(col("node"), lit(0L).as("dist"))
-    bspLoop(d0, rounds) { r0 =>
-      val r = graft.GateCache.cache(r0) // superstep cache — see khop
-      val relax = edges.join(r, edges("src") === r("node"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      r.unionAll(relax).groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    }
-  }
+      rounds: Int): DataFrame =
+    minPropagate(edges, seeds.select(col("node"), lit(0L).as("dist")), rounds)(
+      col("dist") + col("w"))
 
   /** Gate shape: weighted distances from the supplier seed stride
     * ([[BfsSeedMod]]) after [[SsspRounds]] relaxations, restricted to
@@ -528,7 +446,7 @@ object GraphOps {
   private def ssspWeighted(s: SparkSession, dir: String): DataFrame = {
     val seeds = t(s, dir, "supplier")
       .filter(col("s_suppkey") % BfsSeedMod === 0)
-      .select(packS(col("s_suppkey")).as("node"))
+      .select(pack(col("s_suppkey"), supp = true).as("node"))
     ssspFromEdges(graft.GateCache.cache(weightedTradeEdgesLong(s, dir)),
         seeds, SsspRounds)
       .filter(col("node") % 2 === 1) // supplier ids are the odd longs
@@ -556,10 +474,11 @@ object GraphOps {
     * is confluent (the k-core is the unique maximal subgraph with min
     * degree ≥ k), so partition order cannot change the fixpoint, and each
     * intermediate round is itself deterministic — the oracle unrolls the
-    * identical three rounds. Runs through [[bspLoop]], so a deep peel
-    * (degeneracy ordering needs O(max core) rounds) keeps a bounded plan. */
+    * identical three rounds. Runs through [[graft.functions.Bsp.loop]],
+    * so a deep peel (degeneracy ordering needs O(max core) rounds) keeps
+    * a bounded plan. */
   private[queries] def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    bspLoop(edges, rounds) { e0 =>
+    graft.functions.Bsp.loop(edges, rounds) { e0 =>
       // Materialize the round's input: unlike the relax family (one
       // self-reference per round), a peel round reads its input TWICE —
       // under the degree aggregate and as the join's probe side — so a
@@ -567,7 +486,7 @@ object GraphOps {
       // (measured 9.0 s lazy vs 2.7 s cached at the gate shape). Pregel-style
       // superstep materialization is the scale-correct shape here; blocks
       // are freed with the gate's other caches, and a deep peel's
-      // footprint is bounded by bspLoop's checkpoint-release protocol.
+      // footprint is bounded by Bsp.loop's lineage cut.
       val e = graft.GateCache.cache(e0)
       val keep = graft.GateCache.cache(
         e.groupBy(col("src")).agg(count(lit(1)).as("d"))

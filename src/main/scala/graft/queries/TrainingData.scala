@@ -671,12 +671,7 @@ object TrainingData {
     // a crawl — so the strategy is left to AQE, which broadcasts it when
     // the runtime size is small and shuffles it when it isn't.
     "x_dedup_cluster_apply" -> ((s, dir) => {
-      // inputDistinct: minhashPairs is lshCandidatePairs output — ends in
-      // .distinct() with id1 < id2 strict on every row, so CC's initial
-      // dedup exchange is provably redundant (r16; same at the two
-      // sibling CC gates below)
-      val cc = DedupOps.connectedComponents(minhashPairs(minhashSig(s, dir)),
-        inputDistinct = true)
+      val cc = DedupOps.connectedComponents(minhashPairs(minhashSig(s, dir)))
       val dropped = cc.filter(col("label") < col("id"))
         .select(col("id").as("doc_id"))
       docs(s, dir)
@@ -694,8 +689,7 @@ object TrainingData {
     // a per-label max_by); n_reps_not_minid counts clusters where the
     // quality rule genuinely changed the survivor. */
     "x_dedup_keep_best" -> ((s, dir) => {
-      val cc = DedupOps.connectedComponents(minhashPairs(minhashSig(s, dir)),
-        inputDistinct = true)
+      val cc = DedupOps.connectedComponents(minhashPairs(minhashSig(s, dir)))
       val members = cc.select(col("id"), col("label"))
         .join(docs(s, dir).select(col("doc_id").as("id"), col("n_chars")),
           "id")
@@ -1068,8 +1062,7 @@ object TrainingData {
     // measured size, so the same plan survives a 100× scale-up.
     "x_leakage_safe_split" -> ((s, dir) => {
       val cc = graft.functions.DedupOps
-        .connectedComponents(minhashPairs(minhashSig(s, dir)),
-          inputDistinct = true)
+        .connectedComponents(minhashPairs(minhashSig(s, dir)))
         .select(col("id").as("doc_id"), col("label"))
       docs(s, dir)
         .join(cc, Seq("doc_id"), "left")

@@ -49,40 +49,26 @@ final class CdcPipeline(
       seqCol, versionMicros, mode = SaveMode.Overwrite)
 
   /** The one landing step of the copy, the stream batches and the gates'
-    * one-shot tails: stamp `changes` with ONE `version` (through
-    * [[CdcTransform.stampWithBeforeImage]] when `beforeImage` names the
-    * key columns), drop the bookkeeping columns (`opCol`, `seqCol`,
-    * `dropCols`; absorbed into `_ingest_seq`) so applied rows share the
-    * initial-sync schema (source cols + meta cols), and write them to
-    * `<table>.parquet`. */
+    * one-shot tails: stamp `changes` with ONE `version`
+    * ([[CdcTransform.stampBatch]]), drop the bookkeeping columns (`opCol`,
+    * `seqCol`, `dropCols`; absorbed into `_ingest_seq`) so applied rows
+    * share the initial-sync schema (source cols + meta cols), and write
+    * them to `<table>.parquet`. */
   def land(changes: DataFrame, table: String, opCol: String, seqCol: String,
            version: Long, dropCols: Seq[String] = Nil,
-           beforeImage: Option[(String, String)] = None,
-           fixPkUpdateOrphans: Boolean = false,
-           mode: SaveMode = SaveMode.Append): Unit = {
-    val stamped = beforeImage match {
-      case Some((keyCol, beforeKeyCol)) =>
-        CdcTransform.stampWithBeforeImage(changes, opCol, seqCol,
-          lit(version), keyCol, beforeKeyCol, fixPkUpdateOrphans)
-      case None => CdcTransform.stampBatch(changes, opCol, seqCol, version)
-    }
-    stamped.drop((Seq(opCol, seqCol) ++ dropCols): _*)
+           mode: SaveMode = SaveMode.Append): Unit =
+    CdcTransform.stampBatch(changes, opCol, seqCol, version)
+      .drop((Seq(opCol, seqCol) ++ dropCols): _*)
       .write.mode(mode).parquet(s"$targetDir/$table.parquet")
-  }
 
   /** Start the change-stream apply: change rows (op column I/U/D) →
     * batch-stamped upsert rows appended to the target. `versionOf` maps a
     * micro-batch id to its version stamp (injectable for deterministic
     * tests; production passes µs wall clock like the reference's
-    * `int(now()*1e6)`, `src/cdc_replicator.py:147-148`).
-    *
-    * `beforeImage = Some((keyCol, beforeKeyCol))` routes the batch through
-    * [[CdcTransform.stampWithBeforeImage]] so a PK-changing update also
-    * tombstones its old key when the `fixPkUpdateOrphans` argument is
-    * on (default off preserves the reference's orphaning behavior —
-    * T28). It is a parameter of this call only: no env var or config
-    * field sets it, since `Main`'s `cdc` change stream carries no
-    * before-image to repair from.
+    * `int(now()*1e6)`, `src/cdc_replicator.py:147-148`). A PK-changing
+    * update orphans its old key, as in the reference (T28): the change
+    * stream carries no before-image to repair from. The gates that repair
+    * it call [[CdcTransform.stampWithBeforeImage]] themselves.
     *
     * `onBatch` runs on the DRIVER against each raw micro-batch before the
     * stamp — the hook stream-side validators plug into (e.g.
@@ -108,8 +94,6 @@ final class CdcPipeline(
             tableCol: Option[String] = None,
             versionOf: Long => Long = _ => System.currentTimeMillis() * 1000L,
             trigger: Trigger = Trigger.AvailableNow(),
-            beforeImage: Option[(String, String)] = None,
-            fixPkUpdateOrphans: Boolean = false,
             onBatch: Option[DataFrame => Unit] = None,
             dropCols: Seq[String] = Nil,
             onBatchApplied: Option[DataFrame => Unit] = None): StreamingQuery = {
@@ -128,7 +112,7 @@ final class CdcPipeline(
         try {
           onBatch.foreach(f => f(df))
           land(df, table, opCol, seqCol, versionOf(batchId),
-            tableCol.toSeq ++ dropCols, beforeImage, fixPkUpdateOrphans)
+            tableCol.toSeq ++ dropCols)
           onBatchApplied.foreach(f => f(df))
         } finally if (onBatch.isDefined || onBatchApplied.isDefined) {
           df.unpersist(); ()

@@ -59,6 +59,11 @@ class DedupPropertySpec extends AnyFunSuite with graft.GateCacheHygiene {
         .filter { case (a, b) => a != b }
       val (labels, _) = ccMap(edges)
       assert(labels == unionFind(edges), s"trial $trial (n=$n) diverged")
+      // the same edges duplicated and reversed: CC takes its input as a
+      // multiset, with no dedup before round 1
+      val multi = edges ++ edges ++ edges.map(_.swap)
+      assert(ccMap(multi)._1 == unionFind(edges),
+        s"trial $trial (n=$n) diverged on the multiset input")
     }
   }
 

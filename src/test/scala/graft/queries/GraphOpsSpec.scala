@@ -59,7 +59,7 @@ class GraphOpsSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val joins = plan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }.length
-    assert(joins <= 2 * GraphOps.PrCheckpointEvery,
+    assert(joins <= 2 * graft.functions.Bsp.CheckpointEvery,
       s"$joins joins in the 10-iteration plan — checkpoint not truncating")
     assert(plan.collectFirst {
       case _: org.apache.spark.sql.execution.LogicalRDD => ()
@@ -103,7 +103,7 @@ class GraphOpsSpec extends AnyFunSuite with graft.GateCacheHygiene {
   test("khop/sssp/labelprop at 10 rounds: bounded plan depth, values ≡ pure unroll") {
     import spark.implicits._
     // each relax round contributes exactly ONE join, so beyond
-    // PrCheckpointEvery rounds the shared bspLoop must truncate lineage:
+    // Bsp.CheckpointEvery rounds the shared Bsp.loop must truncate lineage:
     // the FINAL plan holds at most one segment of joins — the pagerank
     // depth pin (above), now a family-wide invariant (r9 VERDICT #3).
     // Chain n00—…—n11 (11 edges) so 10 rounds do real work: n10 is only
@@ -123,11 +123,11 @@ class GraphOpsSpec extends AnyFunSuite with graft.GateCacheHygiene {
       val joins = plan.collect {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
       }.length
-      assert(joins <= GraphOps.PrCheckpointEvery,
+      assert(joins <= graft.functions.Bsp.CheckpointEvery,
         s"$what: $joins joins in the $rounds-round plan — not truncating")
       // the superstep cache roots each round at the previous round's
-      // InMemoryRelation; bspLoop's localCheckpoint (LogicalRDD) still
-      // truncates the RDD lineage behind it every PrCheckpointEvery
+      // InMemoryRelation; Bsp.loop's localCheckpoint (LogicalRDD) still
+      // truncates the RDD lineage behind it every Bsp.CheckpointEvery
       assert(plan.collectFirst {
         case _: org.apache.spark.sql.execution.LogicalRDD => ()
         case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => ()
@@ -371,13 +371,13 @@ class GraphOpsSpec extends AnyFunSuite with graft.GateCacheHygiene {
     // per-round superstep cache roots every round at the previous round's
     // materialization — the 10-round plan must stay bounded at ONE
     // round's joins over a materialized leaf (InMemoryRelation from the
-    // round cache; bspLoop's localCheckpoint additionally truncates the
+    // round cache; Bsp.loop's localCheckpoint additionally truncates the
     // RDD lineage behind it, as the round-3/6/9 truncation WARNs show)
     val plan = peeled10.queryExecution.optimizedPlan
     val joins = plan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }.length
-    assert(joins <= 2 * GraphOps.PrCheckpointEvery,
+    assert(joins <= 2 * graft.functions.Bsp.CheckpointEvery,
       s"$joins joins in the 10-round peel plan — not truncating")
     assert(plan.collectFirst {
       case _: org.apache.spark.sql.execution.LogicalRDD => ()

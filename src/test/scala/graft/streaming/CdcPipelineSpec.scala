@@ -151,36 +151,6 @@ class CdcPipelineSpec extends AnyFunSuite with graft.GateCacheHygiene {
       Seq("keep"))
   }
 
-  test("PK-changing update through the pipeline: parity orphans the old " +
-      "key, fixPkUpdateOrphans tombstones it (T28 streaming path)") {
-    // change rows carry both images: (before_id, id, email, op, seq)
-    val schema = "before_id INT, id INT, email STRING, op STRING, seq BIGINT"
-    def run(fix: Boolean): org.apache.spark.sql.DataFrame = {
-      val (src, tgt, ckp) = freshDirs()
-      val pipe = new CdcPipeline(spark, tgt, ckp)
-      Seq(
-        (1, 1, "a@x.com", "I", 1L), // insert id=1
-        (2, 2, "b@x.com", "I", 2L), // insert id=2
-        (1, 9, "a@x.com", "U", 3L)) // id 1 renumbered to 9
-        .toDF("before_id", "id", "email", "op", "seq")
-        .coalesce(1).write.parquet(s"$src/seg1")
-      val stream = spark.readStream.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
-        .parquet(s"$src/*")
-      val q = pipe.start(stream, "users", opCol = "op", seqCol = "seq",
-        versionOf = _ => 100L, beforeImage = Some(("id", "before_id")),
-        fixPkUpdateOrphans = fix)
-      q.awaitTermination()
-      LiveView.live(pipe.applied("users"), pks = Seq("id"))
-    }
-    // parity: the old key's insert survives — the reference's orphan
-    assert(run(fix = false).select("id").as[Int].collect().sorted.toSeq ==
-      Seq(1, 2, 9))
-    // fixed: the tombstone (same version, seq=3 beats seq=1) removes it
-    assert(run(fix = true).select("id").as[Int].collect().sorted.toSeq ==
-      Seq(2, 9))
-  }
-
   test("BoundedStream.await: a failing query ends the wait at once and " +
       "stops the others, a continuous one included") {
     import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
