@@ -70,7 +70,8 @@ object Main {
                   sourceDir: String, warehouseDir: String)
       : Seq[graft.operators.ReplicationResult] = {
     val rep = new SnapshotReplicator(spark, sourceDir, warehouseDir)
-    rep.run(cfg.replication.tables, cfg.replication.parallelTables)
+    rep.run(cfg.replication.tables,
+      cfg.replication.parallelTables.getOrElse(Int.MaxValue))
   }
 
   /** CDC mode: the binlog replica of the configured tables

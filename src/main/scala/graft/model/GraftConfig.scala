@@ -24,7 +24,8 @@ final case class ReplicationConfig(
     mode: String = "snapshot",              // "snapshot" | "cdc" (src/config.py:17-19)
     tables: Seq[String] = Seq.empty,        // empty = all tables
     batchSize: Int = 50000,                 // src/config.py:72
-    parallelTables: Int = 1)                // src/config.py:75
+    // src/config.py:75; unset = as many as the session has task slots
+    parallelTables: Option[Int] = None)
 
 final case class GraftConfig(
     source: SourceConfig,
@@ -71,6 +72,6 @@ object GraftConfig {
         mode = mode,
         tables = parseTableList(get("REPLICATION_TABLES", "")),
         batchSize = get("REPLICATION_BATCH_SIZE", "50000").toInt,
-        parallelTables = get("REPLICATION_PARALLEL_TABLES", "1").toInt))
+        parallelTables = env.get("REPLICATION_PARALLEL_TABLES").map(_.toInt)))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.model.Identifiers
 import graft.sources.{HadoopFs, ParquetCatalog}
 
@@ -34,8 +35,9 @@ final case class ReplicationResult(
   *     lacks (`README.md:462`);
   *   - A1/A2/A4 count validation (`src/replicator.py:74-81`);
   *   - O4 parallel tables (`ThreadPoolExecutor`,
-  *     `src/replicator.py:105-123`) → concurrent Spark jobs via Scala
-  *     parallel collections — jobs share the cluster's scheduler, and each
+  *     `src/replicator.py:105-123`) → concurrent Spark jobs from one
+  *     bounded pool as wide as the session's task slots, largest table
+  *     first ([[run]]) — jobs share the cluster's scheduler, and each
   *     partition owns its own connection/file handle (fixing the shared-
   *     client thread hazard noted in SURVEY.md §3.1);
   *   - O5 per-table error isolation (`src/replicator.py:135-141`).
@@ -67,8 +69,12 @@ final class SnapshotReplicator(
   def readTarget(table: String): DataFrame =
     spark.read.parquet(targetPath(table))
 
-  /** A2: target row count (`src/clickhouse_client.py:81-86`). */
-  def targetCount(table: String): Long = readTarget(table).count()
+  /** A2: target row count (`src/clickhouse_client.py:81-86`). A caller
+    * that knows the target's schema passes it, and the re-read of the
+    * target skips the schema-inference job. */
+  def targetCount(table: String, schema: Option[StructType] = None): Long =
+    schema.fold(readTarget(table))(spark.read.schema(_).parquet(targetPath(table)))
+      .count()
 
   /** K7: truncate the target — empty it while preserving its schema
     * (`TRUNCATE TABLE` analog, `src/clickhouse_client.py:485` family; same
@@ -86,7 +92,7 @@ final class SnapshotReplicator(
       val src = catalog.read(table)
       val sourceCount = src.count() // A1 pre-copy count
       src.write.mode(SaveMode.Overwrite).parquet(targetPath(table))
-      val tgtCount = targetCount(table)
+      val tgtCount = targetCount(table, Some(src.schema))
       ReplicationResult(table, sourceCount, tgtCount,
         success = sourceCount == tgtCount) // A4
     } match {
@@ -183,23 +189,41 @@ final class SnapshotReplicator(
     }
   }
 
-  /** O4/O5: run all tables, optionally in parallel; failures isolated. */
+  /** O4/O5: every table in flight at once on one bounded pool of named
+    * daemon threads, as wide as the session's task slots
+    * (`defaultParallelism`) and at most `parallelism`. Each table's copy
+    * is a handful of small jobs, so a pool as wide as the slots keeps
+    * them all busy; the tables start largest first by source bytes (the
+    * LPT rule: the biggest copy never starts last). Results come back in
+    * the configured order, each table's failure isolated in its own
+    * result; the pool's threads have ended when this returns. */
   def run(configured: Seq[String] = Seq.empty,
-          parallelism: Int = 1): Seq[ReplicationResult] = {
+          parallelism: Int = Int.MaxValue): Seq[ReplicationResult] = {
     HadoopFs.mkdirs(warehouseDir) // K2 create-database analog
-    val tables = tablesToReplicate(configured)
-    if (parallelism <= 1) tables.map(replicateTable(_))
-    else {
-      import scala.collection.parallel.CollectionConverters._
-      val par = tables.par
-      // a pool sized to the REQUESTED level: ExecutionContext.global
-      // would run availableProcessors tables at once regardless of the
-      // parameter — the throttle exists to bound concurrent source reads
-      val pool = new java.util.concurrent.ForkJoinPool(parallelism)
-      par.tasksupport =
-        new scala.collection.parallel.ForkJoinTaskSupport(pool)
-      try par.map(replicateTable(_)).toList
-      finally pool.shutdown()
+    val tables = tablesToReplicate(configured).toIndexedSeq
+    val width = Seq(parallelism, spark.sparkContext.defaultParallelism,
+      tables.size).min.max(1)
+    val order = tables.indices
+      .sortBy(i => -HadoopFs.size(s"$sourceDir/${tables(i)}.parquet"))
+    val results = new Array[ReplicationResult](tables.size)
+    val next = new java.util.concurrent.atomic.AtomicInteger
+    val fatal = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val pool = (1 to width).map { w =>
+      val t = new Thread(() =>
+        try {
+          var k = next.getAndIncrement()
+          while (k < order.size) {
+            results(order(k)) = replicateTable(tables(order(k)))
+            k = next.getAndIncrement()
+          }
+        } catch { case e: Throwable => fatal.compareAndSet(null, e); () },
+        s"graft-snapshot-$w")
+      t.setDaemon(true)
+      t.start()
+      t
     }
+    pool.foreach(_.join())
+    Option(fatal.get).foreach(e => throw e)
+    results.toSeq
   }
 }

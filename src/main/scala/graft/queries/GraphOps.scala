@@ -342,14 +342,17 @@ object GraphOps {
     * co-partitioned join on `src` plus one partial-agg'd shuffle on
     * `node`, with no anti-join against a visited set; monotone and
     * idempotent, so partition order cannot change a value. The state is
-    * cached per superstep: it feeds BOTH the join and the union, so a
-    * lazy unroll would re-execute earlier rounds ~2^depth times (the
-    * x_kcore lesson applied family-wide). */
+    * cached and materialized per superstep: it feeds BOTH the join and
+    * the union, so a lazy unroll would re-execute earlier rounds
+    * ~2^depth times (the x_kcore lesson applied family-wide), and those
+    * two readers run as concurrent stages of one job, so a lazily filled
+    * cache would still compute each round's state twice. */
   private def minPropagate(edges: DataFrame, init: DataFrame, rounds: Int)
       (msg: Column): DataFrame = {
     val v = init.columns(1)
     graft.functions.Bsp.loop(init, rounds) { r0 =>
       val r = graft.GateCache.cache(r0)
+      r.count()
       val sent = edges.join(r, edges("src") === r("node"))
         .select(col("dst").as("node"), msg.as(v))
       r.unionAll(sent).groupBy(col("node")).agg(min(col(v)).as(v))
@@ -499,8 +502,7 @@ object GraphOps {
     * [[KcoreRounds]] peels of the sparsified trade graph — O(distinct
     * degrees) output at any SF. */
   private def kcore(s: SparkSession, dir: String): DataFrame =
-    kcorePeel(graft.GateCache.cache(sparseTradeEdgesLong(s, dir)),
-        KcoreK, KcoreRounds)
+    kcorePeel(sparseTradeEdgesLong(s, dir), KcoreK, KcoreRounds)
       .groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
 

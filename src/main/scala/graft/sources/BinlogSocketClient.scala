@@ -180,6 +180,7 @@ final class BinlogSocketClient(
                   bound: Option[(String, Long)] = None)
       : TailResult = {
     val out = Vector.newBuilder[BinlogFormat.RowChange]
+    val commits = Vector.newBuilder[BinlogSocketClient.Commit]
     var appliedGtids = applied0
     var resumeFile = fromFile
     var resumePos = fromPos
@@ -264,6 +265,8 @@ final class BinlogSocketClient(
                 // current file
                 resumeFile = currentFile
                 resumePos = commitEnd
+                commits += BinlogSocketClient.Commit(currentFile, commitEnd,
+                  nChanges.toInt)
                 // forward progress re-arms the reconnect budget: the cap
                 // bounds CONSECUTIVE failures, not a long tail's lifetime
                 failuresSinceProgress = 0
@@ -295,7 +298,8 @@ final class BinlogSocketClient(
           backoffMs = math.min(backoffMs * 2, maxBackoffMs)
       } finally if (sock != null) sock.close()
     }
-    TailResult(out.result(), reconnects, resumeFile, resumePos, appliedGtids)
+    TailResult(out.result(), reconnects, resumeFile, resumePos, appliedGtids,
+      commits.result())
   }
 
   /** Authenticate with whichever plugin the server runs:
@@ -376,8 +380,13 @@ object BinlogSocketClient {
   /** `changes` in commit order; `reconnects` = dropped-stream recoveries
     * that happened; (`file`, `pos`) = the final resume offset;
     * `appliedGtids` = the GTID set of every commit seen (the caller's
-    * next failover token). */
+    * next failover token); `commits` = every commit's end, in order. */
   final case class TailResult(changes: Vector[BinlogFormat.RowChange],
                               reconnects: Int, file: String, pos: Long,
-                              appliedGtids: GtidSet)
+                              appliedGtids: GtidSet, commits: Vector[Commit])
+
+  /** One commit's end: the (`file`, `pos`) a dump resumes from after it,
+    * and how many of the tail's changes it and the commits before it
+    * carried. */
+  final case class Commit(file: String, pos: Long, changes: Int)
 }

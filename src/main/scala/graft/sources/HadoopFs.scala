@@ -56,6 +56,14 @@ object HadoopFs {
 
   def exists(path: String): Boolean = fs(path).exists(new Path(path))
 
+  /** Bytes under `path` (a file, or a directory's files recursively); 0
+    * when the path is absent. */
+  def size(path: String): Long = {
+    val p = new Path(path)
+    val f = fs(path)
+    if (f.exists(p)) f.getContentSummary(p).getLength else 0L
+  }
+
   def mkdirs(dir: String): Unit = { fs(dir).mkdirs(new Path(dir)); () }
 
   /** Recursive delete; a no-op when `path` is absent. */

@@ -43,15 +43,23 @@ import graft.model.SourceConfig
   * the same stamped apply and live view consume either path.
   *
   * Scale shape (PLANS.md): a replication stream is ONE ordered
-  * connection per primary — the tail is inherently driver-side (the
-  * reference's single reader thread; the same adjudication as
-  * [[BinlogSocketClient]]). The driver holds only the CURRENT window
-  * of committed-but-unprocessed transactions (dropped at every
-  * `commit()`, exactly Spark's own TextSocket source shape); the
-  * decode already happened in the tail, and the expensive work — the
-  * stamped apply, the dedup, the live view — runs distributed on the
-  * emitted frame. One primary = one partition; many primaries = many
-  * parallel streams, each with its own offset log.
+  * connection per primary that finds the batch's end — the tail is
+  * driver-side (the reference's single reader thread; the same
+  * adjudication as [[BinlogSocketClient]]). The Spark driver holds only
+  * the CURRENT window of committed-but-unprocessed transactions and the
+  * offset at each of their commit ends (dropped at every `commit()`,
+  * exactly Spark's own TextSocket source shape). A micro-batch that fits
+  * in one split of Spark's file-scan rule (`maxPartitionBytes`, an even
+  * share of the default parallelism, at least `openCostInBytes`) is one
+  * partition carrying those rows: every live-tail batch. A larger one —
+  * a catch-up backlog — is planned as transaction-aligned byte ranges
+  * of about one split each; every task re-dumps and decodes its own
+  * range with a bounded tail, the way the batch read does, so the
+  * convert, stamp and append run on all slots and no task carries the
+  * decoded backlog. Each range's `_seq` starts at its batch start's
+  * count plus the table's rows before it, so rows are identical however
+  * a batch is cut. Many primaries = many parallel streams, each with
+  * its own offset log.
   */
 final class MysqlBinlogSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "mysql-binlog"
@@ -208,16 +216,25 @@ private[sources] sealed trait BinlogPartition extends InputPartition {
   def baseSeq: Long
 }
 
-/** A batch read's partition: the range is one ordered dump (the same
-  * one-connection-per-primary shape as the stream), run in the TASK
-  * that reads it; `_seq` is the range's 0-based commit-order ordinal. */
+/** A partition that dumps its own range of the log, in the TASK that
+  * reads it, through the same one-connection-per-primary tail as the
+  * stream. A batch read is one such range with `_seq` its 0-based
+  * commit-order ordinal; a large micro-batch is several, each bounded by
+  * commit ends, starting at `baseSeq` and holding exactly `rows` rows of
+  * the table (`rows < 0`: not known in advance). */
 private[sources] final case class BinlogRangePartition(
-    fromFile: String, fromPos: Long, endFile: String, endPos: Long)
+    fromFile: String, fromPos: Long, endFile: String, endPos: Long,
+    baseSeq: Long = 0L, rows: Int = -1)
     extends BinlogPartition {
-  def baseSeq: Long = 0L
-  def changes(cfg: MysqlBinlogSource.Config): IndexedSeq[BinlogFormat.RowChange] =
-    cfg.client().tailUntil(fromFile, fromPos, endFile, endPos)
+  def changes(cfg: MysqlBinlogSource.Config): IndexedSeq[BinlogFormat.RowChange] = {
+    val mine = cfg.client().tailUntil(fromFile, fromPos, endFile, endPos)
       .changes.filter(cfg.matches)
+    require(rows < 0 || mine.size == rows,
+      s"re-tail of ($fromFile, $fromPos)..($endFile, $endPos) carried " +
+        s"${mine.size} rows of ${cfg.table}, the range needs $rows — " +
+        "the log changed under a logged batch?")
+    mine
+  }
 }
 
 /** The stream offset: the primary's (file, pos) the NEXT dump resumes
@@ -248,14 +265,16 @@ private[sources] final class BinlogMicroBatchStream(
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   // Driver-side window of committed-but-unprocessed changes: buffered
   // holds this table's rows for offsets [bufferBase, bufferBase +
-  // buffered.size); commit() drops below the committed count, so the
-  // window is bounded by one trigger's data (the TextSocket-source
-  // shape). planInputPartitions falls back to a bounded re-tail when a
-  // recovered write-ahead-logged batch predates this stream object —
-  // the binlog is append-only and immutable, so the re-read is
-  // byte-identical and the batch reproduces exactly.
+  // buffered.size), and marks the window's start followed by every
+  // commit's end offset in it; commit() drops below the committed
+  // offset, so the window is bounded by one trigger's data (the
+  // TextSocket-source shape). planInputPartitions falls back to a
+  // bounded re-tail when a recovered write-ahead-logged batch predates
+  // this stream object — the binlog is append-only and immutable, so the
+  // re-read is byte-identical and the batch reproduces exactly.
   private var bufferBase: Long = 0L
   private var buffered: Vector[BinlogFormat.RowChange] = Vector.empty
+  private var marks: Vector[BinlogSourceOffset] = Vector.empty
   private var cur: BinlogSourceOffset = null
   private var availableNowPrepared = false
   private var availableNowEnd: BinlogSourceOffset = null
@@ -276,14 +295,15 @@ private[sources] final class BinlogMicroBatchStream(
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[BinlogSourceOffset]
     if (availableNowEnd != null) return clampedAvailableNow(s)
-    if (cur == null || s.count != cur.count ||
-        s.file != cur.file || s.pos != cur.pos) {
+    if (cur == null || s != cur) {
       cur = s; buffered = Vector.empty; bufferBase = s.count
+      marks = Vector(s)
     }
-    val r = cfg.client().tail(cur.file, cur.pos)
-    val mine = r.changes.filter(cfg.matches)
+    val (mine, ends) = BinlogMicroBatchStream.window(
+      cfg.client().tail(cur.file, cur.pos), cur, cfg)
     buffered ++= mine
-    cur = BinlogSourceOffset(r.file, r.pos, cur.count + mine.size)
+    marks ++= ends
+    cur = marks.last
     if (availableNowPrepared) availableNowEnd = cur // freeze: Trigger.AvailableNow
     cur
   }
@@ -301,32 +321,44 @@ private[sources] final class BinlogMicroBatchStream(
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowPrepared = true
 
+  /** A batch that fits in one split is one partition carrying its
+    * buffered rows. A larger one becomes transaction-aligned byte ranges
+    * that the tasks dump and decode themselves, each anchored at its own
+    * `_seq`, so the Spark driver ships offsets, not rows, and the apply
+    * runs on every slot. */
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val s = start.asInstanceOf[BinlogSourceOffset]
     val e = end.asInstanceOf[BinlogSourceOffset]
     require(e.count >= s.count, s"offset range inverted: $s .. $e")
     val n = (e.count - s.count).toInt
-    val slice =
-      if (n == 0) Vector.empty // an idle batch needs no connection
-      else if (s.count >= bufferBase &&
-          e.count <= bufferBase + buffered.size)
-        buffered.slice((s.count - bufferBase).toInt,
-          (e.count - bufferBase).toInt)
+    if (n == 0) // an idle batch needs no connection
+      return Array(BinlogInputPartition(Vector.empty, s.count))
+    val (i, j) = (marks.indexOf(s), marks.indexOf(e))
+    val (rows, ends) =
+      if (i >= 0 && j > i)
+        (buffered.slice((s.count - bufferBase).toInt,
+          (e.count - bufferBase).toInt), marks.slice(i, j + 1))
       else {
         // recovery re-plan of a batch this object never tailed: re-dump
         // the immutable range — BOUNDED at the batch's end offset, so
-        // the cost is O(batch) even when the log has since grown — and
-        // cut at exactly n table-rows
-        val mine = cfg.client().tailUntil(s.file, s.pos, e.file, e.pos)
-          .changes.filter(cfg.matches)
-        require(mine.size >= n,
+        // the cost is O(batch) even when the log has since grown
+        val (mine, commits) = BinlogMicroBatchStream.window(
+          cfg.client().tailUntil(s.file, s.pos, e.file, e.pos), s, cfg)
+        require(mine.size == n,
           s"re-tail of (${s.file}, ${s.pos})..(${e.file}, ${e.pos}) " +
             s"carried ${mine.size} rows of ${cfg.table}, batch needs " +
-            s"$n — the log shrank?")
-        mine.take(n)
+            s"$n — the log changed under a logged batch?")
+        (mine, s +: commits)
       }
-    Array(BinlogInputPartition(slice, s.count))
+    val split = BinlogMicroBatchStream.splitBytes(ends)
+    if (BinlogMicroBatchStream.span(ends) <= split)
+      Array(BinlogInputPartition(rows, s.count))
+    else BinlogMicroBatchStream.ranges(ends, split)
+      .filter { case (a, b) => b.count > a.count }
+      .map { case (a, b) => BinlogRangePartition(a.file, a.pos, b.file, b.pos,
+        a.count, (b.count - a.count).toInt) }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -339,6 +371,8 @@ private[sources] final class BinlogMicroBatchStream(
       buffered = buffered.drop(drop)
       bufferBase = e.count
     }
+    val k = marks.indexOf(e)
+    if (k > 0) marks = marks.drop(k)
   }
 
   /** NON_BLOCK dumps open and close their own sockets per catch-up —
@@ -346,10 +380,69 @@ private[sources] final class BinlogMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-/** One partition per micro-batch: the replication stream is one
-  * ordered connection per primary (see [[MysqlBinlogSource]]'s scale
-  * note), already tailed on the driver; `baseSeq` anchors the rows'
-  * `_seq` so it is globally monotonic and replay-stable across
+private[sources] object BinlogMicroBatchStream {
+  /** This table's rows of a tail that started at `from`, and the offset
+    * at each of its commit ends: `count` is the cumulative row count of
+    * the table through that commit. */
+  def window(r: BinlogSocketClient.TailResult, from: BinlogSourceOffset,
+             cfg: MysqlBinlogSource.Config)
+      : (Vector[BinlogFormat.RowChange], Vector[BinlogSourceOffset]) = {
+    val before = r.changes.scanLeft(0)((k, ch) => if (cfg.matches(ch)) k + 1 else k)
+    (r.changes.filter(cfg.matches), r.commits.map(c =>
+      BinlogSourceOffset(c.file, c.pos, from.count + before(c.changes))))
+  }
+
+  /** Log bytes from one commit end to the next: a rotation restarts the
+    * position in the new file. */
+  private def bytes(a: BinlogSourceOffset, b: BinlogSourceOffset): Long =
+    if (a.file == b.file) b.pos - a.pos else b.pos
+
+  /** Log bytes between the first and last of `ends`. */
+  def span(ends: IndexedSeq[BinlogSourceOffset]): Long =
+    ends.lazyZip(ends.drop(1)).map(bytes).sum
+
+  /** The split size of Spark's file scans, applied to the log bytes
+    * between the first and last of `ends`: the session's
+    * `spark.sql.files.maxPartitionBytes`, shrunk toward an even share of
+    * the default parallelism but not below `openCostInBytes`. */
+  def splitBytes(ends: IndexedSeq[BinlogSourceOffset]): Long = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val slots = org.apache.spark.sql.SparkSession.active.sparkContext
+      .defaultParallelism
+    math.min(conf.filesMaxPartitionBytes,
+      math.max(conf.filesOpenCostInBytes, ceilDiv(span(ends), slots)))
+  }
+
+  private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+
+  /** `ends` (a start offset, then commit ends in log order) cut into
+    * `ceil(span / split)` consecutive ranges of near-even bytes: range k
+    * closes at the first commit end at or past k/m of the span. A
+    * commit is never cut, so a range can hold more than its share. */
+  def ranges(ends: IndexedSeq[BinlogSourceOffset], split: Long)
+      : Seq[(BinlogSourceOffset, BinlogSourceOffset)] = {
+    val total = span(ends)
+    val m = ceilDiv(total, split)
+    val out = Seq.newBuilder[(BinlogSourceOffset, BinlogSourceOffset)]
+    var from = ends.head
+    var acc = 0L
+    var k = 1L
+    ends.lazyZip(ends.drop(1)).foreach { (a, b) =>
+      acc += bytes(a, b)
+      if (k < m && acc * m >= k * total) {
+        out += (from -> b)
+        from = b
+        while (k < m && acc * m >= k * total) k += 1
+      }
+    }
+    if (from != ends.last) out += (from -> ends.last)
+    out.result()
+  }
+}
+
+/** A micro-batch small enough for one split: its changes were tailed on
+  * the Spark driver and ride in the partition; `baseSeq` anchors the
+  * rows' `_seq` so it is globally monotonic and replay-stable across
   * batches. */
 private[sources] final case class BinlogInputPartition(
     rows: IndexedSeq[BinlogFormat.RowChange], baseSeq: Long)

@@ -10,7 +10,7 @@ class GraftConfigSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val c = GraftConfig.fromEnv(Map.empty)
     assert(c.replication.mode == "snapshot")
     assert(c.replication.batchSize == 50000)
-    assert(c.replication.parallelTables == 1)
+    assert(c.replication.parallelTables.isEmpty) // the session's width
     assert(c.replication.tables.isEmpty)
     assert(c.source.port == 3306 && c.target.port == 8123)
   }
@@ -30,6 +30,7 @@ class GraftConfigSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(c.replication.mode == "cdc")
     assert(c.replication.tables == Seq("users", "orders"))
     assert(c.replication.batchSize == 1000)
+    assert(c.replication.parallelTables.contains(4))
     assert(c.source.host == "db1" && c.source.database == "app")
     intercept[IllegalArgumentException] {
       GraftConfig.fromEnv(Map("REPLICATION_MODE" -> "bogus"))

@@ -77,6 +77,20 @@ class SnapshotSpec extends AnyFunSuite with graft.GateCacheHygiene {
     assert(!bad.success && bad.error.isDefined)
   }
 
+  test("run: one pool, results in the configured order, the bad table " +
+      "fails alone, and no pool thread outlives the call (O4/O5)") {
+    import scala.jdk.CollectionConverters._
+    val wh = Files.createTempDirectory("graft_wh").toString
+    val rep = new SnapshotReplicator(spark, TestSpark.Sf0001, wh)
+    val results = rep.run(Seq("region", "no_such_table", "nation"))
+    assert(results.map(_.table) == Seq("region", "no_such_table", "nation"))
+    assert(results.map(_.success) == Seq(true, false, true))
+    assert(results(1).error.isDefined && results(2).sourceCount == 25)
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-snapshot-") && t.isAlive)
+    assert(alive.isEmpty, s"pool threads still alive: $alive")
+  }
+
   test("incremental snapshot appends only the delta past the watermark") {
     val wh = Files.createTempDirectory("graft_wh").toString
     val rep = new SnapshotReplicator(spark, TestSpark.Sf0001, wh)

@@ -317,4 +317,102 @@ class BinlogDsv2Spec extends AnyFunSuite with graft.GateCacheHygiene {
         s"got $rows")
     } finally srv.close()
   }
+
+  test("ranges: ceil(span / split) contiguous, near-even ranges that " +
+      "never cut a commit") {
+    val ends = (0 to 10).map(i =>
+      BinlogSourceOffset("r-bin.000001", 4L + 100L * i, i.toLong))
+    def counts(rs: Seq[(BinlogSourceOffset, BinlogSourceOffset)]) =
+      rs.map { case (a, b) => (a.count, b.count) }
+    assert(counts(BinlogMicroBatchStream.ranges(ends, 250L)) ==
+      Seq((0L, 3L), (3L, 5L), (5L, 8L), (8L, 10L)))
+    assert(counts(BinlogMicroBatchStream.ranges(ends, 1000L)) == Seq((0L, 10L)))
+    val big = IndexedSeq(BinlogSourceOffset("r-bin.000001", 4L, 0L),
+      BinlogSourceOffset("r-bin.000001", 1004L, 5L),
+      BinlogSourceOffset("r-bin.000002", 100L, 6L))
+    assert(counts(BinlogMicroBatchStream.ranges(big, 250L)) ==
+      Seq((0L, 5L), (5L, 6L)))
+  }
+
+  test("a backlog larger than one split drains as byte ranges the tasks " +
+      "dump: the same rows and _seq as one split, also when a restart " +
+      "re-plans the logged batch") {
+    import BinlogFixture.{Change, TableDef}
+    // 60 transactions over two tables: t's inserts, updates and deletes
+    // interleave with rows of u, which must not count against t's _seq
+    val txns = (1L to 60L).map { k =>
+      val mine = if (k <= 30) Seq(insert(k), insert(k + 100))
+        else Seq(Change.update(IndexedSeq[Any](k - 30, (k - 30).toDouble),
+            IndexedSeq[Any](k - 30, k * 10.0)),
+          Change.delete(IndexedSeq[Any](k + 70, (k + 70).toDouble)))
+      mine.map("t" -> _) ++ (if (k % 3 == 0) Seq("u" -> insert(k)) else Nil)
+    }
+    val log = BinlogFixture.encodeMulti(
+      Seq(TableDef("d", "t", 23L, cols), TableDef("d", "u", 24L, cols)),
+      txns, gtidFrom = Some(1L))
+    val srv = new BinlogFixtureServer(
+      IndexedSeq("split-bin.000001" -> log), "repl", "graft-secret")
+    val split = "spark.sql.files.maxPartitionBytes"
+    import spark.implicits._
+    try {
+      /** Drains the log into (rows, partitions per attempt); the first
+        * `failures` attempts fail after the batch is planned and logged. */
+      def drain(maxBytes: Option[Long], failures: Int)
+          : (org.apache.spark.sql.DataFrame, Seq[Int]) = {
+        val ckp = graft.GateCache.tempDir("graft_dsv2_split_ckp").toString
+        val rows = scala.collection.mutable.ArrayBuffer
+          .empty[(Long, Double, String, Long, String)]
+        val parts = scala.collection.mutable.ArrayBuffer.empty[Int]
+        maxBytes.foreach(b => spark.conf.set(split, b.toString))
+        try (0 to failures).foreach { attempt =>
+          val q = spark.readStream.format("mysql-binlog")
+            .schema(MysqlBinlogSource.withMeta(rowSchema))
+            .option("host", "127.0.0.1").option("port", srv.port.toString)
+            .option("user", "repl").option("password", "graft-secret")
+            .option("table", "t")
+            .option("startFile", "split-bin.000001").option("startPos", "4")
+            .load()
+            .writeStream.option("checkpointLocation", ckp)
+            .trigger(Trigger.AvailableNow())
+            .foreachBatch {
+              (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+               _: Long) =>
+                parts.synchronized { parts += b.rdd.getNumPartitions }
+                if (attempt < failures)
+                  throw new IllegalStateException("injected sink failure")
+                rows.synchronized {
+                  rows ++= b.collect().map(r => (r.getLong(0),
+                    r.getDouble(1), r.getString(2), r.getLong(3),
+                    r.getString(4)))
+                }
+                ()
+            }
+            .start()
+          if (attempt < failures)
+            intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+              q.awaitTermination())
+          else q.awaitTermination()
+        } finally spark.conf.unset(split)
+        (rows.toSeq.toDF("id", "bal", "op", "_seq", "_tbl"), parts.toSeq)
+      }
+      def same(a: org.apache.spark.sql.DataFrame,
+               b: org.apache.spark.sql.DataFrame): Boolean =
+        a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+      val (one, oneParts) = drain(None, failures = 0)
+      assert(oneParts == Seq(1), s"one split expected, got $oneParts")
+      assert(one.count() == 120 &&
+        one.select("_seq").as[Long].collect().sorted.toSeq == (0L until 120L))
+
+      val (cut, cutParts) = drain(Some(log.length / 4L), failures = 0)
+      assert(cutParts.size == 1 && cutParts.head >= 2,
+        s"the backlog should drain as one batch of >= 2 ranges: $cutParts")
+      assert(same(one, cut))
+
+      val (replanned, replanParts) = drain(Some(log.length / 4L), failures = 1)
+      assert(replanParts.size == 2 && replanParts.forall(_ >= 2),
+        s"the logged batch should re-plan as ranges: $replanParts")
+      assert(same(one, replanned))
+    } finally srv.close()
+  }
 }
