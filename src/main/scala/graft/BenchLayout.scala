@@ -20,13 +20,7 @@ import org.apache.spark.sql.functions._
   * min-of-3 per (sf, measurement). Usage: `tools/run_main.sh BenchLayout`.
   */
 object BenchLayout {
-  private def costAgg(li: DataFrame, ps: DataFrame): DataFrame =
-    li.join(ps, col("l_partkey") === col("ps_partkey") &&
-        col("l_suppkey") === col("ps_suppkey"))
-      .agg(count(lit(1)).as("n_joined"),
-        sum((col("ps_supplycost") * col("l_quantity")
-          .cast("decimal(18,2)")).cast("decimal(22,6)"))
-          .cast("decimal(38,6)").cast("double").as("cost_total"))
+  import graft.queries.Procurement.{costAgg, isoSession}
 
   def main(args: Array[String]): Unit = {
     val spark = Sessions.start()
@@ -41,9 +35,7 @@ object BenchLayout {
       val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
     }
 
-    val iso = spark.newSession()
-    iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    iso.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val iso = isoSession(spark)
 
     // partsupp derivation mirrors queries.Procurement.partsupp's shape
     // without its staging cache (we time raw recompute vs layout read).

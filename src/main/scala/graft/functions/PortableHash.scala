@@ -60,7 +60,4 @@ object PortableHash {
     * is portable with zero arithmetic. */
   def md5Hex(x: Column, salt: String = ""): Column =
     md5(concat(lit(salt), x))
-
-  def duckMd5Sql(x: String, salt: String = ""): String =
-    if (salt.isEmpty) s"md5($x)" else s"md5('$salt' || $x)"
 }

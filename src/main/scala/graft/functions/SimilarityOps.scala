@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`Array[Float]`) — extension
@@ -10,6 +11,25 @@ import org.apache.spark.sql.functions._
   * `aggregate`) — codegen'd, no UDF, left-to-right summation so the DuckDB
   * oracle (explicit term-sum or list functions) can match deterministically
   * after rounding.
+  *
+  * Every path of the vector family — the ANN top-k paths (brute force, LSH
+  * bands, IVF cells, PQ shortlist) and the embedding near-dup gates — is a
+  * filter-then-refine search: its own candidate stage, then one refine
+  * step built from four shared rules, each defined once here:
+  *   - the scored side ([[Side]]): id, vector, and the norm computed once
+  *     per row, never per pair;
+  *   - the cosine of two sides ([[cosine]]): one native dot over the two
+  *     per-row norms;
+  *   - the near-dup pair stage ([[nearDupPairs]]): a/b sides under an
+  *     optional block key (none, an LSH bucket or a k-means cell),
+  *     `id1 < id2`, cosine above the threshold;
+  *   - the top-k rank ([[topK]]): `row_number` over the key, ordered by
+  *     `round(score, 6) DESC, id ASC`, keep ≤ k, the score emitted as
+  *     `decimal(10,6)`.
+  *
+  * The oracle side mirrors them: [[dotDuck]]/[[cosineDuck]] spell the same
+  * left-to-right dot and cosine, and every oracle's `ROW_NUMBER` clause
+  * spells the same rank order.
   */
 object SimilarityOps {
 
@@ -27,8 +47,76 @@ object SimilarityOps {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
+  /** A scored side: the names of its id, vector and norm columns. */
+  final case class Side(id: String, vec: String, nrm: String) {
+    /** `df`'s `idCol` and `vecCol` under this side's names, the norm
+      * computed once per row, then `extra`. */
+    def of(df: DataFrame, idCol: String, vecCol: String,
+           extra: Column*): DataFrame =
+      df.select(Seq(col(idCol).as(id), col(vecCol).as(vec),
+        norm(col(vecCol)).as(nrm)) ++ extra: _*)
+
+    /** The columns of the scored side `src`, renamed to this side's. */
+    def from(src: Side): Seq[Column] =
+      Seq(col(src.id).as(id), col(src.vec).as(vec), col(src.nrm).as(nrm))
+  }
+
+  /** The ANN sides: query and corpus (neighbor). */
+  val Query = Side("query_id", "_qv", "_qn")
+  val Corpus = Side("neighbor_id", "_cv", "_cn")
+  /** The near-dup pair stage's sides. */
+  val PairA = Side("id1", "_va", "_na")
+  val PairB = Side("id2", "_vb", "_nb")
+  private val Centroid = Side("_cid", "_cvec", "_cnrm")
+
+  /** The cosine of two scored sides: one dot over the per-row norms. */
+  def cosine(a: Side, b: Side): Column =
+    dot(col(a.vec), col(b.vec)) / (col(a.nrm) * col(b.nrm))
+
+  /** A cosine as emitted: rounded to 6 places, `decimal(10,6)`. */
+  private def score6(c: Column): Column = round(c, 6).cast("decimal(10,6)")
+
+  /** The top-k rank rule: `row_number` over `key`, ordered by
+    * `round(score, 6) DESC, id ASC`; keeps ≤ k rows per key and emits
+    * (key, `rk`, id, `carry`…, `out`) with the score as `decimal(10,6)`. */
+  def topK(scored: DataFrame, key: String, id: String, score: String,
+           k: Int, out: String, carry: Column*): DataFrame = {
+    val w = Window.partitionBy(col(key))
+      .orderBy(round(col(score), 6).desc, col(id).asc)
+    scored.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(Seq(col(key), col("rk"), col(id)) ++ carry :+
+        score6(col(score)).as(out): _*)
+  }
+
+  /** [[topK]] over scored ANN candidates (`query_id`, `neighbor_id`,
+    * `_cos`): (`query_id`, `rk`, `neighbor_id`, `carry`…, `cos_sim`). */
+  def neighborTopK(scored: DataFrame, k: Int, carry: Column*): DataFrame =
+    topK(scored, Query.id, Corpus.id, "_cos", k, "cos_sim", carry: _*)
+
+  /** Cosine-scores joined [[Query]] × [[Corpus]] candidates, self pairs
+    * dropped: (`query_id`, `neighbor_id`, `_cos`, `carry`…). */
+  private def scoreCandidates(cand: DataFrame, carry: Column*): DataFrame =
+    cand.filter(col(Query.id) =!= col(Corpus.id))
+      .select(Seq(col(Query.id), col(Corpus.id),
+        cosine(Query, Corpus).as("_cos")) ++ carry: _*)
+
+  /** The near-dup pair stage: the pairs of the [[PairA]] side `a` and the
+    * [[PairB]] side `b` with `id1 < id2` whose cosine exceeds `threshold`
+    * — every such pair (a non-equi join), or, under a `block` key both
+    * sides carry (an LSH bucket, a k-means cell), only pairs that share
+    * it. Emits (block key, `id1`, `id2`, `cos_sim`). */
+  def nearDupPairs(a: DataFrame, b: DataFrame, block: Option[String],
+                   threshold: Double): DataFrame = {
+    val joined = block match {
+      case None    => a.join(b, col(PairA.id) < col(PairB.id))
+      case Some(k) => a.join(b, Seq(k)).filter(col(PairA.id) < col(PairB.id))
+    }
+    joined.withColumn("_cos", cosine(PairA, PairB))
+      .filter(col("_cos") > threshold)
+      .select(block.toSeq.map(col) ++ Seq(col(PairA.id), col(PairB.id),
+        score6(col("_cos")).as("cos_sim")): _*)
+  }
 
   /** Brute-force top-k cosine neighbors for a set of query vectors.
     * Cross join (queries × corpus) — the corpus side streams; with Q query
@@ -36,25 +124,9 @@ object SimilarityOps {
     * row, then a per-query top-k (window). The correct baseline, and the
     * right plan when Q is small; scale path is [[lshAnnTopK]]. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                     vecCol: String, k: Int): DataFrame = {
-    // norms precomputed per ROW (not per pair): the pair stage does one dot
-    // + one divide. Same arithmetic as norm-per-pair, 3× fewer dots.
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      norm(col(vecCol)).as("_qn"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-      norm(col(vecCol)).as("_cn"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn"))).as("_cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(round(col("_cos"), 6).desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"),
-        round(col("_cos"), 6).cast("decimal(10,6)").as("cos_sim"))
-  }
+                     vecCol: String, k: Int): DataFrame =
+    neighborTopK(scoreCandidates(Corpus.of(corpus, idCol, vecCol)
+      .crossJoin(broadcast(Query.of(queries, idCol, vecCol)))), k)
 
   /** Random-hyperplane LSH bucket key: `planes` sign bits from fixed
     * pseudo-random hyperplanes (seeded by [[PortableHash]] of (plane, dim),
@@ -80,73 +152,60 @@ object SimilarityOps {
     bits.reduce(_ + _).cast("long")
   }
 
+  /** Query-side multi-probe of the banded-LSH ANN path: every band key
+    * within 2 flipped bits ([[probeMasks]]). One value, shared with the
+    * generated oracle SQL. */
+  val AnnProbeHamming = 2
+
   /** LSH-bucketed ANN, banded OR-construction (the amplification trick the
     * minhash path uses, applied to sign bits): one `bands·bandBits`-plane
     * key per vector, split into `bands` sub-keys; a corpus row is a
-    * candidate for a query if ANY band matches, with Hamming-1 multi-probe
-    * inside the band (query probes its band key plus each one-bit flip —
-    * [[hyperplaneProbeKeys]]). Candidates are exact-cosine scored once
-    * (duplicate band matches collapse via distinct on the deterministic
-    * score) and top-k ranked.
+    * candidate for a query if ANY band matches, with Hamming-2 multi-probe
+    * inside the band (query probes its band key plus each one- and two-bit
+    * flip — [[hyperplaneProbeKeys]]). Candidates are exact-cosine scored
+    * once (duplicate band matches collapse via distinct on the
+    * deterministic score) and top-k ranked.
     *
-    * Scale shape: corpus explodes ×bands, queries ×bands·(bandBits+1) —
-    * but the query side is the small broadcast side, and the join stays an
-    * equi-join on (band, key): no cross join, no non-equi. Recall tunes
-    * with (bands, bandBits): more bands = higher recall & more candidates
-    * (AnnRecallSpec pins the floor); more bits = sharper buckets. */
+    * Scale shape: corpus explodes ×bands, queries ×bands·(1 + bandBits +
+    * C(bandBits,2)) — but the query side is the small broadcast side, and
+    * the join stays an equi-join on (band, key): no cross join, no
+    * non-equi. Recall tunes with (bands, bandBits): more bands = higher
+    * recall & more candidates (AnnRecallSpec pins the floor); more bits =
+    * sharper buckets. */
   def lshAnnTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                  vecCol: String, k: Int, bands: Int, bandBits: Int,
-                 dim: Int, probeHamming: Int = 2,
-                 excludeLabelCol: Option[String] = None): DataFrame = {
+                 dim: Int): DataFrame =
+    neighborTopK(lshCandidates(corpus.select(col(idCol), col(vecCol)),
+      queries.select(col(idCol), col(vecCol)), idCol, vecCol, bands,
+      bandBits, dim), k)
+
+  /** The candidate stage of [[lshAnnTopK]]: the distinct scored pairs
+    * (`query_id`, `neighbor_id`, `_cos`) that share a band key under the
+    * query's multi-probe. Every other column of `queries`, then of
+    * `corpus`, rides along to the output, so a caller can filter the
+    * candidates on them (name the two sides' columns apart). */
+  def lshCandidates(corpus: DataFrame, queries: DataFrame, idCol: String,
+                    vecCol: String, bands: Int, bandBits: Int,
+                    dim: Int): DataFrame = {
     val total = bands * bandBits
     val mask = (1L << bandBits) - 1
-    def bandKeys(key: Column): Column =
-      array((0 until bands).map(b =>
-        shiftright(key, b * bandBits).bitwiseAND(lit(mask))): _*)
-    // Hard-negative mining mode: with `excludeLabelCol` set, candidates
-    // sharing the query's label (its positives) are dropped BEFORE
-    // ranking, so the top-k is the k most-confusable NEGATIVES — the
-    // standard contrastive-training mining step, riding the same bucketed
-    // candidate stage (the filter narrows the join output; the corpus-side
-    // cost is unchanged).
-    val lbl = excludeLabelCol.toSeq
-    val c = corpus.select(
-      Seq(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-        norm(col(vecCol)).as("_cn"),
-        posexplode(bandKeys(hyperplaneKey(col(vecCol), total, dim)))
-          .as(Seq("_band", "_bkey"))) ++
-        lbl.map(l => col(l).as("_cl")): _*)
+    val bandKeys = posexplode(array((0 until bands).map(b =>
+      shiftright(hyperplaneKey(col(vecCol), total, dim), b * bandBits)
+        .bitwiseAND(lit(mask))): _*)).as(Seq("_band", "_bkey"))
+    def rest(df: DataFrame) =
+      df.columns.toSeq.filterNot(Set(idCol, vecCol)).map(col)
+    val c = Corpus.of(corpus, idCol, vecCol, bandKeys +: rest(corpus): _*)
     // Hamming-2 probes on the QUERY side only: queries are the broadcast
     // side, so the ×(1+bits+C(bits,2)) explosion is per-query-row cheap,
     // while the corpus side's cost is untouched — recall rises for free
     // at corpus scale (the multi-probe LSH trick, Lv et al., VLDB'07).
-    val q = queries.select(
-        Seq(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-          norm(col(vecCol)).as("_qn"),
-          posexplode(bandKeys(hyperplaneKey(col(vecCol), total, dim)))
-            .as(Seq("_band", "_bkey"))) ++
-          lbl.map(l => col(l).as("_ql")): _*)
-      .select(Seq(col("query_id"), col("_qv"), col("_qn"), col("_band"),
-        explode(hyperplaneProbeKeys(col("_bkey"), bandBits, probeHamming))
-          .as("_bkey")) ++ lbl.map(_ => col("_ql")): _*)
-    val joined = c.join(broadcast(q), Seq("_band", "_bkey"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val negFiltered =
-      if (lbl.isEmpty) joined else joined.filter(col("_ql") =!= col("_cl"))
-    val scored = negFiltered
-      .select(Seq(col("query_id"), col("neighbor_id"),
-        (dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn"))).as("_cos")) ++
-        lbl.map(_ => col("_ql")) ++ lbl.map(_ => col("_cl")): _*)
+    val q = Query.of(queries, idCol, vecCol, bandKeys +: rest(queries): _*)
+      .select(Seq(col(Query.id), col(Query.vec), col(Query.nrm), col("_band"),
+        explode(hyperplaneProbeKeys(col("_bkey"), bandBits, AnnProbeHamming))
+          .as("_bkey")) ++ rest(queries): _*)
+    scoreCandidates(c.join(broadcast(q), Seq("_band", "_bkey")),
+      rest(queries) ++ rest(corpus): _*)
       .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(round(col("_cos"), 6).desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(Seq(col("query_id"), col("rk"), col("neighbor_id")) ++
-        lbl.map(_ => col("_ql").as("q_label")) ++
-        lbl.map(_ => col("_cl").as("n_label")) :+
-        round(col("_cos"), 6).cast("decimal(10,6)").as("cos_sim"): _*)
   }
 
   /** IVF (inverted-file) ANN — the other classic scale path next to
@@ -182,21 +241,16 @@ object SimilarityOps {
     * production shape. */
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                    centroidMod: Int): DataFrame =
-    corpus.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("_cid"), col(vecCol).as("_cvec"),
-        norm(col(vecCol)).as("_cnrm"))
+    Centroid.of(corpus.filter(col(idCol) % centroidMod === 0), idCol, vecCol)
 
-  /** Nearest-centroid rank against a FIXED centroid frame: shared by
-    * assignment (rank 1) and probing (rank ≤ nprobe). Deterministic
-    * ties: rounded cosine desc, cid asc. */
-  private def cellRank(side: DataFrame, id: String, vec: String,
-                       nrm: String, cent: DataFrame) = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(id))
-      .orderBy(round(col("_ccos"), 6).desc, col("_cid").asc)
-    side.crossJoin(broadcast(cent))
-      .withColumn("_ccos",
-        dot(col(vec), col("_cvec")) / (col(nrm) * col("_cnrm")))
+  /** Nearest-centroid rank of the scored side `s` of `df` against a FIXED
+    * centroid frame: shared by assignment (rank 1) and probing (rank ≤
+    * nprobe). Deterministic ties: rounded cosine desc, cid asc. */
+  private def cellRank(df: DataFrame, s: Side, cent: DataFrame) = {
+    val w = Window.partitionBy(col(s.id))
+      .orderBy(round(col("_ccos"), 6).desc, col(Centroid.id).asc)
+    df.crossJoin(broadcast(cent))
+      .withColumn("_ccos", cosine(s, Centroid))
       .withColumn("_crk", row_number().over(w))
   }
 
@@ -206,12 +260,10 @@ object SimilarityOps {
     * the identical cells, the invariant the streaming index rests on. */
   def ivfAssignCells(corpus: DataFrame, idCol: String, vecCol: String,
                      cent: DataFrame): DataFrame =
-    cellRank(corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("_cv"), norm(col(vecCol)).as("_cn")),
-      "neighbor_id", "_cv", "_cn", cent)
+    cellRank(Corpus.of(corpus, idCol, vecCol), Corpus, cent)
       .filter(col("_crk") === 1)
-      .select(col("neighbor_id"), col("_cv"), col("_cn"),
-        col("_cid").as("_cell"))
+      .select(col(Corpus.id), col(Corpus.vec), col(Corpus.nrm),
+        col(Centroid.id).as("_cell"))
 
   /** Probe + exact re-rank over an assigned-cells frame (however it was
     * built — one batch pass or an accrued streaming index). */
@@ -227,27 +279,15 @@ object SimilarityOps {
     * before scoring ([[graft.streaming.StreamAnnIndex]]). */
   def ivfProbes(queries: DataFrame, idCol: String, vecCol: String,
                 cent: DataFrame, nprobe: Int): DataFrame =
-    cellRank(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("_qv"), norm(col(vecCol)).as("_qn")),
-      "query_id", "_qv", "_qn", cent)
+    cellRank(Query.of(queries, idCol, vecCol), Query, cent)
       .filter(col("_crk") <= nprobe)
-      .select(col("query_id"), col("_qv"), col("_qn"),
-        col("_cid").as("_cell"))
+      .select(col(Query.id), col(Query.vec), col(Query.nrm),
+        col(Centroid.id).as("_cell"))
 
   /** Exact scoring + top-k of a probe frame against assigned cells. */
-  def ivfScoreTopK(cells: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val scored = cells.join(broadcast(probes), Seq("_cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn"))).as("_cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(round(col("_cos"), 6).desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"),
-        round(col("_cos"), 6).cast("decimal(10,6)").as("cos_sim"))
-  }
+  def ivfScoreTopK(cells: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    neighborTopK(
+      scoreCandidates(cells.join(broadcast(probes), Seq("_cell"))), k)
 
   /** Product quantization (the IVF-PQ compression stage) with ADC scoring
     * over the full corpus. Vectors are split into `m` subspaces of
@@ -266,16 +306,13 @@ object SimilarityOps {
   def pqAnnTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, m: Int, ksub: Int, dim: Int,
                 shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sub = dim / m
     require(sub * m == dim, s"dim $dim must split evenly into $m subspaces")
     // L2-normalize before encoding: on unit vectors the ADC dot IS the
     // cosine, so PQ ranking targets the same metric as brute force
     // (unnormalized ADC ranks by raw dot and norm variance buries recall)
     def toD(c: Column) = {
-      val n = sqrt(aggregate(
-        zip_with(c, c, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, t) => acc + t))
+      val n = sqrt(dotHof(c, c))
       transform(c, v => v.cast("double") / n)
     }
     val cb = corpus.filter(col(idCol) < ksub)
@@ -319,18 +356,11 @@ object SimilarityOps {
     val short = scored.withColumn("_srk", row_number().over(wAdc))
       .filter(col("_srk") <= shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val cf = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("_cv0"), norm(col(vecCol)).as("_cn0"))
-    val qf = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("_qv0"), norm(col(vecCol)).as("_qn0"))
-    val rer = short.join(cf, Seq("neighbor_id")).join(broadcast(qf), Seq("query_id"))
-      .withColumn("_cos",
-        dot(col("_qv0"), col("_cv0")) / (col("_qn0") * col("_cn0")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("_cos"), 6).desc, col("neighbor_id").asc)
-    rer.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"),
-        round(col("_cos"), 6).cast("decimal(10,6)").as("cos_sim"))
+    val cs = Side(Corpus.id, "_cv0", "_cn0")
+    val qs = Side(Query.id, "_qv0", "_qn0")
+    neighborTopK(short.join(cs.of(corpus, idCol, vecCol), Seq(Corpus.id))
+      .join(broadcast(qs.of(queries, idCol, vecCol)), Seq(Query.id))
+      .withColumn("_cos", cosine(qs, cs)), k)
   }
 
   /** DuckDB oracle for [[pqAnnTopK]] — replays codebook, encode, LUT, and

@@ -171,9 +171,6 @@ object VectorExprs {
   def dotNative(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
-  def normNative(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dotNative(a, a))
-
   /** Column API for [[HyperplaneKey]] (array<float> → long bucket key). */
   def hyperplaneKeyNative(vec: Column, planes: Int, dim: Int): Column =
     Bridge.column(HyperplaneKey(Bridge.expression(vec), planes, dim))

@@ -165,14 +165,11 @@ object Embeddings {
         withN.groupBy(col("cid")).agg(count(lit(1)).as("_cn")))
       val ok = counts.filter(col("_cn") <= SemMaxCluster).select(col("cid"))
       val f = withN.join(broadcast(ok), Seq("cid")) // ok is ≤ K rows
-      val aSide = f.select(col("cid"), col("vec_id").as("id1"),
-        col("embedding").as("_va"), col("_n").as("_na"))
-      val bSide = f.select(col("cid"), col("vec_id").as("id2"),
-        col("embedding").as("_vb"), col("_n").as("_nb"))
-      val drop = aSide.join(bSide, Seq("cid"))
-        .filter(col("id1") < col("id2"))
-        .filter(SimilarityOps.dot(col("_va"), col("_vb")) /
-          (col("_na") * col("_nb")) > TrainingData.CosDupThreshold)
+      val row = SimilarityOps.Side("vec_id", "embedding", "_n")
+      val drop = SimilarityOps.nearDupPairs(
+          f.select(col("cid") +: SimilarityOps.PairA.from(row): _*),
+          f.select(col("cid") +: SimilarityOps.PairB.from(row): _*),
+          Some("cid"), TrainingData.CosDupThreshold)
         .select(col("cid"), col("id2").as("vec_id")).distinct()
       val members = counts.select(col("cid"), col("_cn").as("n_members"))
       val drops = drop.groupBy(col("cid")).agg(count(lit(1)).as("n_dropped"))

@@ -81,7 +81,7 @@ object Procurement {
   /** Isolated broadcast-disabled session for the plan-audit gates (b3/
     * b5/b6): shares the SparkContext and catalog, owns its conf, so
     * concurrently running gates never observe the -1 thresholds. */
-  private def isoSession(s: SparkSession): SparkSession = {
+  private[graft] def isoSession(s: SparkSession): SparkSession = {
     val iso = s.newSession()
     iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     iso.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -91,7 +91,7 @@ object Procurement {
   /** The b-family composite-key join + exact-decimal rollup shared by
     * b3/b5/b6: COUNT plus Σ(supplycost·qty) kept in DECIMAL end-to-end,
     * one DOUBLE cast at the output. */
-  private def costAgg(li: DataFrame, ps: DataFrame): DataFrame =
+  private[graft] def costAgg(li: DataFrame, ps: DataFrame): DataFrame =
     li.join(ps, col("l_partkey") === col("ps_partkey") &&
         col("l_suppkey") === col("ps_suppkey"))
       .agg(count(lit(1)).as("n_joined"),

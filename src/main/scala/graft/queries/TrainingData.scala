@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{DedupOps, PortableHash, ShingleExprs, SimilarityOps, Text}
+import graft.functions.SimilarityOps.{PairA, PairB, Side}
 import graft.multimodal.Multimodal
 
 /** Training-data pipeline operators over `documents` / `embeddings`
@@ -47,11 +48,11 @@ object TrainingData {
   // and the candidate fraction (9/256 ≈ 3.5% of random pairs vs ~14.5%)
   // both scale every downstream byte. Recall at 100 TB comes from more
   // planes, not wider probes — Hamming-2 stays on the query-side ANN path
-  // ([[AnnProbeHamming]]) where the probe side is k queries, not n docs.
+  // ([[SimilarityOps.AnnProbeHamming]]) where the probe side is k queries,
+  // not n docs.
   val PairProbeHamming = 1
   val AnnBands = 4 // ANN banded LSH: candidate if ANY band matches
   val AnnBandBits = 6
-  val AnnProbeHamming = 2 // ANN query-side multi-probe: ≤2-bit flips/band
   val EmbeddingDim = 64
   val IvfCentroidMod = 16 // centroid set = vec_id % 16 == 0 (~1/16 corpus)
   val IvfNProbe = 2
@@ -242,28 +243,20 @@ object TrainingData {
     * bucketing is deterministic arithmetic, so the result is exactly
     * oracle-reproducible ([[SimilarityOps.hyperplaneKeyDuck]]). */
   def embedLshPairs(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding"),
-      SimilarityOps.norm(col("embedding")).as("_n"),
+    val row = Side("vec_id", "embedding", "_n")
+    val e = row.of(emb(s, dir), "vec_id", "embedding",
       SimilarityOps.hyperplaneKey(col("embedding"), LshPlanes, EmbeddingDim)
         .as("_bkt"))
     val ok = e.groupBy(col("_bkt")).agg(count(lit(1)).as("_bn"))
       .filter(col("_bn") <= MaxBucket)
       .select(col("_bkt"))
     val f = e.join(broadcast(ok), Seq("_bkt"))
-    val a = f.select(col("vec_id").as("id1"), col("embedding").as("_va"),
-      col("_n").as("_na"),
-      explode(SimilarityOps.hyperplaneProbeKeys(col("_bkt"), LshPlanes,
-          PairProbeHamming))
-        .as("_bkt"))
-    val b = f.select(col("_bkt"), col("vec_id").as("id2"),
-      col("embedding").as("_vb"), col("_n").as("_nb"))
-    a.join(b, Seq("_bkt"))
-      .filter(col("id1") < col("id2"))
-      .withColumn("_cos",
-        SimilarityOps.dot(col("_va"), col("_vb")) / (col("_na") * col("_nb")))
-      .filter(col("_cos") > CosDupThreshold)
-      .select(col("id1"), col("id2"),
-        round(col("_cos"), 6).cast("decimal(10,6)").as("cos_sim"))
+    SimilarityOps.nearDupPairs(
+      f.select(PairA.from(row) :+
+        explode(SimilarityOps.hyperplaneProbeKeys(col("_bkt"), LshPlanes,
+          PairProbeHamming)).as("_bkt"): _*),
+      f.select(col("_bkt") +: PairB.from(row): _*),
+      Some("_bkt"), CosDupThreshold).drop("_bkt")
   }
 
   /** The temperature draw behind `x_temperature_sample`, re-drawable:
@@ -719,18 +712,9 @@ object TrainingData {
     // x_embed_cosine_dup_lsh / x_embed_dedup_lsh_apply below.
     "x_embed_cosine_dup" -> ((s, dir) => {
       // norms once per row; the O(n²) pair stage does one native dot each
-      val e = embCompute(s, dir).select(col("vec_id"), col("embedding"),
-        SimilarityOps.norm(col("embedding")).as("_n"))
-      val a = e.select(col("vec_id").as("id1"), col("embedding").as("_va"),
-        col("_n").as("_na"))
-      val b = e.select(col("vec_id").as("id2"), col("embedding").as("_vb"),
-        col("_n").as("_nb"))
-      a.join(b, col("id1") < col("id2"))
-        .withColumn("_cos",
-          SimilarityOps.dot(col("_va"), col("_vb")) / (col("_na") * col("_nb")))
-        .filter(col("_cos") > CosDupThreshold)
-        .select(col("id1"), col("id2"),
-          round(col("_cos"), 6).cast("decimal(10,6)").as("cos_sim"))
+      val e = embCompute(s, dir)
+      SimilarityOps.nearDupPairs(PairA.of(e, "vec_id", "embedding"),
+        PairB.of(e, "vec_id", "embedding"), None, CosDupThreshold)
     }),
 
     // The 100 TB pair stage: hyperplane-bucketed candidates, one shuffle
@@ -766,18 +750,15 @@ object TrainingData {
       val lang = docs(s, dir).select(col("doc_id"), col("lang"))
       val e0 = emb(s, dir)
       val e = e0.join(lang, e0("vec_id") === lang("doc_id"))
-        .select(col("vec_id"), col("lang"), col("embedding"),
-          SimilarityOps.norm(col("embedding")).as("_n"))
-      val q = e.filter(col("lang") =!= "en" && col("vec_id") < BitextQueryIds)
-        .select(col("vec_id").as("qid"), col("embedding").as("_qe"),
-          col("_n").as("_qn"))
-      val c = e.filter(col("lang") === "en")
-        .select(col("vec_id").as("cid"), col("embedding").as("_ce"),
-          col("_n").as("_cn"))
+        .select(col("vec_id"), col("lang"), col("embedding"))
+      val qs = Side("qid", "_qe", "_qn")
+      val cs = Side("cid", "_ce", "_cn")
+      val q = qs.of(
+        e.filter(col("lang") =!= "en" && col("vec_id") < BitextQueryIds),
+        "vec_id", "embedding")
+      val c = cs.of(e.filter(col("lang") === "en"), "vec_id", "embedding")
       val scored = c.crossJoin(broadcast(q))
-        .withColumn("_cos", round(
-          SimilarityOps.dot(col("_qe"), col("_ce")) /
-            (col("_qn") * col("_cn")), 6))
+        .withColumn("_cos", round(SimilarityOps.cosine(qs, cs), 6))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("_cos").desc, col("cid").asc)
       scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 2)
@@ -815,16 +796,16 @@ object TrainingData {
     // query — O(queries·pool²), independent of corpus size.
     "x_mmr_rerank" -> ((s, dir) => {
       val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < AnnQueryIds)
-        .select(col("vec_id").as("qid"), col("embedding").as("_qv"),
-          SimilarityOps.norm(col("embedding")).as("_qn"))
-      val c = e.select(col("vec_id").as("cid"), col("embedding").as("_cv"),
-        SimilarityOps.norm(col("embedding")).as("_cn"))
+      val qs = Side("qid", "_qv", "_qn")
+      val cs = Side("cid", "_cv", "_cn")
+      val q = qs.of(e.filter(col("vec_id") < AnnQueryIds), "vec_id",
+        "embedding")
+      val c = cs.of(e, "vec_id", "embedding")
       val scored = c.crossJoin(broadcast(q))
         .filter(col("qid") =!= col("cid"))
         .select(col("qid"), col("cid"), col("_cv"), col("_cn"),
-          round(SimilarityOps.dot(col("_qv"), col("_cv")) /
-            (col("_qn") * col("_cn")) * 1000000d, 0).cast("long").as("qs"))
+          round(SimilarityOps.cosine(qs, cs) * 1000000d, 0).cast("long")
+            .as("qs"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("qs").desc, col("cid").asc)
       val pool = graft.GateCache.cache(
@@ -833,16 +814,15 @@ object TrainingData {
           .select(col("qid"), col("cid"), col("qs"), col("_cv"),
             col("_cn")))
       // candidate-candidate sims within each query's pool: pool² rows
-      val a = pool.select(col("qid"), col("cid").as("c1"),
-        col("_cv").as("_v1"), col("_cn").as("_n1"))
-      val b = pool.select(col("qid"), col("cid").as("c2"),
-        col("_cv").as("_v2"), col("_cn").as("_n2"))
-      val ps = graft.GateCache.cache(a.join(b, Seq("qid"))
-        .filter(col("c1") =!= col("c2"))
-        .select(col("qid"), col("c1"), col("c2"),
-          round(SimilarityOps.dot(col("_v1"), col("_v2")) /
-            (col("_n1") * col("_n2")) * 1000000d, 0).cast("long")
-            .as("s")))
+      val p1 = Side("c1", "_v1", "_n1")
+      val p2 = Side("c2", "_v2", "_n2")
+      val ps = graft.GateCache.cache(
+        pool.select(col("qid") +: p1.from(cs): _*)
+          .join(pool.select(col("qid") +: p2.from(cs): _*), Seq("qid"))
+          .filter(col("c1") =!= col("c2"))
+          .select(col("qid"), col("c1"), col("c2"),
+            round(SimilarityOps.cosine(p1, p2) * 1000000d, 0).cast("long")
+              .as("s")))
       val cand = pool.select(col("qid"), col("cid"), col("qs"))
       // step 1: pure relevance
       def pick(frame: DataFrame): DataFrame = frame.groupBy(col("qid"))
@@ -923,8 +903,7 @@ object TrainingData {
     "x_ann_lsh_topk" -> ((s, dir) => {
       val e = emb(s, dir)
       SimilarityOps.lshAnnTopK(e, e.filter(col("vec_id") < AnnQueryIds),
-        "vec_id", "embedding", AnnK, AnnBands, AnnBandBits, EmbeddingDim,
-        probeHamming = AnnProbeHamming) // one source of truth with the oracle
+        "vec_id", "embedding", AnnK, AnnBands, AnnBandBits, EmbeddingDim)
     }),
 
     // IVF ANN — the inverted-file scale path (deterministic coarse
@@ -975,13 +954,7 @@ object TrainingData {
             (col("_tot").cast("double") / col("_n")))))
         .withColumn("_s",
           col("_idf") * (col("tf") * lit(k1 + 1.0)) / col("_den"))
-      val w = Window
-        .partitionBy(col("token"))
-        .orderBy(round(col("_s"), 6).desc, col("doc_id").asc)
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("token"), col("rk"), col("doc_id"),
-          round(col("_s"), 6).cast("decimal(10,6)").as("bm25"))
+      SimilarityOps.topK(scored, "token", "doc_id", "_s", 3, "bm25")
     }),
 
     // Hybrid-retrieval fusion (RRF, Cormack et al. SIGIR'09): the lexical
@@ -1040,15 +1013,19 @@ object TrainingData {
     // COSINE-SIMILAR corpus vectors with a DIFFERENT label — the
     // highest-loss negatives a contrastive trainer wants in the batch.
     // Same bucketed LSH candidate stage as x_ann_lsh_topk
-    // ([[SimilarityOps.lshAnnTopK]] with `excludeLabelCol`): positives
-    // are dropped before ranking, so recall tunes with (bands, bits)
-    // exactly as the ANN gate pins, and the corpus-side cost is
-    // unchanged by the filter.
+    // ([[SimilarityOps.lshCandidates]], the labels riding along): a label
+    // filter drops the positives before ranking, so recall tunes with
+    // (bands, bits) exactly as the ANN gate pins, and the corpus-side cost
+    // is unchanged by the filter.
     "x_hard_negatives" -> ((s, dir) => {
       val e = emb(s, dir)
-      SimilarityOps.lshAnnTopK(e, e.filter(col("vec_id") < AnnQueryIds),
-        "vec_id", "embedding", AnnK, AnnBands, AnnBandBits, EmbeddingDim,
-        probeHamming = AnnProbeHamming, excludeLabelCol = Some("label"))
+      val cand = SimilarityOps.lshCandidates(
+        e.select(col("vec_id"), col("embedding"), col("label").as("_cl")),
+        e.filter(col("vec_id") < AnnQueryIds)
+          .select(col("vec_id"), col("embedding"), col("label").as("_ql")),
+        "vec_id", "embedding", AnnBands, AnnBandBits, EmbeddingDim)
+      SimilarityOps.neighborTopK(cand.filter(col("_ql") =!= col("_cl")),
+        AnnK, col("_ql").as("q_label"), col("_cl").as("n_label"))
     }),
 
     // Leakage-safe train/eval split: fold assignment hashes the near-dup
@@ -1263,13 +1240,7 @@ object TrainingData {
       val scored = tf.join(dfq, "token").crossJoin(broadcast(nn))
         .select(col("doc_id"), col("token"),
           (col("tf").cast("double") * log(col("_n") / col("df"))).as("_s"))
-      val w = Window
-        .partitionBy(col("doc_id"))
-        .orderBy(round(col("_s"), 6).desc, col("token").asc)
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("rk"), col("token"),
-          round(col("_s"), 6).cast("decimal(10,6)").as("tfidf"))
+      SimilarityOps.topK(scored, "doc_id", "token", "_s", 3, "tfidf")
     }),
 
     // GPT-style sequence packing: concatenate documents in id order and
@@ -1401,20 +1372,14 @@ object TrainingData {
         .limit(100)),
 
     // BRUTE-FORCE BASELINE apply: drop the higher id of every cosine-dup
-    // pair, report survivors per label. The pair stage is the all-pairs
-    // x_embed_cosine_dup plan (O(n²) — baseline only; the scale path is
-    // x_embed_dedup_lsh_apply above); the apply is one distinct +
-    // left_anti join (broadcast when the dup set is small).
+    // pair, report survivors per label. The pair stage is x_embed_cosine_dup's
+    // unblocked [[SimilarityOps.nearDupPairs]] (O(n²) — baseline only; the
+    // scale path is x_embed_dedup_lsh_apply above); the apply is one
+    // distinct + left_anti join (broadcast when the dup set is small).
     "x_embed_dedup_apply" -> ((s, dir) => {
-      val e = embCompute(s, dir).select(col("vec_id"), col("embedding"),
-        col("label"), SimilarityOps.norm(col("embedding")).as("_n"))
-      val a = e.select(col("vec_id").as("id1"), col("embedding").as("_va"),
-        col("_n").as("_na"))
-      val b = e.select(col("vec_id").as("id2"), col("embedding").as("_vb"),
-        col("_n").as("_nb"))
-      val drop = a.join(b, col("id1") < col("id2"))
-        .filter(SimilarityOps.dot(col("_va"), col("_vb")) /
-          (col("_na") * col("_nb")) > CosDupThreshold)
+      val e = embCompute(s, dir)
+      val drop = SimilarityOps.nearDupPairs(PairA.of(e, "vec_id", "embedding"),
+          PairB.of(e, "vec_id", "embedding"), None, CosDupThreshold)
         .select(col("id2").as("vec_id")).distinct()
       // drop-set sizing is data-dependent (corpus dup count) — leave the
       // join strategy to AQE rather than force a broadcast of a frame
@@ -1686,7 +1651,7 @@ object TrainingData {
         s"(key >> ${b * AnnBandBits}) & $mask AS bkey FROM b")
       .mkString(" UNION ALL ")
     val probes = SimilarityOps.hyperplaneProbeKeysDuck("bkey", AnnBandBits,
-      AnnProbeHamming)
+      SimilarityOps.AnnProbeHamming)
     val dot = SimilarityOps.dotDuck("q.embedding", "c.embedding", EmbeddingDim)
     val n = s"sqrt(${SimilarityOps.dotDuck("embedding", "embedding", EmbeddingDim)})"
     val negCond =

@@ -271,10 +271,14 @@ class SimilarityOpsSpec extends AnyFunSuite with graft.GateCacheHygiene {
   import spark.implicits._
 
   test("cosine: identity = 1, orthogonal = 0") {
+    val a = SimilarityOps.Side("ia", "a", "na")
+    val b = SimilarityOps.Side("ib", "b", "nb")
     val df = Seq((Array(1.0f, 0f, 0f), Array(0f, 2.0f, 0f))).toDF("a", "b")
+      .select($"a", SimilarityOps.norm($"a").as("na"),
+        $"b", SimilarityOps.norm($"b").as("nb"))
     val r = df.select(
-      SimilarityOps.cosine($"a", $"a").as("same"),
-      SimilarityOps.cosine($"a", $"b").as("orth")).head()
+      SimilarityOps.cosine(a, a).as("same"),
+      SimilarityOps.cosine(a, b).as("orth")).head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(1)) < 1e-12)
   }
@@ -357,6 +361,78 @@ class SimilarityOpsSpec extends AnyFunSuite with graft.GateCacheHygiene {
     // every ANN hit that brute-force also ranked must carry the same score
     ann.foreach { case (qid, nid, s) =>
       brute.get((qid, nid)).foreach(bs => assert(bs.compareTo(s) == 0))
+    }
+  }
+
+  test("top-k rank: cosines equal to 6 places rank the lower id first, " +
+      "cos_sim is decimal(10,6)") {
+    // 3 and 7 both round to 1.000000; 7's raw cosine is the higher one
+    val corpus = Seq(
+      (1L, Array(1.0f, 0f)), (7L, Array(1.0f, 0.0001f)),
+      (3L, Array(1.0f, 0.0002f)), (5L, Array(0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val out = SimilarityOps.bruteForceTopK(
+      corpus, corpus.filter($"vec_id" === 1), "vec_id", "embedding", 2)
+    assert(out.schema("cos_sim").dataType ==
+      org.apache.spark.sql.types.DecimalType(10, 6))
+    val got = out.orderBy("rk").as[(Long, Int, Long, java.math.BigDecimal)]
+      .collect().toSeq
+    assert(got.map(r => (r._2, r._3)) == Seq((1, 3L), (2, 7L)))
+    assert(got.forall(_._4.compareTo(new java.math.BigDecimal("1.000000")) == 0))
+  }
+
+  test("near-dup pair stage under a block key ≡ the unblocked stage " +
+      "restricted to same-block pairs") {
+    // three tight groups, each split across blocks, so the block key
+    // drops above-threshold pairs; block 0 also mixes two groups, whose
+    // cross pairs stay below the threshold
+    val rows = Seq(
+      (1L, Array(1.0f, 0.0f, 0.0f), 0), (2L, Array(0.9f, 0.1f, 0.0f), 0),
+      (3L, Array(0.8f, 0.2f, 0.1f), 1), (4L, Array(0.0f, 1.0f, 0.0f), 1),
+      (5L, Array(0.1f, 0.9f, 0.1f), 1), (6L, Array(0.0f, 0.1f, 1.0f), 2),
+      (7L, Array(0.1f, 0.0f, 0.9f), 0), (8L, Array(0.0f, 0.2f, 0.8f), 2))
+    val f = rows.toDF("vec_id", "embedding", "blk")
+    val threshold = 0.9
+    val unblocked = SimilarityOps.nearDupPairs(
+        SimilarityOps.PairA.of(f, "vec_id", "embedding"),
+        SimilarityOps.PairB.of(f, "vec_id", "embedding"), None, threshold)
+    val blk = rows.map(r => r._1 -> r._3).toMap
+    val sameBlock = unblocked.as[(Long, Long, java.math.BigDecimal)]
+      .collect().filter { case (a, b, _) => blk(a) == blk(b) }.toSeq
+      .toDF("id1", "id2", "cos_sim")
+    val row = SimilarityOps.Side("vec_id", "embedding", "_n")
+    val scored = row.of(f, "vec_id", "embedding", $"blk")
+    val blocked = SimilarityOps.nearDupPairs(
+        scored.select($"blk" +: SimilarityOps.PairA.from(row): _*),
+        scored.select($"blk" +: SimilarityOps.PairB.from(row): _*),
+        Some("blk"), threshold)
+      .select($"id1", $"id2", $"cos_sim")
+    assert(blocked.count() > 0 && blocked.count() < unblocked.count())
+    assert(blocked.exceptAll(sameBlock).isEmpty)
+    assert(sameBlock.exceptAll(blocked).isEmpty)
+  }
+
+  test("x_hard_negatives: no same-label pair, and every neighbor is a " +
+      "brute-force different-label neighbor with an equal cos_sim") {
+    import graft.queries.TrainingData
+    val e = graft.queries.Tables.read(spark, TestSpark.Sf0001, "embeddings")
+    val labels = e.select($"vec_id", $"label").as[(Long, Int)]
+      .collect().toMap
+    val got = TrainingData.queries("x_hard_negatives")(spark, TestSpark.Sf0001)
+      .select($"query_id", $"neighbor_id", $"q_label", $"n_label", $"cos_sim")
+      .as[(Long, Long, Int, Int, java.math.BigDecimal)].collect()
+    assert(got.nonEmpty)
+    val brute = SimilarityOps.bruteForceTopK(e,
+        e.filter($"vec_id" < TrainingData.AnnQueryIds), "vec_id", "embedding",
+        Int.MaxValue)
+      .select($"query_id", $"neighbor_id", $"cos_sim")
+      .as[(Long, Long, java.math.BigDecimal)].collect()
+      .map(t => ((t._1, t._2), t._3)).toMap
+    got.foreach { case (q, n, ql, nl, c) =>
+      assert(ql == labels(q) && nl == labels(n) && ql != nl,
+        s"same-label pair $q -> $n")
+      assert(brute.get((q, n)).exists(_.compareTo(c) == 0),
+        s"$q -> $n: $c against brute force ${brute.get((q, n))}")
     }
   }
 }

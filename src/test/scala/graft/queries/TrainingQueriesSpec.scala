@@ -221,8 +221,7 @@ class TrainingQueriesSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val all = graft.functions.SimilarityOps.lshAnnTopK(emb,
         emb.filter(col("vec_id") < TrainingData.AnnQueryIds),
         "vec_id", "embedding", Int.MaxValue, TrainingData.AnnBands,
-        TrainingData.AnnBandBits, TrainingData.EmbeddingDim,
-        probeHamming = TrainingData.AnnProbeHamming)
+        TrainingData.AnnBandBits, TrainingData.EmbeddingDim)
       .as[(Long, Int, Long, java.math.BigDecimal)].collect()
     val expected = all
       .filter { case (q, _, n, _) => labels(q) != labels(n) }

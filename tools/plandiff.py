@@ -5,11 +5,17 @@
 
 Each file is the stdout of `tools/run_main.sh PlanCheck <sfDir> <gate...>`
 (formatted physical plans, one `==== <gate> ====` section per gate).
-Expression ids (`#123`) and `plan_id=N` differ between any two sessions,
-and whole-stage codegen ids and adaptive query-stage ids follow the order
-in which AQE happened to materialize stages, so all four are normalized
-before the compare. Prints a unified diff and exits 1 when the normalized
-dumps differ, 0 when they are identical.
+Run-specific tokens are normalized before the compare:
+- expression ids (`#123`) and `plan_id=N`, which differ between any two
+  sessions;
+- whole-stage codegen ids and adaptive query-stage ids, which follow the
+  order in which AQE happened to materialize stages;
+- higher-order-function lambda variables (`lambda x_12`), whose suffix is
+  a JVM-wide counter, so it depends on what ran before the gate;
+- temporary directories (`/tmp/graft_tf_stage8914…`), whose name ends in
+  a random number (`Files.createTempDirectory`).
+Prints a unified diff and exits 1 when the normalized dumps differ, 0 when
+they are identical.
 """
 import difflib
 import re
@@ -19,6 +25,8 @@ _NORMALIZE = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    (re.compile(r"\blambda ([A-Za-z]+)_\d+"), r"lambda \1_N"),
+    (re.compile(r"(/graft_\w*?[A-Za-z_])\d+(?=[/\],\s]|$)"), r"\1N"),
 ]
 # a query stage's node detail ends in `Arguments: <stage id>`
 _STAGE = re.compile(r"^\(\d+\) \w*QueryStage\b")
