@@ -187,19 +187,25 @@ object SimilarityOps {
   def lshCandidates(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, bands: Int, bandBits: Int,
                     dim: Int): DataFrame = {
-    val total = bands * bandBits
     val mask = (1L << bandBits) - 1
-    val bandKeys = posexplode(array((0 until bands).map(b =>
-      shiftright(hyperplaneKey(col(vecCol), total, dim), b * bandBits)
-        .bitwiseAND(lit(mask))): _*)).as(Seq("_band", "_bkey"))
     def rest(df: DataFrame) =
       df.columns.toSeq.filterNot(Set(idCol, vecCol)).map(col)
-    val c = Corpus.of(corpus, idCol, vecCol, bandKeys +: rest(corpus): _*)
+    // the scored side and the full key `_hk` are projected BELOW the band
+    // posexplode, so each is computed once per vector, not once per band
+    def banded(side: Side, df: DataFrame): DataFrame =
+      side.of(df, idCol, vecCol,
+          hyperplaneKey(col(vecCol), bands * bandBits, dim).as("_hk") +:
+            rest(df): _*)
+        .select(Seq(col(side.id), col(side.vec), col(side.nrm),
+          posexplode(array((0 until bands).map(b =>
+            shiftright(col("_hk"), b * bandBits).bitwiseAND(lit(mask))): _*))
+            .as(Seq("_band", "_bkey"))) ++ rest(df): _*)
+    val c = banded(Corpus, corpus)
     // Hamming-2 probes on the QUERY side only: queries are the broadcast
     // side, so the ×(1+bits+C(bits,2)) explosion is per-query-row cheap,
     // while the corpus side's cost is untouched — recall rises for free
     // at corpus scale (the multi-probe LSH trick, Lv et al., VLDB'07).
-    val q = Query.of(queries, idCol, vecCol, bandKeys +: rest(queries): _*)
+    val q = banded(Query, queries)
       .select(Seq(col(Query.id), col(Query.vec), col(Query.nrm), col("_band"),
         explode(hyperplaneProbeKeys(col("_bkey"), bandBits, AnnProbeHamming))
           .as("_bkey")) ++ rest(queries): _*)

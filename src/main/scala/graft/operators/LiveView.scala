@@ -27,10 +27,18 @@ import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
   */
 object LiveView {
 
-  /** The one survivor rule both physical forms share: max `_version`,
-    * then max `_ingest_seq` when the frame carries it. */
+  /** The one survivor rule every form shares: max `_version`, then max
+    * `_ingest_seq` when the columns `cols` carry it. */
+  private def survivorCols(cols: Seq[String]): Seq[String] =
+    VersionCol +: Seq(SeqCol).filter(cols.contains)
+
   private def survivorOrder(df: DataFrame): Seq[Column] =
-    (VersionCol +: Seq(SeqCol).filter(df.columns.contains)).map(col)
+    survivorCols(df.columns.toSeq).map(col)
+
+  /** [[survivorCols]] as SQL `ORDER BY` text (`` `_version` DESC[,
+    * `_ingest_seq` DESC] ``), for a view registered as SQL. */
+  def survivorOrderSql(cols: Seq[String]): String =
+    survivorCols(cols).map(c => s"`$c` DESC").mkString(", ")
 
   /** Keep exactly one row per key by [[survivorOrder]]. Keeps meta
     * columns. */

@@ -98,6 +98,30 @@ object Curation {
             x => size(filter(col("_bgs"), y => y === x))))
             .cast("double") / size(col("_bgs"))).as("_topbgf"))
 
+  /** [[withRepetitionCols]] plus the two other Gopher measurements: mean
+    * word length `_meanw` and stopword count `_stop`. */
+  private[queries] def withGopherCols(d: DataFrame): DataFrame =
+    withRepetitionCols(d).select(col("*"),
+      (length(Text.normalize(col("text"))).cast("double") /
+        col("_ntok")).as("_meanw"),
+      (Text.wordOccurrences(col("text"), "the") +
+        Text.wordOccurrences(col("text"), "a") +
+        Text.wordOccurrences(col("text"), "of")).as("_stop"))
+
+  /** The four Gopher fail predicates over [[withGopherCols]], in the
+    * order size bounds, duplicated-token cap, top-bigram cap, stopword
+    * presence. Each is a deterministic double comparison, identical in
+    * both engines. */
+  private[queries] def gopherFails: Seq[Column] = Seq(
+    col("_ntok") < MinTokens || col("_ntok") > MaxTokens ||
+      col("_meanw") < MinMeanWordLen || col("_meanw") > MaxMeanWordLen,
+    col("_dupf") > MaxDupTokenFrac,
+    col("_topbgf") > MaxTopBigramFrac,
+    col("_stop") < 1)
+
+  /** A doc passes the Gopher stack when no [[gopherFails]] rule holds. */
+  private[queries] def gopherPass: Column = gopherFails.map(!_).reduce(_ && _)
+
   /** Shared DuckDB CTE mirroring [[withRepetitionCols]]. */
   private[queries] def repetitionCte: String = {
     val norm = Text.normalizeDuck("text")
@@ -136,32 +160,21 @@ object Curation {
         round(col("_topbgf"), 6).cast("decimal(10,6)").as("top_bigram_frac"))),
 
     // The MassiveText/Gopher rule stack APPLIED: per-rule failure counts
-    // and the surviving corpus per language. Rules (each a deterministic
-    // double comparison, identical in both engines): token-count bounds,
-    // mean-word-length bounds, duplicated-token cap, top-bigram cap,
-    // stopword presence. A doc can fail several rules; kept = passes all.
+    // and the surviving corpus per language ([[gopherFails]]: token-count
+    // and mean-word-length bounds, duplicated-token cap, top-bigram cap,
+    // stopword presence). A doc can fail several rules; kept = passes all.
     "x_gopher_filter_apply" -> ((s, dir) => {
-      val d = withRepetitionCols(docs(s, dir)).select(col("*"),
-        (length(Text.normalize(col("text"))).cast("double") /
-          col("_ntok")).as("_meanw"),
-        (Text.wordOccurrences(col("text"), "the") +
-          Text.wordOccurrences(col("text"), "a") +
-          Text.wordOccurrences(col("text"), "of")).as("_stop"))
-      val failSize = col("_ntok") < MinTokens || col("_ntok") > MaxTokens ||
-        col("_meanw") < MinMeanWordLen || col("_meanw") > MaxMeanWordLen
-      val failDup = col("_dupf") > MaxDupTokenFrac
-      val failTopbg = col("_topbgf") > MaxTopBigramFrac
-      val failStop = col("_stop") < 1
+      val Seq(failSize, failDup, failTopbg, failStop) = gopherFails
       def n(c: Column) = sum(when(c, 1L).otherwise(0L)).cast("long")
-      d.groupBy(col("lang")).agg(
+      withGopherCols(docs(s, dir)).groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
-        n(!failSize && !failDup && !failTopbg && !failStop).as("n_kept"),
+        n(gopherPass).as("n_kept"),
         n(failSize).as("n_fail_size"),
         n(failDup).as("n_fail_dup"),
         n(failTopbg).as("n_fail_topbg"),
         n(failStop).as("n_fail_stop"),
-        sum(when(!failSize && !failDup && !failTopbg && !failStop,
-          col("_ntok")).otherwise(0L)).cast("long").as("kept_tokens"))
+        sum(when(gopherPass, col("_ntok")).otherwise(0L)).cast("long")
+          .as("kept_tokens"))
     }),
 
     // Greedy token-budget subset selection: within each language, take

@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{PortableHash, Text}
+import graft.functions.{Contamination, PortableHash, Text}
 
 /** The end-to-end curation pipeline as ONE gate (r10 verdict item 5):
   * langid → Gopher quality filter → exact dedup → MinHash-LSH near-dedup
@@ -15,26 +14,35 @@ import graft.functions.{PortableHash, Text}
   * operator it names, and the oracle recomputes every stage's ledger row
   * through the same CTE chain.
   *
-  * Stage semantics (deterministic, shared verbatim with the oracle):
+  * Stage semantics (deterministic, shared verbatim with the oracle). Each
+  * stage calls the one definition of its rule, the code the standalone
+  * gate runs; the kit function is named in brackets:
   *   1 langid       keep docs whose n-gram language-ID agrees with the
-  *                  stored `lang` (the confidence screen).
-  *   2 gopher       the four Gopher rules of `x_gopher_filter_apply`.
+  *                  stored `lang` (the confidence screen; this gate only).
+  *   2 gopher       the four Gopher rules of `x_gopher_filter_apply`
+  *                  [Curation.withGopherCols, Curation.gopherPass].
   *   3 exact dedup  keep the min-id doc of each md5(normalized) group
-  *                  among stage-2 survivors.
+  *                  among stage-2 survivors (`x_dedup_exact_apply`)
+  *                  [TrainingData.exactDedupKeep].
   *   4 lsh neardup  drop any survivor that LSH-pairs (global banded
   *                  candidate index of `x_dedup_minhash_lsh`) with a
-  *                  smaller-id survivor. One greedy pass, not the full
-  *                  CC clustering — `x_dedup_cluster_apply` owns that;
-  *                  a pipeline pass needs the cheap local rule.
+  *                  smaller-id survivor [TrainingData.minhashPairs]. One
+  *                  greedy pass, not the full CC clustering —
+  *                  `x_dedup_cluster_apply` owns that; a pipeline pass
+  *                  needs the cheap local rule.
   *   5 decontam     drop the eval split (doc_id % EvalMod = 0) and every
   *                  train doc whose winnow-fingerprint overlap with the
-  *                  eval set exceeds DecontamRatio (`x_decontaminate_apply`).
+  *                  eval set exceeds DecontamRatio (`x_decontaminate_apply`)
+  *                  [TrainingData.contaminatedDocs, TrainingData.decontaminate,
+  *                  over graft.functions.Contamination].
   *   6 temperature  per-language sqrt(min/n) keep-rates over the stage-5
-  *                  survivors (`x_temperature_sample` arithmetic, its own
-  *                  salt so the draw is independent of that gate's).
+  *                  survivors (`x_temperature_sample`; its own salt so the
+  *                  draw is independent of that gate's)
+  *                  [TrainingData.temperatureRates, TrainingData.temperatureDraw].
   *   7 pack         shard-local SeqLen-token chunking of the survivors
-  *                  (`x_sequence_pack`); the ledger row counts CHUNKS in
-  *                  n_docs and the packed tokens in n_tokens.
+  *                  (`x_sequence_pack`) [TrainingData.packChunks]; the
+  *                  ledger row counts CHUNKS in n_docs and the packed
+  *                  tokens in n_tokens.
   *
   * Scale shape: stages 1–2 are expression-only scans; 3 is one
   * fingerprint shuffle; 4 reuses the banded LSH index (bucketed, skew-
@@ -46,9 +54,6 @@ import graft.functions.{PortableHash, Text}
   * both its ledger row and the next stage).
   */
 object PipelineE2e {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.read(s, dir, name)
 
   /** Salt for stage 6 — its own pass so this draw is independent of
     * `x_temperature_sample`'s (the family-wide pass contract). */
@@ -71,30 +76,15 @@ object PipelineE2e {
     // 1: language-ID agreement screen — reads the fused cache
     val s1 = s0.filter(col("_lidok"))
 
-    // 2: Gopher rules (exactly x_gopher_filter_apply's predicates)
-    val g = Curation.withRepetitionCols(s1).select(col("*"),
-      (length(Text.normalize(col("text"))).cast("double") /
-        col("_ntok")).as("_meanw"),
-      (Text.wordOccurrences(col("text"), "the") +
-        Text.wordOccurrences(col("text"), "a") +
-        Text.wordOccurrences(col("text"), "of")).as("_stop"))
-    val pass =
-      !(col("_ntok") < Curation.MinTokens ||
-        col("_ntok") > Curation.MaxTokens ||
-        col("_meanw") < Curation.MinMeanWordLen ||
-        col("_meanw") > Curation.MaxMeanWordLen) &&
-      !(col("_dupf") > Curation.MaxDupTokenFrac) &&
-      !(col("_topbgf") > Curation.MaxTopBigramFrac) &&
-      !(col("_stop") < 1)
-    // the fingerprint rides out of the gopher scan so the cached survivor
-    // frame carries 32 hex chars per doc instead of the full text column
-    val s2 = cache(g.filter(pass)
+    // 2: Gopher rules. The fingerprint rides out of the gopher scan so
+    // the cached survivor frame carries 32 hex chars per doc instead of
+    // the full text column
+    val s2 = cache(Curation.withGopherCols(s1).filter(Curation.gopherPass)
       .select(col("doc_id"), col("lang"), col("_tok"),
         Text.fingerprint(col("text")).as("_fp")))
 
     // 3: exact dedup among survivors (min-id representative)
-    val keep = s2.groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
-    val s3 = cache(s2.join(keep, Seq("_fp", "doc_id"), "left_semi")
+    val s3 = cache(TrainingData.exactDedupKeep(s2)
       .select(col("doc_id"), col("lang"), col("_tok")))
 
     // 4: LSH near-dup — global candidate index, both endpoints restricted
@@ -111,47 +101,23 @@ object PipelineE2e {
       .select(col("id2").as("doc_id")).distinct()
     val s4 = cache(s3.join(dropLsh, Seq("doc_id"), "left_anti"))
 
-    // 5: decontamination (x_decontaminate_apply's rule; fingerprints come
-    // from the FULL corpus — the eval docs must contribute theirs)
-    val fps = TrainingData.winnowFps(s, dir)
-    val evalFps = fps.filter(col("doc_id") % TrainingData.EvalMod === 0)
-      .select(col("fp")).distinct()
-    val train = fps.filter(col("doc_id") % TrainingData.EvalMod =!= 0)
-    val hits = train.join(broadcast(evalFps), Seq("fp"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("_hit"))
-    val sizes = train.groupBy(col("doc_id")).agg(count(lit(1)).as("_nf"))
-    val contaminated = cache(sizes.join(hits, "doc_id")
-      .filter(col("_hit").cast("double") / col("_nf") >
-        TrainingData.DecontamRatio)
-      .select(col("doc_id")))
-    val s5 = cache(s4.filter(col("doc_id") % TrainingData.EvalMod =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_anti"))
+    // 5: decontamination (fingerprints come from the FULL corpus — the
+    // eval docs must contribute theirs)
+    val contaminated = cache(TrainingData.contaminatedDocs(s, dir))
+    val s5 = cache(TrainingData.decontaminate(s4, contaminated))
 
     // 6: temperature sampling over the surviving distribution
-    val nl = s5.groupBy(col("lang")).agg(count(lit(1)).as("_nl"))
-    val mn = nl.agg(min(col("_nl")).as("_mn"))
-    val rate = nl.crossJoin(broadcast(mn))
-      .withColumn("_thr",
-        round(sqrt(col("_mn").cast("double") / col("_nl")) * 1000000, 0)
-          .cast("long"))
+    val rate = TrainingData.temperatureRates(s5)
       .select(col("lang"), col("_thr"))
     val s6 = cache(s5
-      .withColumn("_hm", PortableHash.hash32(col("doc_id").cast("string"),
-        TempSalt) % 1000000)
+      .withColumn("_hm", TrainingData.temperatureDraw(TempSalt))
       .join(broadcast(rate), "lang")
       .filter(col("_hm") < col("_thr"))
       .select(col("doc_id"), col("lang"), col("_tok")))
 
     // 7: shard-local sequence packing of the final corpus
-    val w = Window.partitionBy(col("_shard")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val packed = s6
-      .select(col("doc_id"), (col("doc_id") % TrainingData.PackShards)
-        .as("_shard"), col("_tok"))
-      .withColumn("_cum", sum(col("_tok")).over(w))
-      .withColumn("_chunk",
-        expr(s"(_cum - _tok) div ${TrainingData.SeqLen}"))
-      .groupBy(col("_shard"), col("_chunk"))
+    val packed = TrainingData.packChunks(s6, col("_tok"))
+      .groupBy(col("shard"), col("chunk_id"))
       .agg(sum(col("_tok")).as("_ctok"))
 
     // Ledger rows are COLLECTED one stage at a time (the t28/x_gdpr
@@ -233,18 +199,18 @@ object PipelineE2e {
          |    WHERE id1 IN (SELECT doc_id FROM s3)
          |      AND id2 IN (SELECT doc_id FROM s3))),
          |evalf AS (SELECT DISTINCT fp FROM fps
-         |          WHERE doc_id % ${TrainingData.EvalMod} = 0),
+         |          WHERE doc_id % ${Contamination.EvalMod} = 0),
          |train AS (SELECT * FROM fps
-         |          WHERE doc_id % ${TrainingData.EvalMod} <> 0),
+         |          WHERE doc_id % ${Contamination.EvalMod} <> 0),
          |hits AS (SELECT t2.doc_id, count(*) AS n_hit
          |         FROM train t2 JOIN evalf USING (fp) GROUP BY 1),
          |sizes AS (SELECT doc_id, count(*) AS nf FROM train GROUP BY 1),
          |dropped AS (SELECT sz.doc_id FROM sizes sz JOIN hits h
          |              ON h.doc_id = sz.doc_id
          |            WHERE CAST(n_hit AS DOUBLE) / nf
-         |              > ${TrainingData.DecontamRatio}),
+         |              > ${Contamination.DecontamRatio}),
          |s5 AS (SELECT doc_id FROM s4
-         |  WHERE doc_id % ${TrainingData.EvalMod} <> 0
+         |  WHERE doc_id % ${Contamination.EvalMod} <> 0
          |    AND doc_id NOT IN (SELECT doc_id FROM dropped)),
          |nl AS (SELECT lang, count(*) AS cnt FROM base
          |       JOIN s5 USING (doc_id) GROUP BY lang),

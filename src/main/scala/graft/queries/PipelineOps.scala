@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.functions.Contamination
 import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
 import graft.operators.{CdcTransform, LiveView, SnapshotReplicator}
 import graft.model.SourceConfig
@@ -2223,25 +2224,21 @@ object PipelineOps {
     val Seq(srcDir, outDir, evalRoot, ckp) =
       dirs("graft_sct", "src", "out", "eval", "ckp")
     val evalDir = s"$evalRoot/fps"
-    val d = Tables.read(s, dir, "documents")
-      .filter(col("doc_id") % TrainingData.EvalMod =!= 0)
+    val d = Contamination.trainSplit(Tables.read(s, dir, "documents"),
+        "doc_id")
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
     // §2.6 (r16): the eval-fingerprint write (a winnow kernel scan) is
     // independent of the replay staging — overlap the two; the stream
     // (which reads both) starts once both are on disk
     StreamGate.overlap(
-      () => TrainingData.winnowFps(s, dir)
-        .filter(col("doc_id") % TrainingData.EvalMod === 0)
-        .select(col("fp")).distinct()
+      () => Contamination.evalFps(TrainingData.winnowFps(s, dir), "doc_id")
         .write.mode("overwrite").parquet(evalDir),
       () => stage(srcDir, StreamGate.idThirdWaves(d, "doc_id")))
     pinned(s) {
       graft.streaming.StreamContamination.run(replay(s, srcDir),
         idCol = "doc_id", textCol = "text",
         keepCols = Seq("doc_id", "lang", "n_chars"),
-        evalFpDir = evalDir, outDir = outDir, checkpointDir = ckp,
-        k = TrainingData.WinnowK, w = TrainingData.WinnowW,
-        ratio = TrainingData.DecontamRatio)
+        evalFpDir = evalDir, outDir = outDir, checkpointDir = ckp)
     }
     graft.streaming.StreamContamination.landed(s, outDir)
   }
@@ -2395,8 +2392,7 @@ object PipelineOps {
       .select(col("user_id"), col("event_type"), col("value"), col("props"),
         col(VersionCol), col(SeqCol), col(DeletedCol))
     val live = graft.streaming.StatefulLiveView.materializedLive(
-      stamped, pks = Seq("user_id"), versionCol = VersionCol,
-      seqCol = SeqCol, deletedCol = DeletedCol, tombstoneRetention = None)
+      stamped, pks = Seq("user_id"), tombstoneRetention = None)
     pinned(s) {
       BoundedStream.drain(live.writeStream.outputMode("update")
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -4261,22 +4257,22 @@ object PipelineOps {
     "t22_stream_contamination" ->
       s"""WITH ${TrainingData.winnowFpCtes},
          |evalf AS (SELECT DISTINCT fp FROM fps
-         |          WHERE doc_id % ${TrainingData.EvalMod} = 0),
+         |          WHERE doc_id % ${Contamination.EvalMod} = 0),
          |train AS (SELECT * FROM fps
-         |          WHERE doc_id % ${TrainingData.EvalMod} <> 0),
+         |          WHERE doc_id % ${Contamination.EvalMod} <> 0),
          |hits AS (SELECT t.doc_id, count(*) AS n_hit
          |         FROM train t JOIN evalf USING (fp) GROUP BY 1),
          |sizes AS (SELECT doc_id, count(*) AS nf FROM train GROUP BY doc_id),
          |flagged AS (SELECT s.doc_id FROM sizes s JOIN hits h
          |              ON h.doc_id = s.doc_id
          |            WHERE CAST(n_hit AS DOUBLE) / nf
-         |              > ${TrainingData.DecontamRatio})
+         |              > ${Contamination.DecontamRatio})
          |SELECT lang, count(*) AS n_docs,
          |  CAST(sum(CASE WHEN doc_id IN (SELECT doc_id FROM flagged)
          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
          |  CAST(sum(CASE WHEN doc_id IN (SELECT doc_id FROM flagged)
          |    THEN 0 ELSE n_chars END) AS BIGINT) AS clean_chars
-         |FROM documents WHERE doc_id % ${TrainingData.EvalMod} <> 0
+         |FROM documents WHERE doc_id % ${Contamination.EvalMod} <> 0
          |GROUP BY lang""".stripMargin,
 
     // batch-invariant by construction (fixed quantizer, per-vector

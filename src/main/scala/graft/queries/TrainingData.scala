@@ -1,9 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{DedupOps, PortableHash, ShingleExprs, SimilarityOps, Text}
+import graft.functions.Contamination
+import graft.functions.Contamination.{DecontamRatio, EvalMod, WinnowK, WinnowW}
 import graft.functions.SimilarityOps.{PairA, PairB, Side}
 import graft.multimodal.Multimodal
 
@@ -62,15 +64,11 @@ object TrainingData {
   val RrfConst = 60 // RRF: the standard rank-damping constant (k in 1/(k+r))
   val FuseArmK = 20 // RRF: depth of each retrieval arm's ranked list
   val FuseTopK = 10 // RRF: fused results reported per query
-  val WinnowK = 5 // winnowing: char k-gram width
-  val WinnowW = 4 // winnowing: min-window width (guarantee gap t = W+K-1)
   val FpMaxBucket = 100 // containment: keep only discriminative fps — a fp
   // shared by >100 docs is boilerplate AND contributes O(cap²) join pairs;
   // at 1000 the pair stage dominated the whole bench (21.6 s at sf0.1)
   val MinSharedFps = 2 // containment: min shared fingerprints per pair
   val ContainmentMin = 0.5 // containment: report pairs at/above this score
-  val EvalMod = 100 // decontamination: eval set = doc_id % EvalMod == 0
-  val DecontamRatio = 0.8 // drop train doc if > ratio of its fps hit eval
   val PackShards = 32 // sequence packing: independent shards (parallelism)
   val SeqLen = 2048 // sequence packing: tokens per training sequence
   // lexicon-based entity scrub: \b is ASCII-identical in Java regex and
@@ -130,9 +128,24 @@ object TrainingData {
     * so the winnow kernel scan runs once per gate, not per branch. */
   def winnowFps(s: SparkSession, dir: String): DataFrame =
     graft.GateCache.cache(
-      docs(s, dir).select(col("doc_id"),
-        explode(array_distinct(graft.functions.WinnowExprs
-          .winnowMinsNative(col("text"), WinnowK, WinnowW))).as("fp")))
+      Contamination.docFingerprints(docs(s, dir), "doc_id", "text"))
+
+  /** The decontamination drop set of the corpus: the train docs
+    * [[Contamination.contaminated]] by the eval split's fingerprints. */
+  def contaminatedDocs(s: SparkSession, dir: String): DataFrame = {
+    val fps = winnowFps(s, dir)
+    Contamination.contaminated(Contamination.trainSplit(fps, "doc_id"),
+      Contamination.evalFps(fps, "doc_id"), "doc_id")
+  }
+
+  /** The decontamination cut: `d`'s train split minus `dropped`. The drop
+    * set is O(contaminated docs) — data-dependent, so NO broadcast hint:
+    * a heavily contaminated crawl at 100 TB would OOM the driver; AQE
+    * picks broadcast when it actually fits (the x_dedup_cluster_apply
+    * rule). */
+  def decontaminate(d: DataFrame, dropped: DataFrame): DataFrame =
+    Contamination.trainSplit(d, "doc_id")
+      .join(dropped, Seq("doc_id"), "left_anti")
 
   /** Per-doc fingerprint stats over a (doc_id, _m window-mins) frame —
     * shared by the kernel query and WinnowSpec's composed-form check. */
@@ -148,6 +161,52 @@ object TrainingData {
     DedupOps.lshCandidatePairs(
       DedupOps.lshBands(sig, "doc_id", Bands, RowsPerBand), "doc_id",
       maxBucket = MaxBucket)
+
+  /** The near-dup cluster frame (`id`, `label`): connected components of
+    * the MinHash-LSH pair graph, each labelled by its min id. */
+  def minhashClusters(s: SparkSession, dir: String): DataFrame =
+    DedupOps.connectedComponents(minhashPairs(minhashSig(s, dir)))
+
+  /** Exact-dedup keep rule over a frame carrying `doc_id` and the
+    * fingerprint `_fp`: the min-id row of each fingerprint group — one
+    * shuffle on the fingerprint, then a semi-join by (fingerprint, id)
+    * that AQE broadcasts when the dup map is small. */
+  def exactDedupKeep(d: DataFrame): DataFrame = {
+    val keep = d.groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
+    d.join(keep, Seq("_fp", "doc_id"), "left_semi")
+  }
+
+  /** Temperature rates over `d`'s language distribution: (`lang`, `_nl`,
+    * `_mn`, `_thr`), the keep threshold `_thr` = round(sqrt(min/n_l)·1e6)
+    * out of 1e6. */
+  def temperatureRates(d: DataFrame): DataFrame = {
+    val n = d.groupBy(col("lang")).agg(count(lit(1)).as("_nl"))
+    val m = n.agg(min(col("_nl")).as("_mn"))
+    n.crossJoin(broadcast(m))
+      .withColumn("_thr",
+        round(sqrt(col("_mn").cast("double") / col("_nl")) * 1000000, 0)
+          .cast("long"))
+  }
+
+  /** The temperature draw of a doc: its salted `doc_id` hash mod 1e6; the
+    * doc is kept when the draw is below its language's `_thr`. */
+  def temperatureDraw(salt: String): Column =
+    PortableHash.hash32(col("doc_id").cast("string"), salt) % 1000000
+
+  /** Shard-local sequence packing of `d` in `doc_id` order: (`doc_id`,
+    * `shard`, `_tok`, `_cum`, `chunk_id`) with `shard` = doc_id %
+    * PackShards and `chunk_id` = the doc's start offset in its shard div
+    * SeqLen. */
+  def packChunks(d: DataFrame, tok: Column): DataFrame = {
+    val w = Window
+      .partitionBy(col("shard")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    d.select(col("doc_id"), (col("doc_id") % PackShards).as("shard"),
+        tok.as("_tok"))
+      .withColumn("_cum", sum(col("_tok")).over(w))
+      .withColumn("chunk_id",
+        expr(s"(_cum - _tok) div $SeqLen").cast("long"))
+  }
 
   /** Shared pipeline of the substring-dedup family (stats + apply gates):
     * returns (base, cov) where `base` is the tokenized corpus
@@ -266,15 +325,9 @@ object TrainingData {
     * [[Curation.weightedSample]] pass contract, extended family-wide per
     * r9 ADVICE #7. The gate is exactly pass 1. */
   def temperatureSample(s: SparkSession, dir: String, pass: Int): DataFrame = {
-    val d = docs(s, dir).withColumn("_hm",
-      PortableHash.hash32(col("doc_id").cast("string"), s"tmp$pass|") % 1000000)
-    val n = d.groupBy(col("lang")).agg(count(lit(1)).as("_nl"))
-    val m = n.agg(min(col("_nl")).as("_mn"))
-    val r = n.crossJoin(broadcast(m))
-      .withColumn("_thr",
-        round(sqrt(col("_mn").cast("double") / col("_nl")) * 1000000, 0)
-          .cast("long"))
-    d.join(broadcast(r.select(col("lang"), col("_nl"), col("_thr"))), "lang")
+    val d = docs(s, dir).withColumn("_hm", temperatureDraw(s"tmp$pass|"))
+    d.join(broadcast(temperatureRates(d)
+        .select(col("lang"), col("_nl"), col("_thr"))), "lang")
       .groupBy(col("lang"))
       .agg(min(col("_nl")).as("n_orig"),
         sum(when(col("_hm") < col("_thr"), 1L).otherwise(0L)).cast("long")
@@ -316,16 +369,12 @@ object TrainingData {
     "x_dedup_exact" -> ((s, dir) =>
       DedupOps.exactDedup(docs(s, dir), "doc_id", "text")),
 
-    // The applied form of exact dedup: the surviving corpus (keep the
-    // min-id row of each fingerprint group) — one shuffle on the
-    // fingerprint, then a semi-join by (fingerprint, id) that AQE
-    // broadcasts when the dup map is small.
-    "x_dedup_exact_apply" -> ((s, dir) => {
-      val d = docs(s, dir).withColumn("_fp", Text.fingerprint(col("text")))
-      val keep = d.groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
-      d.join(keep, Seq("_fp", "doc_id"), "left_semi")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-    }),
+    // The applied form of exact dedup: the surviving corpus
+    // ([[exactDedupKeep]]).
+    "x_dedup_exact_apply" -> ((s, dir) =>
+      exactDedupKeep(
+        docs(s, dir).withColumn("_fp", Text.fingerprint(col("text"))))
+        .select(col("doc_id"), col("lang"), col("n_chars"))),
 
     // Span-level exact substring dedup (Lee et al. 2021, "Deduplicating
     // Training Data Makes Language Models Better", §4.1 ExactSubstr):
@@ -664,8 +713,7 @@ object TrainingData {
     // a crawl — so the strategy is left to AQE, which broadcasts it when
     // the runtime size is small and shuffles it when it isn't.
     "x_dedup_cluster_apply" -> ((s, dir) => {
-      val cc = DedupOps.connectedComponents(minhashPairs(minhashSig(s, dir)))
-      val dropped = cc.filter(col("label") < col("id"))
+      val dropped = minhashClusters(s, dir).filter(col("label") < col("id"))
         .select(col("id").as("doc_id"))
       docs(s, dir)
         .join(dropped, Seq("doc_id"), "left_anti")
@@ -682,8 +730,7 @@ object TrainingData {
     // a per-label max_by); n_reps_not_minid counts clusters where the
     // quality rule genuinely changed the survivor. */
     "x_dedup_keep_best" -> ((s, dir) => {
-      val cc = DedupOps.connectedComponents(minhashPairs(minhashSig(s, dir)))
-      val members = cc.select(col("id"), col("label"))
+      val members = minhashClusters(s, dir).select(col("id"), col("label"))
         .join(docs(s, dir).select(col("doc_id").as("id"), col("n_chars")),
           "id")
       val best = members.groupBy(col("label"))
@@ -1038,8 +1085,7 @@ object TrainingData {
     // carries no broadcast hint: AQE chooses the join strategy from the
     // measured size, so the same plan survives a 100× scale-up.
     "x_leakage_safe_split" -> ((s, dir) => {
-      val cc = graft.functions.DedupOps
-        .connectedComponents(minhashPairs(minhashSig(s, dir)))
+      val cc = minhashClusters(s, dir)
         .select(col("id").as("doc_id"), col("label"))
       docs(s, dir)
         .join(cc, Seq("doc_id"), "left")
@@ -1143,34 +1189,18 @@ object TrainingData {
         .filter(col("containment") >= ContainmentMin)
     }),
 
-    // Decontamination APPLY: eval set = doc_id % EvalMod == 0; a training
-    // doc is dropped when more than DecontamRatio of its fingerprints
-    // appear anywhere in the eval set (benchmark leakage). Eval fps are
-    // a broadcast-sized distinct set (|eval| ≪ corpus); the train scan
-    // joins it once — no all-pairs stage at any scale. Zero-fingerprint
-    // docs survive by construction (no evidence of overlap).
-    "x_decontaminate_apply" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val fps = winnowFps(s, dir)
-      val evalFps = fps.filter(col("doc_id") % EvalMod === 0)
-        .select(col("fp")).distinct()
-      val train = fps.filter(col("doc_id") % EvalMod =!= 0)
-      val hits = train.join(broadcast(evalFps), Seq("fp"), "left_semi")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("_hit"))
-      val sizes = train.groupBy(col("doc_id")).agg(count(lit(1)).as("_nf"))
-      val dropped = sizes.join(hits, "doc_id")
-        .filter(col("_hit").cast("double") / col("_nf") > DecontamRatio)
-        .select(col("doc_id"))
-      d.filter(col("doc_id") % EvalMod =!= 0)
-        // dropped is O(contaminated docs) — data-dependent, so NO
-        // broadcast hint: a heavily contaminated crawl at 100 TB would
-        // OOM the driver; AQE picks broadcast when it actually fits
-        // (the x_dedup_cluster_apply rule — review find)
-        .join(dropped, Seq("doc_id"), "left_anti")
+    // Decontamination APPLY: the [[Contamination]] rule — eval set =
+    // doc_id % EvalMod == 0; a training doc is dropped when more than
+    // DecontamRatio of its fingerprints appear anywhere in the eval set
+    // (benchmark leakage). Eval fps are a broadcast-sized distinct set
+    // (|eval| ≪ corpus); the train scan joins it once — no all-pairs
+    // stage at any scale. Zero-fingerprint docs survive by construction
+    // (no evidence of overlap).
+    "x_decontaminate_apply" -> ((s, dir) =>
+      decontaminate(docs(s, dir), contaminatedDocs(s, dir))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).cast("long").as("total_chars"))
-    }),
+          sum(col("n_chars")).cast("long").as("total_chars"))),
 
     // The decontamination AUDIT, complementing the apply step's cut: per
     // EVAL doc, how much of it leaked into the train split (the GPT-3
@@ -1186,9 +1216,9 @@ object TrainingData {
     // the tiny eval side broadcast while the train set streams map-side.
     "x_contamination_report" -> ((s, dir) => {
       val fps = winnowFps(s, dir)
-      val trainFps = fps.filter(col("doc_id") % EvalMod =!= 0)
+      val trainFps = Contamination.trainSplit(fps, "doc_id")
         .select(col("fp")).distinct()
-      val ev = fps.filter(col("doc_id") % EvalMod === 0)
+      val ev = Contamination.evalSplit(fps, "doc_id")
       val hits = ev.join(trainFps, Seq("fp"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("_hit"))
       val sizes = ev.groupBy(col("doc_id")).agg(count(lit(1)).as("_nf"))
@@ -1251,23 +1281,13 @@ object TrainingData {
     // window into one reducer at 100 TB. Deterministic: id order, exact
     // integer token counts, integral div on both engines (non-negative
     // offsets ⇒ truncating div ≡ floor div).
-    "x_sequence_pack" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        (col("doc_id") % PackShards).as("shard"),
-        Text.tokenCount(col("text")).cast("long").as("_tok"))
-      val w = Window
-        .partitionBy(col("shard")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)
-      d.withColumn("_cum", sum(col("_tok")).over(w))
-        .withColumn("chunk_id",
-          expr(s"(_cum - _tok) div $SeqLen").cast("long"))
+    "x_sequence_pack" -> ((s, dir) =>
+      packChunks(docs(s, dir), Text.tokenCount(col("text")).cast("long"))
         .groupBy(col("shard"), col("chunk_id"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("_tok")).cast("long").as("n_tokens"),
           min(col("doc_id")).as("first_doc"),
-          max(col("doc_id")).as("last_doc"))
-    }),
+          max(col("doc_id")).as("last_doc"))),
 
     // RAG-style overlapping chunking: each document split into
     // ChunkW-token windows every ChunkStride tokens (overlap = W−stride,
@@ -1463,12 +1483,10 @@ object TrainingData {
     // Each stage is an already-oracled operator; the composition stays a
     // single Catalyst-optimized query (no materialization between stages).
     "x_curation_pipeline" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val curated = exactDedupKeep(docs(s, dir)
         .withColumn("_q", Text.qualityScore(col("text")))
         .filter(col("_q") >= 0.5)
-        .withColumn("_fp", Text.fingerprint(col("text")))
-      val keep = d.groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
-      val curated = d.join(keep, Seq("_fp", "doc_id"), "left_semi")
+        .withColumn("_fp", Text.fingerprint(col("text"))))
       curated
         .join(emb(s, dir), curated("doc_id") === col("vec_id"))
         .groupBy(col("lang"))

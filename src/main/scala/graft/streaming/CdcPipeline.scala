@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.SourceConfig
-import graft.operators.CdcTransform
+import graft.operators.{CdcTransform, LiveView}
 import graft.sources.{BinlogSocketClient, HadoopFs, MysqlBinlogSource, ParquetCatalog}
 
 /** CDC mode as Structured Streaming — the reference's binlog apply loop
@@ -204,8 +204,7 @@ final class CdcPipeline(
     require(pks.forall(cols.contains), s"pk missing from $table: $pks")
     val meta = Set(VersionCol, SeqCol, DeletedCol)
     val payload = cols.filterNot(meta.contains)
-    val ord = (VersionCol +: Seq(SeqCol).filter(cols.contains))
-      .map(c => s"`$c` DESC").mkString(", ")
+    val ord = LiveView.survivorOrderSql(cols.toSeq)
     val name = s"${table}_live"
     spark.sql(
       s"""CREATE OR REPLACE TEMPORARY VIEW `$name` AS

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.model.SchemaModel.{DeletedCol, SeqCol, VersionCol}
 
 /** Write-path materialized live view — the stateful-streaming alternative
   * to the read-path dedup ([[graft.operators.LiveView]]): keep the
@@ -24,16 +25,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Late/duplicate rows (at-least-once replay) lose to the stored winner
   * and simply re-emit it, so downstream sinks converge.
   *
-  * Winner rule = max (version, seq) — identical to
-  * `LiveView.live`; on an exact tie the stored state
-  * wins, making replays idempotent. Key columns must be non-null;
-  * `versionCol`/`seqCol` must be LongType and `deletedCol` IntegerType
-  * (the engine's CDC stamp schema, SchemaModel).
+  * Winner rule: `beats` is [[graft.operators.LiveView]]'s survivor order,
+  * max `_version` then max `_ingest_seq`; on an exact tie the stored
+  * state wins, making replays idempotent. Key columns must be non-null;
+  * the frame carries the engine's CDC stamp columns
+  * ([[graft.model.SchemaModel]]): `_version` and `_ingest_seq` LongType,
+  * `_deleted` IntegerType.
   */
 object StatefulLiveView {
 
   /** Apply to a streaming (or batch) frame of stamped change rows.
-    * Output = same schema; tombstones are emitted too (deletedCol = 1)
+    * Output = same schema; tombstones are emitted too (`_deleted` = 1)
     * so a sink can apply deletions — filter them for a CH-FINAL-style
     * read. Use with `writeStream.outputMode("update")`.
     * `tombstoneRetention` (e.g. `"7 days"`): how long a deleted key's
@@ -45,13 +47,11 @@ object StatefulLiveView {
     * Use retention only with a continuous processing-time trigger;
     * pass `None` for catch-up jobs. */
   def materializedLive(changes: DataFrame, pks: Seq[String],
-                       versionCol: String, seqCol: String,
-                       deletedCol: String,
                        tombstoneRetention: Option[String] = None): DataFrame = {
     val schema = changes.schema
-    val vIdx = schema.fieldIndex(versionCol)
-    val sIdx = schema.fieldIndex(seqCol)
-    val dIdx = schema.fieldIndex(deletedCol)
+    val vIdx = schema.fieldIndex(VersionCol)
+    val sIdx = schema.fieldIndex(SeqCol)
+    val dIdx = schema.fieldIndex(DeletedCol)
     val kIdx = pks.map(schema.fieldIndex)
     implicit val rowEnc = Encoders.row(schema)
 

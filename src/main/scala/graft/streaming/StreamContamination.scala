@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Contamination
 
 /** At-ingest BENCHMARK-contamination screening over a document stream —
   * the streaming form of the batch decontamination pair
@@ -17,17 +18,14 @@ import org.apache.spark.sql.functions._
   * oracle.
   *
   * Per micro-batch:
-  *   1. winnow fingerprints for the batch's documents (the
-  *      [[graft.functions.WinnowExprs]] native kernel — one codegen'd
-  *      scan, same fingerprints as the batch gates);
-  *   2. one `left_semi` equi-join of the batch's fingerprints against
-  *      the benchmark set — broadcast: an eval suite is MBs where the
-  *      corpus is TBs;
-  *   3. a document is flagged when MORE than `ratio` of its fingerprints
-  *      hit the benchmark (the `x_decontaminate_apply` rule, same
-  *      threshold semantics); docs too short to fingerprint can show no
-  *      evidence and pass clean;
-  *   4. flagged batch rows append to the output.
+  *   1. winnow fingerprints for the batch's documents
+  *      ([[Contamination.docFingerprints]] — one codegen'd scan, the
+  *      batch gates' fingerprints);
+  *   2. the batch gates' drop rule ([[Contamination.contaminated]]): a
+  *      document is flagged when MORE than `DecontamRatio` of its
+  *      fingerprints hit the broadcast benchmark set; docs too short to
+  *      fingerprint can show no evidence and pass clean;
+  *   3. flagged batch rows append to the output.
   *
   * Scale shape: the only shuffle per batch is the per-doc fingerprint
   * re-group (partial-agg'd, batch-bounded); the benchmark join is
@@ -43,34 +41,33 @@ object StreamContamination {
     * with one `fp` long column. */
   def run(stream: DataFrame, idCol: String, textCol: String,
           keepCols: Seq[String], evalFpDir: String, outDir: String,
-          checkpointDir: String, k: Int, w: Int, ratio: Double): Unit = {
+          checkpointDir: String): Unit = {
     BoundedStream.drain(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fps = batch.select(col(idCol),
-            explode(array_distinct(graft.functions.WinnowExprs
-              .winnowMinsNative(col(textCol), k, w))).as("fp"))
+        val fps = Contamination.docFingerprints(batch, idCol, textCol)
           .persist()
-        val hits = fps
-          .join(broadcast(s.read.parquet(evalFpDir)), Seq("fp"), "left_semi")
-          .groupBy(col(idCol)).agg(count(lit(1)).as("_hit"))
-        val flagged = fps.groupBy(col(idCol)).agg(count(lit(1)).as("_nf"))
-          .join(hits, Seq(idCol), "left")
-          .filter(coalesce(col("_hit"), lit(0L)).cast("double") /
-            col("_nf") > ratio)
-          .select(col(idCol), lit(1L).as("_c"))
         // per-batch-owned overwrite dir (the SinkRetry pattern): an
         // at-least-once replay rewrites its own output wholesale instead
         // of appending a second copy
-        batch.join(flagged, Seq(idCol), "left")
-          .select((keepCols.map(col) :+
-            coalesce(col("_c"), lit(0L)).as("is_contaminated")): _*)
+        flag(batch, fps, batch.sparkSession.read.parquet(evalFpDir), idCol,
+            keepCols)
           .write.mode("overwrite")
           .parquet(BatchDirs.dir(outDir, batchId))
         fps.unpersist()
         ()
       }, checkpointDir)
   }
+
+  /** `keepCols` of `batch` plus `is_contaminated`: 1 for the docs that
+    * [[Contamination.contaminated]] drops, given the batch's (`idCol`,
+    * `fp`) frame `fps` and the benchmark set `evalFps`, else 0. */
+  private[streaming] def flag(batch: DataFrame, fps: DataFrame,
+                              evalFps: DataFrame, idCol: String,
+                              keepCols: Seq[String]): DataFrame =
+    batch.join(Contamination.contaminated(fps, evalFps, idCol)
+        .withColumn("_c", lit(1L)), Seq(idCol), "left")
+      .select((keepCols.map(col) :+
+        coalesce(col("_c"), lit(0L)).as("is_contaminated")): _*)
 
   /** All landed flagged rows (union of the per-batch directories). */
   def landed(s: org.apache.spark.sql.SparkSession, outDir: String)

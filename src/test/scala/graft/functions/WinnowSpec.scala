@@ -11,8 +11,8 @@ class WinnowSpec extends AnyFunSuite with graft.GateCacheHygiene {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val K = graft.queries.TrainingData.WinnowK
-  private val W = graft.queries.TrainingData.WinnowW
+  private val K = Contamination.WinnowK
+  private val W = Contamination.WinnowW
 
   // JVM reference: same normalize, same MD5-derived 32-bit gram hash
   private def normalize(s: String): String =

@@ -24,8 +24,6 @@ class StatefulLiveViewSpec extends AnyFunSuite with graft.GateCacheHygiene {
     val src = MemoryStream[Change]
     val out = StatefulLiveView.materializedLive(
       src.toDF(), pks = Seq("user_id"),
-      versionCol = "_version", seqCol = "_ingest_seq",
-      deletedCol = "_deleted",
       // None: retention's ProcessingTimeTimeout keeps drain-style runs
       // alive forever (see operator caveat) — AvailableNow needs NoTimeout
       tombstoneRetention = None)

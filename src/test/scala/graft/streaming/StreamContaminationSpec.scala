@@ -77,4 +77,24 @@ class StreamContaminationSpec extends AnyFunSuite with graft.GateCacheHygiene {
       s"verdict moved with the batch split:\n$early\nvs\n$late")
     assert(early(bench) == 1L)
   }
+
+  test("drop rule at the DecontamRatio boundary: batch drop set and " +
+      "stream flags agree") {
+    import graft.functions.Contamination
+    assert(Contamination.DecontamRatio == 0.8)
+    val evalFps = Seq(1L, 2L, 3L, 4L, 5L).toDF("fp")
+    // doc 1: 4 of 5 fingerprints in the eval set, exactly the ratio;
+    // doc 2: 5 of 6, above it; doc 3: no hits
+    val fps = (Seq(1L, 2L, 3L, 4L, 90L).map((1L, _)) ++
+      Seq(1L, 2L, 3L, 4L, 5L, 91L).map((2L, _)) ++
+      Seq(92L, 93L).map((3L, _))).toDF("doc_id", "fp")
+    val dropped = Contamination.contaminated(fps, evalFps, "doc_id")
+      .as[Long].collect().toSet
+    assert(dropped == Set(2L),
+      s"only the doc above the ratio is dropped: $dropped")
+    val flags = StreamContamination.flag(Seq(1L, 2L, 3L).toDF("doc_id"),
+        fps, evalFps, "doc_id", Seq("doc_id"))
+      .as[(Long, Long)].collect().toMap
+    assert(flags == Map(1L -> 0L, 2L -> 1L, 3L -> 0L), s"stream flags: $flags")
+  }
 }

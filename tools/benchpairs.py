@@ -13,7 +13,8 @@ pairs the change was better. A side's spread is its interquartile range
 over its median; a metric whose spread on either side exceeds the
 metric's bound is flagged `unresolved`: the runs cannot tell the two
 apart. The `replica` phase detail (`snapshot_s`, `drain_s`,
-`live_read_s`) follows the metrics, with no bound.
+`live_read_s`) follows the metrics, with no bound; for `training_gates`,
+one row per gate of the records' `detail.gate_s` (seconds), with no bound.
 """
 import argparse
 import glob
@@ -46,7 +47,20 @@ def value(rec, name):
         return 1.0 - rec["failed"] / rec["attempted"] if rec.get("attempted") else 0.0
     if name in rec.get("metrics", {}):
         return rec["metrics"][name]
-    return rec.get("detail", {}).get(name)
+    detail = rec.get("detail", {})
+    if name in detail:
+        return detail[name]
+    return detail.get("gate_s", {}).get(name)
+
+
+def gates(recs):
+    """The gate names in the records' `detail.gate_s`, in first-seen order."""
+    names = []
+    for seed in sorted(recs):
+        for g in recs[seed].get("detail", {}).get("gate_s", {}):
+            if g not in names:
+                names.append(g)
+    return names
 
 
 def quartiles(xs):
@@ -115,17 +129,19 @@ def main(argv=None):
     metrics = [(m["name"], m["better"], m["bound"]) for m in spec["end_to_end"]]
     if a.workload == "replica":
         metrics += [(p, "lower", None) for p in PHASES]
+    metrics += [(g, "lower", None) for g in gates(parent)]
     seeds, rows = compare(parent, change, metrics)
     if not seeds:
         sys.exit(f"no {a.workload} seed has a record on both sides")
+    width = max(14, *(len(r["name"]) for r in rows))
     print(f"{a.workload}: {len(seeds)} pairs, seeds {seeds}")
-    print("%-14s %-30s %-30s %8s %6s  %s" % (
-        "metric", "parent median [q1, q3]", "change median [q1, q3]",
+    print("%-*s %-30s %-30s %8s %6s  %s" % (
+        width, "metric", "parent median [q1, q3]", "change median [q1, q3]",
         "change", "wins", "verdict"))
     for r in rows:
-        print("%-14s %-30s %-30s %+7.1f%% %3d/%-2d  %s" % (
-            r["name"], fmt(r["parent"]), fmt(r["change"]), 100 * r["ratio"],
-            r["wins"], r["n"], r["verdict"]))
+        print("%-*s %-30s %-30s %+7.1f%% %3d/%-2d  %s" % (
+            width, r["name"], fmt(r["parent"]), fmt(r["change"]),
+            100 * r["ratio"], r["wins"], r["n"], r["verdict"]))
     return 0
 
 

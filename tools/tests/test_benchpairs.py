@@ -102,6 +102,49 @@ class BenchPairsTest(unittest.TestCase):
             self.assertIn(name, text)
         self.assertIn("-40.0%", text)
 
+    def test_training_gates_prints_one_row_per_gate(self):
+        def gates_record(seed, cc):
+            return {"workload": "training_gates", "seed": seed,
+                    "attempted": 5, "failed": 0, "setup_s": 20.0,
+                    "metrics": {"total_s": 10.0 + cc, "op_p50_ms": 2000.0,
+                                "op_p95_ms": 7000.0},
+                    "detail": {"gates_total_s": 10.0 + cc,
+                               "gate_s": {"x_pagerank": 2.0,
+                                          "x_dedup_cluster_apply": cc}}}
+
+        def checkout(name, cc):
+            root = os.path.join(self.tmp.name, name)
+            os.makedirs(os.path.join(root, ".bench_work"))
+            for s in range(1, 4):
+                path = os.path.join(root, ".bench_work",
+                                    f"training_gates-seed{s}-trace0.json")
+                with open(path, "w") as f:
+                    json.dump(gates_record(s, cc + s), f)
+            return root
+
+        parent, change = checkout("p", 4.0), checkout("c", 2.0)
+        seeds, rows = benchpairs.compare(
+            benchpairs.records(parent, "training_gates"),
+            benchpairs.records(change, "training_gates"),
+            [(g, "lower", None) for g in benchpairs.gates(
+                benchpairs.records(parent, "training_gates"))])
+        rows = {r["name"]: r for r in rows}
+        self.assertEqual(seeds, [1, 2, 3])
+        self.assertEqual(sorted(rows), ["x_dedup_cluster_apply", "x_pagerank"])
+        cc = rows["x_dedup_cluster_apply"]
+        self.assertEqual((cc["parent"][1], cc["change"][1]), (6.0, 4.0))
+        self.assertEqual((cc["wins"], cc["verdict"]), (3, ""))
+        self.assertEqual(rows["x_pagerank"]["wins"], 0)
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            self.assertEqual(benchpairs.main(
+                [parent, change, "--workload", "training_gates"]), 0)
+        text = out.getvalue()
+        self.assertIn("training_gates: 3 pairs", text)
+        self.assertIn("x_dedup_cluster_apply", text)
+        self.assertIn("-33.3%", text)
+        self.assertNotIn("snapshot_s", text)
+
     def test_no_common_seed_exits(self):
         parent = self.checkout("p", [record(1, 10.0, 1000.0)])
         change = self.checkout("c", [record(2, 10.0, 1000.0)])
